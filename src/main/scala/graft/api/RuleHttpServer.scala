@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** The reference's HTTP product surface, runnable: `POST /rules/evaluate`
@@ -14,6 +16,12 @@ import scala.jdk.CollectionConverters._
   * success, 400 `{"Error": message}` on any failure, exactly the
   * controller's contract (reference `RuleController.cs:12-28`, request
   * shape `:31-35`; enum-as-string binding `Program.cs:4-8`).
+  *
+  * The body is parsed once: the `Users` and `Rule` trees go straight to
+  * [[RuleService]], which infers the row schema by Spark's JSON rules on
+  * the driver, with no Spark job, and answers filter-only rules without
+  * launching one. Requests run on a pool of four threads named
+  * `rule-http-<n>`.
   *
   * Built on the JDK's `com.sun.net.httpserver` (zero extra dependencies —
   * this is a demo shim for request-sized payloads, not a production
@@ -39,8 +47,7 @@ final class RuleHttpServer(spark: SparkSession, port: Int = 0) {
             throw new IllegalArgumentException("Rule is required."))
           val users = field("Users").filter(_.isArray).getOrElse(
             throw new IllegalArgumentException("Users array is required."))
-          val out = RuleService.evaluateToJson(spark,
-            mapper.writeValueAsString(users), mapper.writeValueAsString(rule))
+          val out = RuleService.evaluateToJson(spark, users, rule)
           respond(exchange, 200, out)
         } catch {
           case e: Throwable => // reference: any failure -> 400 {Error}
@@ -54,7 +61,10 @@ final class RuleHttpServer(spark: SparkSession, port: Int = 0) {
   // (each evaluate builds an independent local DataFrame plan), so two
   // rules in flight must not serialize behind each other — spec-pinned by
   // RuleHttpServerSpec's concurrent-request test
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+  private val pool = {
+    val n = new AtomicInteger()
+    Executors.newFixedThreadPool(4, (r: Runnable) => new Thread(r, s"rule-http-${n.incrementAndGet()}"))
+  }
   server.setExecutor(pool)
 
   private def respond(exchange: HttpExchange, status: Int, json: String): Unit = {
@@ -70,9 +80,13 @@ final class RuleHttpServer(spark: SparkSession, port: Int = 0) {
     server.getAddress.getPort
   }
 
+  /** Stops listening, then gives in-flight requests up to 30 s to finish
+    * before interrupting them.
+    */
   def stop(): Unit = {
     server.stop(0)
     pool.shutdown()
+    if (!pool.awaitTermination(30, TimeUnit.SECONDS)) pool.shutdownNow()
   }
 }
 

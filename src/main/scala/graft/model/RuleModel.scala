@@ -178,7 +178,7 @@ object RuleJson {
       .collectFirst { case e if e.getKey.equalsIgnoreCase(name) => e.getValue }
       .filterNot(_.isNull)
 
-  private def ruleFromNode(n: JsonNode): RuleDefinition = RuleDefinition(
+  private[graft] def ruleFromNode(n: JsonNode): RuleDefinition = RuleDefinition(
     name = field(n, "Name").map(_.asText).getOrElse(""),
     comment = field(n, "Comment").map(_.asText).getOrElse(""),
     version = field(n, "Version").map(_.asDouble).getOrElse(0.0),

@@ -4,6 +4,7 @@ import graft.SparkSpec
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.jdk.CollectionConverters._
 
 class RuleHttpServerSpec extends SparkSpec {
 
@@ -90,5 +91,21 @@ class RuleHttpServerSpec extends SparkSpec {
       val noRule = post(port, s"""{"Users":$users}""")
       assert(noRule.statusCode() == 400 && noRule.body().contains("Rule is required"))
     } finally srv.stop()
+  }
+
+  test("requests run on rule-http-<n> threads, and stop() waits for them to end") {
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("rule-http-"))
+    val srv = new RuleHttpServer(spark)
+    val port = srv.start()
+    val resp = post(port,
+      s"""{"Rule":{"Conditions":{"Conditions":[
+            {"Property":"CompanyCode","Operator":"Equal","Value":"C1"}]}},
+          "Users":$users}""")
+    assert(resp.statusCode() == 200)
+    val threads = poolThreads.filter(_.isAlive)
+    assert(threads.nonEmpty && threads.forall(_.getName.matches("rule-http-[0-9]+")))
+    srv.stop()
+    threads.foreach(_.join(10000))
+    assert(!threads.exists(_.isAlive))
   }
 }
