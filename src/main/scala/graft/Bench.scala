@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** Driver-run benchmark: one JSON line with per-query seconds.
@@ -58,26 +56,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.envCpus()
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The battery's only global windows are over BOUNDED inputs (bucket
-    // sums in Mixing/Chunking, k-row top tables in Search, the oracle rank
-    // projection in q_shuffle_export) — each declares partitionBy(lit(0))
-    // to state that intent, but Spark 4's EliminateWindowPartitions rule
-    // strips foldable partition keys, so WindowExec still logs its
-    // single-partition WARN. Those warnings are known-safe here; silence
-    // that one logger so a real unbounded-window mistake elsewhere stays
-    // visible in the log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession(cpus)
 
     def execute(name: String): Unit = {
       SparkEntry.queries(name)(spark, sfDir)
@@ -272,7 +253,7 @@ object Bench {
       val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
       val pb = new ProcessBuilder(cmd.asJava)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.environment().put("SPARK_GRAFT_BENCH_RUNS", runs.toString)
       pb.environment().put("SPARK_GRAFT_BENCH_ONLY", name)
       pb.environment().put("SPARK_GRAFT_BENCH_NO_ISOLATE", "1")

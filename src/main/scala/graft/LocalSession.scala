@@ -1,0 +1,38 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session builder: Bench, Verify, the rule server's demo main,
+  * the dev tools and the tests all get their SparkSession here.
+  *
+  * `local[cpus]` with as many shuffle partitions as cores, UTC session
+  * time, no UI, WARN logging, and the `WindowExec` single-partition
+  * warning silenced.
+  */
+object LocalSession {
+  /** `SPARK_GRAFT_CPUS` when set, else `default`. */
+  def envCpus(default: Int = 32): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
+
+  def apply(cpus: Int = envCpus()): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // The battery's only global windows are over BOUNDED inputs (bucket
+    // sums in Mixing/Chunking, k-row top tables in Search, the oracle rank
+    // projection in q_shuffle_export) — each declares partitionBy(lit(0))
+    // to state that intent, but Spark 4's EliminateWindowPartitions rule
+    // strips foldable partition keys, so WindowExec still logs its
+    // single-partition WARN. Those warnings are known-safe here; silence
+    // that one logger so a real unbounded-window mistake elsewhere stays
+    // visible in the log.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+}

@@ -94,10 +94,7 @@ final class RuleHttpServer(spark: SparkSession, port: Int = 0) {
 object RuleHttpServer {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(4)
     val bound = new RuleHttpServer(spark, port).start()
     println(s"rule engine listening on http://127.0.0.1:$bound/rules/evaluate")
     Thread.currentThread().join()

@@ -1,8 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.EventStreams
+import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
 /** One family section of the LLM-data-pipeline extension

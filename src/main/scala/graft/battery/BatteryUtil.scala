@@ -1,7 +1,6 @@
 package graft
 
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, Multimodal}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
@@ -11,7 +10,7 @@ import org.apache.spark.sql.functions._
   * of ExtQueries.scala (round 19) with no behavior change.
   */
 private[graft] object BatteryUtil {
-  import Queries.{Q, table, events}
+  import Queries.{table, events}
 
 
 
@@ -790,8 +789,9 @@ private[graft] object BatteryUtil {
     * FIXED 500-doc input (ids 0..499 — the whole corpus at sf0.01, so the
     * oracle is unchanged there); production ingest batches are
     * constant-size while history grows, so the row's input must be
-    * constant across SFs too (the q_cdc_incremental / StreamLoopProbe
-    * row-design lesson); history-growth scaling is StreamLoopProbe's job.
+    * constant across SFs too (the q_cdc_incremental row-design lesson);
+    * history-growth scaling is measured in SCALE.md "Round-12
+    * streaming-loop probe".
     */
   private[graft] def runDocIngest(s: org.apache.spark.sql.SparkSession, dir: String,
                            compactAfterBatch1: Boolean)

@@ -1,8 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.EventStreams
+import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
 /** One family section of the LLM-data-pipeline extension
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
   * behavior change; see [[ExtQueries.all]] for the union).
   */
 private[graft] object CurationBattery {
-  import Queries.{Q, table, events}
+  import Queries.{Q, table}
   import BatteryUtil._
 
 

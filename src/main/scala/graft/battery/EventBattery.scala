@@ -1,7 +1,5 @@
 package graft
 
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 

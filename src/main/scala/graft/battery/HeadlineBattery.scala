@@ -1,8 +1,5 @@
 package graft
 
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
 /** One family section of the LLM-data-pipeline extension
@@ -10,8 +7,7 @@ import org.apache.spark.sql.functions._
   * behavior change; see [[ExtQueries.all]] for the union).
   */
 private[graft] object HeadlineBattery {
-  import Queries.{Q, table, events}
-  import BatteryUtil._
+  import Queries.{Q, table}
 
 
   // Headline analytical queries (bench anchors; also oracle-checked).

@@ -1,8 +1,6 @@
 package graft
 
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.EventStreams
+import graft.operators.{Dedup, Multimodal}
 import org.apache.spark.sql.functions._
 
 /** One family section of the LLM-data-pipeline extension
@@ -10,7 +8,7 @@ import org.apache.spark.sql.functions._
   * behavior change; see [[ExtQueries.all]] for the union).
   */
 private[graft] object MultimodalBattery {
-  import Queries.{Q, table, events}
+  import Queries.{Q, table}
   import BatteryUtil._
 
 
@@ -179,18 +177,19 @@ private[graft] object MultimodalBattery {
 
     // INCREMENTAL storage dedup — the daily-ingest shape for the chunk
     // store: a FIXED 250-blob batch (doc_id in [250, 500) — constant at
-    // every SF, the StreamLoopProbe row-design lesson: inputs constant
-    // in production must be constant in the row) probes the persisted
-    // (hash, length) index of everything else, which GROWS with the
-    // corpus; every batch chunk is annotated hit (in history) / first
-    // (new key's first occurrence — the chunk a store writes) / dup
-    // (intra-batch repeat). History is scanned never shuffled (batch
-    // keys broadcast into a left-semi probe — the
-    // incrementalHammingPairs plan; tools/CdcIncProbe measures the probe
-    // flat across 100× history). Oracle: re-derives the same labels from
-    // the COMMITTED chunk fixture (ids 0..499 at sf0.01, so the split is
-    // identical there) — the engine recomputes both sides' chunks, the
-    // oracle only re-labels.
+    // every SF, the row-design lesson of SCALE.md's "Round-12
+    // streaming-loop probe": inputs constant in production must be
+    // constant in the row) probes the persisted (hash, length) index of
+    // everything else, which GROWS with the corpus; every batch chunk is
+    // annotated hit (in history) / first (new key's first occurrence —
+    // the chunk a store writes) / dup (intra-batch repeat). History is
+    // scanned never shuffled (batch keys broadcast into a left-semi probe
+    // — the incrementalHammingPairs plan; SCALE.md "Incremental CDC
+    // storage dedup" records the probe flat across 100× history).
+    // Oracle: re-derives the same labels from the COMMITTED chunk
+    // fixture (ids 0..499 at sf0.01, so the split is identical there) —
+    // the engine recomputes both sides' chunks, the oracle only
+    // re-labels.
     "q_cdc_incremental" -> Q(
       (s, dir) => {
         val blobs = Multimodal.withGradientImagePayload(

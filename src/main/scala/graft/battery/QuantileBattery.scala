@@ -1,17 +1,11 @@
 package graft
 
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.EventStreams
-import org.apache.spark.sql.functions._
-
 /** One family section of the LLM-data-pipeline extension
   * battery (split out of ExtQueries.scala at round 19 — no
   * behavior change; see [[ExtQueries.all]] for the union).
   */
 private[graft] object QuantileBattery {
-  import Queries.{Q, table, events}
-  import BatteryUtil._
+  import Queries.{Q, table}
 
 
   val queries: Seq[(String, Q)] = Seq(

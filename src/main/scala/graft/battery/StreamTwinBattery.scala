@@ -1,8 +1,6 @@
 package graft
 
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.EventStreams
+import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
 /** One family section of the LLM-data-pipeline extension
@@ -10,7 +8,7 @@ import org.apache.spark.sql.functions._
   * behavior change; see [[ExtQueries.all]] for the union).
   */
 private[graft] object StreamTwinBattery {
-  import Queries.{Q, table, events}
+  import Queries.{Q, table}
   import BatteryUtil._
 
 

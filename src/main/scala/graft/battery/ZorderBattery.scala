@@ -1,8 +1,5 @@
 package graft
 
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
 /** One family section of the LLM-data-pipeline extension
@@ -11,7 +8,6 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object ZorderBattery {
   import Queries.{Q, table, events}
-  import BatteryUtil._
 
 
   // the Morton interleave recomputed in SQL: bit i of dimension d lands

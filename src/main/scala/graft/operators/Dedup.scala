@@ -189,7 +189,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * shared); families already memoized in this JVM are served, not
     * rebuilt — the wide scan runs only if at least one family is missing.
     *
-    * WHEN TO USE (measured, `tools/SigSuiteProbe`, SCALE.md round 13):
+    * WHEN TO USE (measured, SCALE.md "Round-13 negative result: the
+    * one-scan signature suite"):
     * the trade is 1 source read + 1 write + 1 read of the intermediate
     * versus 4 source reads. The intermediate (shingle-hash + fingerprint
     * arrays) is roughly CORPUS-sized, so the suite wins only where a

@@ -184,9 +184,9 @@ object Graph {
     * The oriented edge table feeds THREE consumers (both wedge legs and
     * the closing semi-join) and the degree table two; left lazy, Catalyst
     * duplicates each subtree per consumer and the edge normalization runs
-    * ~30 times (PlanAudit caught exactly that: 62 shuffles for what is
-    * three joins). So the shared tables PERSIST for the call and `f`'s
-    * result is MATERIALIZED (localCheckpoint — the [[pageRank]]
+    * ~30 times (62 shuffles for what is three joins; SCALE.md "Round-14
+    * governance + graph rows"). So the shared tables PERSIST for the call
+    * and `f`'s result is MATERIALIZED (localCheckpoint — the [[pageRank]]
     * discipline) before they are released: intermediates never leak past
     * the call, and the caller gets a computed table whose lineage no
     * longer references them.
@@ -254,8 +254,9 @@ object Graph {
     // plan (the wedge self-join + closing semi-join this operator exists
     // to shape) is written there; unset in production and the bench.
     sys.props.get("graft.plan.capture.dir").foreach { d =>
-      val p = java.nio.file.Paths.get(d,
-        s"withTriangles_${System.nanoTime()}.txt")
+      val dir = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(d))
+      val p = dir.resolve(s"withTriangles_${System.nanoTime()}.txt")
       java.nio.file.Files.write(p, resultLazy.queryExecution
         .explainString(org.apache.spark.sql.execution
           .ExplainMode.fromString("formatted"))

@@ -457,7 +457,6 @@ object Profile {
     require(qPpms.forall(q => q >= 1 && q <= 1000000),
       "quantileEstimate: q_ppm in [1, 1000000]")
     val spark = sketch.sparkSession
-    import spark.implicits._
     val rows = sketch
       .select(sliceCols.map(col) ++ Seq(col("l").cast("int"),
         col("r").cast("int"), col("b").cast("long"),
@@ -552,7 +551,7 @@ object Profile {
         Seq(coalesce(col("category"), col("__b_category")).as("category"),
           coalesce(col("cnt_a"), lit(0L)).as("cnt_a"),
           coalesce(col("cnt_b"), lit(0L)).as("cnt_b")): _*)
-    def joinTotal(d: DataFrame, tot: DataFrame, totCol: String): DataFrame =
+    def joinTotal(d: DataFrame, tot: DataFrame): DataFrame =
       if (groupCols.isEmpty) d.crossJoin(tot)
       else {
         val totR = groupCols.foldLeft(tot)((x, c) =>
@@ -562,7 +561,7 @@ object Profile {
             "left")
           .drop(groupCols.map(c => s"__t_$c"): _*)
       }
-    joinTotal(joinTotal(merged, ta, "__ta"), tb, "__tb")
+    joinTotal(joinTotal(merged, ta), tb)
       .withColumn("share_a_ppm",
         when(col("__ta").isNull, lit(0L))
           .otherwise(expr("cnt_a * 1000000 div __ta")))
@@ -1219,7 +1218,7 @@ object Profile {
                        k: Int): DataFrame = {
     // the slice-sketch subtree feeds EIGHT consumers (slice list, both
     // pair-union legs, both membership joins); cache the ≤ N·k-row table
-    // so the corpus scan runs once (PlanAudit: unchecked, it ran 8×).
+    // so the corpus scan runs once (unchecked it ran 8×; NOTES.md round 14).
     // persist, not localCheckpoint: N slices is not driver-bounded (so no
     // asLocal), but cache-managed blocks are reclaimed by clearCache/LRU
     // instead of leaking per call until the ContextCleaner notices.

@@ -134,7 +134,7 @@ object EventStreams {
       // guide §6 small files): without it every scan task holding rows of
       // d dates writes d files — dates × tasks tiny files per batch at
       // cluster scale (at sf0.1 the batch scan is one task, so the local
-      // layout was already one file per date — measured, LakeSinkProbe).
+      // layout was already one file per date — measured, OPTIMIZATION_r20.md).
       // The AQE rebalance clusters rows by date AND splits a hot date by
       // advisory size, so output files track bytes, not task count, and
       // one skewed date cannot serialize the write.

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.Profile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** STREAMING SKETCH MAINTENANCE — the ingest loops for the relational

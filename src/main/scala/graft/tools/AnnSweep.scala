@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.LocalSession
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall/latency sweep for the approximate ANN tier (LSH planes×tables,
@@ -16,12 +16,7 @@ object AnnSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nQueries = args.lift(1).map(_.toInt).getOrElse(15)
     val k = 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
     val n = emb.count()

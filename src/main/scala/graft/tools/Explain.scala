@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Queries
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, Queries}
 
 /** Dev tool: print the formatted physical plan (and optionally time) of one
   * battery query. Usage: runMain graft.tools.Explain <queryName> [sfDir] [time]
@@ -10,14 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCpus(8))
     val df = Queries.all.collectFirst { case (`name`, q) => q.run(spark, sfDir) }.get
     df.explain("formatted")
     if (args.contains("time")) {

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.LocalSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Job-count profiler for battery rows: runs a named
   * [[graft.SparkEntry.queries]] row once (after one warm-up) under a
@@ -19,13 +19,7 @@ object JobCount {
     val name = args.headOption.getOrElse(
       sys.error("usage: JobCount <queryName> [sfDir]"))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
 
     def run(): Unit = {
       graft.SparkEntry.queries(name)(spark, dir)

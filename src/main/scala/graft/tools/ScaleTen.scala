@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.LocalSession
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-decade-further scaling evidence: derives a 10× corpus ("sf1") from
@@ -146,13 +147,7 @@ object ScaleTen {
   def main(args: Array[String]): Unit = {
     val sf01 = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32)
 
     derive(spark, sf01, out)
     // third arg "derive-only": stop after the corpus lands — the mode

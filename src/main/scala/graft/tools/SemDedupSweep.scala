@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.LocalSession
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Quantifies the SemDeDup approximation (Abbas et al. 2023): the policy
@@ -18,12 +18,7 @@ import org.apache.spark.sql.functions._
 object SemDedupSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
     val n = emb.count()
@@ -39,7 +34,7 @@ object SemDedupSweep {
     for (threshold <- Seq(0.45, 0.6, 0.8)) {
       val exactPairs = Dedup.embeddingPairs(emb, "vec_id", "embedding", threshold)
         .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exactSurvivors = survivors(emb, exactPairs)
+      val exactSurvivors = survivors(exactPairs)
       for (nClusters <- Seq(4, 8, 16, 32, 64)) {
         val idx = Similarity.ivfIndexFor(emb,
           cacheKey = s"$sfDir/embeddings!semsweep", "vec_id", "embedding", nClusters)
@@ -53,7 +48,7 @@ object SemDedupSweep {
         val recall =
           if (exactPairs.isEmpty) 1.0
           else within.intersect(exactPairs).size.toDouble / exactPairs.size
-        val semSurvivors = survivors(emb, within)
+        val semSurvivors = survivors(within)
         val agree = {
           val all = emb.select("vec_id").collect().map(_.getLong(0)).toSet
           all.count(id => exactSurvivors(id) == semSurvivors(id)).toDouble / all.size
@@ -69,8 +64,7 @@ object SemDedupSweep {
     * greedy over sorted ids, identical to the operator's min-reachable
     * semantics on pair sets.
     */
-  private def survivors(emb: org.apache.spark.sql.DataFrame,
-                        pairs: Set[(Long, Long)]): Long => Boolean = {
+  private def survivors(pairs: Set[(Long, Long)]): Long => Boolean = {
     val larger = pairs.map(_._2)
     id => !larger.contains(id)
   }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Pins triangle counting (degree-ordered node-iterator) and the degree
   * distribution on graphs whose answers are computable by hand.
@@ -73,5 +72,17 @@ class GraphMetricsSpec extends SparkSpec {
       JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b""").collect().head.getLong(0)
     assert(Graph.triangleCount(edges, "s", "d").collect().head.getLong(0) == naive)
     assert(naive > 0)
+  }
+
+  test("plan-capture hook creates a missing directory and writes one plan") {
+    val root = java.nio.file.Files.createTempDirectory("gm_plans")
+    val dir = root.resolve("a").resolve("b")
+    sys.props("graft.plan.capture.dir") = dir.toString
+    try {
+      assert(tri(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))) == 1L)
+      val plans = dir.toFile.listFiles().map(_.getName)
+        .filter(n => n.startsWith("withTriangles_") && n.endsWith(".txt"))
+      assert(plans.length == 1)
+    } finally sys.props -= "graft.plan.capture.dir"
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.functions.CdcChunks
-import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Learns the committed BPE merges fixture
   * (`src/main/resources/graft/bpe/merges_en.txt`) from the test corpus —
@@ -66,9 +66,7 @@ object BpeTrain {
       if (byteLevel) "src/main/resources/graft/bpe/merges_en_bytes.txt"
       else "src/main/resources/graft/bpe/merges_en.txt")
     val nMerges = pos.lift(2).map(_.toInt).getOrElse(512)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     import spark.implicits._
     val pat = java.util.regex.Pattern.compile(graft.functions.TextFunctions.bpePattern)
     val counts = spark.read.parquet(s"$sfDir/documents.parquet")

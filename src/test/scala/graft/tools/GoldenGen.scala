@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.LocalSession
 import graft.functions.{MinHashSignature, RollingFingerprint, SimHash64, WordShingles}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -25,12 +25,7 @@ object GoldenGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outBase = args.lift(1).getOrElse("src/test/resources/golden")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     import spark.implicits._
 
     val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")

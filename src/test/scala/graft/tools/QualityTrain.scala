@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Trains the committed quality-model weights fixture
@@ -39,9 +39,7 @@ object QualityTrain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/test/resources/golden/quality_weights")
     val nBuckets = args.lift(2).map(_.toInt).getOrElse(1024)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     import spark.implicits._
     val rows: Array[(String, Int)] = spark.read
       .parquet(s"$sfDir/documents.parquet")

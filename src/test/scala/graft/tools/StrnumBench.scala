@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: DECIMAL(38,18) vs NumericStringSortKey as the ordering
@@ -9,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object StrnumBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32)
     val df = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         col("l_quantity").cast("int").cast("string").as("qty_str"))
