@@ -63,8 +63,9 @@ object Bench {
     def execute(name: String): Unit = {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      // operators persist shared intermediates (Dedup.materialized); drop
-      // them so every timed run measures the query, not a cache read
+      // drop Dataset.persist caches so every timed run measures the
+      // query, not a cache read (Barrier cuts are not in this cache;
+      // quiesce frees them)
       spark.catalog.clearCache()
     }
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * the dev tools and the tests all get their SparkSession here.
   *
   * `local[cpus]` with as many shuffle partitions as cores, UTC session
-  * time, no UI, WARN logging, and the `WindowExec` single-partition
-  * warning silenced.
+  * time, no UI, WARN logging, and two known-safe warnings silenced: the
+  * `WindowExec` single-partition one and the checkpoint-release one.
   */
 object LocalSession {
   /** `SPARK_GRAFT_CPUS` when set, else `default`. */
@@ -32,6 +32,13 @@ object LocalSession {
     // visible in the log.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    // graft.operators.Barrier.release unpersists a locally checkpointed
+    // RDD on purpose, and RDD.unpersist logs a "was locally checkpointed"
+    // WARN for every such RDD (SparkContext.unpersistRDD, which does not,
+    // is private[spark]). The cut RDD is a MapPartitionsRDD.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
     spark
   }

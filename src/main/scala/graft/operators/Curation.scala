@@ -258,9 +258,9 @@ object Curation {
   /** Returns the packed training chunks: (doc_id, chunk_id, chunk_text,
     * n_tokens, pack_id).
     *
-    * Two explicit materialization barriers (reclaimed by Spark's
-    * ContextCleaner once unreferenced; `materialize = false` keeps the
-    * plan fully lazy): the exact-deduped corpus fans out three ways (the
+    * Two explicit materialization barriers ([[Barrier]], reclaimed by
+    * Spark's ContextCleaner once unreferenced): the exact-deduped corpus
+    * fans out three ways (the
     * signature pass, the component join, the survivor semi-join) and the
     * chunk table feeds both levels of the packing prefix sum — without
     * the barriers every consumer re-runs the scrub+filter+dedup subtree
@@ -306,11 +306,10 @@ object Curation {
     */
   def pretrainingPipeline(docs: DataFrame, idCol: String, textCol: String,
                           cfg: Config = Config(),
-                          materialize: Boolean = true,
                           decontaminateAgainst: Option[(DataFrame, String)] = None,
                           nearDupPairs: Option[DataFrame] = None,
                           semanticDecontaminateAgainst: Option[SemanticDecontam] = None): DataFrame = {
-    val nearDeduped = curatedCorpus(docs, idCol, textCol, cfg, materialize, nearDupPairs)
+    val nearDeduped = curatedCorpus(docs, idCol, textCol, cfg, nearDupPairs)
     val decontaminated = decontaminateAgainst match {
       case Some((bench, bCol)) => decontaminate(nearDeduped, idCol, textCol,
         bench, bCol, cfg.decontamNgram, cfg.decontamMinHits)
@@ -330,7 +329,7 @@ object Curation {
       else graft.operators.Dedup.removeRepeatedSpans(semClean, idCol,
           textCol, cfg.spanGram, cfg.spanMinCount, cfg.spanMinTokens)
         .drop("n_cut_tokens")
-    chunkAndPack(spanClean, idCol, textCol, cfg, materialize)
+    chunkAndPack(spanClean, idCol, textCol, cfg)
   }
 
   /** The contaminated-id set of the semantic stage: `survivors`' ids
@@ -363,28 +362,24 @@ object Curation {
     * table is the per-stage attrition funnel a pipeline report plots.
     *
     * Each stage's drop set is an ids-only anti-join between consecutive
-    * survivor frames; the frames are persisted (`materialize = true`), so
-    * the chain is computed once and every anti-join is id-keyed (AQE
+    * survivor frames; the frames are cut ([[Barrier]]), so the chain
+    * is computed once and every anti-join is id-keyed (AQE
     * broadcasts the sparse side) — the report costs one pipeline run plus
     * id joins, never a re-run per stage.
     */
   def attritionReport(docs: DataFrame, idCol: String, textCol: String,
                       cfg: Config = Config(),
-                      materialize: Boolean = true,
                       decontaminateAgainst: Option[(DataFrame, String)] = None,
                       nearDupPairs: Option[DataFrame] = None,
                       semanticDecontaminateAgainst: Option[SemanticDecontam] = None): DataFrame = {
-    // eager lineage cut, not a lazy persist (round-20): concurrent AQE
-    // stage builds race an unmaterialized cache and re-run its upstream
-    // DAG once per branch — see [[graft.operators.Dedup]]'s materialized
-    def materialized(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
     // the exact stage chain of curatedCorpus/pretrainingPipeline, with a
-    // persisted frame per stage so drop sets are pure id anti-joins
-    val filtered = materialized(docs.filter(
-      TextFunctions.langQualityKeep(col(textCol), cfg.keepLangs, cfg.minQuality)))
+    // cut frame per stage so drop sets are pure id anti-joins
+    val filtered = Barrier.cut(docs.filter(
+      TextFunctions.langQualityKeep(col(textCol), cfg.keepLangs, cfg.minQuality)),
+      "Curation.attritionReport/filtered")
     val scrubbed = filtered.withColumn(textCol, TextFunctions.scrubPii(col(textCol)))
-    val exactDeduped = materialized(Dedup.exact(scrubbed, col(textCol), col(idCol)))
+    val exactDeduped = Barrier.cut(Dedup.exact(scrubbed, col(textCol), col(idCol)),
+      "Curation.attritionReport/exactDeduped")
     val pairs = nearDupPairs match {
       case Some(p) =>
         val ids = exactDeduped.select(col(idCol).as("__sid"))
@@ -393,19 +388,20 @@ object Curation {
       case None => Dedup.minhashPairs(exactDeduped, idCol, textCol,
         threshold = cfg.nearDupThreshold)
     }
-    val nearDeduped = materialized(
-      Dedup.dropNearDuplicateClusters(exactDeduped, idCol, pairs))
-    val decontaminated = materialized(decontaminateAgainst match {
+    val nearDeduped = Barrier.cut(
+      Dedup.dropNearDuplicateClusters(exactDeduped, idCol, pairs),
+      "Curation.attritionReport/nearDeduped")
+    val decontaminated = Barrier.cut(decontaminateAgainst match {
       case Some((bench, bCol)) => decontaminate(nearDeduped, idCol, textCol,
         bench, bCol, cfg.decontamNgram, cfg.decontamMinHits)
       case None => nearDeduped
-    })
-    val semClean = materialized(semanticDecontaminateAgainst match {
+    }, "Curation.attritionReport/decontaminated")
+    val semClean = Barrier.cut(semanticDecontaminateAgainst match {
       case Some(sd) =>
         val bad = semanticBadIds(decontaminated, idCol, sd)
         decontaminated.join(bad, decontaminated(idCol) === bad("id"), "left_anti")
       case None => decontaminated
-    })
+    }, "Curation.attritionReport/semClean")
     def ids(df: DataFrame): DataFrame = df.select(col(idCol))
     def droppedAt(from: DataFrame, to: DataFrame, idx: Int, stage: String): DataFrame =
       ids(from).join(ids(to).withColumnRenamed(idCol, "__kid"),
@@ -431,13 +427,7 @@ object Curation {
     */
   def curatedCorpus(docs: DataFrame, idCol: String, textCol: String,
                     cfg: Config = Config(),
-                    materialize: Boolean = true,
                     nearDupPairs: Option[DataFrame] = None): DataFrame = {
-    // eager lineage cut, not a lazy persist (round-20): concurrent AQE
-    // stage builds race an unmaterialized cache and re-run its upstream
-    // DAG once per branch — see [[graft.operators.Dedup]]'s materialized
-    def materialized(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
     // Cheapest-first, highest-reduction-first: the language + quality
     // filter runs on the RAW text and the 3-pattern scrub chain only
     // touches surviving documents (a minority of a raw crawl). Filtering
@@ -449,7 +439,8 @@ object Curation {
     val filtered = docs.filter(
       TextFunctions.langQualityKeep(col(textCol), cfg.keepLangs, cfg.minQuality))
     val scrubbed = filtered.withColumn(textCol, TextFunctions.scrubPii(col(textCol)))
-    val exactDeduped = materialized(Dedup.exact(scrubbed, col(textCol), col(idCol)))
+    val exactDeduped = Barrier.cut(Dedup.exact(scrubbed, col(textCol), col(idCol)),
+      "Curation.curatedCorpus/exactDeduped")
     val pairs = nearDupPairs match {
       case Some(p) =>
         val ids = exactDeduped.select(col(idCol).as("__sid"))
@@ -466,16 +457,10 @@ object Curation {
     * n_tokens, pack_id), identical to [[pretrainingPipeline]]'s.
     */
   def chunkAndPack(corpus: DataFrame, idCol: String, textCol: String,
-                   cfg: Config = Config(),
-                   materialize: Boolean = true): DataFrame = {
-    // eager lineage cut, not a lazy persist (round-20): concurrent AQE
-    // stage builds race an unmaterialized cache and re-run its upstream
-    // DAG once per branch — see [[graft.operators.Dedup]]'s materialized
-    def materialized(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
-    val chunks = materialized(Chunking.chunkByTokens(corpus, idCol, textCol,
+                   cfg: Config = Config()): DataFrame = {
+    val chunks = Barrier.cut(Chunking.chunkByTokens(corpus, idCol, textCol,
         cfg.chunkTokens, cfg.chunkStride)
-      .withColumnRenamed("chunk_text", "__text"))
+      .withColumnRenamed("chunk_text", "__text"), "Curation.chunkAndPack/chunks")
     // deterministic GLOBAL packing order = lexicographic (doc, chunk): the
     // composite-key prefix sum buckets on the doc id (~1000 docs/bucket) —
     // no fused numeric key, so arbitrary id magnitudes and chunk counts.
@@ -506,7 +491,7 @@ object Curation {
       s"|ndt=${cfg.nearDupThreshold}|pairs=${nearDupPairs.isDefined}"
     curatedCache.computeIfAbsent(fullKey, _ => {
       val cur = curatedCorpus(docs, idCol, textCol, cfg,
-        materialize = true, nearDupPairs = nearDupPairs)
+        nearDupPairs = nearDupPairs)
       val path = graft.operators.IndexRoot.path(cur.sparkSession, "curated", fullKey)
       cur.write.mode("overwrite").parquet(path)
       cur.sparkSession.read.parquet(path)

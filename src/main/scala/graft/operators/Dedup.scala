@@ -40,25 +40,6 @@ object Dedup extends org.apache.spark.internal.Logging {
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     graft.functions.MinHashFunctions.minhashSignature(shingles, numHashes)
 
-  /** Materialize an intermediate that multiple plan branches consume.
-    * EAGER localCheckpoint, not a lazy persist (round-20): AQE runs a
-    * downstream query's stage builds CONCURRENTLY, and two branches
-    * hitting a lazily-persisted frame before its cache exists RACE — each
-    * re-runs the frame's whole upstream DAG (the candidate-table
-    * double-band-join this barrier exists to stop was still running twice
-    * under persist; only one result wins the cache). The eager checkpoint
-    * computes the rows exactly once, every consumer reads the finished
-    * blocks, and downstream plans shrink to an RDD scan. Storage is
-    * reclaimed by Spark's ContextCleaner once the DataFrame is
-    * unreferenced; pass `materialize = false` on the operators to keep
-    * plans fully lazy. Trade: checkpoint blocks are unreplicated — an
-    * executor loss fails the job instead of recomputing, which the batch
-    * callers absorb by retrying the query and the streaming loops by the
-    * at-least-once contract.
-    */
-  private def materialized(enabled: Boolean, df: DataFrame): DataFrame =
-    if (enabled) df.localCheckpoint() else df
-
   private val diskMemoCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
@@ -88,14 +69,14 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, numHashes: Int = 128,
-                   bands: Int = 32, threshold: Double = 0.7,
-                   materialize: Boolean = true): DataFrame = {
+                   bands: Int = 32, threshold: Double = 0.7): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     // Materialized once (compact: id + numHashes longs): the signature table
     // feeds the banding explode AND both verify-join sides — without a
     // barrier every consumer re-tokenizes and re-hashes the full corpus.
-    val sigs = materialized(materialize,
-      signatureTable(df, idCol, textCol, shingleSize, numHashes))
+    val sigs = Barrier.cut(
+      signatureTable(df, idCol, textCol, shingleSize, numHashes),
+      "Dedup.minhashPairs/sigs")
     minhashPairsFromIndex(MinhashIndex(sigs, bandTable(sigs, numHashes, bands)),
       numHashes, threshold)
   }
@@ -286,17 +267,17 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   def incrementalNearDupsIndexed(newIndex: MinhashIndex, oldIndex: MinhashIndex,
                                  numHashes: Int, threshold: Double,
-                                 excludeSelf: Boolean = true,
-                                 materialize: Boolean = true): DataFrame = {
+                                 excludeSelf: Boolean = true): DataFrame = {
     // excludeSelf semantics as in [[incrementalHammingPairs]]: batch
     // re-probes exclude same-id matches; streaming ingest loops pass
     // false so a re-sent published id is flagged as its own duplicate
-    val cand = materialized(materialize,
+    val cand = Barrier.cut(
       newIndex.bands.select(col("band"), col("bh"), col("id").as("new_id"))
         .join(oldIndex.bands.select(col("band"), col("bh"), col("id").as("old_id")),
           Seq("band", "bh"))
         .filter(if (excludeSelf) col("new_id") =!= col("old_id") else lit(true))
-        .select("new_id", "old_id").distinct())
+        .select("new_id", "old_id").distinct(),
+      "Dedup.incrementalNearDupsIndexed/cand")
     // ^ the candidate set feeds BOTH the verify join and the sig-lookup
     // prune below; without the barrier the full band-collision join
     // (which scans the history index) runs twice (measured 14.6 s vs
@@ -373,18 +354,19 @@ object Dedup extends org.apache.spark.internal.Logging {
   def incrementalNearDups(newDocs: DataFrame, idCol: String, textCol: String,
                           bandIndex: DataFrame,
                           shingleSize: Int = 3, numHashes: Int = 128,
-                          bands: Int = 32, threshold: Double = 0.7,
-                          materialize: Boolean = true): DataFrame = {
-    val newIdx = materialized(materialize,
-      minhashBandIndex(newDocs, idCol, textCol, shingleSize, numHashes, bands))
-    // materialized: cand feeds the verify join AND the sig prune (the
+                          bands: Int = 32, threshold: Double = 0.7): DataFrame = {
+    val newIdx = Barrier.cut(
+      minhashBandIndex(newDocs, idCol, textCol, shingleSize, numHashes, bands),
+      "Dedup.incrementalNearDups/newIdx")
+    // cut: cand feeds the verify join AND the sig prune (the
     // double-band-join note in [[incrementalNearDupsIndexed]])
-    val cand = materialized(materialize,
+    val cand = Barrier.cut(
       newIdx.select(col("band"), col("bh"), col("id").as("new_id"))
         .join(bandIndex.select(col("band"), col("bh"), col("id").as("old_id")),
           Seq("band", "bh"))
         .filter(col("new_id") =!= col("old_id"))
-        .select("new_id", "old_id").distinct())
+        .select("new_id", "old_id").distinct(),
+      "Dedup.incrementalNearDups/cand")
     val newSigs = newIdx.select(col("id").as("new_id"), col("sig").as("new_sig"))
       .dropDuplicates("new_id")
     // candidate-pruned history sig lookup — see the cost-model note in
@@ -511,7 +493,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * converging in O(log n) rounds (plain 1-hop propagation needs
     * O(diameter), which a 10⁶-long chain turns into 10⁶ shuffles).
     * Iterating a fixpoint is a driver-side LOOP over plans, never over
-    * rows; `localCheckpoint` cuts the growing lineage each round so the
+    * rows; a [[Barrier.cut]] cuts the growing lineage each round so the
     * plan stays O(1) deep. Rows never collect to the driver — per round it
     * sees one Boolean (converged?).
     */
@@ -526,10 +508,11 @@ object Dedup extends org.apache.spark.internal.Logging {
     // rejoin with their own id as component at the end. Initial labels
     // already fold in the 1-hop neighbor minimum (round one for free:
     // one aggregate instead of a full propagate+jump+converge round).
-    var labels = und.select(col("dst").as("id"), col("src").as("component"))
-      .union(und.select(col("src").as("id"), col("src").as("component")))
-      .groupBy("id").agg(min(col("component")).as("component"))
-      .localCheckpoint(true)
+    var labels = Barrier.cut(
+      und.select(col("dst").as("id"), col("src").as("component"))
+        .union(und.select(col("src").as("id"), col("src").as("component")))
+        .groupBy("id").agg(min(col("component")).as("component")),
+      "Dedup.connectedComponents/labels")
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -555,7 +538,8 @@ object Dedup extends org.apache.spark.internal.Logging {
       // lineage) as a side effect of the convergence aggregate running
       // over it — r4 spent a second full job per round on an eager
       // checkpoint followed by a separate filter(...).isEmpty probe.
-      val checkpointed = next.localCheckpoint(false)
+      val checkpointed = Barrier.cut(next,
+        s"Dedup.connectedComponents/round$iter", eager = false)
       val improved = checkpointed
         .agg(sum(when(col("__improved"), 1L).otherwise(0L))).head()
       converged = improved.isNullAt(0) || improved.getLong(0) == 0L
@@ -650,8 +634,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   def repeatedSpans(docs: DataFrame, idCol: String, textCol: String,
                     gramSize: Int = 8, minCount: Long = 2,
-                    minSpanTokens: Int = 8,
-                    materialize: Boolean = true): DataFrame = {
+                    minSpanTokens: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col(idCol).as("id"),
         TextFunctions.tokens(col(textCol)).as("__t"))
@@ -659,10 +642,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     // the positional gram table feeds BOTH the corpus count aggregate and
     // the join back — materialize so text tokenizes+hashes once, not once
     // per consumer (the minhashPairs fan-out argument)
-    val posGrams = materialized(materialize, toks.select(col("id"),
+    val posGrams = Barrier.cut(toks.select(col("id"),
       posexplode(transform(sequence(lit(0), size(col("__t")) - gramSize),
         i => xxhash64(concat_ws(" ", slice(col("__t"), i + 1, lit(gramSize))))))
-        .as(Seq("pos", "__g"))))
+        .as(Seq("pos", "__g"))), "Dedup.repeatedSpans/posGrams")
     val dupGrams = posGrams.groupBy("__g").agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= minCount).select("__g")
     val dupPos = posGrams.join(dupGrams, "__g")
@@ -724,12 +707,11 @@ object Dedup extends org.apache.spark.internal.Logging {
     * (chunk index, chunk value) — no cross join.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDistance: Int = 3, materialize: Boolean = true,
-                   maxBucket: Int = 0): DataFrame =
+                   maxDistance: Int = 3, maxBucket: Int = 0): DataFrame =
     // two longs per doc, consumed by BOTH self-join sides — materialize so
     // the corpus is tokenized+hashed once, not once per side
-    simhashPairsFromTable(materialized(materialize,
-      simhashTable(df, idCol, textCol)), maxDistance, maxBucket)
+    simhashPairsFromTable(Barrier.cut(simhashTable(df, idCol, textCol),
+      "Dedup.simhashPairs/table"), maxDistance, maxBucket)
 
   /** The (id, sh) 64-bit simhash table of a corpus — one hash pass. */
   def simhashTable(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -976,10 +958,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     * but free.)
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        shingleSize: Int = 3, threshold: Double = 0.5,
-                        materialize: Boolean = true): DataFrame =
-    ngramJaccardPairsFromSets(materialized(materialize,
-      ngramSetTable(df, idCol, textCol, shingleSize)), threshold)
+                        shingleSize: Int = 3, threshold: Double = 0.5): DataFrame =
+    ngramJaccardPairsFromSets(Barrier.cut(
+      ngramSetTable(df, idCol, textCol, shingleSize),
+      "Dedup.ngramJaccardPairs/sets"), threshold)
 
   /** The (id, hs, sz) sorted-hashed-shingle-set table — one pass. */
   def ngramSetTable(df: DataFrame, idCol: String, textCol: String,
@@ -1073,10 +1055,10 @@ object Dedup extends org.apache.spark.internal.Logging {
   /** [[ngramContainmentPairsFromSets]] from raw text — one shingle pass. */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             shingleSize: Int = 3, threshold: Double = 0.8,
-                            maxDf: Int = Int.MaxValue,
-                            materialize: Boolean = true): DataFrame =
-    ngramContainmentPairsFromSets(materialized(materialize,
-      ngramSetTable(df, idCol, textCol, shingleSize)), threshold, maxDf)
+                            maxDf: Int = Int.MaxValue): DataFrame =
+    ngramContainmentPairsFromSets(Barrier.cut(
+      ngramSetTable(df, idCol, textCol, shingleSize),
+      "Dedup.ngramContainmentPairs/sets"), threshold, maxDf)
 
   /** Substring-sharing pairs via winnowing fingerprints
     * ([[graft.functions.RollingFingerprint]]): inverted-index join on the
@@ -1088,13 +1070,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
                   k: Int = 12, w: Int = 16,
-                  minShared: Int = 3, maxDf: Int = 100,
-                  materialize: Boolean = true): DataFrame =
+                  minShared: Int = 3, maxDf: Int = 100): DataFrame =
     // the exploded posting list feeds the df-count aggregation AND the
     // inverted-index join — materialize so the rolling-hash pass over the
     // corpus runs once
-    winnowPairsFromPostings(materialized(materialize,
-      winnowPostingsTable(df, idCol, textCol, k, w)), minShared, maxDf)
+    winnowPairsFromPostings(Barrier.cut(
+      winnowPostingsTable(df, idCol, textCol, k, w),
+      "Dedup.winnowPairs/postings"), minShared, maxDf)
 
   /** The exploded (id, fp) winnowing posting list — one rolling-hash pass. */
   def winnowPostingsTable(df: DataFrame, idCol: String, textCol: String,
@@ -1212,8 +1194,10 @@ object Dedup extends org.apache.spark.internal.Logging {
                         seed: Long = 42L,
                         materialize: Boolean = true,
                         maxBucket: Int = 0): DataFrame = {
-    val base = materialized(materialize,
-      df.select(col(idCol).as("id"), col(vecCol).as("v")))
+    val base0 = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val base =
+      if (materialize) Barrier.cut(base0, "Dedup.embeddingPairsLsh/base")
+      else base0
     val (planesEff, tablesEff) =
       if (planes > 0 && tables > 0) (planes, tables)
       else {
@@ -1248,8 +1232,10 @@ object Dedup extends org.apache.spark.internal.Logging {
         .select("id1", "id2", "cos").distinct()
     if (maxBucket <= 0) pairsOf(bucketedOf(base))
     else {
-      val reps = materialized(materialize,
-        base.groupBy("v").agg(min(col("id")).as("id")))
+      val reps0 = base.groupBy("v").agg(min(col("id")).as("id"))
+      val reps =
+        if (materialize) Barrier.cut(reps0, "Dedup.embeddingPairsLsh/reps")
+        else reps0
       val stars = base.select(col("v"), col("id").as("id2"))
         .join(reps.select(col("v"), col("id").as("id1")), Seq("v"))
         .filter(col("id1") < col("id2"))
@@ -1323,17 +1309,17 @@ object Dedup extends org.apache.spark.internal.Logging {
                                    planes: Int = 3, tables: Int = 8,
                                    seed: Long = 42L,
                                    excludeSelf: Boolean = true,
-                                   materialize: Boolean = true,
                                    collapseBatch: Boolean = true): DataFrame = {
     def probe(newSide: DataFrame, self: Boolean): DataFrame = {
       val newBuckets = newSide.select(col("new_id"),
         explode(graft.functions.LshBucketCodes.column(col("__nv"), planes, tables, seed))
           .as("bkt"))
       // cand feeds the verify join AND the vector-lookup prune — barrier it
-      val cand = materialized(materialize,
+      val cand = Barrier.cut(
         newBuckets.join(index.select(col("bkt"), col("id").as("old_id")), Seq("bkt"))
           .filter(if (self) col("new_id") =!= col("old_id") else lit(true))
-          .select("new_id", "old_id").distinct())
+          .select("new_id", "old_id").distinct(),
+        "Dedup.incrementalEmbeddingPairsLsh/cand")
       val oldVecs = index.filter(col("v").isNotNull)
         .select(col("id").as("old_id"), col("v").as("__ov"))
         .join(cand.select("old_id").distinct(), Seq("old_id"), "left_semi")
@@ -1345,13 +1331,16 @@ object Dedup extends org.apache.spark.internal.Logging {
         .filter(col("cos") >= threshold)
         .select("new_id", "old_id", "cos")
     }
-    val rawNew = materialized(materialize,
-      newVecs.select(col(idCol).as("new_id"), col(vecCol).as("__nv")))
+    val rawNew = Barrier.cut(
+      newVecs.select(col(idCol).as("new_id"), col(vecCol).as("__nv")),
+      "Dedup.incrementalEmbeddingPairsLsh/rawNew")
     if (!collapseBatch) probe(rawNew, excludeSelf)
     else {
-      val distinctNew = materialized(materialize, rawNew.dropDuplicates("new_id"))
-      val reps = materialized(materialize,
-        distinctNew.groupBy("__nv").agg(min(col("new_id")).as("new_id")))
+      val distinctNew = Barrier.cut(rawNew.dropDuplicates("new_id"),
+        "Dedup.incrementalEmbeddingPairsLsh/distinctNew")
+      val reps = Barrier.cut(
+        distinctNew.groupBy("__nv").agg(min(col("new_id")).as("new_id")),
+        "Dedup.incrementalEmbeddingPairsLsh/reps")
       val members = distinctNew
         .join(reps.select(col("__nv"), col("new_id").as("__rep")), Seq("__nv"))
         .select(col("__rep"), col("new_id"))
@@ -1432,28 +1421,23 @@ object Dedup extends org.apache.spark.internal.Logging {
       minSize, maskBits, maxSize)._1
 
   /** [[incrementalCdcChunks]] plus a release handle for the batch chunk
-    * table it persists (the chunk table feeds three subtrees — keys,
-    * firsts, and the annotate join — so it must stay cached until the
-    * result materializes). Long-running callers
+    * table it cuts (the chunk table feeds three subtrees — keys, firsts,
+    * and the annotate join). Long-running callers
     * ([[graft.streaming.ChunkStoreStreams]]'s per-micro-batch loop) MUST
     * call the handle once the annotated result is materialized, or each
-    * batch leaks one cached table for the life of the JVM (disk blocks are
-    * not LRU-evicted until unpersist) — the pageRank/withTriangles
-    * persist-and-release discipline.
+    * batch leaks one block set for the life of the JVM (disk blocks are
+    * not LRU-evicted until unpersist). The handle is [[Barrier.release]]:
+    * idempotent, and fatal to any later use of the unmaterialized result.
     */
   def incrementalCdcChunksReleasable(newBlobs: DataFrame, idCol: String,
                                      binCol: String, chunkIndex: DataFrame,
                                      minSize: Int = 2048, maskBits: Int = 11,
                                      maxSize: Int = 65536)
       : (DataFrame, () => Unit) = {
-    // EAGER localCheckpoint, not a lazy persist (round-20): the chunk
-    // table's three consumers are branches of ONE downstream execution,
-    // whose concurrent AQE stage builds raced the unmaterialized cache
-    // and re-ran the whole decode+chunk pass per branch (the
-    // [[materialized]] finding). Eager, the CDC chunk pass runs once.
-    val batch = cdcChunkTable(newBlobs, idCol, binCol,
-      minSize, maskBits, maxSize)
-      .localCheckpoint()
+    // eager cut ([[Barrier]]): the chunk table's three consumers are
+    // branches of ONE downstream execution; the CDC chunk pass runs once
+    val batch = Barrier.cut(cdcChunkTable(newBlobs, idCol, binCol,
+      minSize, maskBits, maxSize), "Dedup.incrementalCdcChunks/batch")
     val batchKeys = batch.select("hash", "length").distinct()
     // history scan with the batch keys broadcast: output ≤ |batch keys|
     val hitKeys = chunkIndex.select("hash", "length")
@@ -1473,16 +1457,7 @@ object Dedup extends org.apache.spark.internal.Logging {
           .when(col("id") === col("__fid") && col("offset") === col("__foff"),
             lit("first"))
           .otherwise(lit("dup")).as("status"))
-    (annotated, () => {
-      // release the checkpoint's blocks, not Dataset.unpersist (a
-      // localCheckpoint is not in the CacheManager — unpersist would
-      // no-op and the loop would leak one block set per micro-batch)
-      batch.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD =>
-          r.rdd.unpersist(false)
-      }
-      ()
-    })
+    (annotated, () => Barrier.release(batch))
   }
 
   /** The ingest headline over an [[incrementalCdcChunks]] table: what the

@@ -186,7 +186,7 @@ object Graph {
     * duplicates each subtree per consumer and the edge normalization runs
     * ~30 times (62 shuffles for what is three joins; SCALE.md "Round-14
     * governance + graph rows"). So the shared tables PERSIST for the call
-    * and `f`'s result is MATERIALIZED (localCheckpoint — the [[pageRank]]
+    * and `f`'s result is MATERIALIZED ([[Barrier.cut]] — the [[pageRank]]
     * discipline) before they are released: intermediates never leak past
     * the call, and the caller gets a computed table whose lineage no
     * longer references them.
@@ -248,7 +248,7 @@ object Graph {
     val resultLazy = f(tri, deg.select(col("n").as("node"),
       col("d").as("degree")))
     // plan-capture hook (round-20, dev-only): the RETURNED frame is a
-    // localCheckpoint — an RDD scan whose explain proves nothing about
+    // [[Barrier.cut]] — an RDD scan whose explain proves nothing about
     // the wedge machinery (the r19 plan dumps were vacuous for exactly
     // this reason). With -Dgraft.plan.capture.dir set, the PRE-checkpoint
     // plan (the wedge self-join + closing semi-join this operator exists
@@ -263,7 +263,7 @@ object Graph {
         .getBytes("UTF-8"))
       ()
     }
-    val result = resultLazy.localCheckpoint()
+    val result = Barrier.cut(resultLazy, "Graph.withTriangles/result")
     oriented.unpersist()
     deg.unpersist()
     und.unpersist()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Barrier, Dedup}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -60,17 +60,14 @@ object ChunkStoreStreams {
         import spark.implicits._
         Seq.empty[(Long, Long)].toDF("hash", "length")
       }
-    // releasable form: the operator persists the batch chunk table for its
+    // releasable form: the operator cuts the batch chunk table for its
     // three consumers; a per-micro-batch loop that never released it would
-    // accumulate one cached table per batch for the life of the JVM
+    // accumulate one block set per batch for the life of the JVM
     val (rawAnn, releaseChunks) = Dedup.incrementalCdcChunksReleasable(
       batch, idCol, binCol, history, minSize, maskBits, maxSize)
-    // materializeCut, not persist: BOTH sinks consume the annotated
-    // table, and a parquet write does not load a cached child's buffers —
-    // persisted, each sink re-ran the probe-and-annotate joins (and the
-    // index write then invalidated the cache for any later consumer via
-    // refreshByPath). The CDC chunk pass runs exactly once into blocks.
-    val ann = DocumentStreams.materializeCut(rawAnn)
+    // cut ([[Barrier]]): BOTH sinks consume the annotated table;
+    // persisted, each sink re-ran the probe-and-annotate joins
+    val ann = Barrier.cut(rawAnn, "ChunkStoreStreams.processChunkBatch/ann")
     // CONCURRENT sinks (round-20, §2.6 — supersedes the round-19
     // stats-before-index ordering, which protected a PERSISTED ann from
     // the index commit's refreshByPath): ann is lineage-cut, so both
@@ -85,7 +82,7 @@ object ChunkStoreStreams {
       ann.filter(col("status") === "first")
         .select("id", "offset", "length", "hash") -> indexPath),
       batchId)
-    DocumentStreams.releaseCut(ann)
+    Barrier.release(ann)
     releaseChunks()
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Barrier, Dedup}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -78,13 +78,16 @@ object DocumentStreams {
     * EVERY file under a loop-owned path belonging to a `__batch_id=N`
     * partition (a flat `write.parquet(path)` seed would make partition
     * discovery fail once the loop adds its first partitioned batch) —
-    * seed through this helper.
+    * seed through this helper. A re-seed may change the path's columns,
+    * so it evicts the path's [[readHistory]] schema memo.
     */
-  def seedIndex(rows: DataFrame, path: String): Unit =
+  def seedIndex(rows: DataFrame, path: String): Unit = {
     rows.withColumn("__batch_id", lit(-1L))
       .hint("rebalance")
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch_id").parquet(path)
+    historySchemaMemo.remove(path)
+  }
 
   /** Re-runnable per-batch sink write: the batch's rows land in their own
     * `__batch_id=N` partition via DYNAMIC partition overwrite, so a
@@ -121,7 +124,7 @@ object DocumentStreams {
     * back-fill each other's task tails and overlap their commits.
     *
     * Caller contract (what keeps this safe): every sink frame must be
-    * lineage-cut ([[materializeCut]]) or derive only from frames whose
+    * lineage-cut ([[Barrier.cut]]) or derive only from frames whose
     * lineage reads NONE of the sibling sink paths — a committed write
     * refreshes its path (Spark refreshByPath), and with ordering gone a
     * sibling's mid-flight input must have nothing that refresh can
@@ -135,7 +138,9 @@ object DocumentStreams {
     if (sinks.sizeIs <= 1)
       sinks.foreach { case (df, p) => writeBatchPartition(df, batchId, p) }
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(sinks.size)
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(sinks.size,
+        (r: Runnable) => new Thread(r, s"graft-sink-b$batchId-${n.incrementAndGet()}"))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       try {
@@ -202,38 +207,6 @@ object DocumentStreams {
     fs.delete(tmp, true)
   }
 
-  /** Materialize a batch-sized frame ONCE and cut its lineage (round-19,
-    * shared by every ingest loop): the loops' sink frames were merely
-    * persisted, which loses twice at write time — (a) a parquet write
-    * does not load a cached child's column buffers (measured in the
-    * round-17 embed-loop work: after both sinks the cache reported
-    * isCachedColumnBuffersLoaded=false), so each sink consuming the
-    * frame re-ran the whole batch DAG; and (b) a committed write to a
-    * path CLEARS every cached plan whose lineage reads it (Spark's
-    * refreshByPath), so writing the index invalidated frames derived
-    * from the index probe mid-batch (measured on the curated loop: the
-    * third sink cost 3.8–5.4 s re-running a ~0.5 s DAG, and per-batch
-    * wall grew 3→7→11 s). localCheckpoint computes the rows once and
-    * replaces the plan with an RDD scan — no lineage, nothing to
-    * invalidate, every sink reads the blocks. The trade (checkpoint
-    * blocks don't survive executor loss) sits inside the loops'
-    * at-least-once contract: a lost block fails the batch; the retry
-    * rewrites exactly its own partitions.
-    */
-  private[streaming] def materializeCut(df: DataFrame): DataFrame =
-    df.localCheckpoint()
-
-  /** Release a [[materializeCut]] frame's blocks deterministically — a
-    * long-lived loop must not wait on the periodic ContextCleaner GC to
-    * reclaim one batch-sized block set per micro-batch.
-    */
-  private[streaming] def releaseCut(df: DataFrame): Unit = {
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
-    }
-    ()
-  }
-
   /** Read a loop-owned path as HISTORY for batch `batchId`: every
     * committed partition EXCEPT the in-flight batch's own. The exclusion
     * is what makes retries safe — a failed attempt may have already
@@ -250,8 +223,8 @@ object DocumentStreams {
     * micro-batch — per-batch driver work that grows with the file count.
     * The first read of a path infers once and caches; later batches hand
     * the cached schema to `read.schema(...)`, skipping inference
-    * entirely. Keyed by path; paths are loop-owned temp dirs, so a stale
-    * entry cannot alias a different layout.
+    * entirely. Keyed by path; paths are loop-owned, and [[seedIndex]],
+    * the one writer that may change a path's columns, evicts its entry.
     */
   private val historySchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
@@ -298,11 +271,10 @@ object DocumentStreams {
     // slimSigs: the signature rides the band-0 row only — the persisted
     // index a batch probes is then `bands`x smaller to scan (legacy
     // full-sig indexes remain readable: sig reads filter isNotNull)
-    // eager lineage cut, not a lazy persist (round-20): concurrent AQE
-    // stage builds race an unmaterialized cache and re-run its upstream
-    // DAG once per branch — see [[processCuratedBatch]]'s `fresh` note
-    val newIdx = materializeCut(Dedup.minhashBandIndex(batch, idCol, textCol,
-        shingleSize, numHashes, bands, slimSigs = true))
+    // cut ([[Barrier]]): the probe, the pairing and the index sink read it
+    val newIdx = Barrier.cut(Dedup.minhashBandIndex(batch, idCol, textCol,
+        shingleSize, numHashes, bands, slimSigs = true),
+      "DocumentStreams.processBatch/newIdx")
     val asIndex = graft.operators.Dedup.MinhashIndex(
       newIdx.filter(col("sig").isNotNull).select("id", "sig"),
       newIdx.select("id", "band", "bh"))
@@ -310,12 +282,12 @@ object DocumentStreams {
     // batch side is unpublished (readHistory excludes the in-flight
     // partition), so a same-id index match is a RE-SENT published doc
     // and must be dropped, not republished under a new batch partition
-    val dupOfHistory = materializeCut(Dedup.incrementalNearDupsIndexed(
+    val dupOfHistory = Barrier.cut(Dedup.incrementalNearDupsIndexed(
         asIndex, graft.operators.Dedup.MinhashIndex(
           history.filter(col("sig").isNotNull).select("id", "sig"), // slim-or-legacy; operator prunes to candidates, then dedups (no O(history) shuffle)
           history.select("id", "band", "bh")),
         numHashes, threshold, excludeSelf = false)
-      .select(col("new_id").as("__drop")))
+      .select(col("new_id").as("__drop")), "DocumentStreams.processBatch/dupOfHistory")
     // near-dups WITHIN the batch, over docs that survived the history
     // probe (a history-dropped doc must not transitively drop batchmates
     // that are far from everything published): smallest id survives
@@ -326,11 +298,10 @@ object DocumentStreams {
       .select(col("id2").as("__drop"))
     // anti-join consumers are duplicate-tolerant — no distinct spent
     val dropIds = dupOfHistory.union(dupInBatch)
-    // materializeCut, not persist: both sinks consume survivors, and a
-    // parquet write does not load a cached child's buffers — persisted,
-    // the batch DAG ran once per sink (see [[materializeCut]])
-    val survivors = materializeCut(batch
-      .join(dropIds, batch(idCol) === col("__drop"), "left_anti"))
+    // cut ([[Barrier]]): both sinks consume survivors
+    val survivors = Barrier.cut(batch
+      .join(dropIds, batch(idCol) === col("__drop"), "left_anti"),
+      "DocumentStreams.processBatch/survivors")
     // CONCURRENT sinks (round-20, §2.6): survivors is lineage-cut and the
     // index keep-frame derives from newIdx (lineage = the batch source
     // only) ⋈ the cut survivors — neither input reads a sibling sink path,
@@ -342,9 +313,9 @@ object DocumentStreams {
       newIdx.join(survivors.select(col(idCol).as("__keep")),
         newIdx("id") === col("__keep"), "left_semi") -> indexPath),
       batchId)
-    releaseCut(survivors)
-    releaseCut(dupOfHistory)
-    releaseCut(newIdx)
+    Barrier.release(survivors)
+    Barrier.release(dupOfHistory)
+    Barrier.release(newIdx)
   }
 
   /** STREAMING INGEST-TIME CURATION — the streaming twin of
@@ -446,25 +417,17 @@ object DocumentStreams {
         exactDeduped.join(readHistory(spark, exactIndexPath, batchId),
           exactDeduped("__th") === col("th"), "left_anti")
       else exactDeduped
-    // EAGER lineage cuts, not lazy persists, for every shared stage frame
-    // (round-20): AQE materializes a query's stages CONCURRENTLY, and a
-    // lazily-persisted frame referenced by several branches of one
-    // downstream execution is RACED — each in-flight stage build finds
-    // the cache unmaterialized and re-runs the frame's whole upstream DAG
-    // (measured on this loop: the survivors execution ran the 32-task
-    // admission-chain source scan many times per batch; batch 2's
-    // checkpoint was 38 jobs / 1 620 tasks where ~500 would do). An eager
-    // localCheckpoint computes each frame EXACTLY once, in dependency
-    // order, and every consumer — including the concurrent AQE stages —
-    // reads the finished blocks; downstream plans shrink to RDD scans,
-    // which also kills every refreshByPath hazard. Same at-least-once
-    // trade as [[materializeCut]] on survivors.
-    val fresh = materializeCut(fresh0)
+    // every shared stage frame is cut ([[Barrier]]). Measured on this
+    // loop under lazy persists: the survivors execution re-ran the 32-task
+    // admission-chain scan per branch, and batch 2's checkpoint was
+    // 38 jobs / 1 620 tasks where ~500 would do.
+    val fresh = Barrier.cut(fresh0, "DocumentStreams.processCuratedBatch/fresh")
     // near-dedup: batch band rows probe the growing index, then pair
     // within the batch (first-arrival-wins == smallest id in batch)
     // slimSigs + isNotNull sig reads: see [[processBatch]]
-    val newIdx = materializeCut(Dedup.minhashBandIndex(fresh, idCol, textCol,
-        shingleSize, numHashes, bands, slimSigs = true))
+    val newIdx = Barrier.cut(Dedup.minhashBandIndex(fresh, idCol, textCol,
+        shingleSize, numHashes, bands, slimSigs = true),
+      "DocumentStreams.processCuratedBatch/newIdx")
     val asIndex = graft.operators.Dedup.MinhashIndex(
       newIdx.filter(col("sig").isNotNull).select("id", "sig"),
       newIdx.select("id", "band", "bh"))
@@ -472,7 +435,7 @@ object DocumentStreams {
     // a re-sent published doc, see [[processBatch]]); the within-batch
     // pairing then runs over history-probe SURVIVORS only, so a doc
     // dropped as dup-of-history cannot transitively drop batchmates
-    val dupOfHistory = materializeCut(
+    val dupOfHistory = Barrier.cut(
       if (pathExists(spark, bandIndexPath)) {
         val history = readHistory(spark, bandIndexPath, batchId)
         Dedup.incrementalNearDupsIndexed(
@@ -481,7 +444,8 @@ object DocumentStreams {
               history.select("id", "band", "bh")),
             numHashes, cfg.nearDupThreshold, excludeSelf = false)
           .select(col("new_id").as("__drop"))
-      } else asIndex.sigs.select(col("id").as("__drop")).limit(0))
+      } else asIndex.sigs.select(col("id").as("__drop")).limit(0),
+      "DocumentStreams.processCuratedBatch/dupOfHistory")
     val eligible = graft.operators.Dedup.MinhashIndex(
       asIndex.sigs.join(dupOfHistory, asIndex.sigs("id") === col("__drop"), "left_anti"),
       asIndex.bands.join(dupOfHistory, asIndex.bands("id") === col("__drop"), "left_anti"))
@@ -497,25 +461,17 @@ object DocumentStreams {
     val deduped0 = fresh
       .join(dropIds, fresh(idCol) === col("__drop"), "left_anti")
     val deduped =
-      if (metricsPath.isDefined) materializeCut(deduped0) else deduped0
+      if (metricsPath.isDefined)
+        Barrier.cut(deduped0, "DocumentStreams.processCuratedBatch/deduped")
+      else deduped0
     // ingest-time decontamination on dedup survivors (see [[ingestCurated]]):
     // the suite gram table is prebuilt and constant, the batch side is
     // batch-sized — the join cost tracks the BATCH, never the suite scan
-    // survivors is LOCAL-CHECKPOINTED, not persisted (round-19): its
-    // lineage reads BOTH index paths (exact-history anti join, band-index
-    // probe), and this loop writes three sinks — after each committed
-    // write Spark's refreshByPath CLEARS every cached plan that reads the
-    // written path, so a merely-persisted survivors was invalidated by
-    // the band-index write and the exact-index write then re-ran the
-    // whole admission→dedup→decontam DAG per batch (measured: the
-    // third write cost 3.8-5.4 s against a ~0.5 s loaded-cache write;
-    // the per-batch wall grew 3→7→11 s across 3 tiny batches).
-    // localCheckpoint materializes the rows once and cuts the lineage to
-    // an RDD scan, so no sink write can invalidate it. The trade —
-    // checkpoint blocks don't survive executor loss — is inside the
-    // loops' at-least-once contract: a lost block fails the batch and
-    // the retry rewrites its own partitions.
-    val survivors = materializeCut(decontamGrams match {
+    // survivors is cut ([[Barrier]]): its lineage reads BOTH index paths,
+    // so a persisted survivors was cleared by the band-index write's
+    // refreshByPath and the exact-index write re-ran the whole
+    // admission→dedup→decontam DAG (third write 3.8-5.4 s vs ~0.5 s).
+    val survivors = Barrier.cut(decontamGrams match {
       case Some(grams) =>
         val bad = graft.operators.Curation.contaminationHitsFromGrams(
             deduped, idCol, textCol, grams, cfg.decontamNgram)
@@ -523,7 +479,7 @@ object DocumentStreams {
           .select(col("id").as("__cdrop"))
         deduped.join(bad, deduped(idCol) === col("__cdrop"), "left_anti")
       case None => deduped
-    })
+    }, "DocumentStreams.processCuratedBatch/survivors")
     // METRICS RUN BEFORE THE SINKS when armed, and in ONE action (the
     // [[EmbeddingStreams.processEmbeddingBatch]] discipline): a tagged
     // union over the stage frames aggregates all seven counts in a single
@@ -596,9 +552,10 @@ object DocumentStreams {
     // refreshByPath could invalidate the band write's input mid-flight
     // (a correctness-neutral but costly recompute). Cut, it is an RDD
     // scan no refresh can touch.
-    val keepIdx = materializeCut(
+    val keepIdx = Barrier.cut(
       newIdx.join(survivors.select(col(idCol).as("__keep")),
-        newIdx("id") === col("__keep"), "left_semi"))
+        newIdx("id") === col("__keep"), "left_semi"),
+      "DocumentStreams.processCuratedBatch/keepIdx")
     // all three sinks are per-batch-partition idempotent: a retry after a
     // failure between/among these writes rewrites the same partitions
     // rather than appending a second copy of the batch (at-least-once
@@ -609,11 +566,11 @@ object DocumentStreams {
       keepIdx -> bandIndexPath,
       survivors.select(col("__th").as("th")) -> exactIndexPath),
       batchId)
-    releaseCut(keepIdx)
-    releaseCut(survivors)
-    if (metricsPath.isDefined) releaseCut(deduped)
-    releaseCut(dupOfHistory)
-    releaseCut(newIdx)
-    releaseCut(fresh)
+    Barrier.release(keepIdx)
+    Barrier.release(survivors)
+    if (metricsPath.isDefined) Barrier.release(deduped)
+    Barrier.release(dupOfHistory)
+    Barrier.release(newIdx)
+    Barrier.release(fresh)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Barrier, Dedup}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -114,17 +114,12 @@ object EmbeddingStreams {
                                            guard: Option[SemanticGuard] = None,
                                            metricsPath: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    // EAGER lineage cuts (materializeCut), not lazy persists, for every
-    // shared stage frame (round-20): AQE materializes a consumer query's
-    // stages CONCURRENTLY, and branches hitting a lazily-persisted frame
-    // before its cache exists RACE — each re-runs the frame's upstream
-    // DAG (see [[DocumentStreams.processCuratedBatch]]'s note; measured
-    // there as 32-task source scans multiplying per batch). Cut, each
-    // frame computes exactly once and every consumer reads blocks.
-    val vecs = DocumentStreams.materializeCut(
+    // every shared stage frame is cut ([[Barrier]]), so each computes
+    // once however many branches of a consumer query read it
+    val vecs = Barrier.cut(
       batch.select(col(idCol).cast("long").as("id"),
           col(vecCol).as("v"))
-        .filter(col("v").isNotNull))
+        .filter(col("v").isNotNull), "EmbeddingStreams.processEmbeddingBatch/vecs")
     // BARRIER BUDGET (round-17): the generic per-probe operators spent
     // ~10 exchanges + ~8 broadcast builds per micro-batch — at batch
     // scale each AQE stage materialization is its own Spark job, and the
@@ -142,8 +137,8 @@ object EmbeddingStreams {
     // probe and ONE in-batch pairing instead of m. Member expansion is
     // exact: clique members share the rep's codes and vector bytes, so a
     // rep-level verdict is every member's verdict.
-    val reps = DocumentStreams.materializeCut(
-      vecs.groupBy("v").agg(min(col("id")).as("rid")))
+    val reps = Barrier.cut(vecs.groupBy("v").agg(min(col("id")).as("rid")),
+      "EmbeddingStreams.processEmbeddingBatch/reps")
     val memb = vecs.join(reps, Seq("v")) // (v, id, rid); reps broadcasts
     def bucketed(of: DataFrame) = of.select(col("rid"), col("v"),
       explode(graft.functions.LshBucketCodes.column(col("v"), planes, tables, seed))
@@ -155,7 +150,7 @@ object EmbeddingStreams {
     // History is only ever JOINED by its stored codes (never re-hashed)
     // and its vector rows stream against the broadcast candidate set —
     // per-batch cost is O(batch × collision rate), not O(history).
-    val dropRepsH = DocumentStreams.materializeCut(
+    val dropRepsH = Barrier.cut(
       if (DocumentStreams.pathExists(spark, indexPath)) {
         val index = DocumentStreams.readHistory(spark, indexPath, batchId)
           .select("id", "v", "bkt")
@@ -180,8 +175,8 @@ object EmbeddingStreams {
           .filter(graft.functions.VectorFunctions.cosine(col("v"), col("__ov"))
             >= threshold)
           .select("rid")
-      } else reps.select("rid").limit(0) // bootstrap: no history, no probe
-    )
+      } else reps.select("rid").limit(0), // bootstrap: no history, no probe
+      "EmbeddingStreams.processEmbeddingBatch/dropRepsH")
     // within-batch pairing over history-probe SURVIVORS only (the loops'
     // no-transitive-drop-via-unpublished policy); smallest id survives.
     // FIXED tuning — the loop's contract, not the corpus-derived default.
@@ -219,7 +214,8 @@ object EmbeddingStreams {
     val deduped0 = batch
       .join(dropIds, batch(idCol).cast("long") === col("__drop"), "left_anti")
     val deduped =
-      if (metricsPath.isDefined) DocumentStreams.materializeCut(deduped0)
+      if (metricsPath.isDefined)
+        Barrier.cut(deduped0, "EmbeddingStreams.processEmbeddingBatch/deduped")
       else deduped0
     // ingest-time semantic decontamination on dedup survivors (see
     // [[SemanticGuard]]): batch-sized vector set vs the constant
@@ -242,10 +238,9 @@ object EmbeddingStreams {
           "left_anti")
       case None => deduped
     })
-    // materializeCut, not persist: the metrics action and BOTH sinks
-    // consume survivors, and a parquet write does not load a cached
-    // child's buffers ([[DocumentStreams.materializeCut]])
-    val survivors = DocumentStreams.materializeCut(survivorsLazy)
+    // cut ([[Barrier]]): the metrics action and BOTH sinks consume it
+    val survivors = Barrier.cut(survivorsLazy,
+      "EmbeddingStreams.processEmbeddingBatch/survivors")
     // METRICS RUN BEFORE THE SINKS when armed, and in ONE action: a
     // tagged union over the stage frames aggregates all five counts in a
     // single execution. Two reasons this ordering matters: (a) each
@@ -300,11 +295,11 @@ object EmbeddingStreams {
           vecs("id") === col("__keep"), "left_semi"),
         "id", "v", planes, tables, seed) -> indexPath),
       batchId)
-    DocumentStreams.releaseCut(survivors)
-    if (metricsPath.isDefined) DocumentStreams.releaseCut(deduped)
-    DocumentStreams.releaseCut(dropRepsH)
-    DocumentStreams.releaseCut(reps)
-    DocumentStreams.releaseCut(vecs)
+    Barrier.release(survivors)
+    if (metricsPath.isDefined) Barrier.release(deduped)
+    Barrier.release(dropRepsH)
+    Barrier.release(reps)
+    Barrier.release(vecs)
   }
 
   /** [[DocumentStreams.compactIndex]] for the embedding loop's index,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Barrier, Dedup}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -64,12 +64,10 @@ object MediaStreams {
                                            maxDistance: Int,
                                            maxBucket: Int = 0): Unit = {
     val spark = batch.sparkSession
-    // eager lineage cuts, not lazy persists (round-20): concurrent AQE
-    // stage builds race an unmaterialized cache and re-run its upstream
-    // DAG once per branch — here that is the CODEC pass (decode + hash),
-    // the most expensive thing in the loop. See
-    // [[DocumentStreams.processCuratedBatch]]'s `fresh` note.
-    val hashed = DocumentStreams.materializeCut(hasher(batch, idCol))
+    // cut ([[Barrier]]): uncut, every branch that reads `hashed` re-runs
+    // the CODEC pass (decode + hash), the most expensive thing in the loop
+    val hashed = Barrier.cut(hasher(batch, idCol),
+      "MediaStreams.processMediaBatch/hashed")
     val decodable = hashed.filter(col("sh").isNotNull)
     val history =
       if (DocumentStreams.pathExists(spark, indexPath))
@@ -86,10 +84,11 @@ object MediaStreams {
     // beyond maxDistance is not a near-dup and is out of scope here:
     // policing id collisions needs a full-index id probe per batch,
     // an upstream key-integrity concern, not a content-dedup one.)
-    val dupOfHistory = DocumentStreams.materializeCut(
+    val dupOfHistory = Barrier.cut(
       Dedup.incrementalHammingPairs(decodable, history,
           maxDistance, excludeSelf = false, maxBucket = maxBucket)
-        .select(col("new_id").as("__drop")))
+        .select(col("new_id").as("__drop")),
+      "MediaStreams.processMediaBatch/dupOfHistory")
     // near-dup WITHIN the batch, computed over items that survived the
     // history probe: a batchmate can only be dropped via an item that is
     // itself eligible for publication — an item dropped as dup-of-history
@@ -104,11 +103,10 @@ object MediaStreams {
       .select(col("id2").as("__drop"))
     // anti-join consumers are duplicate-tolerant — no distinct spent
     val dropIds = dupOfHistory.union(dupInBatch)
-    // materializeCut, not persist: both sinks consume survivors, and a
-    // parquet write does not load a cached child's buffers — persisted,
-    // the batch DAG ran once per sink ([[DocumentStreams.materializeCut]])
-    val survivors = DocumentStreams.materializeCut(batch
-      .join(dropIds, batch(idCol) === col("__drop"), "left_anti"))
+    // cut ([[Barrier]]): both sinks consume survivors
+    val survivors = Barrier.cut(batch
+      .join(dropIds, batch(idCol) === col("__drop"), "left_anti"),
+      "MediaStreams.processMediaBatch/survivors")
     // CONCURRENT sinks (round-20, §2.6): survivors is lineage-cut and the
     // index frame derives from hashed (lineage = the batch source only) ⋈
     // the cut survivors — neither input reads a sibling sink path. The
@@ -120,9 +118,9 @@ object MediaStreams {
       decodable.join(survivors.select(col(idCol).as("__keep")),
         decodable("id") === col("__keep"), "left_semi") -> indexPath),
       batchId)
-    DocumentStreams.releaseCut(survivors)
-    DocumentStreams.releaseCut(dupOfHistory)
-    DocumentStreams.releaseCut(hashed)
+    Barrier.release(survivors)
+    Barrier.release(dupOfHistory)
+    Barrier.release(hashed)
   }
 
   /** STREAMING VIDEO ingest-dedup — the clip-level twin of
@@ -164,7 +162,8 @@ object MediaStreams {
     val spark = batch.sparkSession
     // eager lineage cuts — see [[processMediaBatch]]'s note; the frame
     // hasher (demux + per-frame hash) is the loop's dominant compute
-    val hashed = DocumentStreams.materializeCut(frameHasher(batch, idCol))
+    val hashed = Barrier.cut(frameHasher(batch, idCol),
+      "MediaStreams.processVideoBatch/hashed")
     val decodable = hashed.filter(col("sh").isNotNull)
     val newCounts = decodable.groupBy("id").agg(count(lit(1)).as("__nf"))
     def verdict(matched: DataFrame, aCounts: DataFrame, aId: String,
@@ -192,7 +191,7 @@ object MediaStreams {
             history.select(col("id"), col("frame_idx").as("pos"), col("sh")),
             maxDistance, excludeSelf = false)
           .groupBy("new_id", "old_id").agg(count(lit(1)).as("n_matched")))
-          .map(DocumentStreams.materializeCut)
+          .map(Barrier.cut(_, "MediaStreams.processVideoBatch/matchedH"))
       } else None
     val dupOfHistory = matchedH.map { m =>
       val history = DocumentStreams.readHistory(spark, indexPath, batchId)
@@ -204,7 +203,8 @@ object MediaStreams {
       verdict(m, newCounts, "new_id", oldCounts, "old_id")
         .select(col("new_id").as("__drop"))
     }.getOrElse(decodable.select(col("id").as("__drop")).limit(0))
-    val dupOfHistoryCut = DocumentStreams.materializeCut(dupOfHistory)
+    val dupOfHistoryCut = Barrier.cut(dupOfHistory,
+      "MediaStreams.processVideoBatch/dupOfHistory")
     // within-batch pairing over history-probe SURVIVORS only (same
     // no-transitive-drop-via-unpublished policy as the image loop)
     val eligible = decodable.join(dupOfHistoryCut,
@@ -218,9 +218,10 @@ object MediaStreams {
       .select(col("id2").as("__drop"))
     // anti-join consumers are duplicate-tolerant — no distinct spent
     val dropIds = dupOfHistoryCut.union(dupInBatch)
-    // materializeCut, not persist — see [[processMediaBatch]]'s note
-    val survivors = DocumentStreams.materializeCut(batch
-      .join(dropIds, batch(idCol) === col("__drop"), "left_anti"))
+    // cut ([[Barrier]]): both sinks consume survivors
+    val survivors = Barrier.cut(batch
+      .join(dropIds, batch(idCol) === col("__drop"), "left_anti"),
+      "MediaStreams.processVideoBatch/survivors")
     // CONCURRENT sinks (round-20, §2.6) — same input-safety argument as
     // [[processMediaBatch]]; the index grows by the decodable SURVIVORS'
     // frame rows only
@@ -229,9 +230,9 @@ object MediaStreams {
       decodable.join(survivors.select(col(idCol).as("__keep")),
         decodable("id") === col("__keep"), "left_semi") -> indexPath),
       batchId)
-    DocumentStreams.releaseCut(survivors)
-    DocumentStreams.releaseCut(dupOfHistoryCut)
-    matchedH.foreach(DocumentStreams.releaseCut)
-    DocumentStreams.releaseCut(hashed)
+    Barrier.release(survivors)
+    Barrier.release(dupOfHistoryCut)
+    matchedH.foreach(Barrier.release)
+    Barrier.release(hashed)
   }
 }

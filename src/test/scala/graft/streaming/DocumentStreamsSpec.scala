@@ -407,4 +407,16 @@ class DocumentStreamsSpec extends SparkSpec {
       assert(after.contains("a") && after("a") >= 4L - 2L && after("a") <= 4L)
     } finally q.stop()
   }
+
+  test("re-seeding a path evicts readHistory's schema memo: the new column is read") {
+    val path = tmp("graft_reseed")
+    DocumentStreams.seedIndex(Seq((1L, "a")).toDF("id", "x"), path)
+    assert(DocumentStreams.readHistory(spark, path, 0L).columns.toSet ==
+      Set("id", "x", "__batch_id"))
+    // a stale memo would read the new files through the old schema and
+    // silently drop `y`
+    DocumentStreams.seedIndex(Seq((2L, "b", 7L)).toDF("id", "x", "y"), path)
+    val h = DocumentStreams.readHistory(spark, path, 0L)
+    assert(h.select("id", "y").as[(Long, Long)].collect().toSeq == Seq((2L, 7L)))
+  }
 }
