@@ -54,6 +54,19 @@ object Bench {
     times(times.length / 2)
   }
 
+  /** The files the full per-row map is written to; the head is the one
+    * the stdout line names. Every run writes its core-count sibling
+    * (`BENCH_FULL_c<cpus>.json`); only a 32-core run also writes the
+    * canonical path, so `BENCH_FULL.json` stays the 32-core record when
+    * an 8-core scaling run follows the main run.
+    */
+  private[graft] def fullMapPaths(fullPath: String, cpus: Int): Seq[String] = {
+    val stamped =
+      if (fullPath.endsWith(".json")) fullPath.stripSuffix(".json") + s"_c$cpus.json"
+      else fullPath + s"_c$cpus"
+    if (cpus == 32) Seq(fullPath, stamped) else Seq(stamped)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = LocalSession.envCpus()
@@ -439,24 +452,11 @@ object Bench {
     // verification runs kept clobbering the driver's working-tree
     // BENCH_FULL.json — point the full map elsewhere with the env var;
     // the default stays the driver's artifact path
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(fullPath),
-        (fullLine + "\n").getBytes("UTF-8"))
-      // cpu-stamped sibling (round-20, VERDICT-r19 #8): the driver's
-      // 8-core scaling run CLOBBERED the 32-core per-row record in r19
-      // (both runs write the same default path). The canonical path above
-      // stays the driver contract; this extra copy keys the full map by
-      // core count so a main+scaling pair leaves two distinct files.
-      val stamped =
-        if (fullPath.endsWith(".json"))
-          fullPath.stripSuffix(".json") + s"_c$cpus.json"
-        else fullPath + s"_c$cpus"
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(stamped),
-        (fullLine + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // stdout line is the contract; file is best-effort
+    val fullPaths = fullMapPaths(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"), cpus)
+    try fullPaths.foreach(p => java.nio.file.Files.write(
+      java.nio.file.Paths.get(p), (fullLine + "\n").getBytes("UTF-8")))
+    catch { case _: Throwable => () } // stdout line is the contract; file is best-effort
     // chars for the inline map; total line (incl. the ~900-char probes
     // object with its round-17 per-try host stamps) must stay under the
     // driver's 2000-char output capture
@@ -475,7 +475,7 @@ object Bench {
       else full = true
     }
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"steal_pct":${fmt(steal)},"proc_cpu_sec":${fmt(procCpuSec)},"gc_sec":${fmt(gcSec)},"probes":$probesJson,"queries":{$sb},"sf":"$sfDir","full":"$fullPath"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"steal_pct":${fmt(steal)},"proc_cpu_sec":${fmt(procCpuSec)},"gc_sec":${fmt(gcSec)},"probes":$probesJson,"queries":{$sb},"sf":"$sfDir","full":"${fullPaths.head}"}""")
     spark.stop()
   }
 }

@@ -161,8 +161,6 @@ object RuleJson {
     n.elements().asScala.map(ruleFromNode).toSeq
   }
 
-  def parseValue(json: String): RuleValue = valueFromNode(mapper.readTree(json))
-
   /** Parses a JSON OBJECT (`{"name": value, ...}`) of external parameters
     * into the map the evaluator's Dynamic* operators resolve against
     * (values arrive as [[RuleValue]], which the compiler accepts as-is).

@@ -152,8 +152,8 @@ object Curation {
   def benchGramsFor(benchmark: => DataFrame, cacheKey: String,
                     benchTextCol: String, ngramSize: Int = 8): DataFrame = {
     val b = benchmark
-    Dedup.diskMemo(s"benchgrams$ngramSize",
-      s"$cacheKey|fp=${corpusFingerprint(b)}")(
+    IndexRoot.table(s"benchgrams$ngramSize",
+      s"$cacheKey|txt=$benchTextCol|fp=${corpusFingerprint(b)}")(
       benchGramTable(b, benchTextCol, ngramSize))
   }
 
@@ -470,9 +470,6 @@ object Curation {
       .select(idCol, "chunk_id", "chunk_text", "n_tokens", "pack_id")
   }
 
-  private val curatedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** [[curatedCorpus]] memoized to its parquet layout — built ONCE per
     * (JVM, cacheKey, prefix-shaping config), written under
     * `spark.graft.indexDir` ([[IndexRoot]]) and re-read from disk, so
@@ -489,13 +486,8 @@ object Curation {
     val fullKey = s"$cacheKey|id=$idCol|txt=$textCol|langs=" +
       s"${cfg.keepLangs.toSeq.sorted.mkString(",")}|q=${cfg.minQuality}" +
       s"|ndt=${cfg.nearDupThreshold}|pairs=${nearDupPairs.isDefined}"
-    curatedCache.computeIfAbsent(fullKey, _ => {
-      val cur = curatedCorpus(docs, idCol, textCol, cfg,
-        nearDupPairs = nearDupPairs)
-      val path = graft.operators.IndexRoot.path(cur.sparkSession, "curated", fullKey)
-      cur.write.mode("overwrite").parquet(path)
-      cur.sparkSession.read.parquet(path)
-    })
+    IndexRoot.table("curated", fullKey)(
+      curatedCorpus(docs, idCol, textCol, cfg, nearDupPairs = nearDupPairs))
   }
 
   /** SEMANTIC (embedding-space) contamination — the paraphrase-robust

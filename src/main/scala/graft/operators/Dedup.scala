@@ -40,26 +40,6 @@ object Dedup extends org.apache.spark.internal.Logging {
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     graft.functions.MinHashFunctions.minhashSignature(shingles, numHashes)
 
-  private val diskMemoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Build-once, consume-many corpus artifact: built ONE time per (JVM,
-    * kind, cacheKey), written as parquet, re-read from disk — the
-    * persisted-index layout every dedup signature family shares (the
-    * nightly index job writes it; every probe/pair query only ever reads).
-    */
-  private[operators] def diskMemo(kind: String, cacheKey: String)(build: => DataFrame): DataFrame =
-    diskMemoCache.computeIfAbsent(s"$kind!$cacheKey", _ => {
-      val df = build
-      // md5 of the FULL key, not a 32-bit hashCode: colliding keys would
-      // silently share (and overwrite) one index directory. Root comes
-      // from spark.graft.indexDir (shared storage on a cluster; see
-      // [[IndexRoot]]) — never a bare node-local tmpdir off local mode.
-      val path = IndexRoot.path(df.sparkSession, kind, cacheKey)
-      df.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.parquet(path)
-    })
-
   /** MinHash + LSH near-duplicate PAIRS (docId1 < docId2).
     *
     * banding: the signature splits into `bands` bands of `rows` hashes; docs
@@ -110,9 +90,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     */
   final case class MinhashIndex(sigs: DataFrame, bands: DataFrame)
 
-  private val minhashIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MinhashIndex]()
-
   /** Build-once, consume-many index access: built ONE time per (JVM,
     * cacheKey), written as parquet, and re-read from disk — so consumers
     * across independent queries (and cache clears) share the single
@@ -121,115 +98,15 @@ object Dedup extends org.apache.spark.internal.Logging {
   def minhashIndexFor(df: => DataFrame, cacheKey: String,
                       idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 128,
-                      bands: Int = 32): MinhashIndex =
-    minhashIndexMemo(
-      minhashFullKey(cacheKey, idCol, textCol, shingleSize, numHashes, bands),
-      numHashes, bands)(
+                      bands: Int = 32): MinhashIndex = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val key = s"$cacheKey|id=$idCol|txt=$textCol|s=$shingleSize|h=$numHashes|b=$bands"
+    // the bands derive from the persisted sigs, not from a second
+    // tokenize+hash pass over the corpus
+    val sigs = IndexRoot.table("minhash", s"$key|sigs")(
       signatureTable(df, idCol, textCol, shingleSize, numHashes))
-
-  // memo key and path fold in EVERY parameter that changes the artifact
-  // — same cacheKey with different knobs must not share an index
-  private def minhashFullKey(cacheKey: String, idCol: String, textCol: String,
-                             shingleSize: Int, numHashes: Int, bands: Int) =
-    s"$cacheKey|id=$idCol|txt=$textCol|s=$shingleSize|h=$numHashes|b=$bands"
-
-  private def minhashIndexMemo(fullKey: String, numHashes: Int, bands: Int)
-                              (buildSigs: => DataFrame): MinhashIndex =
-    minhashIndexCache.computeIfAbsent(fullKey, _ => {
-      require(numHashes % bands == 0, "numHashes must divide into bands")
-      val sigs = buildSigs.persist(StorageLevel.MEMORY_AND_DISK)
-      val spark = sigs.sparkSession
-      val base = IndexRoot.path(spark, "minhash", fullKey)
-      sigs.write.mode("overwrite").parquet(s"$base/sigs")
-      bandTable(sigs, numHashes, bands).write.mode("overwrite").parquet(s"$base/bands")
-      sigs.unpersist()
-      MinhashIndex(spark.read.parquet(s"$base/sigs"),
-        spark.read.parquet(s"$base/bands"))
-    })
-
-  /** The four TEXT signature families of one corpus, built from ONE scan —
-    * the nightly-index-job shape when a deployment maintains minhash,
-    * shingle-set, simhash, AND winnowing artifacts of the same corpus (the
-    * pair-family battery does; so does any pipeline running Jaccard +
-    * containment + Hamming + substring dedup side by side). Artifacts are
-    * IDENTICAL to the standalone builders' — same expressions, same memo
-    * keys, same persisted layouts — so every existing consumer
-    * ([[minhashPairsFromIndex]], [[ngramJaccardPairsFromSets]],
-    * [[simhashPairsFromTable]], [[winnowPairsFromPostings]], slices,
-    * incremental probes) reads them interchangeably.
-    */
-  final case class SignatureSuite(minhash: MinhashIndex, ngramSets: DataFrame,
-                                  simhash: DataFrame, winnowPostings: DataFrame)
-
-  /** Build (or serve) all four signature families of `df` with ONE corpus
-    * scan into a persisted compact wide projection (id + all four
-    * signature columns), deriving each family's layout from it. Per-family
-    * cache keys mirror the standalone builders' (`minhashKey` etc. must
-    * match what callers pass to [[minhashIndexFor]]/[[ngramSetsFor]]/
-    * [[simhashTableFor]]/[[winnowPostingsFor]] for the artifacts to be
-    * shared); families already memoized in this JVM are served, not
-    * rebuilt — the wide scan runs only if at least one family is missing.
-    *
-    * WHEN TO USE (measured, SCALE.md "Round-13 negative result: the
-    * one-scan signature suite"):
-    * the trade is 1 source read + 1 write + 1 read of the intermediate
-    * versus 4 source reads. The intermediate (shingle-hash + fingerprint
-    * arrays) is roughly CORPUS-sized, so the suite wins only where a
-    * source read is much more expensive than local intermediate IO — a
-    * remote object store, or a source that is itself a computed view.
-    * On page-cached local storage the four standalone builders measured
-    * FASTER warm (13.5–18 s vs 24 s at 500k docs) and the suite's only
-    * local win is the cold-JVM single-build (one codegen'd stage vs
-    * four: 10.4 s vs 15.0 s at 50k docs). The battery therefore keeps
-    * the standalone builders; outputs are bit-identical either way
-    * (spec-pinned).
-    */
-  def signatureSuiteFor(df: => DataFrame,
-                        minhashKey: String, ngramKey: String,
-                        simhashKey: String, winnowKey: String,
-                        idCol: String, textCol: String,
-                        shingleSize: Int = 3, numHashes: Int = 128,
-                        bands: Int = 32,
-                        winnowK: Int = 12, winnowW: Int = 16): SignatureSuite = {
-    // one projection, four signature expressions — forced (and persisted)
-    // only if some family below actually builds. Every persisted column is
-    // COMPACT (ints/longs): the minhash sig is computed INSIDE the scan so
-    // the raw string shingle array is never materialized (persisting it
-    // measured SLOWER than four standalone scans — the arrays outweigh the
-    // corpus text); __shn carries only the emptiness test signatureTable
-    // applies before the sig.
-    lazy val wide = {
-      val sh = graft.functions.TextFunctions.wordShingles(col(textCol), shingleSize)
-      df.select(col(idCol).as("id"),
-          size(sh).as("__shn"),
-          minhashSignature(sh, numHashes).as("__sig"),
-          graft.functions.HashedShingles.column(col(textCol), shingleSize).as("__hs"),
-          graft.functions.SimHashFunctions.simhashText(col(textCol)).as("__simhash"),
-          graft.functions.RollingFingerprint.column(col(textCol), winnowK, winnowW).as("__fps"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    var built = false
-    def fromWide(f: DataFrame => DataFrame): DataFrame = { built = true; f(wide) }
-    val mh = minhashIndexMemo(
-      minhashFullKey(minhashKey, idCol, textCol, shingleSize, numHashes, bands),
-      numHashes, bands)(
-      // == signatureTable: shingles → non-empty filter → minhash sig
-      // (sig of an EMPTY shingle set never survives the filter, so
-      // computing it eagerly in the scan changes no surviving row)
-      fromWide(_.filter(col("__shn") > 0)
-        .select(col("id"), col("__sig").as("sig"))))
-    val ng = diskMemo(s"ngramsets$shingleSize", ngramKey)(
-      // == ngramSetTable
-      fromWide(_.filter(size(col("__hs")) > 0)
-        .select(col("id"), col("__hs").as("hs"), size(col("__hs")).as("sz"))))
-    val sim = diskMemo("simhash", simhashKey)(
-      // == simhashTable (no row filter — every doc carries a hash)
-      fromWide(_.select(col("id"), col("__simhash").as("sh"))))
-    val win = diskMemo(s"winnow${winnowK}_$winnowW", winnowKey)(
-      // == winnowPostingsTable (explode drops empty fingerprint arrays)
-      fromWide(_.select(col("id"), explode(col("__fps")).as("fp"))))
-    if (built) wide.unpersist()
-    SignatureSuite(mh, ng, sim, win)
+    MinhashIndex(sigs,
+      IndexRoot.table("minhash", s"$key|bands")(bandTable(sigs, numHashes, bands)))
   }
 
   /** Near-duplicate pairs from a prebuilt [[MinhashIndex]]: banded
@@ -720,7 +597,8 @@ object Dedup extends org.apache.spark.internal.Logging {
   /** [[simhashTable]] memoized to its persisted parquet layout. */
   def simhashTableFor(df: => DataFrame, cacheKey: String,
                       idCol: String, textCol: String): DataFrame =
-    diskMemo("simhash", cacheKey)(simhashTable(df, idCol, textCol))
+    IndexRoot.table("simhash", s"$cacheKey|id=$idCol|txt=$textCol")(
+      simhashTable(df, idCol, textCol))
 
   /** [[simhashPairs]] from a prebuilt (id, sh) table — zero hashing.
     *
@@ -975,7 +853,7 @@ object Dedup extends org.apache.spark.internal.Logging {
   def ngramSetsFor(df: => DataFrame, cacheKey: String,
                    idCol: String, textCol: String,
                    shingleSize: Int = 3): DataFrame =
-    diskMemo(s"ngramsets$shingleSize", cacheKey)(
+    IndexRoot.table(s"ngramsets$shingleSize", s"$cacheKey|id=$idCol|txt=$textCol")(
       ngramSetTable(df, idCol, textCol, shingleSize))
 
   /** [[ngramJaccardPairs]] from a prebuilt set table — zero tokenization. */
@@ -1088,7 +966,8 @@ object Dedup extends org.apache.spark.internal.Logging {
   def winnowPostingsFor(df: => DataFrame, cacheKey: String,
                         idCol: String, textCol: String,
                         k: Int = 12, w: Int = 16): DataFrame =
-    diskMemo(s"winnow${k}_$w", cacheKey)(winnowPostingsTable(df, idCol, textCol, k, w))
+    IndexRoot.table(s"winnow${k}_$w", s"$cacheKey|id=$idCol|txt=$textCol")(
+      winnowPostingsTable(df, idCol, textCol, k, w))
 
   /** [[winnowPairs]] from a prebuilt posting list — zero hashing. */
   def winnowPairsFromPostings(fps: DataFrame, minShared: Int = 3,

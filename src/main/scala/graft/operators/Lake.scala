@@ -502,24 +502,14 @@ object Lake {
     nFiles
   }
 
-  private val zMemo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Build-once z-ordered copy per (JVM, cacheKey) — the nightly layout
     * job every scan query then reads (the [[graft.operators.Bucketing]]
     * `ensureBucketed` contract, for files instead of tables).
     */
   def ensureZOrdered(df: DataFrame, cacheKey: String, zCols: Seq[String],
                      bitsPerDim: Int = 8, numFiles: Int = 16): DataFrame = {
-    // memo key and path fold in the layout parameters too — the same
-    // cacheKey with different zCols/bits/files must not share an artifact
-    // (matching the minhash/IVF memo convention)
     val fullKey = s"$cacheKey|z=${zCols.mkString(",")}|bits=$bitsPerDim|n=$numFiles"
-    zMemo.computeIfAbsent(fullKey, _ => {
-      // root from spark.graft.indexDir ([[IndexRoot]]): shared storage on
-      // a cluster, node-local tmpdir only in local mode
-      val path = IndexRoot.path(df.sparkSession, "zorder", fullKey)
-      writeZOrdered(df, path, zCols, bitsPerDim, numFiles)
-      df.sparkSession.read.parquet(path)
-    })
+    IndexRoot.tableWrittenBy("zorder", fullKey)(
+      writeZOrdered(_, _, zCols, bitsPerDim, numFiles))(df)
   }
 }

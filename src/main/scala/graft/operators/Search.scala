@@ -122,9 +122,6 @@ object Search {
         TextFunctions.tokenCount(col(textCol)).as("dl")),
       invertedPostings(docs, idCol, textCol, maxPostings))
 
-  private val bmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, BmIndex]()
-
   /** [[buildBm25Index]] memoized to its persisted parquet layout — built
     * ONCE per (JVM, cacheKey, maxPostings) under `spark.graft.indexDir`
     * ([[IndexRoot]]) and re-read from disk, so every query served in the
@@ -137,15 +134,9 @@ object Search {
                    idCol: String, textCol: String,
                    maxPostings: Int = 10000): BmIndex = {
     val fullKey = s"$cacheKey|id=$idCol|txt=$textCol|mp=$maxPostings"
-    bmMemo.computeIfAbsent(fullKey, _ => {
-      val built = buildBm25Index(docs, idCol, textCol, maxPostings)
-      val spark = built.lengths.sparkSession
-      val lenPath = IndexRoot.path(spark, "bm25_len", fullKey)
-      val postPath = IndexRoot.path(spark, "bm25_post", fullKey)
-      built.lengths.write.mode("overwrite").parquet(lenPath)
-      built.postings.write.mode("overwrite").parquet(postPath)
-      BmIndex(spark.read.parquet(lenPath), spark.read.parquet(postPath))
-    })
+    lazy val built = buildBm25Index(docs, idCol, textCol, maxPostings)
+    BmIndex(IndexRoot.table("bm25_len", fullKey)(built.lengths),
+      IndexRoot.table("bm25_post", fullKey)(built.postings))
   }
 
   /** [[bm25TopK]] served FROM the persisted index: reads ≤ |Q| postings

@@ -81,17 +81,6 @@ object Similarity {
     */
   final case class IvfIndex(assigned: DataFrame, centroids: Array[Array[Double]])
 
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
-
-  /** Build-once, probe-many IVF access: the index is built ONE time per
-    * (cacheKey) per JVM, written as a parquet table PARTITIONED BY
-    * `__cluster`, and re-read from disk — so every probe prunes to its
-    * `nprobe` clusters at the SOURCE (partition pruning in the scan, no
-    * full-table read) and no query ever pays the k-means fit. This is the
-    * production layout: the offline index job writes the partitioned
-    * table; online queries only ever see the cheap read side.
-    */
   /** Density-scaled IVF sizing — [[LshTuning.forCorpus]]'s move applied
     * to IVF when the caller passes `nClusters = 0`: nlist ≈ √n balances
     * the probe's two costs (the centroid ranking scans nlist centroids;
@@ -108,16 +97,20 @@ object Similarity {
     math.min(n, math.max(2L, math.round(math.sqrt(n.toDouble)))).toInt
   }
 
-  /** The k derived for `nClusters = 0` calls, memoized per (cacheKey,
-    * cols, seed): without this every SERVE-side call — including memo
-    * hits — would force `df` and run a full count() just to re-derive the
-    * same k, defeating the build-once/serve-many contract. Same freshness
-    * contract as the index memo itself: the `cacheKey` must change when
-    * the corpus snapshot changes.
+  /** Build-once, probe-many IVF access: the index is built ONE time per
+    * (cacheKey) per JVM, written as a parquet table PARTITIONED BY
+    * `__cluster`, and re-read from disk — so every probe prunes to its
+    * `nprobe` clusters at the SOURCE (partition pruning in the scan, no
+    * full-table read) and no query ever pays the k-means fit. This is the
+    * production layout: the offline index job writes the partitioned
+    * table; online queries only ever see the cheap read side.
+    *
+    * With `nClusters = 0` the k comes from [[ivfClustersForCorpus]] and is
+    * memoized per (cacheKey, cols, seed) too: otherwise every serve-side
+    * call, memo hits included, would force `df` and run a full count()
+    * to re-derive the same k. The `cacheKey` must change when the corpus
+    * snapshot changes.
     */
-  private val ivfKCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   def ivfIndexFor(df: => DataFrame, cacheKey: String,
                   idCol: String, vecCol: String,
                   nClusters: Int, seed: Long = 42L): IvfIndex = {
@@ -127,19 +120,14 @@ object Similarity {
     // different sizes under nClusters = 0 never share an index); the
     // derived k is itself memoized so only the FIRST call pays the count
     val k = if (nClusters > 0) nClusters
-            else ivfKCache.computeIfAbsent(
-              s"$cacheKey|id=$idCol|vec=$vecCol|seed=$seed|autok",
-              _ => Integer.valueOf(ivfClustersForCorpus(corpus.count()))).intValue()
-    // fold every artifact-shaping parameter into the memo key and path
+            else IndexRoot.once("ivf_k", s"$cacheKey|id=$idCol|vec=$vecCol|seed=$seed")(
+              ivfClustersForCorpus(corpus.count()))
     val fullKey = s"$cacheKey|id=$idCol|vec=$vecCol|k=$k|seed=$seed"
-    ivfCache.computeIfAbsent(fullKey, _ => {
+    IndexRoot.once("ivf", fullKey) {
       val fresh = buildIvf(corpus, idCol, vecCol, k, seed)
-      // root from spark.graft.indexDir — shared storage on a cluster
-      // ([[IndexRoot]]); node-local tmpdir only in local mode
-      val path = IndexRoot.path(fresh.assigned.sparkSession, "ivf", fullKey)
-      fresh.assigned.write.mode("overwrite").partitionBy("__cluster").parquet(path)
-      IvfIndex(fresh.assigned.sparkSession.read.parquet(path), fresh.centroids)
-    })
+      IvfIndex(IndexRoot.table("ivf", fullKey, "__cluster")(fresh.assigned),
+        fresh.centroids)
+    }
   }
 
   /** Load a written IVF index layout: `path/assigned` (parquet partitioned
@@ -454,15 +442,13 @@ object Similarity {
     def k: Int = centroids.head.length
   }
 
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PqCodebook]()
-
-  /** Build-once per (JVM, cacheKey) codebook access — the offline-fit
-    * contract of [[ivfIndexFor]] for the PQ tier.
+  /** Build-once per (JVM, cacheKey, vecCol, m, k, seed) codebook access —
+    * the offline-fit contract of [[ivfIndexFor]] for the PQ tier.
     */
   def pqCodebookFor(df: => DataFrame, cacheKey: String, vecCol: String,
                     m: Int = 8, k: Int = 16, seed: Long = 42L): PqCodebook =
-    pqCache.computeIfAbsent(cacheKey, _ => buildPqCodebook(df, vecCol, m, k, seed))
+    IndexRoot.once("pq_codebook", s"$cacheKey|vec=$vecCol|m=$m|k=$k|seed=$seed")(
+      buildPqCodebook(df, vecCol, m, k, seed))
 
   /** Load a committed codebook layout: parquet rows (sub, code, centroid). */
   def loadPqCodebook(spark: org.apache.spark.sql.SparkSession, path: String): PqCodebook = {
@@ -517,9 +503,6 @@ object Similarity {
                     cb: PqCodebook): DataFrame =
     df.select(col(idCol).as("id"), pqEncode(col(vecCol), cb).as("code"))
 
-  private val pqEncodedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** [[pqEncodeTable]] memoized to its parquet layout — encoded ONCE per
     * (JVM, cacheKey); every ADC query reads the 8-byte codes from disk,
     * which is the whole point of PQ (the production index job writes this
@@ -528,13 +511,8 @@ object Similarity {
   def pqEncodedFor(df: => DataFrame, cacheKey: String, idCol: String,
                    vecCol: String, cb: PqCodebook): DataFrame = {
     // the codebook shapes the artifact too: fold its geometry in
-    val fullKey = s"$cacheKey|id=$idCol|vec=$vecCol|m=${cb.m}|k=${cb.k}"
-    pqEncodedCache.computeIfAbsent(fullKey, _ => {
-      val enc = pqEncodeTable(df, idCol, vecCol, cb)
-      val path = IndexRoot.path(enc.sparkSession, "pq", fullKey)
-      enc.write.mode("overwrite").parquet(path)
-      enc.sparkSession.read.parquet(path)
-    })
+    IndexRoot.table("pq", s"$cacheKey|id=$idCol|vec=$vecCol|m=${cb.m}|k=${cb.k}")(
+      pqEncodeTable(df, idCol, vecCol, cb))
   }
 
   /** ADC approximate top-k over a PQ-encoded table: the query's `m × k`
@@ -591,9 +569,6 @@ object Similarity {
 
   // --- IVF-PQ: the composed billion-scale tier ------------------------------
 
-  private val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The COMPOSED IVF-PQ artifact — `(id, code)` partitioned by
     * `__cluster`: PQ codes living inside the IVF layout, the FAISS
     * `IndexIVFPQ` shape and the one that actually runs at 10⁹–10¹¹
@@ -610,17 +585,10 @@ object Similarity {
     * prunes partitions at the source.
     */
   def ivfPqEncodedFor(index: => IvfIndex, cb: => PqCodebook, cacheKey: String,
-                      idCol: String, vecCol: String): DataFrame = {
-    lazy val codebook = cb
-    val fullKey = s"$cacheKey|id=$idCol|vec=$vecCol|ivfpq"
-    ivfPqCache.computeIfAbsent(fullKey, _ => {
-      val enc = index.assigned.select(col(idCol).as("id"),
-        pqEncode(col(vecCol), codebook).as("code"), col("__cluster"))
-      val path = IndexRoot.path(enc.sparkSession, "ivfpq", fullKey)
-      enc.write.mode("overwrite").partitionBy("__cluster").parquet(path)
-      enc.sparkSession.read.parquet(path)
-    })
-  }
+                      idCol: String, vecCol: String): DataFrame =
+    IndexRoot.table("ivfpq", s"$cacheKey|id=$idCol|vec=$vecCol|ivfpq", "__cluster")(
+      index.assigned.select(col(idCol).as("id"),
+        pqEncode(col(vecCol), cb).as("code"), col("__cluster")))
 
   /** IVF-PQ approximate top-k: rank the coarse centroids driver-side,
     * prune the code table to the `nprobe` nearest clusters (partition
@@ -706,24 +674,15 @@ object Similarity {
     else query.map(f => math.floor(f.toDouble * 127.0 / m + 0.5).toInt).toArray
   }
 
-  private val int8Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** [[quantizeInt8]] memoized to its persisted parquet layout — built
     * once per (JVM, cacheKey), the offline-index contract of
     * [[pqEncodedFor]]: the production job writes the byte table, queries
     * only ever read it.
     */
   def int8TableFor(df: => DataFrame, cacheKey: String, idCol: String,
-                   vecCol: String): DataFrame = {
-    val fullKey = s"$cacheKey|id=$idCol|vec=$vecCol|int8"
-    int8Cache.computeIfAbsent(fullKey, _ => {
-      val q = quantizeInt8(df, idCol, vecCol)
-      val path = IndexRoot.path(q.sparkSession, "int8", fullKey)
-      q.write.mode("overwrite").parquet(path)
-      q.sparkSession.read.parquet(path)
-    })
-  }
+                   vecCol: String): DataFrame =
+    IndexRoot.table("int8", s"$cacheKey|id=$idCol|vec=$vecCol|int8")(
+      quantizeInt8(df, idCol, vecCol))
 
   /** Approximate top-k over the int8 table by INTEGER dot product of the
     * quantized vectors — exact 64-bit arithmetic (≤ 127²·dim per pair,

@@ -362,8 +362,8 @@ object TextStats {
   def gramCountsFor(df: => DataFrame, cacheKey: String, textCol: String,
                     ngramSize: Int = 2): DataFrame = {
     val d = df
-    Dedup.diskMemo(s"gramcnt$ngramSize",
-      s"$cacheKey|fp=${Curation.corpusFingerprint(d)}")(
+    IndexRoot.table(s"gramcnt$ngramSize",
+      s"$cacheKey|txt=$textCol|fp=${Curation.corpusFingerprint(d)}")(
       gramCounts(d, textCol, ngramSize))
   }
 

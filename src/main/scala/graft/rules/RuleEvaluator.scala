@@ -23,8 +23,6 @@ import org.apache.spark.sql.types.StringType
   */
 object RuleEvaluator {
 
-  val SupportsMultiKeyGroupBy = true // legacy engine semantics, AggregationEngine.cs:12-25
-
   def apply(df: DataFrame, rule: RuleDefinition,
             params: Map[String, Any] = Map.empty): DataFrame = {
     RuleValidator.validate(df.schema, rule)

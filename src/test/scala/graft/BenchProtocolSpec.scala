@@ -63,4 +63,14 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(Bench.needsResample(noCounter, runs = 3, retryPct = 5.0))
     assert(Bench.reportedSec(noCounter, runs = 3, retryPct = 5.0) == 3.0)
   }
+
+  test("only a 32-core run writes the canonical BENCH_FULL.json") {
+    assert(Bench.fullMapPaths("BENCH_FULL.json", 32) ==
+      Seq("BENCH_FULL.json", "BENCH_FULL_c32.json"))
+    // another core count writes only its sibling, and the stdout line
+    // names that sibling
+    assert(Bench.fullMapPaths("BENCH_FULL.json", 8) == Seq("BENCH_FULL_c8.json"))
+    assert(Bench.fullMapPaths("out/check.json", 4) == Seq("out/check_c4.json"))
+    assert(Bench.fullMapPaths("out/check", 4) == Seq("out/check_c4"))
+  }
 }

@@ -216,39 +216,6 @@ class OperatorsSpec extends SparkSpec {
       .select("id1", "id2").as[(Long, Long)].collect().toSet)
   }
 
-  test("signatureSuiteFor (one scan) artifacts == the four standalone builders'") {
-    // fresh keys on both sides so every family actually BUILDS here —
-    // suite keys differ from the standalone keys so neither serves the
-    // other's memo and the comparison is build-vs-build
-    val suite = Dedup.signatureSuiteFor(docs,
-      minhashKey = "opspec!suite!mh", ngramKey = "opspec!suite!ng",
-      simhashKey = "opspec!suite!sim", winnowKey = "opspec!suite!win",
-      "doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(rows(suite.minhash.sigs) == rows(
-      Dedup.minhashIndexFor(docs, "opspec!alone!mh", "doc_id", "text").sigs))
-    assert(rows(suite.minhash.bands) == rows(
-      Dedup.minhashIndexFor(docs, "opspec!alone!mh", "doc_id", "text").bands))
-    assert(rows(suite.ngramSets) == rows(
-      Dedup.ngramSetsFor(docs, "opspec!alone!ng", "doc_id", "text")))
-    assert(rows(suite.simhash) == rows(
-      Dedup.simhashTableFor(docs, "opspec!alone!sim", "doc_id", "text")))
-    assert(rows(suite.winnowPostings) == rows(
-      Dedup.winnowPostingsFor(docs, "opspec!alone!win", "doc_id", "text")))
-    // a second suite call with the same keys serves pure memo hits —
-    // same artifact objects' contents, no rebuild visible to consumers
-    val again = Dedup.signatureSuiteFor(docs,
-      minhashKey = "opspec!suite!mh", ngramKey = "opspec!suite!ng",
-      simhashKey = "opspec!suite!sim", winnowKey = "opspec!suite!win",
-      "doc_id", "text")
-    assert(rows(again.winnowPostings) == rows(suite.winnowPostings))
-    // and the standalone accessors SHARE the suite's artifacts when
-    // called with the suite's keys (the battery wiring contract)
-    assert(rows(Dedup.ngramSetsFor(docs, "opspec!suite!ng", "doc_id", "text"))
-      == rows(suite.ngramSets))
-  }
-
   test("contamination join is a hash equi-join on the gram, never a cross join") {
     val bench = Seq((100L, "the quick brown fox jumps over the lazy dog")).toDF("bid", "btext")
     val plan = graft.operators.Curation.contaminationHits(
