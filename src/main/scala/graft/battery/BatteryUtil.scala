@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Dedup, Multimodal, PathCommit}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
@@ -778,8 +778,9 @@ private[graft] object BatteryUtil {
     * operation, or the row fails before serving anything.
     */
   private[graft] def assertSinglePartition(path: String, what: String): Unit = {
-    val dirs = new java.io.File(path).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("__batch_id="))
+    val root = new org.apache.hadoop.fs.Path(path)
+    val dirs = PathCommit.batchDirs(root.getFileSystem(
+      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration), root).size
     require(dirs == 1,
       s"$what left $dirs __batch_id partitions at $path, expected 1 (seed)")
   }
@@ -811,9 +812,9 @@ private[graft] object BatteryUtil {
         shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5)
     run(1)
     if (compactAfterBatch1) {
-      graft.streaming.DocumentStreams.compactIndex(s, idxPath,
-        uptoBatch = 1L, targetFiles = 2)
-      assertSinglePartition(idxPath, "compactIndex")
+      PathCommit.compactIntoSeed(s, idxPath,
+        uptoBatch = 1L, targetFiles = 2)(identity)
+      assertSinglePartition(idxPath, "compactIntoSeed")
     }
     run(2)
     s.read.parquet(outPath)
@@ -997,9 +998,9 @@ private[graft] object BatteryUtil {
         minSize = 64, maskBits = 6, maxSize = 512)
     run(0); run(1)
     if (compactAfterBatch1) {
-      graft.streaming.DocumentStreams.compactIndex(s, idxPath,
-        uptoBatch = 1L, targetFiles = 2)
-      assertSinglePartition(idxPath, "compactIndex")
+      PathCommit.compactIntoSeed(s, idxPath,
+        uptoBatch = 1L, targetFiles = 2)(identity)
+      assertSinglePartition(idxPath, "compactIntoSeed")
     }
     run(2)
     s.read.parquet(statsPath).select(

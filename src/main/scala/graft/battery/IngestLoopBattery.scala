@@ -24,7 +24,7 @@ private[graft] object IngestLoopBattery {
     // INDEX COMPACTION MUST BE INVISIBLE — the MINHASH BAND family
     // (round-18, completing the compaction-twin matrix the embed/BM25
     // twins started): the q_doc_ingest_stream protocol with
-    // [[graft.streaming.DocumentStreams.compactIndex]] run between
+    // [[graft.operators.PathCommit.compactIntoSeed]] run between
     // batches 1 and 2 — the seed + batch-1 band-index partitions
     // consolidate (asserted: one __batch_id dir), then batch 2 probes
     // compacted history. Same oracle as the uncompacted row: identical
@@ -287,7 +287,7 @@ private[graft] object IngestLoopBattery {
 
     // INDEX COMPACTION MUST BE INVISIBLE (VERDICT-r16 #4, LSH family):
     // the q_embed_ingest_stream protocol with
-    // [[graft.streaming.DocumentStreams.compactIndex]] run between
+    // [[graft.operators.PathCommit.compactIntoSeed]] run between
     // batches 1 and 2 — batches 0–1's index partitions consolidate into
     // the seed (asserted: exactly one __batch_id dir remains), then
     // batch 2 probes the compacted history. Same golden as the
@@ -308,7 +308,7 @@ private[graft] object IngestLoopBattery {
         // history probe's cost model relies on
         graft.streaming.EmbeddingStreams.compactEmbeddingIndex(s, idxPath,
           uptoBatch = 1L, targetFiles = 2)
-        assertSinglePartition(idxPath, "compactIndex")
+        assertSinglePartition(idxPath, "compactEmbeddingIndex")
         run(2)
         s.read.parquet(outPath)
           .select(col("vec_id"), col("__batch_id").cast("long").as("batch_id"))
@@ -361,10 +361,8 @@ private[graft] object IngestLoopBattery {
 
     // INDEX COMPACTION MUST BE INVISIBLE — the CHUNK-STORE family
     // (round-18): the q_chunk_ingest_stream protocol with
-    // [[graft.streaming.DocumentStreams.compactIndex]] between batches 1
-    // and 2 (chunk index rows are (hash, length)-keyed probe facts —
-    // duplicate-tolerant, so the write-then-delete compaction applies;
-    // one __batch_id dir asserted). Same oracle: batch 2's hit counts
+    // [[graft.operators.PathCommit.compactIntoSeed]] between batches 1
+    // and 2 (one __batch_id dir asserted). Same oracle: batch 2's hit counts
     // must be computed against identical history content.
     "q_chunk_compact_loop" -> Q(
       (s, dir) => runChunkIngest(s, dir, compactAfterBatch1 = true),
@@ -423,7 +421,7 @@ private[graft] object IngestLoopBattery {
     // through the production entry point): refitIvf's swap is
     // stage → marker → rename root→old → rename tmp→root → cleanup, and
     // a crash after the marker is completed by the NEXT refitIvf call
-    // from whichever rename it died at (AnnStreams.swapRefit — the state
+    // from whichever rename it died at (PathCommit.resume — the state
     // {root,tmp,old} identifies the step uniquely). This row stages each
     // refit by hand (the same reassign+layout write refitIvf performs),
     // stops at a different post-marker point each time — (A) marker

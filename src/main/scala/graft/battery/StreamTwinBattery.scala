@@ -135,7 +135,7 @@ private[graft] object StreamTwinBattery {
     // the independent driver mirror (bucket overlap + quantized integer
     // dot + majority vote) at the same derived params.
     "q_knn_label_vote" -> Q(
-      (s, dir) => {
+      (s, _) => {
         val emb = Queries.clusteredLabelCorpus(s)
         // the fixture is pinned at 2000 rows → 1800 seeds; deriving the
         // count with an extra action would buy nothing

@@ -393,38 +393,15 @@ object Lake {
       .write.mode(mode).parquet(path)
   }
 
-  /** COMPACTION: rewrite a parquet directory into
-    * `ceil(totalBytes / targetFileBytes)` files — the maintenance job
-    * that undoes small-file accumulation from streaming appends and
-    * over-parallel writers (millions of tiny files tax every listing,
-    * footer read, and task-scheduling pass downstream).
-    *
-    * Sizing comes from the FILESYSTEM (input file lengths), not row
-    * counts — compression ratio is data-dependent and row counts lie
-    * about bytes. The rewrite goes through a temp directory then an
-    * atomic-as-the-FS-allows swap, so a reader never sees a half-written
-    * mix of old and new files — though between the two renames there is
-    * a brief window where the path does not exist (two renames cannot be
-    * jointly atomic on a generic filesystem); a failed second rename
-    * rolls the original back into place. Plain `repartition` (round-robin) spreads
-    * rows evenly regardless of input skew; pass `sortBy` to additionally
-    * restore an ordering/clustering ([[writeZOrdered]]'s z column, a
-    * timestamp) that compaction would otherwise destroy.
-    *
-    * UNPARTITIONED directories only (enforced): compacting a
-    * `partitionBy` layout through here would flatten it — run one
-    * compact() per leaf directory instead, which is also the natural
-    * parallelization of the maintenance job.
-    */
   /** FILE-LAYOUT health report for a lake path: one row per leaf
     * directory (the table root counts as the leaf `""` when files sit at
     * top level) with file count, total/min/max bytes, and the count of
     * files under `smallFileBytes` — the "when do I need [[compact]] /
-    * the loops' compactIndex" monitor. A long-lived streaming loop's
-    * failure mode is never data volume first; it is 10⁵ tiny files
-    * making every scan listing-bound, and this table is the alert that
-    * fires BEFORE that (file_count and n_small grow linearly in batches
-    * while bytes stay flat).
+    * the loops' [[PathCommit.compactIntoSeed]]" monitor. A long-lived
+    * streaming loop's failure mode is never data volume first; it is 10⁵
+    * tiny files making every scan listing-bound, and this table is the
+    * alert that fires BEFORE that (file_count and n_small grow linearly
+    * in batches while bytes stay flat).
     *
     * Driver-side recursive Hadoop-FS listing — METADATA-sized work (one
     * row per file status, no data read), same FS-URI-general API as
@@ -462,10 +439,34 @@ object Lake {
         sum(when(col("bytes") < smallFileBytes, 1L).otherwise(0L)).as("n_small"))
   }
 
+  /** COMPACTION: rewrite a parquet directory into
+    * `ceil(totalBytes / targetFileBytes)` files — the maintenance job
+    * that undoes small-file accumulation from streaming appends and
+    * over-parallel writers (millions of tiny files tax every listing,
+    * footer read, and task-scheduling pass downstream).
+    *
+    * Sizing comes from the FILESYSTEM (input file lengths), not row
+    * counts — compression ratio is data-dependent and row counts lie
+    * about bytes. The rewrite is a [[PathCommit.swap]] under the tag
+    * `compact`, so a reader never sees a half-written mix of old and new
+    * files — though between the two renames there is a brief window
+    * where the path does not exist (two renames cannot be jointly atomic
+    * on a generic filesystem); the next call completes a swap a crash
+    * interrupted. Plain `repartition` (round-robin) spreads rows evenly
+    * regardless of input skew; pass `sortBy` to additionally restore an
+    * ordering/clustering ([[writeZOrdered]]'s z column, a timestamp)
+    * that compaction would otherwise destroy.
+    *
+    * UNPARTITIONED directories only (enforced): compacting a
+    * `partitionBy` layout through here would flatten it — run one
+    * compact() per leaf directory instead, which is also the natural
+    * parallelization of the maintenance job.
+    */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetFileBytes: Long = 128L << 20,
               sortBy: Seq[Column] = Nil): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
+    PathCommit.resume(spark, path, "compact")
     // Hadoop FileSystem API throughout — the writer accepts any FS URI
     // (hdfs://, s3a://, file:), so listing and the swap must too; a
     // java.io.File implementation silently only worked on local paths
@@ -481,24 +482,11 @@ object Lake {
         "compact each leaf directory (compacting the root would flatten it)")
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     val df = spark.read.parquet(path)
-    val tmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".__compact_tmp")
     val routed =
       if (sortBy.nonEmpty)
         df.repartitionByRange(nFiles, sortBy: _*).sortWithinPartitions(sortBy: _*)
       else df.repartition(nFiles)
-    routed.write.mode("overwrite").parquet(tmp.toString)
-    // rename-based swap: atomic per rename on HDFS/posix; an object store
-    // (s3a) emulates rename by copy — correct but not atomic, so run
-    // compaction there in a maintenance window (same caveat as every
-    // rename-committer on S3)
-    val bak = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".__compact_old")
-    fs.delete(bak, true)
-    require(fs.rename(target, bak), s"could not move $path aside")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(bak, target) // roll the original back before failing
-      throw new IllegalStateException(s"could not move compacted files into $path")
-    }
-    fs.delete(bak, true)
+    PathCommit.swap(spark, path, "compact")(routed.write.parquet(_))
     nFiles
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.PathCommit
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -29,8 +30,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * exactly its own `(__batch_id, __cluster)` partitions. Assigned rows
   * are NOT duplicate-tolerant (a doubled row is a doubled top-k
   * candidate), so compaction is the marker-guarded
-  * [[SearchStreams.compactGuarded]], not the dedup loops'
-  * write-then-delete [[DocumentStreams.compactIndex]].
+  * [[PathCommit.compactIntoSeed]].
   */
 object AnnStreams {
 
@@ -53,23 +53,14 @@ object AnnStreams {
     (array_position(dists, array_min(dists)) - 1).cast("int")
   }
 
-  /** Wire a streaming vector source into the IVF maintenance loop.
-    * `assignedPath` is the loop-owned grow-only parquet, partitioned by
-    * `(__batch_id, __cluster)` so probes prune BOTH axes at the source:
-    * a query reads `nprobe` cluster sub-directories of each batch
-    * partition and nothing else.
-    */
-  def ingestIvf(newVecs: DataFrame, idCol: String, vecCol: String,
-                centroids: Array[Array[Double]],
-                assignedPath: String): DataStreamWriter[Row] =
-    newVecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      processIvfBatch(batch, batchId, idCol, vecCol, centroids, assignedPath)
-    }
-
   /** One micro-batch: assign against the fixed centroids, append the
     * batch's `(id, vec, __cluster)` delta. NULL vectors are skipped
     * (nothing to index — this loop serves retrieval; the DOCUMENT
-    * record already flowed through its own lake).
+    * record already flowed through its own lake). `assignedPath` is the
+    * loop-owned grow-only parquet, partitioned by `(__batch_id,
+    * __cluster)` so probes prune BOTH axes at the source: a query reads
+    * `nprobe` cluster sub-directories of each batch partition and
+    * nothing else.
     */
   private[graft] def processIvfBatch(batch: DataFrame, batchId: Long,
                                      idCol: String, vecCol: String,
@@ -234,15 +225,15 @@ object AnnStreams {
       .withColumnRenamed("category", "cluster")
   }
 
-  /** Marker-guarded compaction of the assigned path (see
-    * [[SearchStreams.compactGuarded]]): batch partitions `≤ uptoBatch`
+  /** Marker-guarded compaction of the assigned path
+    * ([[PathCommit.compactIntoSeed]]): batch partitions `≤ uptoBatch`
     * consolidate into the seed partition, PRESERVING the `__cluster`
     * sub-partitioning that probe pruning depends on. Call between
     * batches with `uptoBatch` strictly below any batch that may retry.
     */
   def compactIvf(spark: SparkSession, assignedPath: String,
                  uptoBatch: Long, targetFiles: Int = 8): Unit =
-    SearchStreams.compactGuarded(spark, assignedPath, uptoBatch, targetFiles,
+    PathCommit.compactIntoSeed(spark, assignedPath, uptoBatch, targetFiles,
       extraPartitionBy = Seq("__cluster"))(identity)
 
   // --- Marker-guarded REFIT: acting on the drift signal -------------------
@@ -257,21 +248,15 @@ object AnnStreams {
     * Why not compact-style dynamic overwrite: a refit CHANGES the cluster
     * key, so overwriting the seed partition in place would leave stale
     * `__cluster=` directories the new fit never writes — phantom
-    * candidates under the old geometry. The swap is therefore staged +
-    * renamed:
+    * candidates under the old geometry. The table is therefore replaced
+    * by a [[PathCommit.swap]] under the tag `refit`: the fully
+    * re-assigned table is staged to `path__refit_tmp` (seed layout
+    * `__batch_id=-1/__cluster=…`) while serve still reads the OLD table,
+    * `path__refit_marker` commits it, and two renames switch it in.
     *
-    *   1. stage the fully re-assigned table to `path__refit_tmp`
-    *      (seed-layout `__batch_id=-1/__cluster=…`) — serve still reads
-    *      the OLD table;
-    *   2. write the `path__refit_marker` file (the commit point);
-    *   3. rename root → `path__refit_old`, rename tmp → root — the
-    *      switch; directory rename is metadata-only;
-    *   4. delete the old dir, then the marker.
-    *
-    * A crash before the marker leaves the old table serving (stale tmp is
-    * deleted on the next attempt); a crash after it is completed by the
-    * next [[refitIvf]] call from whichever rename it died at — the state
-    * (which of root/tmp/old exist) identifies the step uniquely.
+    * A crash before the marker leaves the old table serving; a crash
+    * after it is completed by the next [[refitIvf]] call (which then
+    * stages nothing: the interrupted refit IS the refit).
     * CONTRACT: pause the ingest loop first; `uptoBatch` must cover every
     * published batch (checked loudly — re-homing under a writer would
     * resurrect the mixed-fit hazard this exists to prevent).
@@ -281,68 +266,24 @@ object AnnStreams {
                idCol: String, vecCol: String,
                uptoBatch: Long, targetFiles: Int = 8): Unit = {
     require(newCentroids.nonEmpty, "refitIvf: empty centroid set")
-    val fs = new org.apache.hadoop.fs.Path(assignedPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (resumeRefit(spark, assignedPath)) return
-    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(assignedPath))
-    if (!fs.exists(root)) return
+    if (PathCommit.resume(spark, assignedPath, "refit")) return
+    val root = new org.apache.hadoop.fs.Path(assignedPath)
+    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) return
     val maxRow = spark.read.parquet(assignedPath)
       .agg(max(col("__batch_id").cast("long"))).head()
     if (!maxRow.isNullAt(0))
       require(maxRow.getLong(0) <= uptoBatch,
         s"refitIvf: published batch ${maxRow.getLong(0)} > uptoBatch " +
           s"$uptoBatch — pause the loop and cover every batch")
-    val tmp = new org.apache.hadoop.fs.Path(assignedPath + "__refit_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // stale pre-marker stage
     // stage: one pass over the published vectors, new assignment, the
     // ingest loop's own cluster exchange + layout
-    spark.read.parquet(assignedPath)
-      .select(col(idCol), col(vecCol),
-        assignCluster(col(vecCol), newCentroids).as("__cluster"))
-      .repartition(targetFiles, col("__cluster"))
-      .withColumn("__batch_id", lit(-1L))
-      .write.partitionBy("__batch_id", "__cluster").parquet(tmp.toString)
-    val marker = refitMarker(assignedPath)
-    val out = fs.create(marker, true)
-    try out.write(s"$uptoBatch".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    swapRefit(spark, assignedPath)
-  }
-
-  private def refitMarker(assignedPath: String) =
-    new org.apache.hadoop.fs.Path(assignedPath + "__refit_marker")
-
-  /** Complete an interrupted refit if its marker exists. Returns true if
-    * a resume ran (the interrupted refit IS the refit — don't re-stage).
-    */
-  private[streaming] def resumeRefit(spark: SparkSession,
-                                     assignedPath: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(assignedPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(refitMarker(assignedPath))) return false
-    swapRefit(spark, assignedPath)
-    true
-  }
-
-  /** The post-marker tail, idempotent from any crash point: whichever of
-    * root/tmp/old exist identifies the remaining renames uniquely.
-    */
-  private def swapRefit(spark: SparkSession, assignedPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(assignedPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(assignedPath)
-    val tmp = new org.apache.hadoop.fs.Path(assignedPath + "__refit_tmp")
-    val old = new org.apache.hadoop.fs.Path(assignedPath + "__refit_old")
-    if (fs.exists(tmp)) {
-      // the staged table is complete (marker follows the stage): move the
-      // live root aside if it is still in place, then promote the stage
-      if (fs.exists(root)) {
-        if (fs.exists(old)) fs.delete(old, true) // debris of an older refit
-        require(fs.rename(root, old), s"refit: rename $root -> $old failed")
-      }
-      require(fs.rename(tmp, root), s"refit: rename $tmp -> $root failed")
+    PathCommit.swap(spark, assignedPath, "refit") { tmp =>
+      spark.read.parquet(assignedPath)
+        .select(col(idCol), col(vecCol),
+          assignCluster(col(vecCol), newCentroids).as("__cluster"))
+        .repartition(targetFiles, col("__cluster"))
+        .withColumn("__batch_id", lit(-1L))
+        .write.partitionBy("__batch_id", "__cluster").parquet(tmp)
     }
-    if (fs.exists(old)) fs.delete(old, true)
-    fs.delete(refitMarker(assignedPath), false)
   }
 }

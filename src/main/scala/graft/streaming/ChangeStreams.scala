@@ -91,6 +91,11 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
                                     changeFeedPath: Option[String] = None,
                                     batchId: Long = -1L,
                                     snapshotPartition: Option[(String, Column)] = None): Unit = {
+    // First complete a snapshot swap that a crash interrupted, even for an
+    // empty batch: until then the snapshot may sit under its `_old` name,
+    // and merging into the empty path would replace it with this batch
+    // alone.
+    graft.operators.PathCommit.resume(batch.sparkSession, snapshotPath, "merge")
     // An EMPTY micro-batch is a no-op, and must short-circuit: merging it
     // anyway would (a) on bootstrap, write a schema-less snapshot
     // directory that poisons the next merge's read, and (b) on an
@@ -146,58 +151,44 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
         isDelete = col("__is_del"), keepTombstones = true)
       .select(dataCols.map(col) :+ col("__del"): _*)
     // swap-safe rewrite: the snapshot is both input and output of this
-    // batch, so write aside and rename (the Lake.compact swap; rename is
-    // atomic on HDFS/posix, copy-emulated on object stores). The tmp
-    // write comes FIRST (round-20, the mergeBatchPartitioned ordering):
-    // it is the one full computation of `merged`, and the feed diff
-    // below reads the STAGED files back instead of re-running the whole
-    // union+argmax plan a second time — the feed-armed merge previously
-    // computed `merged` twice per micro-batch (feed staging, then this
-    // write).
-    val tmp = new org.apache.hadoop.fs.Path(
-      snapshotPath.stripSuffix("/") + ".__merge_tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    val staged = spark.read.parquet(tmp.toString)
-    // change feed: diff the LIVE views before/after, while the old
-    // snapshot is still on disk (the swap below replaces it). The diff
-    // must be DURABLE before the swap, not merely cached: persisted
-    // blocks can be dropped (executor loss, memory pressure), and a
-    // recompute after the rename would re-read snapshotPath — by then
-    // the NEW snapshot — yielding a silently wrong/empty feed slice. So
-    // the diff is staged to parquet and read back; the feed append below
-    // consumes the staged files, whose contents can never change
-    // underneath it.
-    val feed = changeFeedPath.map { p =>
-      val before =
-        if (exists) readSnapshot(spark, snapshotPath)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            staged.drop("__del").schema.fields))
-      // "_op", not "op": CDC changelogs routinely carry their own `op`
-      // column through to the snapshot, and the feed must not collide.
-      // includeBefore: feed consumers maintaining incremental aggregates
-      // need the replaced row to retract it
-      val d = graft.operators.Lake.diffSnapshots(
-          before, staged.filter(!col("__del")).drop("__del"), keyCols,
-          opCol = "_op", includeBefore = true)
-        .withColumn("__batch_id", lit(batchId))
-      val staging = new org.apache.hadoop.fs.Path(
-        p.stripSuffix("/") + ".__feed_tmp")
-      d.write.mode("overwrite").parquet(staging.toString)
-      (spark.read.parquet(staging.toString), staging)
+    // batch, so it is staged aside and swapped in (PathCommit.swap). The
+    // staged write is the one full computation of `merged`, and the feed
+    // diff below reads the STAGED files back instead of re-running the
+    // whole union+argmax plan a second time (round-20, the
+    // mergeBatchPartitioned ordering).
+    val feed = graft.operators.PathCommit.swap(spark, snapshotPath, "merge") { tmp =>
+      merged.write.parquet(tmp)
+      val staged = spark.read.parquet(tmp)
+      // change feed: diff the LIVE views before/after, while the old
+      // snapshot is still on disk (the swap replaces it). The diff must
+      // be DURABLE before the swap, not merely cached: persisted blocks
+      // can be dropped (executor loss, memory pressure), and a recompute
+      // after the rename would re-read snapshotPath — by then the NEW
+      // snapshot — yielding a silently wrong/empty feed slice. So the
+      // diff is staged to parquet and read back; the feed append below
+      // consumes the staged files, whose contents can never change
+      // underneath it.
+      changeFeedPath.map { p =>
+        val before =
+          if (exists) readSnapshot(spark, snapshotPath)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(
+              staged.drop("__del").schema.fields))
+        // "_op", not "op": CDC changelogs routinely carry their own `op`
+        // column through to the snapshot, and the feed must not collide.
+        // includeBefore: feed consumers maintaining incremental aggregates
+        // need the replaced row to retract it
+        val d = graft.operators.Lake.diffSnapshots(
+            before, staged.filter(!col("__del")).drop("__del"), keyCols,
+            opCol = "_op", includeBefore = true)
+          .withColumn("__batch_id", lit(batchId))
+        val staging = new org.apache.hadoop.fs.Path(
+          p.stripSuffix("/") + ".__feed_tmp")
+        d.write.mode("overwrite").parquet(staging.toString)
+        (spark.read.parquet(staging.toString), staging)
+      }
     }
-    val bak = new org.apache.hadoop.fs.Path(
-      snapshotPath.stripSuffix("/") + ".__merge_old")
-    fs.delete(bak, true)
-    if (fs.exists(target))
-      require(fs.rename(target, bak), s"could not move $snapshotPath aside")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(bak, target)
-      throw new IllegalStateException(
-        s"could not move merged snapshot into $snapshotPath")
-    }
-    fs.delete(bak, true)
     feed.foreach { case (d, staging) =>
       // `d` reads the staged files, so this append is insulated from the
       // swap above. Empty diffs append nothing (a no-op batch must not

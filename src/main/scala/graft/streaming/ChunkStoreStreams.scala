@@ -19,11 +19,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * by `__batch_id`; the probe reads history EXCLUDING the in-flight
   * batch's partition, so an at-least-once `foreachBatch` retry recomputes
   * identical labels (chunking is deterministic) and rewrites exactly its
-  * own partitions. Compact with [[DocumentStreams.compactIndex]] — chunk
-  * index rows are probe-side facts keyed by `(hash, length)`, tolerant of
-  * the write-then-delete discipline (a transiently duplicated index row
-  * cannot change any `status`: hit-dominates and the `left_semi` probe
-  * dedups keys).
+  * own partitions. Compact the index with
+  * [[graft.operators.PathCommit.compactIntoSeed]]`(...)(identity)`.
   */
 object ChunkStoreStreams {
 

@@ -155,58 +155,6 @@ object DocumentStreams {
       } finally pool.shutdown()
     }
 
-  /** COMPACT a loop-owned INDEX path: consolidate every committed batch
-    * partition with `__batch_id ≤ uptoBatch` (plus the seed) into the
-    * seed partition (`__batch_id = -1`), rewritten as `targetFiles`
-    * files — a long-lived ingest loop otherwise accumulates one tiny
-    * partition per micro-batch, and the per-batch history scan becomes
-    * file-listing-bound long before it is data-bound. History CONTENT is
-    * unchanged: any in-flight batch `> uptoBatch` reads the same rows
-    * through [[readHistory]] before and after.
-    *
-    * Safety contract: call BETWEEN batches (or from a maintenance job
-    * while the loop is quiescent) with `uptoBatch` strictly below any
-    * batch id that may still RETRY — a retrying batch must find its own
-    * partition intact to rewrite it. Crash-safety is write-then-delete:
-    * the consolidated copy lands in the seed partition BEFORE the
-    * originals are deleted, so an interruption leaves duplicate history
-    * rows, never a gap — and the index consumers are duplicate-tolerant
-    * by construction (match sets are distinct-ed; a duplicate index row
-    * changes no drop decision). INDEX paths only: lake/data partitions
-    * are NOT duplicate-tolerant, so do not point this at `outPath`.
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                   uptoBatch: Long, targetFiles: Int = 8): Unit = {
-    require(uptoBatch >= 0, "uptoBatch must be >= 0")
-    require(targetFiles > 0, "targetFiles must be positive")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val h = spark.read.parquet(path)
-    require(h.columns.contains("__batch_id"),
-      s"$path is not a loop-owned __batch_id-partitioned layout")
-    val old = h.filter(col("__batch_id") <= uptoBatch).drop("__batch_id")
-    if (old.isEmpty) return
-    // stage through a sibling tmp dir: Spark cannot overwrite a partition
-    // it is lazily reading from
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    old.repartition(targetFiles).write.parquet(tmp.toString)
-    spark.read.parquet(tmp.toString).withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(path)
-    fs.listStatus(root).filter(_.isDirectory).map(_.getPath).foreach { d =>
-      val name = d.getName
-      if (name.startsWith("__batch_id=")) {
-        scala.util.Try(name.substring("__batch_id=".length).toLong)
-          .toOption.foreach { id =>
-            if (id >= 0 && id <= uptoBatch) fs.delete(d, true)
-          }
-      }
-    }
-    fs.delete(tmp, true)
-  }
-
   /** Read a loop-owned path as HISTORY for batch `batchId`: every
     * committed partition EXCEPT the in-flight batch's own. The exclusion
     * is what makes retries safe — a failed attempt may have already

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Barrier, Dedup}
+import graft.operators.{Barrier, Dedup, PathCommit}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -302,7 +302,7 @@ object EmbeddingStreams {
     Barrier.release(vecs)
   }
 
-  /** [[DocumentStreams.compactIndex]] for the embedding loop's index,
+  /** [[PathCommit.compactIntoSeed]] for the embedding loop's index,
     * plus the AUDIT of the invariant the per-batch history probe's cost
     * model rests on: exactly one NON-NULL vector row per indexed id (the
     * [[Dedup.embeddingLshIndex]] slim layout — bucket rows are (id, long)
@@ -317,7 +317,7 @@ object EmbeddingStreams {
   def compactEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
                             indexPath: String, uptoBatch: Long,
                             targetFiles: Int = 8): Unit = {
-    DocumentStreams.compactIndex(spark, indexPath, uptoBatch, targetFiles)
+    PathCommit.compactIntoSeed(spark, indexPath, uptoBatch, targetFiles)(identity)
     val dup = spark.read.parquet(indexPath)
       .filter(col("v").isNotNull)
       .groupBy("id").agg(count(lit(1)).as("__n"))

@@ -139,19 +139,9 @@ object MediaStreams {
     * `__batch_id` with the loops' usual retry-idempotence contract.
     * Clips with ZERO decodable frames pass through un-deduped and
     * un-indexed (the opaque-blob policy of the image loop).
-    */
-  def ingestVideoDedup(newClips: DataFrame, idCol: String,
-                       frameHasher: (DataFrame, String) => DataFrame,
-                       indexPath: String, outPath: String,
-                       maxDistance: Int = 3,
-                       minMatchFrac: Double = 0.5): DataStreamWriter[Row] =
-    newClips.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      processVideoBatch(batch, batchId, idCol, frameHasher, indexPath,
-        outPath, maxDistance, minMatchFrac)
-    }
-
-  /** One micro-batch of the video loop (factored out for direct testing,
-    * like [[processMediaBatch]]).
+    *
+    * One micro-batch, the body a `writeStream.foreachBatch` runs (as
+    * [[ingestMediaDedup]] wires [[processMediaBatch]]).
     */
   private[graft] def processVideoBatch(batch: DataFrame, batchId: Long,
                                            idCol: String,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.TopN
-import graft.operators.Search
+import graft.operators.{PathCommit, Search}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -18,10 +18,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * the dedup loop's lake, whose first-arrival-wins policy guarantees it) —
   * a re-indexed id would double-count its df and tf. Same-batch RETRIES
   * are safe ([[DocumentStreams.writeBatchPartition]] rewrites the batch's
-  * own partitions). Unlike the dedup indexes, postings are NOT
-  * duplicate-tolerant (a duplicated row inflates df), so these paths get
-  * their own marker-guarded [[compactBm25]] instead of the dedup loops'
-  * write-then-delete [[DocumentStreams.compactIndex]].
+  * own partitions). Postings are NOT duplicate-tolerant (a duplicated
+  * row inflates df); [[compactBm25]] compacts them through the
+  * marker-guarded [[PathCommit.compactIntoSeed]].
   */
 object SearchStreams {
 
@@ -99,99 +98,19 @@ object SearchStreams {
   /** COMPACT the streaming BM25 index: per-batch postings deltas with
     * `__batch_id ≤ uptoBatch` (plus the seed) MERGE into one row per
     * token in the seed partition (exact df sums, re-capped postings), and
-    * the lengths partitions consolidate via
-    * [[DocumentStreams.compactIndex]] — after compaction a query serves
-    * from one merged row per matched token again, regardless of how many
-    * batches have ever run.
-    *
-    * Postings are NOT duplicate-tolerant (a redundant row inflates df),
-    * so unlike `compactIndex` the write-then-delete crash window here
-    * would CORRUPT scores — which is why this op is guarded by a marker
-    * file: `_COMPACTING_UPTO` is written before the merged seed lands and
-    * removed after the originals are deleted. A re-run that finds the
-    * marker COMPLETES the interrupted compaction (deletes the
-    * already-merged originals) instead of re-merging them into a
-    * double-counted seed; serving between crash and repair double-counts
-    * the not-yet-deleted range, so compact quiescent and re-run on any
-    * failure before serving.
+    * the lengths partitions consolidate as they are — after compaction a
+    * query serves from one merged row per matched token again,
+    * regardless of how many batches have ever run. Both go through the
+    * marker-guarded [[PathCommit.compactIntoSeed]]: neither postings (a
+    * redundant row inflates df) nor lengths (stats double-count a
+    * leftover partition) tolerate duplicates.
     */
   def compactBm25(spark: SparkSession,
                   lengthsPath: String, postingsPath: String,
                   uptoBatch: Long, maxPostings: Int = 10000,
                   targetFiles: Int = 8): Unit = {
-    require(uptoBatch >= 0, "uptoBatch must be >= 0")
-    require(targetFiles > 0, "targetFiles must be positive")
-    compactGuarded(spark, postingsPath, uptoBatch, targetFiles)(
+    PathCommit.compactIntoSeed(spark, postingsPath, uptoBatch, targetFiles)(
       mergePostingRows(_, maxPostings))
-    // lengths need no per-row merge, but they share the
-    // NOT-duplicate-tolerant property (stats double-count a leftover
-    // partition), so they get the same marker-guarded procedure
-    compactGuarded(spark, lengthsPath, uptoBatch, targetFiles)(identity)
-  }
-
-  /** Marker-guarded compact-into-seed: stage `transform(rows ≤ upto)` to
-    * a tmp dir, record the range in `_COMPACTING_UPTO`, overwrite the
-    * seed partition, delete the originals, drop the marker. A re-run that
-    * finds the marker completes the interrupted deletes instead of
-    * re-merging already-merged rows. `extraPartitionBy` preserves
-    * sub-partitioning (e.g. the IVF layout's `__cluster`) through the
-    * seed rewrite — shared with [[AnnStreams.compactIvf]], whose assigned
-    * rows are equally NOT duplicate-tolerant (a doubled row is a doubled
-    * top-k candidate).
-    */
-  private[streaming] def compactGuarded(spark: SparkSession, path: String,
-                             uptoBatch: Long, targetFiles: Int,
-                             extraPartitionBy: Seq[String] = Nil)(
-                             transform: DataFrame => DataFrame): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val marker = new org.apache.hadoop.fs.Path(path, "_COMPACTING_UPTO")
-    def deleteRange(upto: Long): Unit =
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath).foreach { d =>
-        val name = d.getName
-        if (name.startsWith("__batch_id=")) {
-          scala.util.Try(name.substring("__batch_id=".length).toLong)
-            .toOption.foreach(id => if (id >= 0 && id <= upto) fs.delete(d, true))
-        }
-      }
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    def publishFromTmp(upto: Long): Unit = {
-      // idempotent tail of a compaction: seed := tmp (dynamic overwrite
-      // replaces exactly the seed partition), delete originals, drop the
-      // staging dir LAST, the marker after it
-      spark.read.parquet(tmp.toString).withColumn("__batch_id", lit(-1L))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id" +: extraPartitionBy: _*).parquet(path)
-      deleteRange(upto)
-      fs.delete(tmp, true)
-      fs.delete(marker, false)
-    }
-    if (fs.exists(marker)) {
-      // complete an interrupted run. The marker is written only after the
-      // staging dir is complete, so: tmp present → replay the whole
-      // publish (overwrite is idempotent); tmp absent → everything but
-      // the marker removal finished — nothing left to delete but it
-      val in = fs.open(marker)
-      val recorded = try {
-        val buf = new Array[Byte](64)
-        val n = math.max(in.read(buf), 0)
-        new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      } finally in.close()
-      if (fs.exists(tmp)) publishFromTmp(recorded)
-      else { deleteRange(recorded); fs.delete(marker, false) }
-      return
-    }
-    val h = spark.read.parquet(path)
-    require(h.columns.contains("__batch_id"),
-      s"$path is not a loop-owned __batch_id-partitioned layout")
-    val old = h.filter(col("__batch_id") <= uptoBatch).drop("__batch_id")
-    if (old.isEmpty) return
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    transform(old).repartition(targetFiles).write.parquet(tmp.toString)
-    val out = fs.create(marker, true)
-    try out.write(s"$uptoBatch".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    publishFromTmp(uptoBatch)
+    PathCommit.compactIntoSeed(spark, lengthsPath, uptoBatch, targetFiles)(identity)
   }
 }

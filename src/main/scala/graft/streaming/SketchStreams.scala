@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Profile
+import graft.operators.{PathCommit, Profile}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * doubled row changes nothing) — but counter rows are NOT (a leftover
   * partition double-counts), so the CMS-family compactors run the
   * marker-guarded stage/publish/delete discipline shared with the BM25
-  * postings ([[SearchStreams.compactGuarded]]): a re-run that finds the
+  * postings ([[PathCommit.compactIntoSeed]]): a re-run that finds the
   * marker completes the interrupted deletes instead of re-merging.
   */
 object SketchStreams {
@@ -111,18 +111,10 @@ object SketchStreams {
   def compactKmv(spark: SparkSession, sketchPath: String, k: Int,
                  uptoBatch: Long, sliceCols: Seq[String] = Nil,
                  targetFiles: Int = 1): Unit =
-    SearchStreams.compactGuarded(spark, sketchPath, uptoBatch, targetFiles)(
+    PathCommit.compactIntoSeed(spark, sketchPath, uptoBatch, targetFiles)(
       Profile.kmvMerge(_, k, sliceCols))
 
   // --- CMS (and its dyadic quantile twin) ------------------------------
-
-  def ingestCms(newRows: DataFrame, itemCol: Column, depth: Int, width: Int,
-                sketchPath: String,
-                sliceCols: Seq[String] = Nil): DataStreamWriter[Row] =
-    newRows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      processCmsBatch(batch, batchId, itemCol, depth, width, sketchPath,
-        sliceCols)
-    }
 
   private[graft] def processCmsBatch(batch: DataFrame, batchId: Long,
                                      itemCol: Column, depth: Int, width: Int,
@@ -150,17 +142,8 @@ object SketchStreams {
   def compactCms(spark: SparkSession, sketchPath: String,
                  uptoBatch: Long, sliceCols: Seq[String] = Nil,
                  targetFiles: Int = 1): Unit =
-    SearchStreams.compactGuarded(spark, sketchPath, uptoBatch, targetFiles)(
+    PathCommit.compactIntoSeed(spark, sketchPath, uptoBatch, targetFiles)(
       Profile.cmsMerge(_, sliceCols))
-
-  def ingestQuantileSketch(newRows: DataFrame, metricCol: Column,
-                           levels: Int, depth: Int, width: Int,
-                           sketchPath: String,
-                           sliceCols: Seq[String] = Nil): DataStreamWriter[Row] =
-    newRows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      processQuantileBatch(batch, batchId, metricCol, levels, depth, width,
-        sketchPath, sliceCols)
-    }
 
   private[graft] def processQuantileBatch(batch: DataFrame, batchId: Long,
                                           metricCol: Column, levels: Int,
@@ -183,6 +166,6 @@ object SketchStreams {
   def compactQuantileSketch(spark: SparkSession, sketchPath: String,
                             uptoBatch: Long, sliceCols: Seq[String] = Nil,
                             targetFiles: Int = 1): Unit =
-    SearchStreams.compactGuarded(spark, sketchPath, uptoBatch, targetFiles)(
+    PathCommit.compactIntoSeed(spark, sketchPath, uptoBatch, targetFiles)(
       Profile.quantileSketchMerge(_, sliceCols))
 }

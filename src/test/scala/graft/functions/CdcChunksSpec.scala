@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
 class CdcChunksSpec extends SparkSpec {
   import spark.implicits._
 
-  private def chunksOf(b: Array[Byte], minSize: Int = 8, maskBits: Int = 4,
-                       maxSize: Int = 64): Seq[(Long, Long, Long)] =
+  private def chunksOf(b: Array[Byte], minSize: Int, maskBits: Int,
+                       maxSize: Int): Seq[(Long, Long, Long)] =
     Seq(Tuple1(b)).toDF("payload")
       .select(explode(CdcChunks.column(col("payload"), minSize, maskBits, maxSize)).as("c"))
       .select("c.offset", "c.length", "c.hash")

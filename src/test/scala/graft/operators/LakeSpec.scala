@@ -264,8 +264,8 @@ class LakeSpec extends SparkSpec {
     val after = parquetFiles(out)
     assert(n == 4 && after.length == 4, s"n=$n files=${after.length}")
     // no temp/backup remnants, content identical
-    assert(!new java.io.File(out + ".__compact_tmp").exists())
-    assert(!new java.io.File(out + ".__compact_old").exists())
+    assert(!new java.io.File(out + "__compact_tmp").exists())
+    assert(!new java.io.File(out + "__compact_old").exists())
     val back = spark.read.parquet(out)
     assert(back.count() == 20000 &&
       back.agg(sum("id")).as[Long].head() == (0L until 20000L).sum)

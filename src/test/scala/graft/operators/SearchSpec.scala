@@ -93,7 +93,7 @@ class SearchSpec extends SparkSpec {
     spark.conf.set("spark.graft.indexDir", root)
     try {
       var builds = 0
-      val idx = Search.bm25IndexFor({ builds += 1; docs },
+      Search.bm25IndexFor({ builds += 1; docs },
         cacheKey = "spec!bm25", "doc_id", "text")
       val again = Search.bm25IndexFor(
         { builds += 1; sys.error("memo must not rebuild"): org.apache.spark.sql.DataFrame },

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{PathCommit, Similarity}
 import org.apache.spark.sql.functions._
 
 /** The streaming IVF maintenance loop ([[AnnStreams]]): fixed-centroid
@@ -278,7 +278,7 @@ class AnnStreamsSpec extends SparkSpec {
     assert(fs2.rename(new org.apache.hadoop.fs.Path(path2),
       new org.apache.hadoop.fs.Path(path2 + "__refit_old")))
 
-    assert(AnnStreams.resumeRefit(spark, path2))
+    assert(PathCommit.resume(spark, path2, "refit"))
     val t2 = spark.read.parquet(path2)
     assert(t2.count() == 200L && t2.select("vec_id").distinct().count() == 200L)
     assert(t2.select("__cluster").distinct().as[Int].collect().forall(_ < 4))
@@ -293,12 +293,12 @@ class AnnStreamsSpec extends SparkSpec {
     fs3.mkdirs(new org.apache.hadoop.fs.Path(path3 + "__refit_old"))
     val out3 = fs3.create(new org.apache.hadoop.fs.Path(path3 + "__refit_marker"), true)
     try out3.write("0".getBytes("UTF-8")) finally out3.close()
-    assert(AnnStreams.resumeRefit(spark, path3))
+    assert(PathCommit.resume(spark, path3, "refit"))
     assert(!fs3.exists(new org.apache.hadoop.fs.Path(path3 + "__refit_old")))
     assert(!fs3.exists(new org.apache.hadoop.fs.Path(path3 + "__refit_marker")))
     assert(spark.read.parquet(path3).count() == 200L)
 
     // no marker → resume is a no-op
-    assert(!AnnStreams.resumeRefit(spark, path3))
+    assert(!PathCommit.resume(spark, path3, "refit"))
   }
 }

@@ -124,6 +124,40 @@ class ChangeStreamsSpec extends SparkSpec {
     assert(incremental == batch)
   }
 
+  test("a retried batch completes a crashed snapshot swap instead of losing the snapshot") {
+    def merge(b: Seq[(String, Long, Long, String)], snap: String, id: Long): Unit =
+      ChangeStreams.mergeBatch(b.toDF("k", "v", "ver", "op"), Seq("k"),
+        Seq("ver"), col("op") === "delete", snap, batchId = id)
+    def raw(snap: String) = spark.read.parquet(snap)
+      .select("k", "v", "ver", "__del").as[(String, Long, Long, Boolean)]
+      .collect().toSet
+    val clean = tmp("graft_snap_clean") + "/snap"
+    merge(b1, clean, 0L); merge(b2, clean, 1L)
+    assert(ChangeStreams.readSnapshot(spark, clean).count() == 3L)
+
+    // batch 1's swap, stopped at each point after its commit marker: the
+    // stage holds what batch 1 merges (the clean run's final snapshot),
+    // then (A) nothing renamed, (B) the prior snapshot moved aside and
+    // nothing at the path, (C) the stage promoted, old and marker left
+    for (crashPoint <- Seq("A", "B", "C")) {
+      val snap = tmp("graft_snap_crash") + "/snap"
+      merge(b1, snap, 0L)
+      val fs = new org.apache.hadoop.fs.Path(snap)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def p(suffix: String) = new org.apache.hadoop.fs.Path(snap + suffix)
+      spark.read.parquet(clean).write.parquet(snap + "__merge_tmp")
+      fs.create(p("__merge_marker"), true).close()
+      if (crashPoint != "A") assert(fs.rename(p(""), p("__merge_old")))
+      if (crashPoint == "C") assert(fs.rename(p("__merge_tmp"), p("")))
+
+      merge(b2, snap, 1L) // the foreachBatch retry
+      assert(raw(snap) == raw(clean), s"crash point $crashPoint")
+      Seq("__merge_tmp", "__merge_old", "__merge_marker").foreach { s =>
+        assert(!fs.exists(p(s)), s"crash point $crashPoint left $s")
+      }
+    }
+  }
+
   test("mergeBatch bootstraps from an absent snapshot") {
     val snapPath = tmp("graft_snap3") + "/snap"
     ChangeStreams.mergeBatch(b1.toDF("k", "v", "ver", "op"), Seq("k"),

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.functions.CdcChunks
+import graft.operators.PathCommit
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -112,8 +113,8 @@ class ChunkStoreStreamsSpec extends SparkSpec {
 
     // compaction consolidates batches; a follow-up batch's labels are
     // unchanged (content facts, not positions)
-    DocumentStreams.compactIndex(spark, indexPath, uptoBatch = 1L,
-      targetFiles = 2)
+    PathCommit.compactIntoSeed(spark, indexPath, uptoBatch = 1L,
+      targetFiles = 2)(identity)
     ChunkStoreStreams.processChunkBatch(
       blobs((300L, a), (301L, detBytes(1400, 43L))), 5L,
       "blob_id", "payload", indexPath, statsPath, 16, 5, 256)

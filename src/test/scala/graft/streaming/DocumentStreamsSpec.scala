@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, PathCommit}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -150,7 +150,6 @@ class DocumentStreamsSpec extends SparkSpec {
     val outPath = tmp("graft_dc_lake")
     Seq(exactIdx, bandIdx).foreach(p =>
       java.nio.file.Files.delete(java.nio.file.Paths.get(p)))
-    val fluent = "the cat and the hat is in the house and it is a good day " * 3
     val secret = "the famous benchmark question about the speed of light in a vacuum"
     val cfg = graft.operators.Curation.Config(nearDupThreshold = 0.5)
     // the suite gram table is PREBUILT (the benchGramsFor contract)
@@ -230,7 +229,7 @@ class DocumentStreamsSpec extends SparkSpec {
       2L, "doc_id", "text", indexPath, outPath, 3, 128, 32, 0.5)
     val before = spark.read.parquet(indexPath)
       .select("id", "band", "bh").as[(Long, Int, Long)].collect().toSet
-    DocumentStreams.compactIndex(spark, indexPath, uptoBatch = 1L, targetFiles = 1)
+    PathCommit.compactIntoSeed(spark, indexPath, uptoBatch = 1L, targetFiles = 1)(identity)
     // content identical, partitions consolidated to {-1, 2}
     val after = spark.read.parquet(indexPath)
     assert(after.select("id", "band", "bh")
@@ -253,7 +252,7 @@ class DocumentStreamsSpec extends SparkSpec {
       2L, "doc_id", "text", indexPath, outPath, 3, 128, 32, 0.5)
     assert(spark.read.parquet(outPath).filter(col("doc_id") === 3L).count() == 1L)
     // compacting everything (uptoBatch covers all) leaves one partition
-    DocumentStreams.compactIndex(spark, indexPath, uptoBatch = 3L, targetFiles = 1)
+    PathCommit.compactIntoSeed(spark, indexPath, uptoBatch = 3L, targetFiles = 1)(identity)
     assert(spark.read.parquet(indexPath).select("__batch_id").distinct()
       .as[Long].collect().toSet == Set(-1L))
     assert(spark.read.parquet(indexPath).select("id").distinct()

@@ -425,7 +425,7 @@ object GoldenGen {
     val qCodes = graft.operators.Similarity.queryBucketCodes(qVec, 4, 8, 42L).toSet
     val annTop = embs.iterator
       .filter(_._1 != 0L)
-      .filter { case (id, v) =>
+      .filter { case (_, v) =>
         graft.operators.Similarity.queryBucketCodes(v, 4, 8, 42L)
           .toSet.intersect(qCodes).nonEmpty
       }

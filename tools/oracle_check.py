@@ -3,7 +3,13 @@
 this script compares each <outDir>/<name> parquet against the DuckDB result of
 <outDir>/oracle_sql.json's SQL over the sfDir tables.
 
-Usage: oracle_check.py <sfDir> <outDir>
+Usage: oracle_check.py <sfDir> <outDir> [q_a,q_b,...]
+
+The optional third argument is the comma-separated row list a filtered
+Verify ran. An oracle row outside that list with no output is reported as
+[NOT RUN] and counted apart; a listed row with no output is a [FAIL]. Without
+the list every oracle row without output is a [FAIL]. The exit status is
+non-zero whenever a row fails.
 """
 import sys, os, json, glob
 import duckdb
@@ -30,20 +36,25 @@ def norm(v):
     return str(v)
 
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, run_list=None):
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    n_pass = n_fail = 0
+    ran = None if run_list is None else {n.strip() for n in run_list.split(",") if n.strip()}
+    n_pass = n_fail = n_not_run = 0
     dirs = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
     # an oracle-listed query with NO output dir means Verify errored on it —
-    # that's a failure, not a skip
+    # that's a failure, not a skip — unless a filtered Verify never ran it
     for missing in sorted(set(oracle) - dirs):
-        n_fail += 1
-        print(f"  [FAIL] {missing}: no output written (query errored in Verify)")
+        if ran is not None and missing not in ran:
+            n_not_run += 1
+            print(f"  [NOT RUN] {missing}: not in the run list")
+        else:
+            n_fail += 1
+            print(f"  [FAIL] {missing}: no output written (query errored in Verify)")
     for name in sorted(dirs):
         d = os.path.join(out_dir, name)
         files = glob.glob(os.path.join(d, "*.parquet"))
@@ -76,9 +87,10 @@ def main(sf_dir, out_dir):
         else:
             n_fail += 1
             print(f"  [FAIL] {name}: {why}")
-    print(f"{n_pass} pass, {n_fail} fail")
+    not_run = "" if ran is None else f", {n_not_run} not run"
+    print(f"{n_pass} pass, {n_fail} fail{not_run}")
     return 1 if n_fail else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:4]))
