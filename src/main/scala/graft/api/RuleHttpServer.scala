@@ -19,9 +19,10 @@ import scala.jdk.CollectionConverters._
   *
   * The body is parsed once: the `Users` and `Rule` trees go straight to
   * [[RuleService]], which infers the row schema by Spark's JSON rules on
-  * the driver, with no Spark job, and answers filter-only rules without
-  * launching one. Requests run on a pool of four threads named
-  * `rule-http-<n>`.
+  * the driver, with no Spark job, and keeps the rows in a request leaf the
+  * planner carries but does not walk. Filter-only rules are answered without
+  * a Spark job, aggregating ones with one. Requests run on a pool of four
+  * threads named `rule-http-<n>`.
   *
   * Built on the JDK's `com.sun.net.httpserver` (zero extra dependencies —
   * this is a demo shim for request-sized payloads, not a production

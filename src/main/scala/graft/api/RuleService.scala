@@ -16,12 +16,15 @@ import org.apache.spark.sql.functions.{col, struct, to_json}
   * Spark analogue of the reference reflecting over the element type's
   * properties at call time. Inference follows Spark's own JSON rules (the
   * schema and rows equal Spark's JSON reader's over the same text), but runs
-  * on the driver with no job: the rows become a `LocalRelation`
-  * ([[org.apache.spark.sql.catalyst.json.LocalJsonRelation]]), so a
-  * filter-only rule is evaluated and rendered by the optimizer without
-  * launching a Spark job; only aggregating rules run one. Results return as a
-  * JSON array string, errors as thrown exceptions for the embedding layer to
-  * map to its transport (the reference maps them to HTTP 400 `{Error}`).
+  * on the driver with no job
+  * ([[org.apache.spark.sql.catalyst.json.LocalJsonRelation]]). The rows land
+  * in a `RequestRelation` leaf, and the decode installs that leaf's optimizer
+  * rule and planner strategy in the session once. The rule evaluates a
+  * filter-only rule and its rendering on the driver, so no Spark job runs;
+  * the strategy scans the rows as one partition, so an aggregating rule runs
+  * one job with no exchange. Results return as a JSON array string, errors as
+  * thrown exceptions for the embedding layer to map to its transport (the
+  * reference maps them to HTTP 400 `{Error}`).
   *
   * This entry point targets request-sized payloads (the reference literally
   * POSTs the dataset). Cluster-scale data should enter through
@@ -56,7 +59,7 @@ object RuleService {
 
   /** Renders `df` as `toJSON.collect().mkString("[", ",", "]")` does — same
     * `JacksonGenerator`, same null-field omission — but as a projection, which
-    * `ConvertToLocalRelation` folds into a local result with no job.
+    * the optimizer folds into the request's rows with no job.
     */
   private[api] def toJsonArray(df: DataFrame): String =
     df.select(to_json(struct(col("*")))).collect().iterator.map(_.getString(0)).mkString("[", ",", "]")

@@ -4,7 +4,6 @@ import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonProcessingExcept
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.{ExprUtils, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -22,10 +21,12 @@ import java.nio.charset.MalformedInputException
   * runs inside its two jobs — `JsonInferSchema.inferField`, the
   * `compatibleRootType` merge folded from an empty struct, `canonicalizeType`,
   * then `JacksonParser(allowArrayAsStructs = true)` inside a PERMISSIVE
-  * `FailureSafeParser` — with the same default `JSONOptions`, and wraps the
-  * rows in a `LocalRelation`. That is what lets the optimizer's
-  * `ConvertToLocalRelation` evaluate filters and projections over the rows
-  * on the driver.
+  * `FailureSafeParser` — with the same default `JSONOptions`, and keeps the
+  * rows in a [[RequestRelation]]. Before it builds the frame it installs the
+  * leaf's optimizer rule and planner strategy in the session
+  * ([[RequestRelation.install]]), so the optimizer evaluates filters and
+  * projections over the rows on the driver and the planner scans them as one
+  * partition.
   *
   * This object lives in Spark's package because `canonicalizeType` is
   * package-private to it. It suits records that are already in driver memory,
@@ -61,8 +62,10 @@ object LocalJsonRelation {
       // record, and a plan's rows live as long as its QueryExecution, which
       // Spark's listener bus holds until its next event
       val toUnsafe = UnsafeProjection.create(schema)
-      val rows = parser.parse(record).map(toUnsafe(_).copy()).toIndexedSeq
-      classic.Dataset.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+      val rows = parser.parse(record).map(toUnsafe(_).copy()).toArray
+      RequestRelation.install(session)
+      classic.Dataset.ofRows(session,
+        RequestRelation(DataTypeUtils.toAttributes(schema), new RequestRows(rows)))
     }
   }
 

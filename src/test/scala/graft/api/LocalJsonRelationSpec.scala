@@ -2,12 +2,19 @@ package graft.api
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.json.LocalJsonRelation
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.json.{FoldRequestRelation, LocalJsonRelation, RequestRelation, RequestScan}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.FormattedMode
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 /** The driver-side decode must give exactly what `spark.read.json` gives
   * over the same text, through both entries: the `String` one and the
-  * already-parsed `JsonNode` one.
+  * already-parsed `JsonNode` one. Its rows live in a `RequestRelation` leaf,
+  * whose contract is pinned below.
   */
 class LocalJsonRelationSpec extends SparkSpec {
   import spark.implicits._
@@ -58,5 +65,75 @@ class LocalJsonRelationSpec extends SparkSpec {
     val got = LocalJsonRelation.fromNode(spark, mapper.readTree("""[{"a": 1}, 5]"""))
     assert(got.columns.toSeq == Seq("_corrupt_record"))
     assert(got.collect().map(_.getString(0)).toSeq == Seq("""[{"a":1},5]"""))
+  }
+
+  private val users =
+    """[{"LoginName":"alice","CompanyCode":"C1"},{"LoginName":"bob","CompanyCode":"C2"},
+       {"LoginName":"carol","CompanyCode":"C1"}]"""
+  private val inC1 =
+    """{"Conditions":{"Conditions":[{"Property":"CompanyCode","Operator":"Equal","Value":"C1"}]}}"""
+
+  test("the analyzed plan of RuleService.evaluate holds the request leaf and no LocalRelation") {
+    val plan = RuleService.evaluate(spark, users, inC1).queryExecution.analyzed
+    assert(plan.collect { case r: RequestRelation => r }.size == 1)
+    assert(plan.collect { case r: LocalRelation => r }.isEmpty)
+  }
+
+  test("a self-join of a decoded frame resolves and is correct") {
+    val df = LocalJsonRelation.fromString(spark, """[{"k":1,"v":"a"},{"k":2,"v":"b"},{"k":1,"v":"c"}]""")
+    val got = df.as("l").join(df.as("r"), $"l.k" === $"r.k")
+      .select($"l.v", $"r.v").as[(String, String)].collect().sorted.toSeq
+    assert(got == Seq(("a", "a"), ("a", "c"), ("b", "b"), ("c", "a"), ("c", "c")))
+  }
+
+  test("the leaf reports a non-zero sizeInBytes") {
+    val stats = LocalJsonRelation.fromString(spark, users).queryExecution.optimizedPlan.stats
+    assert(stats.sizeInBytes > 0)
+    assert(stats.rowCount.contains(BigInt(3)))
+  }
+
+  test("the plans of a 50k-row request print its row count, never its rows") {
+    val big = (0 until 50000).map(i => s"""{"LoginName":"user$i","CompanyCode":"C${i % 7}"}""")
+      .mkString("[", ",", "]")
+    val qe = RuleService.evaluate(spark, big, inC1).queryExecution
+    Seq(qe.toString, qe.explainString(FormattedMode)).foreach { text =>
+      assert(text.length < 4000, text.take(4000))
+      assert(!text.contains("user49999"))
+    }
+    assert(qe.toString.contains("50000 rows"))
+  }
+
+  test("the rows a finished request returned are unchanged after a second request runs") {
+    val first = RuleService.evaluate(spark, users, inC1)
+    val before = first.collect().toSeq
+    RuleService.evaluateToJson(spark,
+      """[{"LoginName":"zed","CompanyCode":"C1"},{"LoginName":"yan","CompanyCode":"C1"}]""", inC1)
+    assert(first.collect().toSeq == before)
+    assert(before.map(_.getAs[String]("LoginName")).sorted == Seq("alice", "carol"))
+  }
+
+  test("installing twice, or from many threads at once, leaves one rule and one strategy") {
+    def installedOnce(session: SparkSession): Unit = {
+      assert(session.experimental.extraOptimizations.count(_ eq FoldRequestRelation) == 1)
+      assert(session.experimental.extraStrategies.count(_ eq RequestScan) == 1)
+    }
+    val twice = spark.newSession()
+    RequestRelation.install(twice)
+    RequestRelation.install(twice)
+    installedOnce(twice)
+    val raced = spark.newSession()
+    Await.result(Future.sequence((1 to 8).map(_ => Future(RequestRelation.install(raced)))), 60.seconds)
+    installedOnce(raced)
+    // the decode installs as well, and adds nothing to a session that has both
+    assert(LocalJsonRelation.fromString(twice, users).count() == 3)
+    installedOnce(twice)
+  }
+
+  test("the fold rule returns a plan without the leaf unchanged") {
+    Seq(spark.range(10).filter($"id" > 3).select(($"id" + 1).as("x")),
+      Seq(1, 2).toDF("a").filter($"a" > 1)).foreach { df =>
+      val plan = df.queryExecution.analyzed
+      assert(FoldRequestRelation(plan) eq plan)
+    }
   }
 }

@@ -1,8 +1,13 @@
 package graft.rules
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkSpec
+import graft.api.RuleService
 import graft.model._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 /** Row shape for the differential property test (top-level for encoders).
   * `ns` is a numeric string, `n` is nullable.
@@ -367,5 +372,77 @@ class RulePropertySpec extends SparkSpec {
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(30).withWorkers(1), prop)
     assert(result.passed, s"property falsified: ${result.status}")
+  }
+
+  // --- serving path: RuleService.evaluateToJson from JSON text --------------
+
+  private val mapper = new ObjectMapper()
+
+  /** Sends `rule` over the request body `text` through the serving path, and
+    * through `spark.read.json` + [[RuleEvaluator]] + `toJSON`. Each side's rows
+    * form a multiset of compact JSON rows; a rule both sides reject must fail
+    * with the same exception class on each.
+    */
+  private def servedLikeRead(text: String, rule: RuleDefinition): Boolean = {
+    def canon(rows: Iterator[String]) = rows.map(mapper.readTree(_).toString).toSeq.sorted
+    val served = Try(canon(mapper.readTree(
+      RuleService.evaluateToJson(spark, text, RuleJson.write(rule), extParams))
+      .elements().asScala.map(_.toString)))
+    val read = Try(canon(
+      RuleEvaluator(spark.read.json(Seq(text).toDS()), rule, extParams).toJSON.collect().iterator))
+    val same = (served, read) match {
+      case (Success(a), Success(b)) => a == b
+      case (Failure(a), Failure(b)) => a.getClass == b.getClass
+      case _ => false
+    }
+    if (!same) println(s"SERVING MISMATCH rule=$rule\n served=$served\n read=$read")
+    same
+  }
+
+  private def requestBody(rows: Seq[PRow]): String = rows.toDF().toJSON.collect().mkString("[", ",", "]")
+
+  test("serving path: random rule trees through evaluateToJson == spark.read.json + RuleEvaluator") {
+    val prop = Prop.forAllNoShrink(Gen.listOfN(40, genRow), genGroup(2)) { (rows, group) =>
+      servedLikeRead(requestBody(rows), RuleDefinition(name = "prop", conditions = Some(group)))
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(40).withWorkers(1), prop)
+    assert(result.passed, s"property falsified: ${result.status}")
+  }
+
+  test("serving path: random filter + groupBy + argmin/argmax/count == spark.read.json + RuleEvaluator") {
+    val genRule = for {
+      group <- Gen.option(genGroup(1))
+      keys <- Gen.someOf(Seq("s", "b", "i")).map(_.toSeq)
+      prop <- Gen.oneOf("ns", "i", "d")
+      fn <- Gen.oneOf("Min", "Max", "Count")
+    } yield RuleDefinition(name = "agg", conditions = group, groupBy = keys,
+      aggregation = Some(Aggregation(prop, fn)))
+    val prop = Prop.forAllNoShrink(Gen.listOfN(30, genRow), genRule) { (rows0, rule) =>
+      servedLikeRead(requestBody(rows0.zipWithIndex.map { case (r, i) => r.copy(id = i) }), rule)
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(30).withWorkers(1), prop)
+    assert(result.passed, s"property falsified: ${result.status}")
+  }
+
+  test("serving path: a grand aggregate over zero rows emits no row, and ties break on the full row") {
+    val text = """[{"g":"x","v":5,"a":"b"},{"g":"x","v":5,"a":"c"},{"g":"x","v":1,"a":"z"},
+                  {"g":"x","v":1,"a":"y"},{"g":"w","v":2,"a":"q"}]"""
+    val noRows = Some(ConditionGroup(conditions = Seq(Condition("a", "Equal", RuleValue.Str("none")))))
+    Seq("Min", "Max").foreach { fn =>
+      val rule = RuleDefinition(conditions = noRows, aggregation = Some(Aggregation("v", fn)))
+      assert(RuleService.evaluateToJson(spark, text, RuleJson.write(rule)) == "[]", fn)
+      assert(servedLikeRead(text, rule), fn)
+    }
+    // the ordering key is (v, a, g, v): equal v values fall to the other columns
+    def winners(fn: String): Seq[String] = {
+      val rule = RuleDefinition(groupBy = Seq("g"), aggregation = Some(Aggregation("v", fn)))
+      assert(servedLikeRead(text, rule), fn)
+      mapper.readTree(RuleService.evaluateToJson(spark, text, RuleJson.write(rule)))
+        .elements().asScala.map(_.get("a").asText).toSeq.sorted
+    }
+    assert(winners("Max") == Seq("c", "q"))
+    assert(winners("Min") == Seq("q", "y"))
   }
 }
