@@ -134,7 +134,8 @@ object Bench {
     // busy ≫ child share → another process competed (the driver's sbt /
     // DuckDB phases are invisible to steal but not to busy%); psi/iow
     // high at normal busy → the host stalled the child; busy ≈ child
-    // share with child cpu/gc up → the child itself did more work.
+    // share and steal matched with child cpu/gc up → the child itself did
+    // more work (cpu rises with steal on identical code, BASELINE.md).
     def iowaitBetween(a: Option[Array[Long]],
                       b: Option[Array[Long]]): Double =
       (for (x <- a; y <- b) yield {
@@ -332,7 +333,7 @@ object Bench {
     // BENCH_FULL.json's `rows` object. Reading rule (same split as the
     // probes): busy% ≫ 100·cpu/(sec·ncpus) → another process competed;
     // steal/psi/iow up at matched busy → the host stalled us; cpu/gc up at
-    // matched busy → the row itself did more work. The reported `sec` is
+    // matched busy and steal → the row itself did more work. The reported `sec` is
     // the median run — its stamps are the matching index in the arrays.
     // per row: the REPORTED seconds (the quiet-preferring median below —
     // not necessarily the plain median of the runs array) + every run's
@@ -414,8 +415,8 @@ object Bench {
     // stamps — sec, host steal/iowait/busy %, CPU-pressure ms, and the
     // child's own process-CPU and GC seconds. Attribution rules live in
     // BASELINE.md: busy% ≫ 100·cpu/(sec·ncpus) → external competition;
-    // psi/iow up → host stall; cpu/gc up at matched busy → the child
-    // itself worked more.
+    // psi/iow up → host stall; cpu/gc up at matched busy and steal → the
+    // child itself worked more.
     val probesJson = probeDetail.map { case (k, tries) =>
       def arr(f: Try17 => Double) =
         "[" + tries.map(t => fmt(f(t))).mkString(",") + "]"

@@ -801,7 +801,7 @@ private[graft] object BatteryUtil {
     val base = Queries.tempDir("graft_docingest")
     val idxPath = s"$base/idx"; val outPath = s"$base/out"
     // nightly seed: the doc_id%3==0 slice is pre-published history
-    graft.streaming.DocumentStreams.seedIndex(
+    PathCommit.seed(
       Dedup.minhashBandIndex(docs.filter(col("doc_id") % 3 === 0),
         "doc_id", "text", shingleSize = 3, numHashes = 128, bands = 32),
       idxPath)

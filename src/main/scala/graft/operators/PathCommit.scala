@@ -4,14 +4,20 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
-/** The one place a path on disk is replaced. Every loop, compaction and
-  * refit commits through one of two protocols, each resumable after a
-  * crash at any step:
+/** The one module that lays out, reads and replaces a path on disk.
   *
-  *  - [[compactIntoSeed]]: fold a loop-owned `__batch_id`-partitioned
-  *    path's committed batches into its seed partition (`__batch_id=-1`),
-  *    guarded by the `_COMPACTING_UPTO` marker inside the path.
+  * A loop-owned path holds one `__batch_id=N` partition per micro-batch
+  * and the seed as batch −1. [[writeBatch]] (with its concurrent form
+  * [[writeBatches]] and [[seed]]) is the only writer of that layout, and
+  * a loop reads its history through [[history]], which also answers
+  * whether the path holds any data. Every loop, compaction and refit commits
+  * through one of two protocols, each resumable after a crash at any step:
+  *
+  *  - [[compactIntoSeed]]: fold a loop-owned path's committed batches
+  *    into its seed partition, guarded by the `_COMPACTING_UPTO` marker
+  *    inside the path.
   *  - [[swap]] / [[resume]]: replace a whole directory by a staged copy
   *    through two renames, guarded by a sibling marker file.
   *
@@ -21,6 +27,7 @@ import org.apache.spark.sql.functions.{col, lit}
 object PathCommit {
 
   private val BatchDir = "__batch_id="
+  private val SeedBatch = -1L
 
   /** The `__batch_id=N` partition directories directly under `root`, with
     * N; directories whose suffix is not a number are skipped.
@@ -30,6 +37,139 @@ object PathCommit {
       val name = d.getName
       if (name.startsWith(BatchDir)) name.substring(BatchDir.length).toLongOption.map(d -> _)
       else None
+    }
+
+  /** Re-runnable per-batch write: `rows` land in their own `__batch_id=N`
+    * partition (under `extraPartitionBy` sub-partitions) via DYNAMIC
+    * partition overwrite, so a foreachBatch RETRY (at-least-once
+    * delivery) rewrites exactly its own partition instead of appending
+    * duplicates. Committed batches' partitions are never touched. An
+    * empty batch writes no partition — and correctly so: batch content is
+    * deterministic given the (excluded) history, so a retry that computes
+    * empty survivors had an empty first attempt too.
+    *
+    * `rebalance` puts one AQE rebalance exchange before the write: sink
+    * frames otherwise inherit their upstream partitioning and land one
+    * tiny file per task per batch, and every later batch's history scan
+    * pays one task per file (measured on the curated loop: 32
+    * files/batch/path). The rebalance sizes files by
+    * `advisoryPartitionSizeInBytes` — one file per batch at toy scale.
+    * A caller whose rows are already clustered for the layout (the IVF
+    * writers' `__cluster` exchange, the compaction's staged files) passes
+    * false. Writing the seed partition (batch −1) may change the path's
+    * columns, so it evicts the path's [[history]] schema memo.
+    */
+  def writeBatch(rows: DataFrame, batchId: Long, path: String,
+                 extraPartitionBy: Seq[String] = Nil,
+                 rebalance: Boolean = true): Unit = {
+    val tagged = rows.withColumn("__batch_id", lit(batchId))
+    (if (rebalance) tagged.hint("rebalance") else tagged)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id" +: extraPartitionBy: _*).parquet(path)
+    if (batchId == SeedBatch) historySchemas.remove(path)
+  }
+
+  /** Write pre-existing history rows into a loop-owned path as its seed
+    * (batch −1). The loops' retry idempotence relies on EVERY file under
+    * a loop-owned path belonging to a `__batch_id=N` partition (a flat
+    * `write.parquet(path)` seed would make partition discovery fail once
+    * the loop adds its first partitioned batch) — seed through this.
+    */
+  def seed(rows: DataFrame, path: String, extraPartitionBy: Seq[String] = Nil,
+           rebalance: Boolean = true): Unit =
+    writeBatch(rows, SeedBatch, path, extraPartitionBy, rebalance)
+
+  /** [[writeBatch]] for several sinks of one micro-batch CONCURRENTLY: a
+    * micro-batch's sinks are independent writes over already-materialized
+    * frames, and running them sequentially leaves the cluster idle
+    * through each write's driver-side commit. 2-3 jobs in flight
+    * back-fill each other's task tails and overlap their commits.
+    *
+    * Caller contract (what keeps this safe): every sink frame must be
+    * lineage-cut ([[Barrier.cut]]) or derive only from frames whose
+    * lineage reads NONE of the sibling sink paths — a committed write
+    * refreshes its path (Spark refreshByPath), and with ordering gone a
+    * sibling's mid-flight input must have nothing that refresh can
+    * invalidate. Each write stays per-batch-partition idempotent; a crash
+    * leaves any subset of the sinks committed, which the loops'
+    * at-least-once retry absorbs (the retry rewrites every sink's own
+    * partition).
+    */
+  def writeBatches(sinks: Seq[(DataFrame, String)], batchId: Long): Unit =
+    if (sinks.sizeIs <= 1)
+      sinks.foreach { case (df, p) => writeBatch(df, batchId, p) }
+    else {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(sinks.size,
+        (r: Runnable) => new Thread(r, s"graft-sink-b$batchId-${n.incrementAndGet()}"))
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutor(pool)
+      try {
+        val fs = sinks.map { case (df, p) =>
+          scala.concurrent.Future(writeBatch(df, batchId, p))
+        }
+        // await ALL before rethrowing: a failed batch must not leave a
+        // sibling write racing a foreachBatch retry's rewrite
+        val results = fs.map(f => scala.util.Try(scala.concurrent.Await
+          .result(f, scala.concurrent.duration.Duration.Inf)))
+        results.foreach(_.get)
+      } finally pool.shutdown()
+    }
+
+  /** Per-path schema memo for [[committed]]: a loop-owned path's schema
+    * is FIXED for the loop's life (every batch writes the same columns),
+    * but a bare `spark.read.parquet` re-infers it from file footers on
+    * EVERY micro-batch — per-batch driver work that grows with the file
+    * count. The first read of a path infers once; later reads hand the
+    * schema to `read.schema(...)`. A seed-partition write (a re-seed or a
+    * compaction's publish), the one write that may change a path's
+    * columns, evicts its entry.
+    */
+  private val historySchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** True when `dir` holds a data file at any depth. Names Spark's file
+    * index skips (`_SUCCESS`, `_COMPACTING_UPTO`, `.crc` files, staging
+    * dirs) do not count; `__batch_id=N` directories do.
+    */
+  private def holdsData(fs: FileSystem, dir: Path): Boolean = {
+    def walk(d: Path): Boolean = fs.listStatus(d).exists { s =>
+      val name = s.getPath.getName
+      val hidden = name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+      !hidden && (!s.isDirectory || walk(s.getPath))
+    }
+    fs.exists(dir) && walk(dir)
+  }
+
+  /** Every committed row of the loop-owned `path`, or None when the path
+    * is missing or holds no data file — a freshly created directory, or
+    * one whose only batches were empty, has no history and no schema to
+    * infer.
+    */
+  def committed(spark: SparkSession, path: String): Option[DataFrame] = {
+    val root = new Path(path)
+    if (!holdsData(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)) None
+    else Some(Option(historySchemas.get(path)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val inferred = spark.read.parquet(path)
+        historySchemas.put(path, inferred.schema)
+        inferred
+    })
+  }
+
+  /** The loop-owned `path` as HISTORY for batch `batchId`: every committed
+    * partition EXCEPT the in-flight batch's own, or None when the path
+    * holds no data. The exclusion is what makes retries safe — a failed
+    * attempt may have already written this batch's partition, and probing
+    * those rows would flag every retried item as a "duplicate of history"
+    * and drop it. Partition pruning makes the filter free. A seed without
+    * the column (legacy flat layout) is read as-is.
+    */
+  def history(spark: SparkSession, path: String, batchId: Long): Option[DataFrame] =
+    committed(spark, path).map { h =>
+      if (h.columns.contains("__batch_id")) h.filter(col("__batch_id") =!= batchId)
+      else h
     }
 
   /** Compact a loop-owned path: rows of every batch partition with
@@ -52,6 +192,7 @@ object PathCommit {
     *
     * Call BETWEEN batches, with `uptoBatch` strictly below any batch id
     * that may still retry: a retry must find its own partition intact.
+    * A path that is missing or holds no data file is left as it is.
     * `extraPartitionBy` keeps sub-partitioning (the IVF layout's
     * `__cluster`) through the seed rewrite.
     */
@@ -63,7 +204,6 @@ object PathCommit {
     require(targetFiles > 0, "targetFiles must be positive")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
     val marker = new Path(path, "_COMPACTING_UPTO")
     def deleteRange(upto: Long): Unit =
       batchDirs(fs, root).foreach { case (d, id) =>
@@ -74,9 +214,7 @@ object PathCommit {
       // idempotent tail of a compaction: seed := tmp (dynamic overwrite
       // replaces exactly the seed partition), delete originals, drop the
       // staging dir LAST, the marker after it
-      spark.read.parquet(tmp.toString).withColumn("__batch_id", lit(-1L))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id" +: extraPartitionBy: _*).parquet(path)
+      seed(spark.read.parquet(tmp.toString), path, extraPartitionBy, rebalance = false)
       deleteRange(upto)
       fs.delete(tmp, true)
       fs.delete(marker, false)
@@ -96,7 +234,10 @@ object PathCommit {
       else { deleteRange(recorded); fs.delete(marker, false) }
       return
     }
-    val h = spark.read.parquet(path)
+    val h = committed(spark, path) match {
+      case Some(rows) => rows
+      case None => return
+    }
     require(h.columns.contains("__batch_id"),
       s"$path is not a loop-owned __batch_id-partitioned layout")
     val old = h.filter(col("__batch_id") <= uptoBatch).drop("__batch_id")

@@ -27,15 +27,25 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EvaluateRuleTvf {
 
-  private def stringLit(e: Expression, what: String): String = e match {
+  // argument, session, plan and registration helpers shared with GraftTvfs
+  private[plans] def stringLit(e: Expression, what: String): String = e match {
     case Literal(s: UTF8String, StringType) => s.toString
     case other => throw new IllegalArgumentException(
       s"$what must be a string literal, got $other")
   }
 
-  private def activeSession: SparkSession =
+  private[plans] def activeSession: SparkSession =
     SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
+
+  private[plans] def plan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
+    df.queryExecution.logical
+
+  private[plans] def registerAll(spark: SparkSession,
+                                 builders: Map[String, Seq[Expression] => LogicalPlan]): Unit =
+    builders.foreach { case (name, builder) =>
+      ColumnBridge.registerTableFunction(spark, name, builder)
+    }
 
   private def paramsArg(args: Seq[Expression], at: Int): Map[String, Any] =
     if (args.length > at) RuleJson.parseParams(stringLit(args(at), "params json"))
@@ -71,12 +81,6 @@ object EvaluateRuleTvf {
     "evaluate_rule" -> evaluateRule,
     "evaluate_rules" -> evaluateRules)
 
-  private def plan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
-    df.queryExecution.logical
-
   /** Session-local runtime registration (pair of `GraftFunctions.register`). */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      ColumnBridge.registerTableFunction(spark, name, builder)
-    }
+  def register(spark: SparkSession): Unit = registerAll(spark, all)
 }

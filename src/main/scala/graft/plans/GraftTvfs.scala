@@ -1,13 +1,12 @@
 package graft.plans
 
 import graft.operators.{Dedup, Profile, TextStats}
+import graft.plans.EvaluateRuleTvf.{activeSession, plan, stringLit}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.IntegerType
 
 /** The EXTENSION-TIER pipeline operators as table-valued functions — the
   * [[EvaluateRuleTvf]] machinery pointed at the LLM-data-pipeline
@@ -30,21 +29,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GraftTvfs {
 
-  private def stringLit(e: Expression, what: String): String = e match {
-    case Literal(s: UTF8String, StringType) => s.toString
-    case other => throw new IllegalArgumentException(
-      s"$what must be a string literal, got $other")
-  }
-
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(i: Int, IntegerType) => i
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
   }
-
-  private def activeSession: SparkSession =
-    SparkSession.getActiveSession.getOrElse(
-      throw new IllegalStateException("no active SparkSession"))
 
   /** `graft_drift(tableA, tableB, categoryCol)` →
     * [[Profile.categoricalDrift]] of the two named tables over the named
@@ -284,14 +273,8 @@ object GraftTvfs {
     "graft_sessionize" -> graftSessionize,
     "graft_drift_embed" -> graftDriftEmbed)
 
-  private def plan(df: org.apache.spark.sql.DataFrame): LogicalPlan =
-    df.queryExecution.logical
-
   /** Session-local runtime registration (invoked by
     * `GraftFunctions.register` alongside [[EvaluateRuleTvf]]).
     */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      ColumnBridge.registerTableFunction(spark, name, builder)
-    }
+  def register(spark: SparkSession): Unit = EvaluateRuleTvf.registerAll(spark, all)
 }

@@ -74,10 +74,8 @@ object AnnStreams {
     // every task otherwise opens every cluster directory (tasks ×
     // nlist files per batch — the long-lived loop's file-count
     // killer); clustered, each cluster lands as one file per batch
-    assigned.repartition(col("__cluster"))
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id", "__cluster").parquet(assignedPath)
+    PathCommit.writeBatch(assigned.repartition(col("__cluster")), batchId,
+      assignedPath, extraPartitionBy = Seq("__cluster"), rebalance = false)
   }
 
   /** Serve an ANN probe from the growing assigned path: rank the fixed
@@ -141,13 +139,11 @@ object AnnStreams {
     // single parquet file read as 1–2 splits measured the encode
     // serialized at the 10× sweep), and each cluster lands as one file
     // per batch (the processIvfBatch file-count argument)
-    assigned.repartition(col("__cluster"))
-      .select(col("id"),
-        graft.operators.Similarity.pqEncode(col(vecCol), cb).as("code"),
-        col("__cluster"))
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id", "__cluster").parquet(codesPath)
+    PathCommit.writeBatch(assigned.repartition(col("__cluster"))
+        .select(col("id"),
+          graft.operators.Similarity.pqEncode(col(vecCol), cb).as("code"),
+          col("__cluster")),
+      batchId, codesPath, extraPartitionBy = Seq("__cluster"), rebalance = false)
   }
 
   /** Serve an IVF-PQ probe from the growing streamed code table: rank
@@ -267,10 +263,11 @@ object AnnStreams {
                uptoBatch: Long, targetFiles: Int = 8): Unit = {
     require(newCentroids.nonEmpty, "refitIvf: empty centroid set")
     if (PathCommit.resume(spark, assignedPath, "refit")) return
-    val root = new org.apache.hadoop.fs.Path(assignedPath)
-    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) return
-    val maxRow = spark.read.parquet(assignedPath)
-      .agg(max(col("__batch_id").cast("long"))).head()
+    val published = PathCommit.committed(spark, assignedPath) match {
+      case Some(rows) => rows
+      case None => return
+    }
+    val maxRow = published.agg(max(col("__batch_id").cast("long"))).head()
     if (!maxRow.isNullAt(0))
       require(maxRow.getLong(0) <= uptoBatch,
         s"refitIvf: published batch ${maxRow.getLong(0)} > uptoBatch " +
@@ -278,12 +275,11 @@ object AnnStreams {
     // stage: one pass over the published vectors, new assignment, the
     // ingest loop's own cluster exchange + layout
     PathCommit.swap(spark, assignedPath, "refit") { tmp =>
-      spark.read.parquet(assignedPath)
-        .select(col(idCol), col(vecCol),
-          assignCluster(col(vecCol), newCentroids).as("__cluster"))
-        .repartition(targetFiles, col("__cluster"))
-        .withColumn("__batch_id", lit(-1L))
-        .write.partitionBy("__batch_id", "__cluster").parquet(tmp)
+      PathCommit.seed(published
+          .select(col(idCol), col(vecCol),
+            assignCluster(col(vecCol), newCentroids).as("__cluster"))
+          .repartition(targetFiles, col("__cluster")),
+        tmp, extraPartitionBy = Seq("__cluster"), rebalance = false)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Barrier, Dedup}
+import graft.operators.{Barrier, Dedup, PathCommit}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -15,12 +15,13 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * [[Dedup.cdcIngestStats]] row appends to a stats path: the dashboard
   * feed for "how much did today's ingest really cost".
   *
-  * State layout is the loops' shared contract: both paths hive-partitioned
-  * by `__batch_id`; the probe reads history EXCLUDING the in-flight
-  * batch's partition, so an at-least-once `foreachBatch` retry recomputes
+  * State layout is the loops' shared contract ([[PathCommit.writeBatches]]):
+  * both paths hive-partitioned by `__batch_id`; the probe reads
+  * [[PathCommit.history]], which EXCLUDES the in-flight batch's
+  * partition, so an at-least-once `foreachBatch` retry recomputes
   * identical labels (chunking is deterministic) and rewrites exactly its
   * own partitions. Compact the index with
-  * [[graft.operators.PathCommit.compactIntoSeed]]`(...)(identity)`.
+  * [[PathCommit.compactIntoSeed]]`(...)(identity)`.
   */
 object ChunkStoreStreams {
 
@@ -42,21 +43,10 @@ object ChunkStoreStreams {
                                        minSize: Int, maskBits: Int,
                                        maxSize: Int): Unit = {
     val spark = batch.sparkSession
-    // cold start: an existing-but-empty index dir (fresh deployment) is
-    // the same as no index — only a non-empty path can carry history
-    def hasData: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).nonEmpty
-    }
-    val history =
-      if (hasData)
-        DocumentStreams.readHistory(spark, indexPath, batchId)
-          .select("hash", "length")
-      else {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("hash", "length")
-      }
+    import spark.implicits._
+    val history = PathCommit.history(spark, indexPath, batchId)
+      .map(_.select("hash", "length"))
+      .getOrElse(Seq.empty[(Long, Long)].toDF("hash", "length"))
     // releasable form: the operator cuts the batch chunk table for its
     // three consumers; a per-micro-batch loop that never released it would
     // accumulate one block set per batch for the life of the JVM
@@ -74,7 +64,7 @@ object ChunkStoreStreams {
     // retry rewrites both. The index grows by the batch's 'first' chunks
     // only: hits are already stored; dups deduped against the batch's
     // own firsts.
-    DocumentStreams.writeBatchPartitionsPar(Seq(
+    PathCommit.writeBatches(Seq(
       Dedup.cdcIngestStats(ann) -> statsPath,
       ann.filter(col("status") === "first")
         .select("id", "offset", "length", "hash") -> indexPath),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Barrier, Dedup}
+import graft.operators.{Barrier, Dedup, PathCommit}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -72,130 +72,12 @@ object DocumentStreams {
       }
   }
 
-  /** Write pre-existing history rows into a loop-owned index path in the
-    * layout the ingest loops maintain: hive-partitioned by `__batch_id`,
-    * with the seed as batch −1. The loops' retry idempotence relies on
-    * EVERY file under a loop-owned path belonging to a `__batch_id=N`
-    * partition (a flat `write.parquet(path)` seed would make partition
-    * discovery fail once the loop adds its first partitioned batch) —
-    * seed through this helper. A re-seed may change the path's columns,
-    * so it evicts the path's [[readHistory]] schema memo.
-    */
-  def seedIndex(rows: DataFrame, path: String): Unit = {
-    rows.withColumn("__batch_id", lit(-1L))
-      .hint("rebalance")
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(path)
-    historySchemaMemo.remove(path)
-  }
-
-  /** Re-runnable per-batch sink write: the batch's rows land in their own
-    * `__batch_id=N` partition via DYNAMIC partition overwrite, so a
-    * foreachBatch RETRY (at-least-once delivery) rewrites exactly its own
-    * partition instead of appending duplicates. Committed batches'
-    * partitions are never touched. An empty batch writes nothing — and
-    * correctly so: batch content is deterministic given the (excluded)
-    * history, so a retry that computes empty survivors had an empty first
-    * attempt too.
-    */
-  private[streaming] def writeBatchPartition(rows: DataFrame, batchId: Long,
-                                  path: String): Unit =
-    // REBALANCE before the write (round-20, guide §6 small files): the
-    // sink frames inherit their upstream partitioning (32 scan/shuffle
-    // partitions at local defaults, more on a cluster), so every batch
-    // landed up to one TINY file per task per partition dir — and every
-    // LATER batch's history scan paid one task per file (measured on the
-    // curated loop: 32 files/batch/path; the per-batch localCheckpoint
-    // execution grew 22→25→38 jobs across three batches from scan-task
-    // inflation alone). The AQE rebalance sizes output files by
-    // advisoryPartitionSizeInBytes — one file per batch at toy SF,
-    // ~64 MB files at 100 TB — which is the §6 prescription, not a
-    // local-mode constant. Cost: one batch-sized exchange per sink write.
-    rows.withColumn("__batch_id", lit(batchId))
-      .hint("rebalance")
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(path)
-
-  /** Write several per-batch sink partitions CONCURRENTLY (round-20,
-    * guide §2.6 — overlap independent jobs): a micro-batch's sinks are
-    * independent writes over already-materialized frames, and running
-    * them sequentially leaves the cluster idle through each write's
-    * driver-side commit while the next write waits. 2-3 jobs in flight
-    * back-fill each other's task tails and overlap their commits.
-    *
-    * Caller contract (what keeps this safe): every sink frame must be
-    * lineage-cut ([[Barrier.cut]]) or derive only from frames whose
-    * lineage reads NONE of the sibling sink paths — a committed write
-    * refreshes its path (Spark refreshByPath), and with ordering gone a
-    * sibling's mid-flight input must have nothing that refresh can
-    * invalidate. Each write stays per-batch-partition idempotent; the
-    * crash window widens from "a prefix of the sinks committed" to "any
-    * subset committed", which the loops' at-least-once retry already
-    * absorbs (the retry rewrites every sink's own partition).
-    */
-  private[streaming] def writeBatchPartitionsPar(
-      sinks: Seq[(DataFrame, String)], batchId: Long): Unit =
-    if (sinks.sizeIs <= 1)
-      sinks.foreach { case (df, p) => writeBatchPartition(df, batchId, p) }
-    else {
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(sinks.size,
-        (r: Runnable) => new Thread(r, s"graft-sink-b$batchId-${n.incrementAndGet()}"))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val fs = sinks.map { case (df, p) =>
-          scala.concurrent.Future(writeBatchPartition(df, batchId, p))
-        }
-        // await ALL before rethrowing: a failed batch must not leave a
-        // sibling write racing a foreachBatch retry's rewrite
-        val results = fs.map(f => scala.util.Try(scala.concurrent.Await
-          .result(f, scala.concurrent.duration.Duration.Inf)))
-        results.foreach(_.get)
-      } finally pool.shutdown()
-    }
-
-  /** Read a loop-owned path as HISTORY for batch `batchId`: every
-    * committed partition EXCEPT the in-flight batch's own. The exclusion
-    * is what makes retries safe — a failed attempt may have already
-    * written this batch's partition to the index, and probing those rows
-    * would flag every retried document as a "duplicate of history" and
-    * drop it (an empty lake partition: data loss, not just duplicates).
-    * Partition pruning makes the filter free. A pre-partitioning seed
-    * without the column (legacy flat layout) is read as-is.
-    */
-  /** Per-path schema memo for [[readHistory]] (round-20, guide §6
-    * listing/planning cost): a loop-owned path's schema is FIXED for the
-    * loop's life (every batch writes the same columns), but a bare
-    * `spark.read.parquet` re-infers it from file footers on EVERY
-    * micro-batch — per-batch driver work that grows with the file count.
-    * The first read of a path infers once and caches; later batches hand
-    * the cached schema to `read.schema(...)`, skipping inference
-    * entirely. Keyed by path; paths are loop-owned, and [[seedIndex]],
-    * the one writer that may change a path's columns, evicts its entry.
-    */
-  private val historySchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private[streaming] def readHistory(spark: org.apache.spark.sql.SparkSession,
-                          path: String, batchId: Long): DataFrame = {
-    val cached = historySchemaMemo.get(path)
-    val h =
-      if (cached != null) spark.read.schema(cached).parquet(path)
-      else {
-        val inferred = spark.read.parquet(path)
-        historySchemaMemo.put(path, inferred.schema)
-        inferred
-      }
-    if (h.columns.contains("__batch_id")) h.filter(col("__batch_id") =!= batchId)
-    else h
-  }
-
   /** Wire a streaming document source into the ingest-dedup loop.
     * `indexPath` must hold the historical [[Dedup.minhashBandIndex]] rows
-    * (id, sig, band, bh), seeded via [[seedIndex]]; `outPath` receives
-    * surviving documents. Both paths are loop-owned: hive-partitioned by
-    * `__batch_id`, batch retries idempotent per partition.
+    * (id, sig, band, bh), seeded via [[PathCommit.seed]] (or bootstraps
+    * from absent); `outPath` receives surviving documents. Both paths are
+    * loop-owned: hive-partitioned by `__batch_id`, batch retries
+    * idempotent per partition.
     */
   def ingestDedup(newDocs: DataFrame, idCol: String, textCol: String,
                   indexPath: String, outPath: String,
@@ -214,8 +96,6 @@ object DocumentStreams {
                                       indexPath: String, outPath: String,
                                       shingleSize: Int, numHashes: Int,
                                       bands: Int, threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    val history = readHistory(spark, indexPath, batchId)
     // slimSigs: the signature rides the band-0 row only — the persisted
     // index a batch probes is then `bands`x smaller to scan (legacy
     // full-sig indexes remain readable: sig reads filter isNotNull)
@@ -226,16 +106,9 @@ object DocumentStreams {
     val asIndex = graft.operators.Dedup.MinhashIndex(
       newIdx.filter(col("sig").isNotNull).select("id", "sig"),
       newIdx.select("id", "band", "bh"))
-    // near-dups of history: drop the NEW doc. excludeSelf = false — the
-    // batch side is unpublished (readHistory excludes the in-flight
-    // partition), so a same-id index match is a RE-SENT published doc
-    // and must be dropped, not republished under a new batch partition
-    val dupOfHistory = Barrier.cut(Dedup.incrementalNearDupsIndexed(
-        asIndex, graft.operators.Dedup.MinhashIndex(
-          history.filter(col("sig").isNotNull).select("id", "sig"), // slim-or-legacy; operator prunes to candidates, then dedups (no O(history) shuffle)
-          history.select("id", "band", "bh")),
-        numHashes, threshold, excludeSelf = false)
-      .select(col("new_id").as("__drop")), "DocumentStreams.processBatch/dupOfHistory")
+    val dupOfHistory = Barrier.cut(
+      dupsOfHistory(asIndex, indexPath, batchId, numHashes, threshold),
+      "DocumentStreams.processBatch/dupOfHistory")
     // near-dups WITHIN the batch, over docs that survived the history
     // probe (a history-dropped doc must not transitively drop batchmates
     // that are far from everything published): smallest id survives
@@ -256,7 +129,7 @@ object DocumentStreams {
     // so the two writes overlap safely. The index grows by the SURVIVORS'
     // band rows only — dropped docs must not suppress future docs they
     // themselves never entered the lake for.
-    writeBatchPartitionsPar(Seq(
+    PathCommit.writeBatches(Seq(
       survivors -> outPath,
       newIdx.join(survivors.select(col(idCol).as("__keep")),
         newIdx("id") === col("__keep"), "left_semi") -> indexPath),
@@ -265,6 +138,26 @@ object DocumentStreams {
     Barrier.release(dupOfHistory)
     Barrier.release(newIdx)
   }
+
+  /** Ids of the batch's docs (`asIndex`) that near-duplicate the band
+    * index's history at `indexPath`, as `__drop` (empty when the index
+    * holds no data). excludeSelf = false — the batch side is unpublished
+    * (the history read excludes the in-flight partition), so a same-id
+    * index match is a RE-SENT published doc and must be dropped, not
+    * republished under a new batch partition. Legacy full-sig indexes
+    * stay readable: sig reads filter isNotNull; the operator prunes to
+    * candidates, then dedups (no O(history) shuffle).
+    */
+  private def dupsOfHistory(asIndex: Dedup.MinhashIndex, indexPath: String,
+                            batchId: Long, numHashes: Int,
+                            threshold: Double): DataFrame =
+    PathCommit.history(asIndex.sigs.sparkSession, indexPath, batchId)
+      .map(history => Dedup.incrementalNearDupsIndexed(asIndex,
+          Dedup.MinhashIndex(history.filter(col("sig").isNotNull).select("id", "sig"),
+            history.select("id", "band", "bh")),
+          numHashes, threshold, excludeSelf = false)
+        .select(col("new_id").as("__drop")))
+      .getOrElse(asIndex.sigs.select(col("id").as("__drop")).limit(0))
 
   /** STREAMING INGEST-TIME CURATION — the streaming twin of
     * [[graft.operators.Curation.curatedCorpus]]: each micro-batch runs
@@ -284,7 +177,7 @@ object DocumentStreams {
     * document's SCRUBBED text; `bandIndexPath` holds the published band
     * rows ([[Dedup.minhashBandIndex]] layout). Bootstraps from empty —
     * absent indices mean no history yet; pre-existing history seeds via
-    * [[seedIndex]]. All three paths are loop-owned, hive-partitioned by
+    * [[PathCommit.seed]]. All three paths are loop-owned, hive-partitioned by
     * `__batch_id`, and written with dynamic partition OVERWRITE, so a
     * foreachBatch retry (at-least-once delivery) rewrites its own
     * partitions instead of double-publishing — and history probes exclude
@@ -330,12 +223,6 @@ object DocumentStreams {
         decontamGrams, metricsPath)
     }
 
-  private[streaming] def pathExists(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** One micro-batch of the curated-ingest loop (factored out for direct
     * batch-semantics testing and the battery protocol, like
     * [[processBatch]]).
@@ -360,11 +247,9 @@ object DocumentStreams {
     // published text hash is a replay/duplicate of history
     val exactDeduped = Dedup.exact(scrubbed, col(textCol), col(idCol))
       .withColumn("__th", xxhash64(col(textCol)))
-    val fresh0 =
-      if (pathExists(spark, exactIndexPath))
-        exactDeduped.join(readHistory(spark, exactIndexPath, batchId),
-          exactDeduped("__th") === col("th"), "left_anti")
-      else exactDeduped
+    val fresh0 = PathCommit.history(spark, exactIndexPath, batchId)
+      .map(h => exactDeduped.join(h, exactDeduped("__th") === col("th"), "left_anti"))
+      .getOrElse(exactDeduped)
     // every shared stage frame is cut ([[Barrier]]). Measured on this
     // loop under lazy persists: the survivors execution re-ran the 32-task
     // admission-chain scan per branch, and batch 2's checkpoint was
@@ -379,20 +264,11 @@ object DocumentStreams {
     val asIndex = graft.operators.Dedup.MinhashIndex(
       newIdx.filter(col("sig").isNotNull).select("id", "sig"),
       newIdx.select("id", "band", "bh"))
-    // history probe first (excludeSelf = false — a same-id index match is
-    // a re-sent published doc, see [[processBatch]]); the within-batch
+    // history probe first ([[dupsOfHistory]]); the within-batch
     // pairing then runs over history-probe SURVIVORS only, so a doc
     // dropped as dup-of-history cannot transitively drop batchmates
     val dupOfHistory = Barrier.cut(
-      if (pathExists(spark, bandIndexPath)) {
-        val history = readHistory(spark, bandIndexPath, batchId)
-        Dedup.incrementalNearDupsIndexed(
-            asIndex, graft.operators.Dedup.MinhashIndex(
-              history.filter(col("sig").isNotNull).select("id", "sig"), // slim-or-legacy; operator prunes to candidates, then dedups (no O(history) shuffle)
-              history.select("id", "band", "bh")),
-            numHashes, cfg.nearDupThreshold, excludeSelf = false)
-          .select(col("new_id").as("__drop"))
-      } else asIndex.sigs.select(col("id").as("__drop")).limit(0),
+      dupsOfHistory(asIndex, bandIndexPath, batchId, numHashes, cfg.nearDupThreshold),
       "DocumentStreams.processCuratedBatch/dupOfHistory")
     val eligible = graft.operators.Dedup.MinhashIndex(
       asIndex.sigs.join(dupOfHistory, asIndex.sigs("id") === col("__drop"), "left_anti"),
@@ -484,7 +360,7 @@ object DocumentStreams {
       // within-batch pairing runs over history-probe survivors; the
       // decontamination stage over dedup survivors), so stage counts are
       // plain differences of consecutive survivor counts
-      writeBatchPartition(Seq((
+      PathCommit.writeBatch(Seq((
           nIn, nIn - nAdmitted, nAdmitted - nExactDeduped,
           nExactDeduped - nFresh, nDupHistory,
           nFresh - nDeduped - nDupHistory, nDeduped - nPublished,
@@ -509,7 +385,7 @@ object DocumentStreams {
     // rather than appending a second copy of the batch (at-least-once
     // delivery). They run CONCURRENTLY (§2.6): every input is lineage-cut,
     // so no sink's commit can invalidate a sibling's input.
-    writeBatchPartitionsPar(Seq(
+    PathCommit.writeBatches(Seq(
       survivors.drop("__th") -> outPath,
       keepIdx -> bandIndexPath,
       survivors.select(col("__th").as("th")) -> exactIndexPath),

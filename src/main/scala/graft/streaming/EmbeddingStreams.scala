@@ -71,7 +71,7 @@ object EmbeddingStreams {
 
   /** Wire a streaming vector source into the ingest-dedup loop.
     * `indexPath` must hold [[Dedup.embeddingLshIndex]] rows built with the
-    * SAME (planes, tables, seed), seeded via [[DocumentStreams.seedIndex]]
+    * SAME (planes, tables, seed), seeded via [[PathCommit.seed]]
     * (or bootstrapped from absent); `outPath` receives surviving rows.
     * Optional `guard` arms [[SemanticGuard]] on dedup survivors
     * (cheapest-stage-first, matching the document loop's ordering).
@@ -145,15 +145,15 @@ object EmbeddingStreams {
         .as("bkt"))
     // cliques dup of a PUBLISHED vector: drop every member. No
     // rid≠old_id filter (excludeSelf=false semantics) — the batch side
-    // is unpublished (readHistory excludes the in-flight partition), so
-    // a same-id index match is a RE-SENT published item and drops.
+    // is unpublished (the history read excludes the in-flight
+    // partition), so a same-id index match is a RE-SENT published item
+    // and drops.
     // History is only ever JOINED by its stored codes (never re-hashed)
     // and its vector rows stream against the broadcast candidate set —
     // per-batch cost is O(batch × collision rate), not O(history).
     val dropRepsH = Barrier.cut(
-      if (DocumentStreams.pathExists(spark, indexPath)) {
-        val index = DocumentStreams.readHistory(spark, indexPath, batchId)
-          .select("id", "v", "bkt")
+      PathCommit.history(spark, indexPath, batchId).map { h =>
+        val index = h.select("id", "v", "bkt")
         // ids-only distinct BEFORE any vector moves: the candidate set is
         // the collision-sized quantity, and a pair co-bucketing in k
         // tables must verify once, not k times
@@ -175,7 +175,7 @@ object EmbeddingStreams {
           .filter(graft.functions.VectorFunctions.cosine(col("v"), col("__ov"))
             >= threshold)
           .select("rid")
-      } else reps.select("rid").limit(0), // bootstrap: no history, no probe
+      }.getOrElse(reps.select("rid").limit(0)), // bootstrap: no history, no probe
       "EmbeddingStreams.processEmbeddingBatch/dropRepsH")
     // within-batch pairing over history-probe SURVIVORS only (the loops'
     // no-transitive-drop-via-unpublished policy); smallest id survives.
@@ -276,7 +276,7 @@ object EmbeddingStreams {
       // null-vec items are dropped by NO stage (they bypass vecs and the
       // guard), so drops + published = n_in and n_null_vec rides inside
       // n_published (the doc comment's funnel identity)
-      DocumentStreams.writeBatchPartition(Seq((
+      PathCommit.writeBatch(Seq((
           nIn, nIn - nVecs, nDupHistory,
           nIn - nDeduped - nDupHistory, nDeduped - nPublished, nPublished))
         .toDF("n_in", "n_null_vec", "n_dup_history", "n_dup_batch",
@@ -288,7 +288,7 @@ object EmbeddingStreams {
     // the cut survivors — neither input reads a sibling sink path. The
     // index grows by the SURVIVORS' rows only (null-vector rows never
     // entered `vecs`, so undecodable items pass through un-indexed).
-    DocumentStreams.writeBatchPartitionsPar(Seq(
+    PathCommit.writeBatches(Seq(
       survivors -> outPath,
       Dedup.embeddingLshIndex(
         vecs.join(survivors.select(col(idCol).cast("long").as("__keep")),
@@ -367,7 +367,7 @@ object EmbeddingStreams {
     val refPath = statsPath + "__ref"
     // the memo is trusted only on a COMMIT MARKER (crash-safety): a
     // first-batch write that died partway leaves the directory existing
-    // but markerless — a bare pathExists check would skip the rebuild
+    // but markerless — a bare existence check would skip the rebuild
     // forever and every later batch would read a partial table. A
     // marker-less dir is deleted and rebuilt. The marker is OURS
     // (`_GRAFT_COMMIT`, written after the parquet write returns), not
@@ -406,7 +406,7 @@ object EmbeddingStreams {
         .write.parquet(refPath)
       fs.create(marker("_GRAFT_COMMIT"), true).close()
     }
-    DocumentStreams.writeBatchPartition(
+    PathCommit.writeBatch(
       graft.operators.Profile.embeddingDriftFromRef(
         spark.read.parquet(refPath), batch, col(vecCol), sliceCols),
       batchId, statsPath)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Barrier, Dedup}
+import graft.operators.{Barrier, Dedup, PathCommit}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -28,14 +28,14 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * dynamic partition overwrite), so at-least-once foreachBatch retries
   * rewrite their own partitions and history probes exclude the in-flight
   * batch — the same idempotence contract as the document loops
-  * ([[DocumentStreams.writeBatchPartition]] / `readHistory`).
+  * ([[PathCommit.writeBatch]] / [[PathCommit.history]]).
   */
 object MediaStreams {
 
   /** Wire a streaming media source into the ingest-dedup loop.
     * `hasher` maps (rows, idCol) to an (id, sh) table — pass a
     * [[graft.operators.Multimodal]] hasher partially applied to the
-    * payload column. `indexPath` seeds via [[DocumentStreams.seedIndex]]
+    * payload column. `indexPath` seeds via [[PathCommit.seed]]
     * (or bootstraps from absent); `outPath` receives survivors.
     *
     * `maxBucket > 0` arms [[Dedup.simhashPairsFromTable]]'s
@@ -69,15 +69,9 @@ object MediaStreams {
     val hashed = Barrier.cut(hasher(batch, idCol),
       "MediaStreams.processMediaBatch/hashed")
     val decodable = hashed.filter(col("sh").isNotNull)
-    val history =
-      if (DocumentStreams.pathExists(spark, indexPath))
-        DocumentStreams.readHistory(spark, indexPath, batchId)
-          .select("id", "sh")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], decodable.schema)
     // near-dup of an already-published item: drop the NEW one.
     // excludeSelf = false: the batch side is unpublished by construction
-    // (readHistory excludes the in-flight batch's partition), so a
+    // (the history read excludes the in-flight batch's partition), so a
     // same-id match against the index is a RE-SENT published item —
     // without this a duplicate re-ingest under its original id would
     // slip past dedup into a second lake row. (A same-id re-send mutated
@@ -85,9 +79,11 @@ object MediaStreams {
     // policing id collisions needs a full-index id probe per batch,
     // an upstream key-integrity concern, not a content-dedup one.)
     val dupOfHistory = Barrier.cut(
-      Dedup.incrementalHammingPairs(decodable, history,
-          maxDistance, excludeSelf = false, maxBucket = maxBucket)
-        .select(col("new_id").as("__drop")),
+      PathCommit.history(spark, indexPath, batchId)
+        .map(h => Dedup.incrementalHammingPairs(decodable, h.select("id", "sh"),
+            maxDistance, excludeSelf = false, maxBucket = maxBucket)
+          .select(col("new_id").as("__drop")))
+        .getOrElse(decodable.select(col("id").as("__drop")).limit(0)),
       "MediaStreams.processMediaBatch/dupOfHistory")
     // near-dup WITHIN the batch, computed over items that survived the
     // history probe: a batchmate can only be dropped via an item that is
@@ -113,7 +109,7 @@ object MediaStreams {
     // index grows by the DECODABLE SURVIVORS' hashes only: dropped items
     // never entered the lake and must not suppress future items;
     // null-hash passthroughs carry no evidence to index.
-    DocumentStreams.writeBatchPartitionsPar(Seq(
+    PathCommit.writeBatches(Seq(
       survivors -> outPath,
       decodable.join(survivors.select(col(idCol).as("__keep")),
         decodable("id") === col("__keep"), "left_semi") -> indexPath),
@@ -172,21 +168,17 @@ object MediaStreams {
     // shuffle in a loop whose contract is O(batch × collision rate).
     // History frames are still scanned once (behind the broadcast
     // semi-join), never shuffled.
-    val matchedH: Option[DataFrame] =
-      if (DocumentStreams.pathExists(spark, indexPath)) {
-        val history = DocumentStreams.readHistory(spark, indexPath, batchId)
-          .select("id", "frame_idx", "sh")
-        Some(Dedup.incrementalAlignedHammingPairs(
-            decodable.select(col("id"), col("frame_idx").as("pos"), col("sh")),
-            history.select(col("id"), col("frame_idx").as("pos"), col("sh")),
-            maxDistance, excludeSelf = false)
-          .groupBy("new_id", "old_id").agg(count(lit(1)).as("n_matched")))
-          .map(Barrier.cut(_, "MediaStreams.processVideoBatch/matchedH"))
-      } else None
-    val dupOfHistory = matchedH.map { m =>
-      val history = DocumentStreams.readHistory(spark, indexPath, batchId)
-        .select("id", "frame_idx", "sh")
-      val oldCounts = history
+    val history = PathCommit.history(spark, indexPath, batchId)
+      .map(_.select("id", "frame_idx", "sh"))
+    val matchedH = history.map(h => Barrier.cut(
+      Dedup.incrementalAlignedHammingPairs(
+          decodable.select(col("id"), col("frame_idx").as("pos"), col("sh")),
+          h.select(col("id"), col("frame_idx").as("pos"), col("sh")),
+          maxDistance, excludeSelf = false)
+        .groupBy("new_id", "old_id").agg(count(lit(1)).as("n_matched")),
+      "MediaStreams.processVideoBatch/matchedH"))
+    val dupOfHistory = history.zip(matchedH).map { case (h, m) =>
+      val oldCounts = h
         .join(m.select(col("old_id").as("id")).distinct(),
           Seq("id"), "left_semi")
         .groupBy("id").agg(count(lit(1)).as("__nf"))
@@ -215,7 +207,7 @@ object MediaStreams {
     // CONCURRENT sinks (round-20, §2.6) — same input-safety argument as
     // [[processMediaBatch]]; the index grows by the decodable SURVIVORS'
     // frame rows only
-    DocumentStreams.writeBatchPartitionsPar(Seq(
+    PathCommit.writeBatches(Seq(
       survivors -> outPath,
       decodable.join(survivors.select(col(idCol).as("__keep")),
         decodable("id") === col("__keep"), "left_semi") -> indexPath),

@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * CONTRACT: document ids are unique ACROSS batches (feed this loop from
   * the dedup loop's lake, whose first-arrival-wins policy guarantees it) —
   * a re-indexed id would double-count its df and tf. Same-batch RETRIES
-  * are safe ([[DocumentStreams.writeBatchPartition]] rewrites the batch's
+  * are safe ([[PathCommit.writeBatch]] rewrites the batch's
   * own partitions). Postings are NOT duplicate-tolerant (a duplicated
   * row inflates df); [[compactBm25]] compacts them through the
   * marker-guarded [[PathCommit.compactIntoSeed]].
@@ -48,7 +48,7 @@ object SearchStreams {
     val delta = Search.buildBm25Index(batch, idCol, textCol, maxPostings)
     // CONCURRENT sinks (round-20, §2.6): both deltas derive from the
     // batch source alone — neither lineage reads a sibling sink path
-    DocumentStreams.writeBatchPartitionsPar(Seq(
+    PathCommit.writeBatches(Seq(
       delta.lengths -> lengthsPath, delta.postings -> postingsPath), batchId)
   }
 

@@ -14,10 +14,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * over the full corpus — the profile/overlap/frequency/quantile
   * dashboards never need a corpus re-scan after the day-one backfill.
   *
-  * Layout is the loops' shared contract (one `__batch_id` partition per
-  * micro-batch, batch sketches deterministic, partition overwrite
-  * dynamic), so an at-least-once `foreachBatch` retry rewrites exactly
-  * its own partition with identical rows.
+  * Layout is the loops' shared contract ([[PathCommit.writeBatch]]: one
+  * `__batch_id` partition per micro-batch, dynamic partition overwrite;
+  * batch sketches are deterministic), so an at-least-once `foreachBatch`
+  * retry rewrites exactly its own partition with identical rows.
   *
   * Compaction differs BY FAMILY, and the difference is the whole design:
   * KMV rows are duplicate-tolerant (serving re-mins, so a transiently
@@ -62,32 +62,27 @@ object SketchStreams {
     val batchSk = Profile.kmvSketch(batch, keyCol, k, sliceCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     statsPath.foreach { sp =>
-      val p = new org.apache.hadoop.fs.Path(sketchPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasHistory = fs.exists(p) && fs.listStatus(p).nonEmpty
       // global (slice-merged) sketches; kmvDistinct over an empty sketch
       // is the exact-branch 0 — day one reads before=0, new=after
       def est(sketch: DataFrame): Long =
         Profile.kmvDistinct(sketch, k).collect()
           .headOption.map(_.getLong(1)).getOrElse(0L)
-      val beforeSk =
-        if (hasHistory)
-          Profile.kmvMerge(DocumentStreams.readHistory(spark, sketchPath,
-            batchId).select("h"), k)
-        else batchSk.select("h").limit(0)
+      val beforeSk = PathCommit.history(spark, sketchPath, batchId)
+        .map(h => Profile.kmvMerge(h.select("h"), k))
+        .getOrElse(batchSk.select("h").limit(0))
       val batchGlobal = Profile.kmvMerge(batchSk.select("h"), k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val kept = batchGlobal.count()
       val before = est(beforeSk)
       val after = est(Profile.kmvMerge(beforeSk.unionByName(batchGlobal), k))
       import spark.implicits._
-      DocumentStreams.writeBatchPartition(
+      PathCommit.writeBatch(
         Seq((kept, before, after, math.max(0L, after - before)))
           .toDF("batch_kept", "est_before", "est_after", "est_new"),
         batchId, sp)
       batchGlobal.unpersist()
     }
-    DocumentStreams.writeBatchPartition(batchSk, batchId, sketchPath)
+    PathCommit.writeBatch(batchSk, batchId, sketchPath)
     batchSk.unpersist()
   }
 
@@ -120,7 +115,7 @@ object SketchStreams {
                                      itemCol: Column, depth: Int, width: Int,
                                      sketchPath: String,
                                      sliceCols: Seq[String]): Unit =
-    DocumentStreams.writeBatchPartition(
+    PathCommit.writeBatch(
       Profile.cmsSketch(batch, itemCol, depth, width, sliceCols),
       batchId, sketchPath)
 
@@ -150,7 +145,7 @@ object SketchStreams {
                                           depth: Int, width: Int,
                                           sketchPath: String,
                                           sliceCols: Seq[String]): Unit =
-    DocumentStreams.writeBatchPartition(
+    PathCommit.writeBatch(
       Profile.quantileSketch(batch, metricCol, levels, depth, width,
         sliceCols),
       batchId, sketchPath)

@@ -120,4 +120,14 @@ class PathCommitSpec extends SparkSpec {
       assert(mainSourcesContaining(old).isEmpty, s"$old is back")
     }
   }
+
+  test("the __batch_id loop-path layout is written and read only through PathCommit") {
+    val allowed = Set("graft/operators/PathCommit.scala",
+      "graft/streaming/ChangeStreams.scala", "graft/streaming/EventStreams.scala")
+    val writers = mainSourcesContaining("partitionOverwriteMode")
+    assert(writers.toSet.subsetOf(allowed), s"partitionOverwriteMode outside $allowed: $writers")
+    Seq("def readHistory", "def pathExists", "def hasData").foreach { d =>
+      assert(mainSourcesContaining(d).isEmpty, s"$d is back")
+    }
+  }
 }

@@ -22,7 +22,7 @@ class DocumentStreamsSpec extends SparkSpec {
       (2L, "completely unrelated text about spark query engines and distributed joins"),
       (3L, "another fully distinct document mentioning embeddings and similarity search")
     ).toDF("doc_id", "text")
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       Dedup.minhashBandIndex(history, "doc_id", "text"), indexPath)
 
     val mem = MemoryStream[(Long, String)]
@@ -66,7 +66,7 @@ class DocumentStreamsSpec extends SparkSpec {
     val indexPath = tmp("graft_idx_resend")
     val outPath = tmp("graft_lake_resend")
     val doc = (1L, "the quick brown fox jumps over the lazy dog near the river bank today")
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       Dedup.minhashBandIndex(Seq(doc).toDF("doc_id", "text"), "doc_id", "text"),
       indexPath)
     // the same (id, text) arrives again — at-least-once ACROSS batch ids
@@ -211,7 +211,7 @@ class DocumentStreamsSpec extends SparkSpec {
     def doc(i: Long, tail: String) =
       (i, s"a long enough document about streaming compaction and indexes $tail")
     // seeded index (the loop's contract) + three committed batches
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       Dedup.minhashBandIndex(
         Seq((100L, "an entirely separate seed document about nothing in particular here"))
           .toDF("doc_id", "text"),
@@ -409,13 +409,13 @@ class DocumentStreamsSpec extends SparkSpec {
 
   test("re-seeding a path evicts readHistory's schema memo: the new column is read") {
     val path = tmp("graft_reseed")
-    DocumentStreams.seedIndex(Seq((1L, "a")).toDF("id", "x"), path)
-    assert(DocumentStreams.readHistory(spark, path, 0L).columns.toSet ==
+    PathCommit.seed(Seq((1L, "a")).toDF("id", "x"), path)
+    assert(PathCommit.history(spark, path, 0L).get.columns.toSet ==
       Set("id", "x", "__batch_id"))
     // a stale memo would read the new files through the old schema and
     // silently drop `y`
-    DocumentStreams.seedIndex(Seq((2L, "b", 7L)).toDF("id", "x", "y"), path)
-    val h = DocumentStreams.readHistory(spark, path, 0L)
+    PathCommit.seed(Seq((2L, "b", 7L)).toDF("id", "x", "y"), path)
+    val h = PathCommit.history(spark, path, 0L).get
     assert(h.select("id", "y").as[(Long, Long)].collect().toSeq == Seq((2L, 7L)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.PathCommit
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -24,7 +25,7 @@ class EmbeddingStreamsSpec extends SparkSpec {
     val outPath = tmp("graft_elake")
 
     // history: family 0 variants 0,1 already published
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       graft.operators.Dedup.embeddingLshIndex(vecs(0L, 1L), "vec_id", "embedding"),
       indexPath)
 
@@ -56,7 +57,7 @@ class EmbeddingStreamsSpec extends SparkSpec {
   test("embedding loop: same-id re-send dropped; no transitive drop via unpublished; retry idempotent") {
     val indexPath = tmp("graft_eidx2")
     val outPath = tmp("graft_elake2")
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       graft.operators.Dedup.embeddingLshIndex(vecs(100L), "vec_id", "embedding"),
       indexPath)
 
@@ -102,7 +103,7 @@ class EmbeddingStreamsSpec extends SparkSpec {
       .filter(col("id") === 100L && col("v").isNotNull).count() == 1)
 
     // RETRY: re-delivering committed batch 1 rewrites its own partition
-    // only — no duplicates, no re-dropped survivors (readHistory excludes
+    // only — no duplicates, no re-dropped survivors (the history read excludes
     // the in-flight batch's own index partition)
     EmbeddingStreams.processEmbeddingBatch(chain, 1L,
       "vec_id", "embedding", indexPath, outPath, TH, 3, 8, 42L)
@@ -164,7 +165,7 @@ class EmbeddingStreamsSpec extends SparkSpec {
     val mPath = tmp("graft_mm")
     Seq(mPath).foreach(p =>
       java.nio.file.Files.delete(java.nio.file.Paths.get(p)))
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       graft.operators.Dedup.embeddingLshIndex(vecs(100L), "vec_id", "embedding"),
       indexPath)
     val suite = Seq(900L -> vecFor(60L)).toDF("sid", "svec")
@@ -196,7 +197,7 @@ class EmbeddingStreamsSpec extends SparkSpec {
     val mPath = tmp("graft_nm")
     Seq(mPath).foreach(p =>
       java.nio.file.Files.delete(java.nio.file.Paths.get(p)))
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       graft.operators.Dedup.embeddingLshIndex(vecs(100L), "vec_id", "embedding"),
       indexPath)
     val suite = Seq(900L -> vecFor(60L)).toDF("sid", "svec")
@@ -248,7 +249,7 @@ class EmbeddingStreamsSpec extends SparkSpec {
       .count(f => f.isDirectory && f.getName.startsWith("__batch_id=")) == 1)
     // doctor the index: a SECOND non-null vector row for a published id
     // (the hand-seeded-index hazard) — the next compaction fails loudly
-    DocumentStreams.writeBatchPartition(
+    PathCommit.writeBatch(
       graft.operators.Dedup.embeddingLshIndex(vecs(8L), "vec_id", "embedding"),
       99L, indexPath)
     val e = intercept[IllegalArgumentException] {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.Multimodal
+import graft.operators.{Multimodal, PathCommit}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -26,7 +26,7 @@ class MediaStreamsSpec extends SparkSpec {
     val outPath = tmp("graft_mlake")
 
     // history: family 0 variants 0,1 already published (the nightly seed)
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       imageHasher(media(0L, 1L), "media_id"), indexPath)
 
     val mem = MemoryStream[Long]
@@ -85,7 +85,7 @@ class MediaStreamsSpec extends SparkSpec {
     // H(100)=0; H(1)=7 (3 bits from history → dup); H(2)=63 (3 bits from
     // H(1), 6 bits from history → NOT a dup of anything published)
     val hasher = fixedHasher(Map(100L -> 0L, 1L -> 7L, 2L -> 63L))
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       hasher(Seq(100L).toDF("media_id"), "media_id"), indexPath)
 
     // batch 0: id 1 dropped as dup-of-history; id 2 is near id 1 but far
@@ -135,7 +135,7 @@ class MediaStreamsSpec extends SparkSpec {
       50L -> m(A(0) ^ 1, A(1) ^ 0xFF ^ 1, A(2) ^ 0xFF0 ^ 1, A(3) ^ 0xFF00 ^ 1),
       // unrelated everywhere → published
       60L -> m(0x123456789AL, 0x23456789ABL, 0x3456789ABCL, 0x456789ABCDL)))
-    DocumentStreams.seedIndex(
+    PathCommit.seed(
       hasher(Seq(100L).toDF("media_id"), "media_id"), indexPath)
 
     def clips(ids: Long*) =
