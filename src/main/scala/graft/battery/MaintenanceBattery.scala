@@ -1094,14 +1094,16 @@ private[graft] object MaintenanceBattery {
       Some(cdcMergeOracleSql)),
 
     // CHANGE-DATA FEED — the per-batch net live-view effect the CDC
-    // merge appends for downstream incremental consumers, previously
+    // merge writes for downstream incremental consumers, previously
     // spec-only (ChangeStreamsSpec): the SAME two-cycle merge as
     // q_cdc_merge_loop but gating the FEED, preimages included —
     // batch 1 bootstraps (all inserts, nothing to retract), batch 2
     // nets out to updates (+100 cents, v 1→2 with the replaced row in
-    // _before) and deletes (old values carried). Fresh session-scoped
-    // dirs per call: a feed is append-only, so reusing a cross-run
-    // IndexRoot path would make the row's output depend on history.
+    // _before) and deletes (old values carried). Fresh temp dirs per
+    // call, so every call does a real bootstrap merge and a real update
+    // merge: over a reused IndexRoot path both merges would find their
+    // rows already merged, diff to nothing and leave the timed runs
+    // no-ops.
     "q_change_feed" -> Q(
       (s, dir) => {
         val base0 = Queries.tempDir("graft_changefeed")

@@ -36,13 +36,17 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
     * must give each key a total order (e.g. `(ts, seq)`) or ties break
     * partitioning-dependently. Bootstraps from an absent snapshot.
     *
-    * Optional `changeFeedPath`: each micro-batch ALSO appends its net
-    * effect on the LIVE view — `(op ∈ insert/update/delete, row…,
-    * __batch_id)` via [[graft.operators.Lake.diffSnapshots]] of the
-    * before/after snapshots — the change-data-feed downstream
-    * incremental consumers subscribe to instead of re-diffing
-    * snapshots themselves. A batch of late rows that changes nothing
-    * appends nothing.
+    * Optional `changeFeedPath`: each micro-batch ALSO writes its net
+    * effect on the LIVE view — `(op ∈ insert/update/delete, row…)` via
+    * [[graft.operators.Lake.diffSnapshots]] of the before/after
+    * snapshots — the change-data feed downstream incremental consumers
+    * subscribe to instead of re-diffing snapshots themselves. The feed is
+    * a loop-owned path: batch N lands in its own `__batch_id=N` partition
+    * through [[graft.operators.PathCommit.writeBatch]], BEFORE the
+    * snapshot commits (see [[mergeBatch]]). A plain `spark.read.parquet`
+    * of it infers `__batch_id` as int, as the last column; a slice read
+    * by `__batch_id` prunes to that one directory. A batch of late rows
+    * that changes nothing writes no partition.
     */
   def cdcSnapshotStream(changelog: DataFrame, keyCols: Seq[String],
                         versionCols: Seq[String], isDelete: Column,
@@ -58,16 +62,21 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
     * are testable without a streaming harness — the
     * [[DocumentStreams.processBatch]] convention).
     *
+    * The default layout rewrites the WHOLE snapshot every batch — O(table)
+    * per micro-batch, the 3.9×-at-10× row of the scale sweep
+    * (SCALE_SWEEP_r10.md, `q_cdc_merge_loop`) — and commits it with one
+    * atomic [[graft.operators.PathCommit.swap]]. It is the oracle anchor
+    * and fits small snapshots; AT SCALE pass `snapshotPartition`.
+    *
     * `snapshotPartition = Some((name, expr))` switches the snapshot to a
-    * PARTITIONED copy-on-write layout — the fix for the full-table
-    * rewrite that the 10× sweep measured at 7.3× (O(live keys) per
-    * batch regardless of batch size). The snapshot is laid out
-    * `name=value/` by `expr`; each merge computes the batch's DISTINCT
-    * partition values (a tiny driver-side list — CDC batches touch few
-    * partitions when `expr` tracks their locality), reads ONLY those
-    * partitions (source partition pruning), merges, and rewrites ONLY
-    * them via dynamic partition overwrite. Cost per batch becomes
-    * O(batch + touched partitions), not O(table).
+    * PARTITIONED copy-on-write layout (`q_cdc_merge_part`, same oracle) —
+    * the fix for the full-table rewrite that the 10× sweep measured at
+    * 7.3×. The snapshot is laid out `name=value/` by `expr`; each merge
+    * computes the batch's DISTINCT partition values (a tiny driver-side
+    * list — CDC batches touch few partitions when `expr` tracks their
+    * locality), reads ONLY those partitions (source partition pruning),
+    * merges, and rewrites ONLY them via dynamic partition overwrite. Cost
+    * per batch becomes O(batch + touched partitions), not O(table).
     *
     * Caller contract: `expr` must be a pure function of `keyCols` — if
     * it depended on non-key columns, an update could move a key across
@@ -79,11 +88,20 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
     * partitions logs a warning, skips pruning, and merges the full table
     * in place; results are identical either way, spec-pinned). NULL and
     * empty-string partition values are legal and route through Hive's
-    * default partition directory. Retries are idempotent (re-merging an already-merged
-    * batch reproduces the same winners), and the per-partition commit
-    * has the same torn-window caveat as any multi-partition dynamic
-    * overwrite — single-partition batches keep the full atomic-swap
-    * guarantee of the unpartitioned path.
+    * default partition directory.
+    *
+    * Commit order and retries: the feed slice (`changeFeedPath`, which
+    * needs the micro-batch's `batchId`) is written before the snapshot
+    * commits — inside the swap's stage, before its marker, or before the
+    * dynamic overwrite. A retry after a crash before the commit re-diffs
+    * against the untouched snapshot and rewrites its own feed partition;
+    * a retry after the commit re-merges to the same winners, so its diff
+    * is empty and the committed feed partition stays as it is. The
+    * partitioned layout's multi-partition overwrite has the torn-window
+    * caveat of any dynamic overwrite: a crash inside it leaves some
+    * partitions committed, and the retry's feed slice then lacks their
+    * changes. Single-partition batches keep the full atomic guarantee of
+    * the unpartitioned layout.
     */
   private[graft] def mergeBatch(batch: DataFrame, keyCols: Seq[String],
                                     versionCols: Seq[String], isDelete: Column,
@@ -91,133 +109,102 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
                                     changeFeedPath: Option[String] = None,
                                     batchId: Long = -1L,
                                     snapshotPartition: Option[(String, Column)] = None): Unit = {
+    require(changeFeedPath.isEmpty || batchId >= 0,
+      s"a change feed needs the micro-batch id (batchId >= 0), got $batchId")
+    val spark = batch.sparkSession
     // First complete a snapshot swap that a crash interrupted, even for an
     // empty batch: until then the snapshot may sit under its `_old` name,
     // and merging into the empty path would replace it with this batch
     // alone.
-    graft.operators.PathCommit.resume(batch.sparkSession, snapshotPath, "merge")
+    graft.operators.PathCommit.resume(spark, snapshotPath, "merge")
     // An EMPTY micro-batch is a no-op, and must short-circuit: merging it
     // anyway would (a) on bootstrap, write a schema-less snapshot
     // directory that poisons the next merge's read, and (b) on an
     // existing snapshot, pay a full rewrite to change nothing. The live
-    // view is unchanged, so the feed correctly appends nothing.
+    // view is unchanged, so the feed correctly gets nothing.
     // The batch is persisted ONCE so the emptiness probe and the merge's
     // re-reads don't each re-evaluate an expensive upstream plan
     // (foreachBatch hands over an unmaterialized DataFrame).
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (b.isEmpty) return
+      val dataCols = b.columns.toSeq
+      snapshotPartition.foreach { case (pcol, _) =>
+        require(!dataCols.contains(pcol) && pcol != "__del",
+          s"partition column $pcol collides with a data column")
+      }
+      val marked = b.withColumn("__is_del",
+        coalesce(isDelete.cast("boolean"), lit(false)))
+      val target = new org.apache.hadoop.fs.Path(snapshotPath)
+      val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
+      val old = Option.when(fs.exists(target)) {
+        val snap = snapshotPartition match {
+          case None => spark.read.parquet(snapshotPath)
+          case Some((pcol, pexpr)) => touchedPartitions(marked, snapshotPath, pcol, pexpr)
+        }
+        snap.withColumnRenamed("__del", "__is_del").select(marked.columns.map(col): _*)
+      }
+      val merged = graft.operators.Lake.latestSnapshot(
+          old.map(_.union(marked)).getOrElse(marked), keyCols, versionCols.map(col),
+          isDelete = col("__is_del"), keepTombstones = true)
+        .select(dataCols.map(col) :+ col("__del"): _*)
+      // the feed diffs the LIVE views: the old rows this merge read, and
+      // `staged`, the merged rows as the branch below stages them
+      def writeFeed(staged: DataFrame): Unit = changeFeedPath.foreach { p =>
+        val after = staged.filter(!col("__del")).drop("__del")
+        val before = old.map(_.filter(!col("__is_del")).drop("__is_del"))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[Row], after.schema))
+        // "_op", not "op": CDC changelogs routinely carry their own `op`
+        // column through to the snapshot, and the feed must not collide.
+        // includeBefore: feed consumers maintaining incremental aggregates
+        // need the replaced row to retract it. The diff leaves the full
+        // outer join's exchange, so the write adds no rebalance.
+        graft.operators.PathCommit.writeBatch(
+          graft.operators.Lake.diffSnapshots(before, after, keyCols,
+            opCol = "_op", includeBefore = true),
+          batchId, p, rebalance = false)
+      }
       snapshotPartition match {
-        case Some((pcol, pexpr)) =>
-          mergeBatchPartitioned(b, keyCols, versionCols, isDelete,
-            snapshotPath, changeFeedPath, batchId, pcol, pexpr)
         case None =>
-          mergeBatchFull(b, keyCols, versionCols, isDelete,
-            snapshotPath, changeFeedPath, batchId)
+          // the snapshot is both input and output of this batch, so it is
+          // staged aside and swapped in; the feed reads the staged files
+          // instead of re-running the whole union+argmax plan
+          graft.operators.PathCommit.swap(spark, snapshotPath, "merge") { tmp =>
+            merged.write.parquet(tmp)
+            writeFeed(spark.read.parquet(tmp))
+          }
+        case Some((pcol, pexpr)) =>
+          // the snapshot is input AND output of the overwrite below — stage
+          // the merged slice BEFORE touching the target. Bootstrap has no
+          // read-overwrite conflict: skip the staging round-trip
+          val tmp = new org.apache.hadoop.fs.Path(
+            snapshotPath.stripSuffix("/") + ".__merge_tmp")
+          val staged =
+            if (old.isDefined) {
+              merged.write.mode("overwrite").parquet(tmp.toString)
+              spark.read.parquet(tmp.toString)
+            } else merged
+          writeFeed(staged)
+          // rewrite ONLY the touched partitions; untouched directories are
+          // never listed, read, or replaced
+          staged.withColumn(pcol, pexpr.cast("string"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(pcol)
+            .parquet(snapshotPath)
+          fs.delete(tmp, true)
       }
     } finally b.unpersist(false)
   }
 
-  /** Unpartitioned merge: rewrites the WHOLE snapshot every batch —
-    * O(table) per micro-batch, the 3.9×-at-10× row of the scale sweep
-    * (SCALE_SWEEP_r10.md, `q_cdc_merge_loop`). Kept as the oracle anchor
-    * and for small snapshots where its single atomic swap is worth more
-    * than pruning; AT SCALE callers must pass `snapshotPartition` with a
-    * locality-matched key expression and take the partitioned
-    * copy-on-write path instead (O(batch + touched partitions) —
-    * `q_cdc_merge_part` is the gated twin on the same oracle).
+  /** The rows of the existing partitioned snapshot at `snapshotPath` in
+    * the partitions `marked`'s batch touches, without the partition
+    * column (see [[mergeBatch]]).
     */
-  private def mergeBatchFull(batch: DataFrame, keyCols: Seq[String],
-                             versionCols: Seq[String], isDelete: Column,
-                             snapshotPath: String,
-                             changeFeedPath: Option[String],
-                             batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val dataCols = batch.columns.toSeq
-    val marked = batch.withColumn("__is_del",
-      coalesce(isDelete.cast("boolean"), lit(false)))
-    val target = new org.apache.hadoop.fs.Path(snapshotPath)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val exists = fs.exists(target)
-    val unioned =
-      if (exists)
-        spark.read.parquet(snapshotPath)
-          .withColumnRenamed("__del", "__is_del")
-          .select(marked.columns.map(col): _*)
-          .union(marked)
-      else marked
-    val merged = graft.operators.Lake.latestSnapshot(
-        unioned, keyCols, versionCols.map(col),
-        isDelete = col("__is_del"), keepTombstones = true)
-      .select(dataCols.map(col) :+ col("__del"): _*)
-    // swap-safe rewrite: the snapshot is both input and output of this
-    // batch, so it is staged aside and swapped in (PathCommit.swap). The
-    // staged write is the one full computation of `merged`, and the feed
-    // diff below reads the STAGED files back instead of re-running the
-    // whole union+argmax plan a second time (round-20, the
-    // mergeBatchPartitioned ordering).
-    val feed = graft.operators.PathCommit.swap(spark, snapshotPath, "merge") { tmp =>
-      merged.write.parquet(tmp)
-      val staged = spark.read.parquet(tmp)
-      // change feed: diff the LIVE views before/after, while the old
-      // snapshot is still on disk (the swap replaces it). The diff must
-      // be DURABLE before the swap, not merely cached: persisted blocks
-      // can be dropped (executor loss, memory pressure), and a recompute
-      // after the rename would re-read snapshotPath — by then the NEW
-      // snapshot — yielding a silently wrong/empty feed slice. So the
-      // diff is staged to parquet and read back; the feed append below
-      // consumes the staged files, whose contents can never change
-      // underneath it.
-      changeFeedPath.map { p =>
-        val before =
-          if (exists) readSnapshot(spark, snapshotPath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              staged.drop("__del").schema.fields))
-        // "_op", not "op": CDC changelogs routinely carry their own `op`
-        // column through to the snapshot, and the feed must not collide.
-        // includeBefore: feed consumers maintaining incremental aggregates
-        // need the replaced row to retract it
-        val d = graft.operators.Lake.diffSnapshots(
-            before, staged.filter(!col("__del")).drop("__del"), keyCols,
-            opCol = "_op", includeBefore = true)
-          .withColumn("__batch_id", lit(batchId))
-        val staging = new org.apache.hadoop.fs.Path(
-          p.stripSuffix("/") + ".__feed_tmp")
-        d.write.mode("overwrite").parquet(staging.toString)
-        (spark.read.parquet(staging.toString), staging)
-      }
-    }
-    feed.foreach { case (d, staging) =>
-      // `d` reads the staged files, so this append is insulated from the
-      // swap above. Empty diffs append nothing (a no-op batch must not
-      // litter the feed with schema-only part files).
-      changeFeedPath.foreach { p =>
-        if (!d.isEmpty) d.write.mode("append").parquet(p)
-      }
-      staging.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(staging, true)
-    }
-  }
-
-  /** Partitioned copy-on-write merge (see [[mergeBatch]] doc). */
-  private def mergeBatchPartitioned(batch: DataFrame, keyCols: Seq[String],
-                                    versionCols: Seq[String], isDelete: Column,
-                                    snapshotPath: String,
-                                    changeFeedPath: Option[String],
-                                    batchId: Long,
-                                    pcol: String, pexpr: Column): Unit = {
-    val spark = batch.sparkSession
-    val dataCols = batch.columns.toSeq
-    require(!dataCols.contains(pcol) && pcol != "__del",
-      s"partition column $pcol collides with a data column")
-    val marked = batch.withColumn("__is_del",
-      coalesce(isDelete.cast("boolean"), lit(false)))
-    val target = new org.apache.hadoop.fs.Path(snapshotPath)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val exists = fs.exists(target)
-
+  private def touchedPartitions(marked: DataFrame, snapshotPath: String,
+                                pcol: String, pexpr: Column): DataFrame = {
+    val spark = marked.sparkSession
     // the batch's partition footprint: a tiny driver-side list (CDC
     // batches are partition-local by construction of `pexpr`).
     // NULL and empty-string values both land in Hive's default partition
@@ -243,19 +230,16 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
     // dynamic overwrite rewrite every partition — same cost shape as the
     // flat path, no layout change. Loudly logged so callers learn their
     // `pexpr` does not match batch locality.
-    val existingParts =
-      if (exists)
-        fs.listStatus(target).count(s =>
-          s.isDirectory && s.getPath.getName.startsWith(pcol + "="))
-      else 0
-    val degenerate = exists && existingParts > 1 &&
-      touched.size.toDouble >= 0.5 * existingParts
+    val target = new org.apache.hadoop.fs.Path(snapshotPath)
+    val existingParts = target.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(target).count(s =>
+        s.isDirectory && s.getPath.getName.startsWith(pcol + "="))
+    val degenerate = existingParts > 1 && touched.size.toDouble >= 0.5 * existingParts
     if (degenerate)
       logWarning(s"CDC merge batch touches ${touched.size} of " +
         s"$existingParts snapshot partitions; partition pruning degenerates " +
         s"to a full rewrite — choose a snapshotPartition expr that matches " +
         s"batch locality (see ChangeStreams.mergeBatch scaladoc)")
-    val pruneFilter = if (degenerate) lit(true) else inTouched
 
     // The snapshot is read with an EXPLICIT schema (partition column
     // pinned to string): partition-column type inference would round a
@@ -268,62 +252,9 @@ object ChangeStreams extends org.apache.spark.internal.Logging {
           org.apache.spark.sql.types.BooleanType) :+
         org.apache.spark.sql.types.StructField(pcol,
           org.apache.spark.sql.types.StringType))
-    val sliceOld: Option[DataFrame] =
-      if (exists)
-        Some(spark.read.schema(snapReadSchema).parquet(snapshotPath)
-          .filter(pruneFilter) // source partition pruning: only touched dirs read
-          .drop(pcol)
-          .withColumnRenamed("__del", "__is_del")
-          .select(marked.columns.map(col): _*))
-      else None
-    val unioned = sliceOld.map(_.union(marked)).getOrElse(marked)
-    val merged = graft.operators.Lake.latestSnapshot(
-        unioned, keyCols, versionCols.map(col),
-        isDelete = col("__is_del"), keepTombstones = true)
-      .select(dataCols.map(col) :+ col("__del"): _*)
-
-    // the snapshot is input AND output of the overwrite below — stage the
-    // merged slice (and the durable feed diff) BEFORE touching the target.
-    // Bootstrap (no existing snapshot) has no read-overwrite conflict and
-    // no before-image: skip the staging round-trip entirely
-    val tmp = new org.apache.hadoop.fs.Path(
-      snapshotPath.stripSuffix("/") + ".__merge_tmp")
-    val staged =
-      if (exists) {
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        spark.read.parquet(tmp.toString)
-      } else merged
-    val feed = changeFeedPath.map { p =>
-      val before = sliceOld
-        .map(s => s.filter(!col("__is_del")).drop("__is_del"))
-        .getOrElse(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            staged.drop("__del").schema.fields)))
-      val d = graft.operators.Lake.diffSnapshots(
-          before, staged.filter(!col("__del")).drop("__del"), keyCols,
-          opCol = "_op", includeBefore = true)
-        .withColumn("__batch_id", lit(batchId))
-      val staging = new org.apache.hadoop.fs.Path(
-        p.stripSuffix("/") + ".__feed_tmp")
-      d.write.mode("overwrite").parquet(staging.toString)
-      (spark.read.parquet(staging.toString), staging)
-    }
-    // rewrite ONLY the touched partitions; untouched directories are
-    // never listed, read, or replaced
-    staged.withColumn(pcol, pexpr.cast("string"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(pcol)
-      .parquet(snapshotPath)
-    fs.delete(tmp, true)
-    feed.foreach { case (d, staging) =>
-      changeFeedPath.foreach { p =>
-        if (!d.isEmpty) d.write.mode("append").parquet(p)
-      }
-      staging.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(staging, true)
-    }
+    spark.read.schema(snapReadSchema).parquet(snapshotPath)
+      .filter(if (degenerate) lit(true) else inTouched) // source partition pruning: only touched dirs read
+      .drop(pcol)
   }
 
   /** The consumer view of [[cdcSnapshotStream]]'s snapshot: live rows

@@ -129,5 +129,10 @@ class PathCommitSpec extends SparkSpec {
     Seq("def readHistory", "def pathExists", "def hasData").foreach { d =>
       assert(mainSourcesContaining(d).isEmpty, s"$d is back")
     }
+    // a per-batch path is written through writeBatch, never appended to
+    Seq("mode(\"append\")", "SaveMode.Append", "__feed_tmp").foreach { w =>
+      val found = mainSourcesContaining(w).filterNot(_.startsWith("graft/battery/"))
+      assert(found.isEmpty, s"$w outside battery/: $found")
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.Lake
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -124,38 +125,107 @@ class ChangeStreamsSpec extends SparkSpec {
     assert(incremental == batch)
   }
 
+  // one merge of `b` as micro-batch `id` into `<root>/snap`, with its
+  // change feed at `<root>/feed`
+  private def mergeWithFeed(b: Seq[(String, Long, Long, String)], root: String,
+                            id: Long, part: Option[(String, Column)] = None): Unit =
+    ChangeStreams.mergeBatch(b.toDF("k", "v", "ver", "op"), Seq("k"),
+      Seq("ver"), col("op") === "delete", s"$root/snap",
+      changeFeedPath = Some(s"$root/feed"), batchId = id, snapshotPartition = part)
+
+  // the raw snapshot, tombstones included
+  private def rawSnapshot(root: String) = spark.read.parquet(s"$root/snap")
+    .select("k", "v", "ver", "__del").as[(String, Long, Long, Boolean)]
+    .collect().toSet
+
+  private def feedRows(root: String) = spark.read.parquet(s"$root/feed")
+    .select("__batch_id", "_op", "k", "v", "ver", "_before").collect().toSet
+
   test("a retried batch completes a crashed snapshot swap instead of losing the snapshot") {
-    def merge(b: Seq[(String, Long, Long, String)], snap: String, id: Long): Unit =
-      ChangeStreams.mergeBatch(b.toDF("k", "v", "ver", "op"), Seq("k"),
-        Seq("ver"), col("op") === "delete", snap, batchId = id)
-    def raw(snap: String) = spark.read.parquet(snap)
-      .select("k", "v", "ver", "__del").as[(String, Long, Long, Boolean)]
-      .collect().toSet
-    val clean = tmp("graft_snap_clean") + "/snap"
-    merge(b1, clean, 0L); merge(b2, clean, 1L)
-    assert(ChangeStreams.readSnapshot(spark, clean).count() == 3L)
+    val clean = tmp("graft_snap_clean")
+    mergeWithFeed(b1, clean, 0L); mergeWithFeed(b2, clean, 1L)
+    assert(ChangeStreams.readSnapshot(spark, s"$clean/snap").count() == 3L)
 
     // batch 1's swap, stopped at each point after its commit marker: the
-    // stage holds what batch 1 merges (the clean run's final snapshot),
-    // then (A) nothing renamed, (B) the prior snapshot moved aside and
-    // nothing at the path, (C) the stage promoted, old and marker left
+    // feed holds batch 1's partition (it is written before the marker),
+    // the stage holds what batch 1 merges (the clean run's final
+    // snapshot), then (A) nothing renamed, (B) the prior snapshot moved
+    // aside and nothing at the path, (C) the stage promoted, old and
+    // marker left
     for (crashPoint <- Seq("A", "B", "C")) {
-      val snap = tmp("graft_snap_crash") + "/snap"
-      merge(b1, snap, 0L)
+      val root = tmp("graft_snap_crash")
+      val snap = s"$root/snap"
+      mergeWithFeed(b1, root, 0L)
+      graft.operators.PathCommit.writeBatch(
+        spark.read.parquet(s"$clean/feed").filter(col("__batch_id") === 1)
+          .drop("__batch_id"), 1L, s"$root/feed", rebalance = false)
       val fs = new org.apache.hadoop.fs.Path(snap)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       def p(suffix: String) = new org.apache.hadoop.fs.Path(snap + suffix)
-      spark.read.parquet(clean).write.parquet(snap + "__merge_tmp")
+      spark.read.parquet(s"$clean/snap").write.parquet(snap + "__merge_tmp")
       fs.create(p("__merge_marker"), true).close()
       if (crashPoint != "A") assert(fs.rename(p(""), p("__merge_old")))
       if (crashPoint == "C") assert(fs.rename(p("__merge_tmp"), p("")))
 
-      merge(b2, snap, 1L) // the foreachBatch retry
-      assert(raw(snap) == raw(clean), s"crash point $crashPoint")
+      mergeWithFeed(b2, root, 1L) // the foreachBatch retry
+      assert(rawSnapshot(root) == rawSnapshot(clean), s"crash point $crashPoint")
+      assert(feedRows(root) == feedRows(clean), s"crash point $crashPoint")
       Seq("__merge_tmp", "__merge_old", "__merge_marker").foreach { s =>
         assert(!fs.exists(p(s)), s"crash point $crashPoint left $s")
       }
     }
+  }
+
+  test("a batch that fails at its feed write retries to the uncrashed snapshot and feed") {
+    val clean = tmp("graft_feedcrash_clean")
+    mergeWithFeed(b1, clean, 0L); mergeWithFeed(b2, clean, 1L)
+    for (layout <- Seq("flat", "partitioned")) {
+      val root = tmp("graft_feedcrash")
+      def merge(b: Seq[(String, Long, Long, String)], id: Long): Unit =
+        mergeWithFeed(b, root, id, Option.when(layout == "partitioned")(byFirstChar))
+      merge(b1, 0L)
+      // batch 1's first attempt: a plain file stands where the feed goes,
+      // so its feed write fails
+      val feed = java.nio.file.Paths.get(root, "feed")
+      val aside = java.nio.file.Paths.get(root, "feed_aside")
+      java.nio.file.Files.move(feed, aside)
+      java.nio.file.Files.createFile(feed)
+      intercept[Exception](merge(b2, 1L))
+      java.nio.file.Files.delete(feed)
+      java.nio.file.Files.move(aside, feed)
+
+      merge(b2, 1L) // the foreachBatch retry
+      assert(rawSnapshot(root) == rawSnapshot(clean), layout)
+      assert(feedRows(root) == feedRows(clean), layout)
+    }
+  }
+
+  test("a change feed without a batch id is rejected") {
+    val root = tmp("graft_feed_noid")
+    val e = intercept[IllegalArgumentException](mergeWithFeed(b1, root, -1L))
+    assert(e.getMessage.contains("batchId"))
+    assert(!new java.io.File(s"$root/snap").exists())
+  }
+
+  test("a feed slice read by __batch_id scans only that batch's partition") {
+    val root = tmp("graft_feed_slice")
+    val b4 = Seq(("e", 50L, 1L, "upsert"))
+    for ((b, id) <- Seq(b1, b2, b4).zipWithIndex) mergeWithFeed(b, root, id.toLong)
+    val dirs = new java.io.File(s"$root/feed").listFiles().map(_.getName)
+      .filter(_.startsWith("__batch_id=")).toSet
+    assert(dirs == Set("__batch_id=0", "__batch_id=1", "__batch_id=2"))
+    val slice = spark.read.parquet(s"$root/feed").filter(col("__batch_id") === 1)
+    val rows = slice.collect().map(r => (r.getAs[String]("_op"), r.getAs[String]("k")))
+    assert(rows.toSet == Set(("delete", "b"), ("update", "c"), ("insert", "d")))
+    val scan = (slice.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collectFirst { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.get
+    assert(scan.partitionFilters.nonEmpty)
+    val sliceFiles = new java.io.File(s"$root/feed/__batch_id=1").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(scan.metrics("numPartitions").value == 1L)
+    assert(scan.metrics("numFiles").value == sliceFiles.toLong)
   }
 
   test("mergeBatch bootstraps from an absent snapshot") {
