@@ -20,9 +20,10 @@ import scala.jdk.CollectionConverters._
   * The body is parsed once: the `Users` and `Rule` trees go straight to
   * [[RuleService]], which infers the row schema by Spark's JSON rules on
   * the driver, with no Spark job, and keeps the rows in a request leaf the
-  * planner carries but does not walk. Filter-only rules are answered without
-  * a Spark job, aggregating ones with one. Requests run on a pool of four
-  * threads named `rule-http-<n>`.
+  * planner carries but does not walk. Every rule shape, aggregating ones
+  * included, is answered on the driver without a Spark job. Requests run on
+  * a pool of four threads named `rule-http-<n>`, and replies go out with
+  * TCP_NODELAY set (see the companion object).
   *
   * Built on the JDK's `com.sun.net.httpserver` (zero extra dependencies —
   * this is a demo shim for request-sized payloads, not a production
@@ -32,7 +33,7 @@ import scala.jdk.CollectionConverters._
   */
 final class RuleHttpServer(spark: SparkSession, port: Int = 0) {
   private val mapper = new ObjectMapper()
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = RuleHttpServer.create(port)
 
   server.createContext("/rules/evaluate", (exchange: HttpExchange) => {
     try {
@@ -93,6 +94,17 @@ final class RuleHttpServer(spark: SparkSession, port: Int = 0) {
 
 /** `runMain graft.api.RuleHttpServer 8080` — standalone demo server. */
 object RuleHttpServer {
+  // `sendResponseHeaders` flushes the headers before the body is written, so
+  // with Nagle's algorithm on every reply's body waits for the client's
+  // delayed ACK of the headers (~40 ms). The JDK server reads this property
+  // once, when its config class loads with the first `HttpServer.create`;
+  // this object initialises before any server of this class is created.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def create(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
     val spark = graft.LocalSession(4)

@@ -19,12 +19,11 @@ import org.apache.spark.sql.functions.{col, struct, to_json}
   * on the driver with no job
   * ([[org.apache.spark.sql.catalyst.json.LocalJsonRelation]]). The rows land
   * in a `RequestRelation` leaf, and the decode installs that leaf's optimizer
-  * rule and planner strategy in the session once. The rule evaluates a
-  * filter-only rule and its rendering on the driver, so no Spark job runs;
-  * the strategy scans the rows as one partition, so an aggregating rule runs
-  * one job with no exchange. Results return as a JSON array string, errors as
-  * thrown exceptions for the embedding layer to map to its transport (the
-  * reference maps them to HTTP 400 `{Error}`).
+  * rule and planner strategy in the session once. The rule evaluates the
+  * filter, the Count or ARGMIN/ARGMAX group-by and the rendering on the
+  * driver, so no rule shape runs a Spark job. Results return as a JSON array
+  * string, errors as thrown exceptions for the embedding layer to map to its
+  * transport (the reference maps them to HTTP 400 `{Error}`).
   *
   * This entry point targets request-sized payloads (the reference literally
   * POSTs the dataset). Cluster-scale data should enter through

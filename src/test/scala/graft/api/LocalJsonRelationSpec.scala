@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.json.{FoldRequestRelation, LocalJsonRelation, RequestRelation, RequestScan}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions.{count, countDistinct, expr, lit, max}
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -134,6 +135,55 @@ class LocalJsonRelationSpec extends SparkSpec {
       Seq(1, 2).toDF("a").filter($"a" > 1)).foreach { df =>
       val plan = df.queryExecution.analyzed
       assert(FoldRequestRelation(plan) eq plan)
+    }
+  }
+
+  /** `query` over the decoded rows and over `spark.read.json` of the same
+    * text: the same rows, in any order, and the decoded side's job count.
+    */
+  private def jobsOverLeaf(json: String, query: DataFrame => DataFrame, clue: String): Int = {
+    var got = Seq.empty[String]
+    val jobs = jobsOf { got = query(LocalJsonRelation.fromString(spark, json)).collect().map(_.toString).toSeq }
+    assert(got.sorted == query(expected(json)).collect().map(_.toString).toSeq.sorted, clue)
+    jobs
+  }
+
+  private val keyed =
+    """[{"a":"x","b":1,"s":"0.0","v":3},{"a":null,"b":1,"s":"-0.0","v":5},{"a":null,"b":null,"s":"NaN","v":1},
+       {"b":null,"s":"1.5","v":2},{"a":"x","b":null,"s":"-0.0","v":4},{"a":"x","b":1,"s":"NaN","v":0}]"""
+
+  test("an aggregate over the leaf folds on the driver and equals spark.read.json") {
+    val folded = Seq[(String, String, DataFrame => DataFrame)](
+      ("grand count over no rows", "[]", _.agg(count(lit(1)).as("n"))),
+      ("grand count over rows filtered away", keyed, _.filter($"v" > 9).agg(count(lit(1)).as("n"))),
+      ("grand max", keyed, _.agg(max($"v"), count($"a"))),
+      ("multi-column key with nulls", keyed, _.groupBy($"a", $"b").agg(count(lit(1)), max($"v"))),
+      ("double key: 0.0 and -0.0 one group, NaN another", keyed,
+        _.groupBy($"s".cast("double").as("d")).agg(count(lit(1)).as("n"))),
+      ("expression key and expression result", keyed,
+        _.groupBy($"v" % 2).agg((count(lit(1)) * 10 + $"v" % 2).as("r"))))
+    folded.foreach { case (clue, json, query) =>
+      assert(jobsOverLeaf(json, query, clue) == 0, clue)
+    }
+  }
+
+  test("ARGMAX rules fold too: a grand ARGMAX over no rows gives no row, a grouped one a row per group") {
+    val grand = """{"Conditions":{"Conditions":[{"Property":"v","Operator":"GreaterThan","Value":9}]},
+                    "Aggregation":{"AggregateProperty":"v","AggregateFunction":"Max"}}"""
+    val grouped = """{"GroupBy":["a"],"Aggregation":{"AggregateProperty":"v","AggregateFunction":"Max"}}"""
+    Seq("grand over no rows" -> grand, "grouped" -> grouped).foreach { case (clue, rule) =>
+      val parsed = graft.model.RuleJson.parseRule(rule)
+      assert(jobsOverLeaf(keyed, graft.rules.RuleEvaluator(_, parsed), clue) == 0, clue)
+    }
+    assert(RuleService.evaluate(spark, keyed, grand).collect().isEmpty)
+  }
+
+  test("DISTINCT and FILTER aggregates are declined: they still run a job and stay correct") {
+    Seq[(String, DataFrame => DataFrame)](
+      "countDistinct" -> (_.groupBy($"a").agg(countDistinct($"b"))),
+      "count(*) FILTER" -> (_.groupBy($"a").agg(expr("count(*) FILTER (WHERE v > 2)")))
+    ).foreach { case (clue, query) =>
+      assert(jobsOverLeaf(keyed, query, clue) >= 1, clue)
     }
   }
 }
