@@ -9,27 +9,39 @@ import org.apache.spark.sql.SparkSession
   * the dev tools and the tests all get their SparkSession here.
   *
   * `local[cpus]` with as many shuffle partitions as cores, UTC session
-  * time, no UI, WARN logging, and three known-safe warnings silenced: the
-  * `WindowExec` single-partition one, the checkpoint-release one and the
-  * `DAGScheduler`'s cancel of a job group with no active job.
+  * time, no UI, WARN logging, and known-safe warnings silenced: the
+  * `WindowExec` single-partition one, the checkpoint-release one, the
+  * `DAGScheduler`'s cancel of a job group with no active job and the
+  * per-stream AQE-disabled notices.
   */
 object LocalSession {
-  /** Drops the `DAGScheduler` WARN "Failed to cancel job group <id>. Cannot
-    * find active jobs for it.", which a streaming query's stop logs twice
-    * when its job group has already finished. A level change would also
-    * drop that logger's other WARNs, such as "Broadcasting large task
-    * binary", which carry signal.
+  /** Drops three WARNs that carry no signal:
+    *  - the `DAGScheduler`'s "Failed to cancel job group <id>. Cannot find
+    *    active jobs for it.", which a streaming query's stop logs twice
+    *    when its job group has already finished;
+    *  - `ResolveWriteToStream`'s "spark.sql.adaptive.enabled is not
+    *    supported in streaming DataFrames/Datasets and will be disabled."
+    *    and `MicroBatchExecution`'s "Disabling AQE since AQE is not
+    *    supported ...", which every streaming query start logs.
+    * A level change would also drop those loggers' other WARNs, such as
+    * "Broadcasting large task binary", which carry signal.
     */
-  private object NoActiveJobsToCancel extends AbstractFilter(Filter.Result.DENY, Filter.Result.NEUTRAL) {
-    override def filter(event: LogEvent): Filter.Result =
-      if (event.getMessage.getFormattedMessage.endsWith("Cannot find active jobs for it.")) onMatch
+  private object KnownSafeNotices extends AbstractFilter(Filter.Result.DENY, Filter.Result.NEUTRAL) {
+    override def filter(event: LogEvent): Filter.Result = {
+      val m = event.getMessage.getFormattedMessage
+      if (m.endsWith("Cannot find active jobs for it.") ||
+          m.endsWith("is not supported in streaming DataFrames/Datasets and will be disabled.") ||
+          m.startsWith("Disabling AQE since AQE is not supported")) onMatch
       else onMismatch
+    }
   }
 
-  /** Adds the filter to the `DAGScheduler` logger's config, once per JVM. */
-  private lazy val quietCancels: Unit =
-    LogManager.getLogger("org.apache.spark.scheduler.DAGScheduler").asInstanceOf[Logger]
-      .addFilter(NoActiveJobsToCancel)
+  /** Adds the filter to the three loggers' configs, once per JVM. */
+  private lazy val quietNotices: Unit =
+    Seq("org.apache.spark.scheduler.DAGScheduler",
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
+      .foreach(LogManager.getLogger(_).asInstanceOf[Logger].addFilter(KnownSafeNotices))
 
   /** `SPARK_GRAFT_CPUS` when set, else `default`. */
   def envCpus(default: Int = 32): Int =
@@ -61,7 +73,7 @@ object LocalSession {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
-    quietCancels
+    quietNotices
     spark
   }
 }

@@ -272,7 +272,7 @@ private[graft] object BatteryUtil {
                      WHERE doc_id NOT IN (SELECT doc_id FROM sembad))"""
     val src0 = if (semdecon) "semfinal" else srcNg
     // ExactSubstr stage (q_span_dedup's raw-string-gram formulation, run
-    // over the curated survivors): spans of >= spanMinTokens covered by
+    // over the curated survivors): spans of >= 8 tokens covered by
     // corpus-repeated 8-grams are CUT, touched docs rebuilt from the
     // surviving tokens single-space joined, untouched docs byte-identical
     val spanCtes = if (!spans) "" else s""",

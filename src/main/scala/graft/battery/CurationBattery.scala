@@ -166,8 +166,9 @@ private[graft] object CurationBattery {
     // al. 2021): corpus-repeated 8-gram spans are cut from the curated
     // survivors before chunking. Consumes the same shared persisted
     // prefix as the other two pipeline rows; only the span+chunk suffix
-    // is this row's own work. Spec pins pretrainingPipeline(
-    // dropRepeatedSpans = true) == this composition.
+    // is this row's own work. The span stage runs AFTER document-level
+    // dedup (span counts must not include near-dup copies about to be
+    // dropped) and BEFORE chunking (chunks must tokenize the cut text).
     "q_curation_spans" -> Q(
       (s, dir) => graft.operators.Curation.chunkAndPack(
         graft.operators.Dedup.removeRepeatedSpans(

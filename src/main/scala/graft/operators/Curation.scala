@@ -27,14 +27,7 @@ object Curation {
       chunkStride: Int = 512,
       packBudgetTokens: Long = 4096L,
       decontamNgram: Int = 8,
-      decontamMinHits: Int = 1,
-      // optional ExactSubstr stage ([[graft.operators.Dedup
-      // .removeRepeatedSpans]]) between near-dedup and chunking: cut
-      // token spans covered by corpus-repeated spanGram-grams
-      dropRepeatedSpans: Boolean = false,
-      spanGram: Int = 8,
-      spanMinCount: Long = 2,
-      spanMinTokens: Int = 8)
+      decontamMinHits: Int = 1)
 
   /** The inputs of the optional SEMANTIC decontamination stage of
     * [[pretrainingPipeline]] — the embedding-space complement of the
@@ -321,15 +314,7 @@ object Curation {
         decontaminated.join(bad, decontaminated(idCol) === bad("id"), "left_anti")
       case None => decontaminated
     }
-    // ExactSubstr stage AFTER document-level dedup (span counts must not
-    // include near-dup copies about to be dropped) and BEFORE chunking
-    // (chunks must tokenize the cut text)
-    val spanClean =
-      if (!cfg.dropRepeatedSpans) semClean
-      else graft.operators.Dedup.removeRepeatedSpans(semClean, idCol,
-          textCol, cfg.spanGram, cfg.spanMinCount, cfg.spanMinTokens)
-        .drop("n_cut_tokens")
-    chunkAndPack(spanClean, idCol, textCol, cfg)
+    chunkAndPack(semClean, idCol, textCol, cfg)
   }
 
   /** The contaminated-id set of the semantic stage: `survivors`' ids

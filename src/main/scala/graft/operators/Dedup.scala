@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{SimHashFunctions, TextFunctions, VectorFunctions}
+import graft.functions.{MinHashFunctions, SimHashFunctions, TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -34,12 +34,6 @@ object Dedup extends org.apache.spark.internal.Logging {
       .select("__row.*")
   }
 
-  /** MinHash signature of a shingle-set column — one-pass native expression
-    * (see [[graft.functions.MinHashSignature]]).
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    graft.functions.MinHashFunctions.minhashSignature(shingles, numHashes)
-
   /** MinHash + LSH near-duplicate PAIRS (docId1 < docId2).
     *
     * banding: the signature splits into `bands` bands of `rows` hashes; docs
@@ -67,7 +61,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     df.select(col(idCol).as("id"),
         TextFunctions.wordShingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
-      .select(col("id"), minhashSignature(col("sh"), numHashes).as("sig"))
+      .select(col("id"),
+        MinHashFunctions.minhashSignature(col("sh"), numHashes).as("sig"))
 
   /** Banded (id, band, bh) rows derived from a signature table. */
   private def bandTable(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
@@ -187,35 +182,35 @@ object Dedup extends org.apache.spark.internal.Logging {
     MinhashIndex(index.sigs.filter(keep), index.bands.filter(keep))
 
   /** The persisted MinHash BAND INDEX of a corpus: one row per (band,
-    * band-hash, id) plus the full signature — written once per corpus
-    * snapshot (bucketed by the band key in production so incremental
-    * probes co-locate). This is what makes dedup INCREMENTAL: a new batch
-    * checks against all history by joining this table, never re-hashing
-    * the historical corpus.
+    * band-hash, id), with the full signature on the band-0 row only —
+    * written once per corpus snapshot (bucketed by the band key in
+    * production so incremental probes co-locate). This is what makes
+    * dedup INCREMENTAL: a new batch checks against all history by
+    * joining this table, never re-hashing the historical corpus.
     */
   def minhashBandIndex(df: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 3, numHashes: Int = 128,
-                       bands: Int = 32, slimSigs: Boolean = false): DataFrame = {
+                       bands: Int = 32): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
     df.select(col(idCol).as("id"),
         TextFunctions.wordShingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
-      .select(col("id"), minhashSignature(col("sh"), numHashes).as("sig"))
+      .select(col("id"),
+        MinHashFunctions.minhashSignature(col("sh"), numHashes).as("sig"))
       .select(col("id"), col("sig"),
         explode(transform(sequence(lit(0), lit(bands - 1)),
           b => struct(b.as("band"),
             xxhash64(slice(col("sig"), b * rows + 1, lit(rows))).as("bh"))))
           .as("bucket"))
-      // slimSigs: carry the signature on the band-0 row ONLY (null on the
-      // rest). The legacy layout repeats the full `numHashes`-int sig on
-      // every band row — a `bands`× storage and SCAN amplification that a
-      // probing batch pays per micro-batch (measured: the sig column of
-      // a 490k-doc index decodes ~8 GB per probe). Consumers read sigs as
-      // `filter(sig.isNotNull)`, which is also correct on legacy tables.
+      // the signature rides the band-0 row ONLY (null on the rest). A
+      // sig on every band row is a `bands`× storage and SCAN
+      // amplification that a probing batch pays per micro-batch
+      // (measured: the sig column of a 490k-doc index decodes ~8 GB per
+      // probe). Consumers read sigs as `filter(sig.isNotNull)`, which
+      // also reads older indexes that carry the sig on every band row.
       .select(col("id"),
-        (if (slimSigs) when(col("bucket.band") === 0, col("sig"))
-         else col("sig")).as("sig"),
+        when(col("bucket.band") === 0, col("sig")).as("sig"),
         col("bucket.band"), col("bucket.bh"))
   }
 
@@ -245,11 +240,12 @@ object Dedup extends org.apache.spark.internal.Logging {
         .select("new_id", "old_id").distinct(),
       "Dedup.incrementalNearDups/cand")
     val newSigs = newIdx.select(col("id").as("new_id"), col("sig").as("new_sig"))
+      .filter(col("new_sig").isNotNull)
       .dropDuplicates("new_id")
     // candidate-pruned history sig lookup — see the cost-model note in
     // [[incrementalNearDupsIndexed]] (scan, never shuffle, the index);
-    // isNotNull admits both the legacy (sig on every band row) and slim
-    // (sig on band 0 only) persisted layouts
+    // isNotNull admits both the slim (sig on band 0 only) layout and
+    // older indexes with the sig on every band row
     val oldSigs = bandIndex.select(col("id").as("old_id"), col("sig").as("old_sig"))
       .filter(col("old_sig").isNotNull)
       .join(cand.select("old_id").distinct(), Seq("old_id"), "left_semi")
@@ -1071,12 +1067,9 @@ object Dedup extends org.apache.spark.internal.Logging {
   def embeddingPairsLsh(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, planes: Int = 0, tables: Int = 0,
                         seed: Long = 42L,
-                        materialize: Boolean = true,
                         maxBucket: Int = 0): DataFrame = {
-    val base0 = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val base =
-      if (materialize) Barrier.cut(base0, "Dedup.embeddingPairsLsh/base")
-      else base0
+    val base = Barrier.cut(df.select(col(idCol).as("id"), col(vecCol).as("v")),
+      "Dedup.embeddingPairsLsh/base")
     val (planesEff, tablesEff) =
       if (planes > 0 && tables > 0) (planes, tables)
       else {
@@ -1111,10 +1104,8 @@ object Dedup extends org.apache.spark.internal.Logging {
         .select("id1", "id2", "cos").distinct()
     if (maxBucket <= 0) pairsOf(bucketedOf(base))
     else {
-      val reps0 = base.groupBy("v").agg(min(col("id")).as("id"))
-      val reps =
-        if (materialize) Barrier.cut(reps0, "Dedup.embeddingPairsLsh/reps")
-        else reps0
+      val reps = Barrier.cut(base.groupBy("v").agg(min(col("id")).as("id")),
+        "Dedup.embeddingPairsLsh/reps")
       val stars = base.select(col("v"), col("id").as("id2"))
         .join(reps.select(col("v"), col("id").as("id1")), Seq("v"))
         .filter(col("id1") < col("id2"))
@@ -1170,68 +1161,58 @@ object Dedup extends org.apache.spark.internal.Logging {
     * `excludeSelf` semantics as in [[incrementalHammingPairs]] (streaming
     * loops pass false so a re-sent published id matches itself).
     *
-    * `collapseBatch` (default true) is the degenerate-clique guard's
-    * LOSSLESS incremental form: exact-duplicate batch vectors collapse to
-    * their min-id representative BEFORE the bucket probe, and rep results
+    * The batch is probed through the degenerate-clique guard's LOSSLESS
+    * incremental form: exact-duplicate batch vectors collapse to their
+    * min-id representative BEFORE the bucket probe, and rep results
     * expand back to every member afterwards. Unlike the certificate mode
-    * of [[embeddingPairsLsh]], the output is IDENTICAL to the uncollapsed
-    * probe — members share the rep's bucket codes (same candidates) and
-    * its vector bytes (same cos), and self-pairs are filtered
-    * post-expansion — while a batch of m identical vectors pays ONE probe
-    * against the index instead of m (the boilerplate-document ingest
-    * hazard). Assumes a well-formed batch: at most one distinct vector
-    * per id (exact duplicate ROWS are fine — ids dedup first); pass
-    * `collapseBatch = false` to reproduce the historical plan exactly.
+    * of [[embeddingPairsLsh]], the output equals a per-vector probe —
+    * members share the rep's bucket codes (same candidates) and its
+    * vector bytes (same cos), and self-pairs are filtered post-expansion
+    * — while a batch of m identical vectors pays ONE probe against the
+    * index instead of m (the boilerplate-document ingest hazard).
+    * Assumes a well-formed batch: at most one distinct vector per id
+    * (exact duplicate ROWS are fine — ids dedup first).
     */
   def incrementalEmbeddingPairsLsh(newVecs: DataFrame, idCol: String, vecCol: String,
                                    index: DataFrame, threshold: Double,
                                    planes: Int = 3, tables: Int = 8,
                                    seed: Long = 42L,
-                                   excludeSelf: Boolean = true,
-                                   collapseBatch: Boolean = true): DataFrame = {
-    def probe(newSide: DataFrame, self: Boolean): DataFrame = {
-      val newBuckets = newSide.select(col("new_id"),
-        explode(graft.functions.LshBucketCodes.column(col("__nv"), planes, tables, seed))
-          .as("bkt"))
-      // cand feeds the verify join AND the vector-lookup prune — barrier it
-      val cand = Barrier.cut(
-        newBuckets.join(index.select(col("bkt"), col("id").as("old_id")), Seq("bkt"))
-          .filter(if (self) col("new_id") =!= col("old_id") else lit(true))
-          .select("new_id", "old_id").distinct(),
-        "Dedup.incrementalEmbeddingPairsLsh/cand")
-      val oldVecs = index.filter(col("v").isNotNull)
-        .select(col("id").as("old_id"), col("v").as("__ov"))
-        .join(cand.select("old_id").distinct(), Seq("old_id"), "left_semi")
-        .dropDuplicates("old_id")
-      cand
-        .join(newSide.dropDuplicates("new_id"), "new_id")
-        .join(oldVecs, "old_id")
-        .withColumn("cos", VectorFunctions.cosine(col("__nv"), col("__ov")))
-        .filter(col("cos") >= threshold)
-        .select("new_id", "old_id", "cos")
-    }
+                                   excludeSelf: Boolean = true): DataFrame = {
     val rawNew = Barrier.cut(
       newVecs.select(col(idCol).as("new_id"), col(vecCol).as("__nv")),
       "Dedup.incrementalEmbeddingPairsLsh/rawNew")
-    if (!collapseBatch) probe(rawNew, excludeSelf)
-    else {
-      val distinctNew = Barrier.cut(rawNew.dropDuplicates("new_id"),
-        "Dedup.incrementalEmbeddingPairsLsh/distinctNew")
-      val reps = Barrier.cut(
-        distinctNew.groupBy("__nv").agg(min(col("new_id")).as("new_id")),
-        "Dedup.incrementalEmbeddingPairsLsh/reps")
-      val members = distinctNew
-        .join(reps.select(col("__nv"), col("new_id").as("__rep")), Seq("__nv"))
-        .select(col("__rep"), col("new_id"))
-      // self-pairs are filtered AFTER expansion: filtering at rep level
-      // would drop the whole clique's matches whenever the REP's id
-      // happens to collide with an indexed id
-      probe(reps.select(col("new_id"), col("__nv")), self = false)
-        .withColumnRenamed("new_id", "__rep")
-        .join(members, Seq("__rep"))
-        .filter(if (excludeSelf) col("new_id") =!= col("old_id") else lit(true))
-        .select("new_id", "old_id", "cos")
-    }
+    val distinctNew = Barrier.cut(rawNew.dropDuplicates("new_id"),
+      "Dedup.incrementalEmbeddingPairsLsh/distinctNew")
+    val reps = Barrier.cut(
+      distinctNew.groupBy("__nv").agg(min(col("new_id")).as("new_id")),
+      "Dedup.incrementalEmbeddingPairsLsh/reps")
+    val members = distinctNew
+      .join(reps.select(col("__nv"), col("new_id").as("__rep")), Seq("__nv"))
+      .select(col("__rep"), col("new_id"))
+    val repBuckets = reps.select(col("new_id"),
+      explode(graft.functions.LshBucketCodes.column(col("__nv"), planes, tables, seed))
+        .as("bkt"))
+    // cand feeds the verify join AND the vector-lookup prune — barrier it
+    val cand = Barrier.cut(
+      repBuckets.join(index.select(col("bkt"), col("id").as("old_id")), Seq("bkt"))
+        .select("new_id", "old_id").distinct(),
+      "Dedup.incrementalEmbeddingPairsLsh/cand")
+    val oldVecs = index.filter(col("v").isNotNull)
+      .select(col("id").as("old_id"), col("v").as("__ov"))
+      .join(cand.select("old_id").distinct(), Seq("old_id"), "left_semi")
+      .dropDuplicates("old_id")
+    // self-pairs are filtered AFTER expansion: filtering at rep level
+    // would drop the whole clique's matches whenever the REP's id
+    // happens to collide with an indexed id
+    cand
+      .join(reps.dropDuplicates("new_id"), "new_id")
+      .join(oldVecs, "old_id")
+      .withColumn("cos", VectorFunctions.cosine(col("__nv"), col("__ov")))
+      .filter(col("cos") >= threshold)
+      .select(col("new_id").as("__rep"), col("old_id"), col("cos"))
+      .join(members, Seq("__rep"))
+      .filter(if (excludeSelf) col("new_id") =!= col("old_id") else lit(true))
+      .select("new_id", "old_id", "cos")
   }
 
   // --- Content-defined chunking: the storage-layer dedup rung -------------

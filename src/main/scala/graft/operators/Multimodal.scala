@@ -988,16 +988,13 @@ object Multimodal {
                         payloadCol: String = "payload",
                         frameBytes: Int = 0, everyNth: Int = 2,
                         maxDistance: Int = 3,
-                        minMatchFrac: Double = 0.5,
-                        materialize: Boolean = true): DataFrame = {
+                        minMatchFrac: Double = 0.5): DataFrame = {
     require(minMatchFrac > 0 && minMatchFrac <= 1, "minMatchFrac in (0, 1]")
-    val fh0 = videoFrameHashes(df, idCol, payloadCol, frameBytes, everyNth)
-      .filter(col("sh").isNotNull)
     // the hash table feeds the pair join's BOTH sides and the per-clip
     // frame counts — materialize so each clip is demuxed + hashed once
-    val fh = if (materialize)
-      fh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else fh0
+    val fh = videoFrameHashes(df, idCol, payloadCol, frameBytes, everyNth)
+      .filter(col("sh").isNotNull)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val perClip = fh.groupBy("id").agg(count(lit(1)).as("__nf"))
     val matched = Dedup.alignedHammingPairs(
         fh.select(col("id"), col("frame_idx").as("pos"), col("sh")),
@@ -1039,14 +1036,11 @@ object Multimodal {
                             payloadCol: String = "payload",
                             frameBytes: Int = 0, everyNth: Int = 2,
                             maxDistance: Int = 3,
-                            minContainFrac: Double = 0.75,
-                            materialize: Boolean = true): DataFrame = {
+                            minContainFrac: Double = 0.75): DataFrame = {
     require(minContainFrac > 0 && minContainFrac <= 1, "minContainFrac in (0, 1]")
-    val fh0 = videoFrameHashes(df, idCol, payloadCol, frameBytes, everyNth)
+    val fh = videoFrameHashes(df, idCol, payloadCol, frameBytes, everyNth)
       .filter(col("sh").isNotNull)
-    val fh = if (materialize)
-      fh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else fh0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val perClip = fh.groupBy("id").agg(count(lit(1)).as("__nf"))
     val chunks = maxDistance + 1
     val bits = 64 / chunks

@@ -222,16 +222,14 @@ object TextStats {
     * head ∪ tail partition the vocabulary, so the union equals the plain
     * inner join row-for-row.
     *
-    * `materialize` barriers the tf table (it feeds the df aggregate and
-    * both join branches — without it the corpus tokenizes three times)
-    * and the Zipf-small df table.
+    * The tf table is persisted (it feeds the df aggregate and both join
+    * branches — without it the corpus tokenizes three times), and so is
+    * the Zipf-small df table.
     */
   def salientTerms(df: DataFrame, idCol: String, textCol: String, k: Int,
-                   headTokens: Int = 65536,
-                   materialize: Boolean = true): DataFrame = {
+                   headTokens: Int = 65536): DataFrame = {
     def mat(d: DataFrame) =
-      if (materialize) d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else d
+      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tf = mat(df.select(col(idCol).as("id"),
         explode(TextFunctions.tokens(col(textCol))).as("token"))
       .groupBy("id", "token").agg(count(lit(1)).as("tf")))
@@ -509,21 +507,17 @@ object TextStats {
     * all-integer so aggregation order cannot change a single output bit.
     */
   def bigramBitCost(df: DataFrame, idCol: String, textCol: String,
-                    keepMilliBits: Long = Long.MaxValue,
-                    materialize: Boolean = true): DataFrame = {
+                    keepMilliBits: Long = Long.MaxValue): DataFrame = {
     val toks = df.select(col(idCol).as("id"),
       TextFunctions.tokens(col(textCol)).as("__t"))
-    val pairsRaw = toks.select(col("id"), explode(transform(
+    val pairs = toks.select(col("id"), explode(transform(
         slice(col("__t"), lit(1), greatest(size(col("__t")) - 1, lit(0))),
         (x, i) => struct(x.as("w1"), element_at(col("__t"), i + 2).as("w2"))))
         .as("__bg"))
       .select(col("id"),
         xxhash64(col("__bg.w1")).as("__h1"),
         xxhash64(col("__bg.w1"), col("__bg.w2")).as("__h12"))
-    val pairs =
-      if (materialize)
-        pairsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pairsRaw
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bigCnt = pairs.groupBy("__h12").agg(count(lit(1)).as("__c12"))
     val preCnt = pairs.groupBy("__h1").agg(count(lit(1)).as("__c1"))
     val vocabSize = df.select(
@@ -588,30 +582,20 @@ object TextStats {
     * sorting by the carried `pos` makes the result partitioning-free).
     * Token-less documents keep an EMPTY sequence via the final left join.
     *
-    * GUARDED like [[Similarity.knnJoin]]: the broadcast contract is
-    * enforced, not assumed — `maxBroadcastVocab` (default 4M entries)
-    * bounds the vocab with one cheap `limit(n+1).count`; beyond it the
-    * broadcast would OOM the driver, and the error says to pass
-    * `broadcastVocab = false`, which takes the same plan through a
-    * SHUFFLE join on the token (the right shape when the "vocab" is
-    * itself data-scale), or raise the bound deliberately.
+    * The broadcast is chosen from the vocab's size, not assumed: one
+    * cheap `limit(n+1).count` checks it against `maxBroadcastVocab`
+    * (default 4M entries). Beyond that bound a broadcast would OOM the
+    * driver, so the same plan runs as a SHUFFLE join on the token (the
+    * right shape when the "vocab" is itself data-scale).
     */
   def encodeWithVocab(df: DataFrame, idCol: String, text: Column,
                       vocab: DataFrame, unkId: Long = -1L,
-                      broadcastVocab: Boolean = true,
                       maxBroadcastVocab: Long = 1L << 22): DataFrame = {
     require(maxBroadcastVocab > 0, "maxBroadcastVocab must be positive")
     val vocabSide = {
       val v = vocab.select(col("token"), col("id").as("__tid"))
-      if (broadcastVocab) {
-        val n = vocab.limit((maxBroadcastVocab + 1).min(Int.MaxValue).toInt).count()
-        require(n <= maxBroadcastVocab,
-          s"encodeWithVocab broadcasts the vocab, but it exceeds " +
-            s"$maxBroadcastVocab entries — pass broadcastVocab = false " +
-            "(shuffle join on token) for data-scale vocabularies, or raise " +
-            "maxBroadcastVocab if the driver can hold the broadcast")
-        broadcast(v)
-      } else v
+      val n = vocab.limit((maxBroadcastVocab + 1).min(Int.MaxValue).toInt).count()
+      if (n <= maxBroadcastVocab) broadcast(v) else v
     }
     val toks = df.select(col(idCol).as("id"),
       posexplode(TextFunctions.tokens(text)).as(Seq("__pos", "token")))

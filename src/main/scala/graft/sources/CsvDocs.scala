@@ -28,6 +28,4 @@ object CsvDocs {
   }
 
   def clean(df: DataFrame): DataFrame = JsonlDocs.clean(df)
-
-  def quarantine(df: DataFrame): DataFrame = JsonlDocs.quarantine(df)
 }

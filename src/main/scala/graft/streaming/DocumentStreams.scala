@@ -96,12 +96,11 @@ object DocumentStreams {
                                       indexPath: String, outPath: String,
                                       shingleSize: Int, numHashes: Int,
                                       bands: Int, threshold: Double): Unit = {
-    // slimSigs: the signature rides the band-0 row only — the persisted
-    // index a batch probes is then `bands`x smaller to scan (legacy
-    // full-sig indexes remain readable: sig reads filter isNotNull)
+    // the signature rides the band-0 row only, so sig reads filter
+    // isNotNull (older full-sig indexes stay readable the same way)
     // cut ([[Barrier]]): the probe, the pairing and the index sink read it
     val newIdx = Barrier.cut(Dedup.minhashBandIndex(batch, idCol, textCol,
-        shingleSize, numHashes, bands, slimSigs = true),
+        shingleSize, numHashes, bands),
       "DocumentStreams.processBatch/newIdx")
     val asIndex = graft.operators.Dedup.MinhashIndex(
       newIdx.filter(col("sig").isNotNull).select("id", "sig"),
@@ -257,9 +256,9 @@ object DocumentStreams {
     val fresh = Barrier.cut(fresh0, "DocumentStreams.processCuratedBatch/fresh")
     // near-dedup: batch band rows probe the growing index, then pair
     // within the batch (first-arrival-wins == smallest id in batch)
-    // slimSigs + isNotNull sig reads: see [[processBatch]]
+    // isNotNull sig reads: see [[processBatch]]
     val newIdx = Barrier.cut(Dedup.minhashBandIndex(fresh, idCol, textCol,
-        shingleSize, numHashes, bands, slimSigs = true),
+        shingleSize, numHashes, bands),
       "DocumentStreams.processCuratedBatch/newIdx")
     val asIndex = graft.operators.Dedup.MinhashIndex(
       newIdx.filter(col("sig").isNotNull).select("id", "sig"),

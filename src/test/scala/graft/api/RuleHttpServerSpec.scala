@@ -93,6 +93,43 @@ class RuleHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  private val bobOnly =
+    """[{"NationalIdNumber":"250","LoginName":"bob","RegNo":"10","Id":"u2","Title":"Engineer","CompanyCode":"C2","IsActive":true}]"""
+  private val companyC1 =
+    """{"Conditions":{"Conditions":[{"Property":"CompanyCode","Operator":"Equal","Value":"C1"}]}}"""
+  private val loginStartsB =
+    """{"Conditions":{"Conditions":[{"Property":"LoginName","Operator":"StartsWith","Value":"b"}]}}"""
+
+  test("POST /rules/evaluate: a key repeated exactly binds its last value") {
+    val srv = new RuleHttpServer(spark)
+    val port = srv.start()
+    try {
+      val resp = post(port,
+        s"""{"Rule":$companyC1,"Users":$bobOnly,"Rule":$loginStartsB,"Users":$users}""")
+      // Jackson's tree keeps the last value of a repeated key: the
+      // StartsWith rule over all three users
+      assert(resp.statusCode() == 200)
+      assert(resp.body() == """[{"CompanyCode":"C2","Id":"u2","IsActive":true,""" +
+        """"LoginName":"bob","NationalIdNumber":"250","RegNo":"10","Title":"Engineer"}]""")
+    } finally srv.stop()
+  }
+
+  test("POST /rules/evaluate: keys differing only in case bind the first in document order") {
+    val srv = new RuleHttpServer(spark)
+    val port = srv.start()
+    try {
+      val resp = post(port,
+        s"""{"rule":$companyC1,"Rule":$loginStartsB,"users":$users,"Users":$bobOnly}""")
+      // the case-insensitive lookup takes the first variant it meets: the
+      // CompanyCode rule over all three users
+      assert(resp.statusCode() == 200)
+      assert(resp.body() == """[{"CompanyCode":"C1","Id":"u1","IsActive":true,""" +
+        """"LoginName":"alice","NationalIdNumber":"100","RegNo":"9","Title":"Manager"},""" +
+        """{"CompanyCode":"C1","Id":"u3","IsActive":false,""" +
+        """"LoginName":"carol","NationalIdNumber":"999","RegNo":"11"}]""")
+    } finally srv.stop()
+  }
+
   test("requests run on rule-http-<n> threads, and stop() waits for them to end") {
     def poolThreads = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("rule-http-"))
     val srv = new RuleHttpServer(spark)

@@ -338,7 +338,7 @@ class AnalyticsSpec extends SparkSpec {
     // plus the deterministic (df desc, token) boundary.
     for (h <- Seq(1, 2, 3, 1000)) {
       val split = TextStats.salientTerms(docs, "doc_id", "text", k = 2,
-          headTokens = h, materialize = false)
+          headTokens = h)
         .as[(Long, String, Long, Long, Long)].collect().sorted.toSeq
       assert(split == expected, s"headTokens=$h")
     }

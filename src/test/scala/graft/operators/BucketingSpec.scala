@@ -44,12 +44,12 @@ class BucketingSpec extends SparkSpec {
       .map(i => (i, s"document number $i about topic ${i % 29} with shared words"))
       .toDF("doc_id", "text")
     Bucketing.writeBucketed(
-      Dedup.minhashBandIndex(corpus, "doc_id", "text", slimSigs = true),
+      Dedup.minhashBandIndex(corpus, "doc_id", "text"),
       "bkt_bandidx", Seq("band", "bh"), numBuckets = 8)
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val index = Bucketing.readBucketed(spark, "bkt_bandidx")
-      val newIdx = Dedup.minhashBandIndex(batchDocs, "doc_id", "text", slimSigs = true)
+      val newIdx = Dedup.minhashBandIndex(batchDocs, "doc_id", "text")
       val cand = newIdx.select(col("band"), col("bh"), col("id").as("new_id"))
         .join(index.select(col("band"), col("bh"), col("id").as("old_id")),
           Seq("band", "bh"))
@@ -62,7 +62,7 @@ class BucketingSpec extends SparkSpec {
       val viaBucket = cand.select("new_id", "old_id").distinct()
         .as[(Long, Long)].collect().toSet
       val direct = newIdx.select(col("band"), col("bh"), col("id").as("new_id"))
-        .join(Dedup.minhashBandIndex(corpus, "doc_id", "text", slimSigs = true)
+        .join(Dedup.minhashBandIndex(corpus, "doc_id", "text")
           .select(col("band"), col("bh"), col("id").as("old_id")),
           Seq("band", "bh"))
         .select("new_id", "old_id").distinct()

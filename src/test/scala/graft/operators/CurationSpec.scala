@@ -193,7 +193,7 @@ class CurationSpec extends SparkSpec {
     assert(self.nonEmpty)
   }
 
-  test("pretrainingPipeline(dropRepeatedSpans) == chunkAndPack(removeRepeatedSpans(curatedCorpus))") {
+  test("chunkAndPack(removeRepeatedSpans(curatedCorpus)) cuts the corpus-repeated span") {
     val boiler = "subscribe to our newsletter for daily updates and exclusive offers today"
     val docs = Seq(
       (1L, s"it is a fine morning and the river is calm $boiler and we walk on"),
@@ -201,25 +201,19 @@ class CurationSpec extends SparkSpec {
       (3L, "a completely different english document about spark engines and it is good")
     ).toDF("doc_id", "text")
     val cfg = Curation.Config(chunkTokens = 8, chunkStride = 8,
-      packBudgetTokens = 16, nearDupThreshold = 0.5,
-      dropRepeatedSpans = true, spanGram = 4, spanMinCount = 2,
-      spanMinTokens = 4)
-    val viaFlag = Curation.pretrainingPipeline(docs, "doc_id", "text", cfg)
-      .as[(Long, Long, String, Long, Long)].collect().sorted.toSeq
+      packBudgetTokens = 16, nearDupThreshold = 0.5)
+    val curated = Curation.curatedCorpus(docs, "doc_id", "text", cfg)
     val composed = Curation.chunkAndPack(
-        Dedup.removeRepeatedSpans(
-          Curation.curatedCorpus(docs, "doc_id", "text", cfg),
+        Dedup.removeRepeatedSpans(curated,
           "doc_id", "text", gramSize = 4, minCount = 2, minSpanTokens = 4)
           .drop("n_cut_tokens"),
         "doc_id", "text", cfg)
       .as[(Long, Long, String, Long, Long)].collect().sorted.toSeq
-    assert(viaFlag == composed)
     // the boilerplate span is actually gone from every chunk
-    assert(viaFlag.nonEmpty)
-    assert(!viaFlag.exists(_._3.contains("subscribe to our newsletter")))
-    // and without the flag it would have survived
-    val without = Curation.pretrainingPipeline(docs, "doc_id", "text",
-        cfg.copy(dropRepeatedSpans = false))
+    assert(composed.nonEmpty)
+    assert(!composed.exists(_._3.contains("subscribe to our newsletter")))
+    // and without the span stage it would have survived
+    val without = Curation.chunkAndPack(curated, "doc_id", "text", cfg)
       .as[(Long, Long, String, Long, Long)].collect()
     assert(without.exists(_._3.contains("subscribe to our newsletter")))
   }

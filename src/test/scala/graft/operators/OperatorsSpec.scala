@@ -359,7 +359,7 @@ class OperatorsSpec extends SparkSpec {
     // cosine filter: no Aggregate may appear between the bucket Join
     // and the Filter that applies the threshold.
     val plan = Dedup.embeddingPairsLsh(vecs, "vec_id", "embedding", 0.95,
-      planes = 2, tables = 8, materialize = false)
+      planes = 2, tables = 8)
       .queryExecution.optimizedPlan
     def containsJoin(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
       p.collectFirst { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isDefined
@@ -386,12 +386,11 @@ class OperatorsSpec extends SparkSpec {
     // the production default (planes=0/tables=0) must be EXACTLY the
     // closed-form tuner at the corpus count — no silent drift between
     // the auto path and what LshTuningSpec pins
-    val auto = Dedup.embeddingPairsLsh(vecs, "vec_id", "embedding", 0.95,
-        materialize = false)
+    val auto = Dedup.embeddingPairsLsh(vecs, "vec_id", "embedding", 0.95)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     val t = LshTuning.forCorpus(vecs.count(), 0.95)
     val explicit = Dedup.embeddingPairsLsh(vecs, "vec_id", "embedding", 0.95,
-        planes = t.planes, tables = t.tables, materialize = false)
+        planes = t.planes, tables = t.tables)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(auto == explicit)
   }
@@ -442,7 +441,7 @@ class OperatorsSpec extends SparkSpec {
       planes = 2, tables = 8, maxBucket = 10).count() == 0)
   }
 
-  test("incrementalEmbeddingPairsLsh collapseBatch: output identical, rep-id collision safe") {
+  test("incrementalEmbeddingPairsLsh collapsed probe: per-vector output, rep-id collision safe") {
     // index = the 5-vector corpus; batch = an exact-vector clique whose
     // MIN-ID MEMBER (0) also exists in the index (the rep-id collision:
     // a rep-level self filter would drop the whole clique's matches),
@@ -453,16 +452,20 @@ class OperatorsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val idx = Dedup.embeddingLshIndex(vecs, "vec_id", "embedding",
       planes = 2, tables = 8)
+    // the output of a per-vector (uncollapsed) probe of the same batch
+    val plainSelf = Set((0L, 1L, 0.9938837341719244), (0L, 3L, 0.9701425001453319),
+      (3L, 0L, 0.9701425001453319), (3L, 1L, 0.9909924310187174),
+      (100L, 0L, 1.0), (100L, 1L, 0.9938837341719244), (100L, 3L, 0.9701425001453319),
+      (101L, 0L, 1.0), (101L, 1L, 0.9938837341719244), (101L, 3L, 0.9701425001453319),
+      (200L, 4L, 1.0))
+    val plain = Map(
+      true -> plainSelf,
+      false -> (plainSelf ++ Set((0L, 0L, 1.0), (3L, 3L, 0.9999999999999999))))
     for (self <- Seq(true, false)) {
       val collapsed = Dedup.incrementalEmbeddingPairsLsh(batch, "vec_id",
-          "embedding", idx, 0.9, planes = 2, tables = 8,
-          excludeSelf = self, collapseBatch = true)
+          "embedding", idx, 0.9, planes = 2, tables = 8, excludeSelf = self)
         .as[(Long, Long, Double)].collect().toSet
-      val plain = Dedup.incrementalEmbeddingPairsLsh(batch, "vec_id",
-          "embedding", idx, 0.9, planes = 2, tables = 8,
-          excludeSelf = self, collapseBatch = false)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(collapsed == plain, s"excludeSelf=$self")
+      assert(collapsed == plain(self), s"excludeSelf=$self")
       // the clique members 100/101 must match old 0 even though their
       // rep (0) is self-excluded against the index
       if (self) {

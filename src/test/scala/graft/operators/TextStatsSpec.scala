@@ -276,26 +276,32 @@ class TextStatsSpec extends SparkSpec {
     assert(got(3L)._2 == Seq(-1L, -1L, -1L) && got(3L)._3 == 3L)
   }
 
-  test("encodeWithVocab: oversized vocab refuses broadcast; shuffle path equal") {
+  test("encodeWithVocab: oversized vocab takes the shuffle join, equal to the broadcast path") {
     val docs = Seq(
       (1L, "the cat sat on the mat"),
       (2L, ""),
       (3L, "unseen words only")
     ).toDF("doc_id", "text")
     val vocab = TextStats.buildVocab(docs, $"text", maxVocab = 100)
-    // the guard trips BEFORE any broadcast and points at the scale path
-    val ex = intercept[IllegalArgumentException] {
-      TextStats.encodeWithVocab(docs, "doc_id", $"text", vocab,
-        maxBroadcastVocab = 3L)
-    }
-    assert(ex.getMessage.contains("broadcastVocab = false"))
-    // the shuffle-join path (what the error directs to) matches the
-    // broadcast path bit-for-bit
-    val viaBroadcast = TextStats.encodeWithVocab(docs, "doc_id", $"text", vocab)
-      .as[(Long, Seq[Long], Long)].collect().sortBy(_._1).toSeq
-    val viaShuffle = TextStats.encodeWithVocab(docs, "doc_id", $"text", vocab,
-        broadcastVocab = false, maxBroadcastVocab = 3L)
-      .as[(Long, Seq[Long], Long)].collect().sortBy(_._1).toSeq
-    assert(viaShuffle == viaBroadcast)
+    // Spark's own size-based broadcast is off, so a broadcast in the plan
+    // is the operator's choice
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      def encode(bound: Long) =
+        TextStats.encodeWithVocab(docs, "doc_id", $"text", vocab, maxBroadcastVocab = bound)
+      // at the bound the vocab broadcasts, one entry over it does not
+      val n = vocab.count()
+      val atBound = encode(n)
+      val overBound = encode(n - 1)
+      assert(atBound.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        atBound.queryExecution.executedPlan)
+      val viaBroadcast = atBound.as[(Long, Seq[Long], Long)].collect().sortBy(_._1).toSeq
+      val viaShuffle = overBound.as[(Long, Seq[Long], Long)].collect().sortBy(_._1).toSeq
+      assert(viaShuffle == viaBroadcast)
+      assert(viaBroadcast.map(_._3) == Seq(6L, 0L, 3L))
+      // the plan over the oversized vocab holds no broadcast
+      assert(!overBound.queryExecution.executedPlan.toString.contains("Broadcast"),
+        overBound.queryExecution.executedPlan)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }

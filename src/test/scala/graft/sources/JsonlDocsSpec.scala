@@ -42,7 +42,7 @@ class JsonlDocsSpec extends SparkSpec {
     // the quoted-comma row survives as one field
     assert(clean.filter($"doc_id" === 4L).select("text").as[String].head()
       == "le renard, brun et rapide, saute")
-    val bad = CsvDocs.quarantine(raw).as[String].collect().toSet
+    val bad = JsonlDocs.quarantine(raw).as[String].collect().toSet
     assert(bad == Set(
       "not_a_number,this row has a bad id,en",
       "also not numeric at all"))
