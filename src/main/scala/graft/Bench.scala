@@ -310,16 +310,7 @@ object Bench {
         // O(1) temp-dir discipline: the child is dead (or destroyed) by
         // now, so its cwd — BENCH_FULL.json plus whatever the child's
         // own exit hook missed — goes away with the probe
-        def del(p: java.nio.file.Path): Unit = {
-          if (java.nio.file.Files.isDirectory(p,
-              java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-            val s = java.nio.file.Files.list(p)
-            try s.iterator().asScala.foreach(del) finally s.close()
-          }
-          try { java.nio.file.Files.deleteIfExists(p); () }
-          catch { case _: Throwable => () }
-        }
-        del(probeDir)
+        org.apache.commons.io.FileUtils.deleteQuietly(probeDir.toFile)
       }
     }
 

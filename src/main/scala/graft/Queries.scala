@@ -5,8 +5,6 @@ import graft.rules.{RuleEvaluator, RuleSetExecutor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.jdk.CollectionConverters._
-
 /** The correctness/bench query battery for the rule-engine surface
   * (SURVEY §2). Each entry exercises one operator family end-to-end: rule
   * JSON → parse → validate → compile to Column → execute, and carries an
@@ -23,26 +21,17 @@ object Queries {
   /** Session-scoped temp ROOT for every battery row that needs scratch
     * storage (index/out dirs of the ingest loops, ANN index builds, BM25
     * compaction, sketch streams): ONE directory per JVM, deleted
-    * recursively on exit. Before this, each row call left its own
-    * `/tmp/graft_*` dir behind — a day of local benching accumulated
-    * 1.4k+ of them. A battery run now leaves exactly one root while
-    * alive and zero after the JVM exits (the parquet under it only needs
-    * to outlive the row's materialization, which ends with the run).
+    * recursively on exit (best effort, never following symlinks). Before
+    * this, each row call left its own `/tmp/graft_*` dir behind — a day
+    * of local benching accumulated 1.4k+ of them. A battery run now
+    * leaves exactly one root while alive and zero after the JVM exits
+    * (the parquet under it only needs to outlive the row's
+    * materialization, which ends with the run).
     */
   private lazy val tempRoot: java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory("graft_session_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def del(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-          val s = java.nio.file.Files.list(p)
-          try s.iterator().asScala.foreach(del) finally s.close()
-        }
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: Throwable => () } // exit-time best effort
-      }
-      del(root)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)))
     root
   }
 
@@ -314,6 +303,10 @@ object Queries {
 
   // --- §2.2 regex-count + If + Dynamic* families -------------------------------
 
+  // `q_dynamic_equal` / `q_sql_tvf_params`: the parameter resolves to MACHINERY
+  private val machineryOracle =
+    Some("SELECT * FROM customer WHERE c_mktsegment = 'MACHINERY'")
+
   private val advancedQueries: Seq[(String, Q)] = Seq(
     "q_regex_gt" -> Q(
       rule("events",
@@ -364,7 +357,7 @@ object Queries {
         """{"Conditions":{"Conditions":[
              {"Property":"c_mktsegment","Operator":"DynamicEqual","Value":null}]}}""",
         Map("c_mktsegment" -> "MACHINERY")),
-      Some("SELECT * FROM customer WHERE c_mktsegment = 'MACHINERY'")),
+      machineryOracle),
 
     "q_dynamic_guard" -> Q(
       rule("region",
@@ -399,6 +392,14 @@ object Queries {
 
   // --- §2.4 group-by + argmin/argmax/count -------------------------------------
 
+  // `q_argmax` / `q_sql_tvf`: the argmax row per priority of the open orders
+  private val argmaxOracle =
+      Some("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority FROM
+             (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
+               ORDER BY o_totalprice DESC, o_orderkey DESC, o_custkey DESC, o_orderstatus DESC,
+                        o_orderdate DESC) rn FROM orders WHERE o_orderstatus = 'O') t
+             WHERE rn = 1""")
+
   private val aggQueries: Seq[(String, Q)] = Seq(
     // argmin row per group; ties broken by the full row (ascending).
     "q_argmin" -> Q(
@@ -417,11 +418,7 @@ object Queries {
              {"Property":"o_orderstatus","Operator":"Equal","Value":"O"}]},
            "GroupBy":["o_orderpriority"],
            "Aggregation":{"AggregateProperty":"o_totalprice","AggregateFunction":"Max"}}"""),
-      Some("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority FROM
-             (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
-               ORDER BY o_totalprice DESC, o_orderkey DESC, o_custkey DESC, o_orderstatus DESC,
-                        o_orderdate DESC) rn FROM orders WHERE o_orderstatus = 'O') t
-             WHERE rn = 1""")),
+      argmaxOracle),
 
     // String-typed aggregate property orders NUMERICALLY ("10" > "9"):
     // legacy ConvertToDecimal semantics, AggregationEngine.cs:75-87.
@@ -473,6 +470,11 @@ object Queries {
 
   // --- §2.5 multi-rule UNION DISTINCT ------------------------------------------
 
+  // `q_union_rules` / `q_sql_tvf_rules`
+  private val unionRulesOracle =
+      Some("""SELECT * FROM customer WHERE c_acctbal > 9000
+             UNION SELECT * FROM customer WHERE c_mktsegment = 'MACHINERY'""")
+
   private val ruleSetQueries: Seq[(String, Q)] = Seq(
     // Two filter-only rules fuse into ONE scan (OR of predicates) + distinct.
     "q_union_rules" -> Q(
@@ -483,8 +485,7 @@ object Queries {
         RuleJson.parseRule(
           """{"Conditions":{"Conditions":[
                {"Property":"c_mktsegment","Operator":"Equal","Value":"MACHINERY"}]}}"""))),
-      Some("""SELECT * FROM customer WHERE c_acctbal > 9000
-             UNION SELECT * FROM customer WHERE c_mktsegment = 'MACHINERY'""")),
+      unionRulesOracle),
 
     // Filter rule + aggregating rule (argmin rows) unioned and deduped.
     "q_union_mixed" -> Q(
@@ -504,9 +505,14 @@ object Queries {
              WHERE rn = 1""")),
   )
 
-  // DuckDB mirror of TextFunctions.tokens (the ExtQueries convention)
-  private val sqlTokensQ =
-    raw"list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), x -> len(x) > 0)"
+  // The KMV TVF rows' two overlapping corpora (doc_id % 3 <> 0 vs
+  // doc_id % 2 = 0) as the views docs_a_v / docs_b_v.
+  private def kmvViews(s: SparkSession, dir: String): Unit = {
+    graft.functions.GraftFunctions.register(s)
+    val docs = table(s, dir, "documents")
+    docs.filter(col("doc_id") % 3 =!= 0).createOrReplaceTempView("docs_a_v")
+    docs.filter(col("doc_id") % 2 === 0).createOrReplaceTempView("docs_b_v")
+  }
 
   private val sqlSurfaceQueries: Seq[(String, Q)] = Seq(
     // The SAME engine through the SQL-only table-valued function surface:
@@ -523,11 +529,7 @@ object Queries {
             "GroupBy":["o_orderpriority"],
             "Aggregation":{"AggregateProperty":"o_totalprice","AggregateFunction":"Max"}}')""")
       },
-      Some("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority FROM
-             (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
-               ORDER BY o_totalprice DESC, o_orderkey DESC, o_custkey DESC, o_orderstatus DESC,
-                        o_orderdate DESC) rn FROM orders WHERE o_orderstatus = 'O') t
-             WHERE rn = 1""")),
+      argmaxOracle),
 
     // externalParams through SQL: the optional third TVF argument is a
     // JSON object resolved by the Dynamic* operator family — the same
@@ -541,7 +543,7 @@ object Queries {
               {"Property":"c_mktsegment","Operator":"DynamicEqual","Value":null}]}}',
           '{"c_mktsegment":"MACHINERY"}')""")
       },
-      Some("SELECT * FROM customer WHERE c_mktsegment = 'MACHINERY'")),
+      machineryOracle),
 
     // Multi-rule UNION DISTINCT through the evaluate_rules TVF.
     "q_sql_tvf_rules" -> Q(
@@ -554,8 +556,7 @@ object Queries {
             {"Conditions":{"Conditions":[
                {"Property":"c_mktsegment","Operator":"Equal","Value":"MACHINERY"}]}}]')""")
       },
-      Some("""SELECT * FROM customer WHERE c_acctbal > 9000
-             UNION SELECT * FROM customer WHERE c_mktsegment = 'MACHINERY'""")),
+      unionRulesOracle),
 
     // EXTENSION-TIER TVFs: the pipeline operators behind plain SQL —
     // same analysis-time plan-splice machinery as evaluate_rule, so each
@@ -569,21 +570,7 @@ object Queries {
         docs.filter(col("doc_id") % 3 =!= 0).createOrReplaceTempView("docs_new_v")
         s.sql("SELECT * FROM graft_drift('docs_old_v', 'docs_new_v', 'source')")
       },
-      Some("""
-        WITH a AS (SELECT source AS category, CAST(count(*) AS BIGINT) AS c
-                   FROM documents WHERE doc_id % 3 = 0 GROUP BY 1),
-        b AS (SELECT source AS category, CAST(count(*) AS BIGINT) AS c
-              FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1),
-        ta AS (SELECT sum(c) AS t FROM a), tb AS (SELECT sum(c) AS t FROM b)
-        SELECT COALESCE(a.category, b.category) AS category,
-          COALESCE(a.c, CAST(0 AS BIGINT)) AS cnt_a,
-          COALESCE(b.c, CAST(0 AS BIGINT)) AS cnt_b,
-          CAST(COALESCE(a.c, 0) * 1000000 // ta.t AS BIGINT) AS share_a_ppm,
-          CAST(COALESCE(b.c, 0) * 1000000 // tb.t AS BIGINT) AS share_b_ppm,
-          CAST(abs(COALESCE(a.c, 0) * 1000000 // ta.t
-                 - COALESCE(b.c, 0) * 1000000 // tb.t) AS BIGINT) AS diff_ppm
-        FROM a FULL OUTER JOIN b ON a.category IS NOT DISTINCT FROM b.category
-        CROSS JOIN ta CROSS JOIN tb""")),
+      BatteryUtil.driftOracle),
 
     "q_sql_tvf_dedup" -> Q(
       (s, dir) => {
@@ -592,7 +579,7 @@ object Queries {
         s.sql("""SELECT * FROM
           graft_dedup_pairs('documents_v', 'doc_id', 'text', 'simhash', 3)""")
       },
-      Some("SELECT * FROM read_parquet('/root/repo/src/test/resources/golden/q_dedup_simhash/*.parquet')")),
+      BatteryUtil.golden("q_dedup_simhash")),
 
     "q_sql_tvf_quality" -> Q(
       (s, dir) => {
@@ -602,28 +589,7 @@ object Queries {
       },
       // the q_quality_rules oracle at the DEFAULT thresholds
       // (minTokens 50, maxTokens 100000; the rest are shared defaults)
-      Some(raw"""
-        WITH t AS (SELECT doc_id, text, $sqlTokensQ AS toks,
-                     string_split(text, chr(10)) AS ls FROM documents),
-        m AS (SELECT doc_id,
-          CAST(len(toks) AS BIGINT) AS n_tokens,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum') AS DOUBLE) / len(toks) END AS mean_word_len,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(regexp_extract_all(text, '#')) + len(regexp_extract_all(text, '\.\.\.')) AS DOUBLE) / len(toks) END AS symbol_ratio,
-          CAST(len(list_filter(ls, l -> regexp_matches(l, '^\s*[-*•]'))) AS DOUBLE) / len(ls) AS bullet_frac,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE) / len(toks) END AS alpha_frac,
-          CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS BIGINT) AS stopword_hits
-        FROM t)
-        SELECT doc_id, n_tokens, mean_word_len, symbol_ratio, bullet_frac,
-          alpha_frac, stopword_hits,
-          CAST(CASE WHEN n_tokens BETWEEN 50 AND 100000
-                AND mean_word_len BETWEEN 3.0 AND 10.0
-                AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9
-                AND alpha_frac >= 0.8 AND stopword_hits >= 2
-                THEN 1 ELSE 0 END AS INT) AS keep
-        FROM m""")),
+      BatteryUtil.qualityRulesOracle(minTokens = 50, maxTokens = 100000)),
 
     // KMV sketch estimates behind SQL: overlap between two named views
     // and per-slice distinct estimates — gated against the SAME oracles
@@ -632,42 +598,10 @@ object Queries {
     // merging, so the distinct row shares q_kmv_distinct's oracle).
     "q_sql_tvf_overlap" -> Q(
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        val docs = table(s, dir, "documents")
-        docs.filter(col("doc_id") % 3 =!= 0).createOrReplaceTempView("docs_a_v")
-        docs.filter(col("doc_id") % 2 === 0).createOrReplaceTempView("docs_b_v")
+        kmvViews(s, dir)
         s.sql("SELECT * FROM graft_overlap('docs_a_v', 'docs_b_v', 'text', 256)")
       },
-      Some("""
-        WITH ha AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 3 <> 0),
-        hb AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 2 = 0),
-        ska AS (SELECT h FROM ha ORDER BY h LIMIT 256),
-        skb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
-        u AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL
-                                      SELECT h FROM skb)
-              ORDER BY h LIMIT 256),
-        fl AS (SELECT u.h,
-            (u.h IN (SELECT h FROM ska) AND u.h IN (SELECT h FROM skb))
-              AS b2 FROM u),
-        agg AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
-            CAST(sum(CASE WHEN b2 THEN 1 ELSE 0 END) AS BIGINT) AS matches,
-            max(h) AS kth FROM fl),
-        est AS (SELECT union_k, matches,
-            CAST(matches * 1000000 // union_k AS BIGINT) AS jaccard_ppm,
-            CASE WHEN union_k < 256 THEN union_k
-                 ELSE CAST(FLOOR(255.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_union
-          FROM agg)
-        SELECT union_k, matches, jaccard_ppm, est_union,
-          CAST((est_union // union_k) * matches
-               + ((est_union % union_k) * matches) // union_k AS BIGINT)
-            AS est_intersection
-        FROM est""")),
+      BatteryUtil.kmvOverlapOracle),
 
     "q_sql_tvf_distinct" -> Q(
       (s, dir) => {
@@ -675,70 +609,17 @@ object Queries {
         table(s, dir, "documents").createOrReplaceTempView("documents_v")
         s.sql("SELECT * FROM graft_distinct('documents_v', 'text', 'lang', 64)")
       },
-      Some("""
-        WITH h AS (SELECT DISTINCT lang,
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents),
-        ranked AS (SELECT lang, h,
-            row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM h),
-        agg AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,
-            max(h) AS kth
-          FROM ranked WHERE rn <= 64 GROUP BY 1)
-        SELECT lang, n_kept,
-          CASE WHEN n_kept < 64 THEN n_kept
-               ELSE CAST(FLOOR(63.0 * 1152921504606846976.0
-                               / CAST(kth AS DOUBLE)) AS BIGINT)
-          END AS est_distinct
-        FROM agg""")),
+      BatteryUtil.kmvDistinctOracle),
 
     // Set-difference TVF: graft_difference over the same two views as
     // q_sql_tvf_overlap — directional "how much of A is NOT in B" for
     // SQL users; shares q_kmv_diff's oracle arithmetic.
     "q_sql_tvf_diff" -> Q(
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        val docs = table(s, dir, "documents")
-        docs.filter(col("doc_id") % 3 =!= 0).createOrReplaceTempView("docs_a_v")
-        docs.filter(col("doc_id") % 2 === 0).createOrReplaceTempView("docs_b_v")
+        kmvViews(s, dir)
         s.sql("SELECT * FROM graft_difference('docs_a_v', 'docs_b_v', 'text', 256)")
       },
-      Some("""
-        WITH ha AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 3 <> 0),
-        hb AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 2 = 0),
-        ska AS (SELECT h FROM ha ORDER BY h LIMIT 256),
-        skb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
-        u AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL
-                                      SELECT h FROM skb)
-              ORDER BY h LIMIT 256),
-        fl AS (SELECT u.h,
-            u.h IN (SELECT h FROM ska) AS ia,
-            u.h IN (SELECT h FROM skb) AS ib FROM u),
-        agg AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
-            CAST(sum(CASE WHEN ia AND ib THEN 1 ELSE 0 END) AS BIGINT)
-              AS matches,
-            CAST(sum(CASE WHEN ia AND NOT ib THEN 1 ELSE 0 END) AS BIGINT)
-              AS only_a,
-            CAST(sum(CASE WHEN ib AND NOT ia THEN 1 ELSE 0 END) AS BIGINT)
-              AS only_b,
-            max(h) AS kth FROM fl),
-        est AS (SELECT union_k, matches, only_a, only_b,
-            CASE WHEN union_k < 256 THEN union_k
-                 ELSE CAST(FLOOR(255.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_union
-          FROM agg)
-        SELECT union_k, matches, only_a, only_b, est_union,
-          CAST((est_union // union_k) * only_a
-               + ((est_union % union_k) * only_a) // union_k AS BIGINT)
-            AS est_a_minus_b,
-          CAST((est_union // union_k) * only_b
-               + ((est_union % union_k) * only_b) // union_k AS BIGINT)
-            AS est_b_minus_a
-        FROM est""")),
+      BatteryUtil.kmvDiffOracle),
 
     // Label propagation behind SQL: graft_knn_label over the
     // every-10th-vector query/seed split — shares q_knn_label's oracle
@@ -753,25 +634,7 @@ object Queries {
         s.sql("SELECT * FROM graft_knn_label('emb_q_v', 'emb_s_v', " +
           "'vec_id', 'embedding', 'label', 5)")
       },
-      Some("""
-        WITH e AS (SELECT vec_id, label,
-            list_transform(embedding,
-              x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
-          FROM embeddings),
-        q AS (SELECT vec_id, qe FROM e WHERE vec_id % 10 = 0),
-        sd AS (SELECT vec_id, label, qe FROM e WHERE vec_id % 10 <> 0),
-        p AS (SELECT q.vec_id AS query_id, sd.vec_id AS sid, sd.label,
-            list_sum(list_transform(range(1, len(q.qe) + 1),
-              i -> q.qe[i] * sd.qe[i])) AS dot
-          FROM q CROSS JOIN sd),
-        r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY dot DESC, sid) AS rn FROM p),
-        v AS (SELECT query_id, label, count(*) AS n_votes
-          FROM r WHERE rn <= 5 GROUP BY 1, 2),
-        w AS (SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY n_votes DESC, label) AS rn2 FROM v)
-        SELECT query_id, label AS pred_label, n_votes
-        FROM w WHERE rn2 = 1""")),
+      BatteryUtil.knnLabelOracle),
 
     // Per-group quantiles behind SQL: graft_quantiles in exact mode —
     // shares q_group_quantiles' oracle (same plan via the TVF splice).
@@ -782,11 +645,7 @@ object Queries {
         s.sql("SELECT * FROM graft_quantiles('documents_qv', 'n_chars', " +
           "'lang', 'exact')")
       },
-      Some("""SELECT lang,
-               quantile_cont(n_chars, 0.25) AS p25,
-               quantile_cont(n_chars, 0.50) AS p50,
-               quantile_cont(n_chars, 0.75) AS p75
-             FROM documents GROUP BY lang""")),
+      BatteryUtil.groupQuantilesOracle),
 
     // AS-OF join behind SQL (Spark SQL has no ASOF; DuckDB does — the
     // TVF closes exactly that gap): each purchase gets the user's latest
@@ -802,12 +661,7 @@ object Queries {
         s.sql("SELECT * FROM graft_asof('ev_purchase_v', 'ev_click_v', " +
           "'user_id', 'ts', 'ts')")
       },
-      Some("""SELECT p.user_id, p.event_id, p.ts, p.event_type, p.value, p.props,
-               c.event_id AS r_event_id, c.ts AS r_ts, c.event_type AS r_event_type,
-               c.value AS r_value, c.props AS r_props
-             FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-             ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-               ON p.user_id = c.user_id AND c.ts <= p.ts""")),
+      BatteryUtil.asofOracle),
 
     // Gap sessionization behind SQL. Shares q_events_session's oracle.
     "q_sql_tvf_session" -> Q(
@@ -816,22 +670,7 @@ object Queries {
         events(s, dir).createOrReplaceTempView("events_sess_v")
         s.sql("SELECT * FROM graft_sessionize('events_sess_v', 30)")
       },
-      Some("""
-        WITH lagged AS (
-          SELECT user_id, event_id, ts,
-            lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-          FROM events),
-        flagged AS (
-          SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch(ts) - epoch(prev_ts) > 1800 THEN 1 ELSE 0 END AS new_sess
-          FROM lagged),
-        sess AS (
-          SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS UNBOUNDED PRECEDING) AS sess_id
-          FROM flagged)
-        SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-          count(*) AS n_events
-        FROM sess GROUP BY user_id, sess_id""")),
+      BatteryUtil.eventsSessionOracle),
   )
 
   private val tagQueries: Seq[(String, Q)] = Seq(

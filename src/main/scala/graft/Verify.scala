@@ -35,8 +35,9 @@ object Verify {
       case c => c.toString
     } + "\""
     // every row's SQL, filter or not: re-running a few rows into a full
-    // dump must leave the whole dump checked
-    val json = SparkEntry.oracleSql
+    // dump must leave the whole dump checked. Keys sorted, so two dumps
+    // compare with a plain diff.
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -12,6 +12,15 @@ private[graft] object AnalyticsBattery {
   import Queries.{Q, table, events}
   import BatteryUtil._
 
+  // The per-event-type statistics rows' input: integer cents by event.
+  private def typedCents(s: org.apache.spark.sql.SparkSession, dir: String) =
+    events(s, dir)
+      .withColumn("cents", round(col("value") * 100).cast("long"))
+      .select("event_id", "event_type", "cents")
+
+  private val typedCentsCte = """c AS (SELECT event_id, event_type,
+                     CAST(round(value * 100) AS BIGINT) AS cents FROM events)"""
+
 
   val queries: Seq[(String, Q)] = Seq(
     // PIVOT with explicit values (no distinct-discovery job) and
@@ -86,13 +95,9 @@ private[graft] object AnalyticsBattery {
     // identical doubles on both engines.
     "q_robust_scale" -> Q(
       (s, dir) => graft.operators.Analytics.robustStandardize(
-        events(s, dir)
-          .withColumn("cents", round(col("value") * 100).cast("long"))
-          .select("event_id", "event_type", "cents"),
-        Seq("event_type"), col("cents")),
-      Some("""
-        WITH c AS (SELECT event_id, event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+        typedCents(s, dir), Seq("event_type"), col("cents")),
+      Some(s"""
+        WITH $typedCentsCte,
         med AS (SELECT event_type, quantile_cont(CAST(cents AS DOUBLE), 0.5) AS m
                 FROM c GROUP BY 1),
         mad AS (SELECT event_type,
@@ -109,13 +114,9 @@ private[graft] object AnalyticsBattery {
     // distinct-value table, rows join back; no data-row window sort.
     "q_pct_rank" -> Q(
       (s, dir) => graft.operators.Analytics.percentileRank(
-        events(s, dir)
-          .withColumn("cents", round(col("value") * 100).cast("long"))
-          .select("event_id", "event_type", "cents"),
-        Seq("event_type"), col("cents")),
-      Some("""
-        WITH c AS (SELECT event_id, event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents FROM events)
+        typedCents(s, dir), Seq("event_type"), col("cents")),
+      Some(s"""
+        WITH $typedCentsCte
         SELECT event_id, event_type, cents,
           CAST((rank() OVER (PARTITION BY event_type ORDER BY cents) - 1)
             * 1000000 // (count(*) OVER (PARTITION BY event_type) - 1)
@@ -129,13 +130,9 @@ private[graft] object AnalyticsBattery {
     // q_outliers_iqr argument).
     "q_winsorize" -> Q(
       (s, dir) => graft.operators.Analytics.winsorize(
-        events(s, dir)
-          .withColumn("cents", round(col("value") * 100).cast("long"))
-          .select("event_id", "event_type", "cents"),
-        Seq("event_type"), col("cents")),
-      Some("""
-        WITH c AS (SELECT event_id, event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+        typedCents(s, dir), Seq("event_type"), col("cents")),
+      Some(s"""
+        WITH $typedCentsCte,
         st AS (SELECT event_type,
                  quantile_cont(cents, 0.015625) AS lo,
                  quantile_cont(cents, 0.984375) AS hi
@@ -152,13 +149,9 @@ private[graft] object AnalyticsBattery {
     // score instead of the flag).
     "q_standardize" -> Q(
       (s, dir) => graft.operators.Analytics.standardize(
-        events(s, dir)
-          .withColumn("cents", round(col("value") * 100).cast("long"))
-          .select("event_id", "event_type", "cents"),
-        Seq("event_type"), col("cents")),
-      Some("""
-        WITH c AS (SELECT event_id, event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+        typedCents(s, dir), Seq("event_type"), col("cents")),
+      Some(s"""
+        WITH $typedCentsCte,
         st AS (SELECT event_type, CAST(count(cents) AS BIGINT) AS n,
                  CAST(sum(cents) AS BIGINT) AS s,
                  CAST(sum(cents * cents) AS BIGINT) AS sq
@@ -390,19 +383,7 @@ private[graft] object AnalyticsBattery {
     // invertedPostings order). Same oracle as the scan and batch-index
     // rows: the delta-merged serve must be bit-equal.
     "q_bm25_stream" -> Q(
-      (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val base = Queries.tempDir("graft_bm25s")
-        val lenP = s"$base/len"; val postP = s"$base/post"
-        (0 until 3).foreach { i =>
-          graft.streaming.SearchStreams.processBm25Batch(
-            docs.filter(col("doc_id") % 3 === i), i.toLong,
-            "doc_id", "text", lenP, postP)
-        }
-        graft.streaming.SearchStreams.bm25TopKStreamed(
-            s, lenP, postP, Seq("vector", "spark", "customer"), k = 10)
-          .select("id", "rank", "n_terms", "sum_tf", "dl")
-      },
+      (s, dir) => runBm25Stream(s, dir, compactAfterBatch1 = false),
       bm25OracleSql),
 
     // RETRIEVAL EVAL METRICS: precision/recall/RR@10 over three

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Multimodal, PathCommit}
+import graft.operators.{Dedup, Multimodal, PathCommit, Similarity}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
@@ -37,21 +37,517 @@ private[graft] object BatteryUtil {
   private[graft] def golden(name: String): Option[String] =
     Some(s"SELECT * FROM read_parquet('/root/repo/src/test/resources/golden/$name/*.parquet')")
 
+  // the absolute directory of the committed golden fixture `name`,
+  // resolved from the repository root (the working directory)
+  private[graft] def goldenPath(name: String): String =
+    new java.io.File(s"src/test/resources/golden/$name").getAbsolutePath
+
+  // the raw-string 8-gram starting at token i of `toks`
+  private[graft] val sqlGram8 =
+    (1 to 7).foldLeft("toks[i]") { (acc, k) => s"$acc || ' ' || toks[i+$k]" }
+
 
   // Raw-string-gram contamination oracle, shared by the exact and
   // Bloom-pushdown battery rows (identical expected output by design).
-  private[graft] val decontaminateOracleSql: String = {
-    val gram = (1 to 7).foldLeft("toks[i]") { (acc, k) => s"$acc || ' ' || toks[i+$k]" }
-    s"""
+  private[graft] val decontaminateOracleSql: String = s"""
         WITH tk AS (SELECT doc_id, $sqlTokens AS toks FROM documents),
         g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 6),
-                i -> $gram)) AS gs
+                i -> $sqlGram8)) AS gs
               FROM tk WHERE len(toks) >= 8),
         bench AS (SELECT DISTINCT unnest(gs) AS gr FROM g WHERE doc_id % 10 = 0),
         dg AS (SELECT doc_id, unnest(gs) AS gr FROM g WHERE doc_id % 10 <> 0)
         SELECT doc_id AS id, CAST(count(*) AS BIGINT) AS n_hits
         FROM dg JOIN bench USING (gr) GROUP BY 1"""
+
+
+  /** DuckDB mirrors of `TextFunctions.punctRatio`/`stopwordRatio`, the
+    * length signal of `qualityScore` (over `text` and its token list
+    * `toks`), and the score itself over those three columns.
+    */
+  private[graft] val sqlQualitySignals =
+    """CASE WHEN length(text) = 0 THEN 0.0
+               ELSE CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) END AS punct_ratio,
+          CASE WHEN len(toks) = 0 THEN 0.0
+               ELSE CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS DOUBLE) / len(toks) END AS stopword_ratio,
+          least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_signal"""
+
+  private[graft] val sqlQualityScore =
+    """greatest(least(len_signal * 0.4 + least(stopword_ratio * 4.0, 1.0) * 0.4
+            + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2, 1.0), 0.0)"""
+
+
+  /** The heuristic quality-rules oracle (`TextStats.qualityRuleSignals`)
+    * at token bounds [minTokens, maxTokens]; the other thresholds are the
+    * shared defaults. `q_quality_rules` and `q_sql_tvf_quality` differ
+    * only in those bounds.
+    */
+  private[graft] def qualityRulesOracle(minTokens: Int, maxTokens: Int): Option[String] =
+    Some(raw"""
+        WITH t AS (SELECT doc_id, text, $sqlTokens AS toks,
+                     string_split(text, chr(10)) AS ls FROM documents),
+        m AS (SELECT doc_id,
+          CAST(len(toks) AS BIGINT) AS n_tokens,
+          CASE WHEN len(toks) = 0 THEN 0.0
+               ELSE CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum') AS DOUBLE) / len(toks) END AS mean_word_len,
+          CASE WHEN len(toks) = 0 THEN 0.0
+               ELSE CAST(len(regexp_extract_all(text, '#')) + len(regexp_extract_all(text, '\.\.\.')) AS DOUBLE) / len(toks) END AS symbol_ratio,
+          CAST(len(list_filter(ls, l -> regexp_matches(l, '^\s*[-*•]'))) AS DOUBLE) / len(ls) AS bullet_frac,
+          CASE WHEN len(toks) = 0 THEN 0.0
+               ELSE CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE) / len(toks) END AS alpha_frac,
+          CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS BIGINT) AS stopword_hits
+        FROM t)
+        SELECT doc_id, n_tokens, mean_word_len, symbol_ratio, bullet_frac,
+          alpha_frac, stopword_hits,
+          CAST(CASE WHEN n_tokens BETWEEN $minTokens AND $maxTokens
+                AND mean_word_len BETWEEN 3.0 AND 10.0
+                AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9
+                AND alpha_frac >= 0.8 AND stopword_hits >= 2
+                THEN 1 ELSE 0 END AS INT) AS keep
+        FROM m""")
+
+
+  /** Per-language token counts ranked by (count desc, token) — the exact
+    * regime of the Misra–Gries rows; `where` restricts the documents.
+    */
+  private[graft] def heavyTokensOracle(where: String): Option[String] = Some(s"""
+        WITH tok AS (SELECT lang, unnest($sqlTokens) AS token FROM documents$where),
+        cnt AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS cnt
+                FROM tok GROUP BY 1, 2)
+        SELECT lang, token, cnt,
+          CAST(row_number() OVER (PARTITION BY lang
+            ORDER BY cnt DESC, token) AS BIGINT) AS rank
+        FROM cnt""")
+
+
+  /** Exact cosine top-10 of the vec_id = 0 query over the rest of the
+    * embeddings: `q_sim_topk` and the all-cluster IVF probe.
+    */
+  private[graft] val cosineTopKOracle = Some("""SELECT vec_id,
+               list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) AS cos
+             FROM embeddings WHERE vec_id <> 0
+             ORDER BY cos DESC, vec_id LIMIT 10""")
+
+  /** The ANN rows' input protocol: the embeddings table and its vec_id = 0
+    * vector, which queries the vec_id <> 0 corpus.
+    */
+  private[graft] def embeddingsAndQuery(s: org.apache.spark.sql.SparkSession,
+      dir: String): (org.apache.spark.sql.DataFrame, Seq[Float]) = {
+    val emb = table(s, dir, "embeddings")
+    (emb, emb.filter(col("vec_id") === 0)
+      .head().getSeq[Float](emb.columns.indexOf("embedding")))
   }
+
+  /** Streams `corpus` into the IVF loop at `path` as vec_id % 3 batches
+    * 0 until `n`, each assigned to `centroids`.
+    */
+  private[graft] def ivfBatches(corpus: org.apache.spark.sql.DataFrame,
+      centroids: Array[Array[Double]], path: String, n: Int): Unit =
+    (0 until n).foreach { i =>
+      graft.streaming.AnnStreams.processIvfBatch(
+        corpus.filter(col("vec_id") % 3 === i), i.toLong,
+        "vec_id", "embedding", centroids, path)
+    }
+
+  /** The 16-cluster IVF index of the vec_id <> 0 corpus: the committed
+    * fixture at sf0.01 (the k-means fit is the one non-replayable step),
+    * else built once per JVM through the memoized production path.
+    */
+  private[graft] def ivf16(s: org.apache.spark.sql.SparkSession, dir: String,
+      corpus: => org.apache.spark.sql.DataFrame): Similarity.IvfIndex =
+    if (dir.endsWith("sf0.01"))
+      Similarity.loadIvf(s, goldenPath("ivf_index"))
+    else Similarity.ivfIndexFor(corpus,
+      cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
+      nClusters = 16)
+
+  /** Quantized embeddings (1e-4 grid, BIGINT) — the exact-integer input
+    * of the label-propagation and embedding-drift oracles.
+    */
+  private val quantizedEmbCte = """e AS (SELECT vec_id, label,
+            list_transform(embedding,
+              x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
+          FROM embeddings)"""
+
+  /** `q_knn_label` / `q_sql_tvf_knn`: every-10th-vector queries vote the
+    * label of their 5 highest quantized-dot seeds.
+    */
+  private[graft] val knnLabelOracle = Some(s"""
+        WITH $quantizedEmbCte,
+        q AS (SELECT vec_id, qe FROM e WHERE vec_id % 10 = 0),
+        sd AS (SELECT vec_id, label, qe FROM e WHERE vec_id % 10 <> 0),
+        p AS (SELECT q.vec_id AS query_id, sd.vec_id AS sid, sd.label,
+            list_sum(list_transform(range(1, len(q.qe) + 1),
+              i -> q.qe[i] * sd.qe[i])) AS dot
+          FROM q CROSS JOIN sd),
+        r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+            ORDER BY dot DESC, sid) AS rn FROM p),
+        v AS (SELECT query_id, label, count(*) AS n_votes
+          FROM r WHERE rn <= 5 GROUP BY 1, 2),
+        w AS (SELECT *, row_number() OVER (PARTITION BY query_id
+            ORDER BY n_votes DESC, label) AS rn2 FROM v)
+        SELECT query_id, label AS pred_label, n_votes
+        FROM w WHERE rn2 = 1""")
+
+  /** `q_salted_join` / `q_bucketed_join`: per-status lineitem price sums
+    * and counts of the plain orders join (exact 2-decimal money).
+    */
+  private[graft] val orderStatusPriceOracle = Some("""SELECT o_orderstatus,
+               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
+               count(*) AS cnt
+             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+             GROUP BY 1""")
+
+  /** `q_group_quantiles` / `q_sql_tvf_quantiles`. */
+  private[graft] val groupQuantilesOracle = Some("""SELECT lang,
+               quantile_cont(n_chars, 0.25) AS p25,
+               quantile_cont(n_chars, 0.50) AS p50,
+               quantile_cont(n_chars, 0.75) AS p75
+             FROM documents GROUP BY lang""")
+
+  /** `q_asof_join` / `q_sql_tvf_asof`: each purchase gets the user's
+    * latest prior click.
+    */
+  private[graft] val asofOracle = Some("""SELECT p.user_id, p.event_id, p.ts, p.event_type, p.value, p.props,
+               c.event_id AS r_event_id, c.ts AS r_ts, c.event_type AS r_event_type,
+               c.value AS r_value, c.props AS r_props
+             FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+             ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+               ON p.user_id = c.user_id AND c.ts <= p.ts""")
+
+
+  /** DuckDB mirror of the KMV 60-bit item hash (first 15 hex digits of
+    * md5) of the SQL expression `c`.
+    */
+  private[graft] def kmvHashSql(c: String): String =
+    s"CAST(('0x' || substring(md5($c), 1, 15)) AS BIGINT)"
+
+  /** The KMV distinct estimate from a bottom-k of `n` hashes whose largest
+    * is `kth`: exact below k, ⌊(k−1)·2⁶⁰ / h_k⌋ at k (the division in
+    * DOUBLE on both engines by contract).
+    */
+  private[graft] def kmvEstimateSql(n: String, kth: String, k: Int): String =
+    s"""CASE WHEN $n < $k THEN $n
+                 ELSE CAST(FLOOR(${k - 1}.0 * 1152921504606846976.0
+                                 / CAST($kth AS DOUBLE)) AS BIGINT)
+            END"""
+
+  /** Beyer'07 scale-up of a combined-bottom-k count `x` to the estimated
+    * union, in exact BIGINT split arithmetic.
+    */
+  private[graft] def kmvScaleSql(x: String): String =
+    s"""CAST((est_union // union_k) * $x
+               + ((est_union % union_k) * $x) // union_k AS BIGINT)"""
+
+  /** `q_kmv_distinct` / `q_kmv_stream` / `q_sql_tvf_distinct`: per-lang
+    * k = 64 distinct estimate of the text hashes (bottom-k of a union of
+    * bottom-ks is the bottom-k of the union, so per-slice merges and the
+    * streamed re-min all recompute per lang directly).
+    */
+  private[graft] val kmvDistinctOracle = Some(s"""
+        WITH h AS (SELECT DISTINCT lang,
+            ${kmvHashSql("text")} AS h
+          FROM documents),
+        ranked AS (SELECT lang, h,
+            row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM h),
+        agg AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,
+            max(h) AS kth
+          FROM ranked WHERE rn <= 64 GROUP BY 1)
+        SELECT lang, n_kept,
+          ${kmvEstimateSql("n_kept", "kth", 64)} AS est_distinct
+        FROM agg""")
+
+  /** The k = 256 text-hash sketches of the two overlapping corpora of
+    * the KMV set-operation rows (A = doc_id % 3 <> 0, B = doc_id % 2 = 0)
+    * and their combined bottom-k `u`.
+    */
+  private val kmvPairCtes = s"""
+        WITH ha AS (SELECT DISTINCT
+            ${kmvHashSql("text")} AS h
+          FROM documents WHERE doc_id % 3 <> 0),
+        hb AS (SELECT DISTINCT
+            ${kmvHashSql("text")} AS h
+          FROM documents WHERE doc_id % 2 = 0),
+        ska AS (SELECT h FROM ha ORDER BY h LIMIT 256),
+        skb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
+        u AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL
+                                      SELECT h FROM skb)
+              ORDER BY h LIMIT 256),"""
+
+  /** `q_kmv_overlap` / `q_sql_tvf_overlap`. */
+  private[graft] val kmvOverlapOracle = Some(s"""$kmvPairCtes
+        fl AS (SELECT u.h,
+            (u.h IN (SELECT h FROM ska) AND u.h IN (SELECT h FROM skb))
+              AS b2 FROM u),
+        agg AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
+            CAST(sum(CASE WHEN b2 THEN 1 ELSE 0 END) AS BIGINT) AS matches,
+            max(h) AS kth FROM fl),
+        est AS (SELECT union_k, matches,
+            CAST(matches * 1000000 // union_k AS BIGINT) AS jaccard_ppm,
+            ${kmvEstimateSql("union_k", "kth", 256)} AS est_union
+          FROM agg)
+        SELECT union_k, matches, jaccard_ppm, est_union,
+          ${kmvScaleSql("matches")}
+            AS est_intersection
+        FROM est""")
+
+  /** `q_kmv_diff` / `q_sql_tvf_diff`. */
+  private[graft] val kmvDiffOracle = Some(s"""$kmvPairCtes
+        fl AS (SELECT u.h,
+            u.h IN (SELECT h FROM ska) AS ia,
+            u.h IN (SELECT h FROM skb) AS ib FROM u),
+        agg AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
+            CAST(sum(CASE WHEN ia AND ib THEN 1 ELSE 0 END) AS BIGINT)
+              AS matches,
+            CAST(sum(CASE WHEN ia AND NOT ib THEN 1 ELSE 0 END) AS BIGINT)
+              AS only_a,
+            CAST(sum(CASE WHEN ib AND NOT ia THEN 1 ELSE 0 END) AS BIGINT)
+              AS only_b,
+            max(h) AS kth FROM fl),
+        est AS (SELECT union_k, matches, only_a, only_b,
+            ${kmvEstimateSql("union_k", "kth", 256)} AS est_union
+          FROM agg)
+        SELECT union_k, matches, only_a, only_b, est_union,
+          ${kmvScaleSql("only_a")}
+            AS est_a_minus_b,
+          ${kmvScaleSql("only_b")}
+            AS est_b_minus_a
+        FROM est""")
+
+  /** The weighted (max n_chars per hash) twin of [[kmvPairCtes]] at bottom-k
+    * `k`, CTE names suffixed by `sfx`, through the sketches' left-joined
+    * weights `fl`.
+    */
+  private[graft] def kmvWeightedPairCtes(k: Int, sfx: String): String = s"""
+        ha$sfx AS (SELECT
+            ${kmvHashSql("text")} AS h,
+            CAST(max(n_chars) AS BIGINT) AS w
+          FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1),
+        hb$sfx AS (SELECT
+            ${kmvHashSql("text")} AS h,
+            CAST(max(n_chars) AS BIGINT) AS w
+          FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
+        ska$sfx AS (SELECT h, w FROM ha$sfx ORDER BY h LIMIT $k),
+        skb$sfx AS (SELECT h, w FROM hb$sfx ORDER BY h LIMIT $k),
+        u$sfx AS (SELECT DISTINCT h FROM (SELECT h FROM ska$sfx UNION ALL
+                                      SELECT h FROM skb$sfx)
+              ORDER BY h LIMIT $k),
+        fl$sfx AS (SELECT u$sfx.h, a.w AS wa, b.w AS wb
+               FROM u$sfx LEFT JOIN ska$sfx a ON a.h = u$sfx.h
+               LEFT JOIN skb$sfx b ON b.h = u$sfx.h)"""
+
+  /** `q_cms` / `q_cms_stream`: per-lang depth-3 × width-64 count-min
+    * estimates of three present tokens and one absent one — the md5-bucket
+    * counter sums and row-wise min recomputed directly.
+    */
+  private[graft] val cmsOracle = Some(s"""
+        WITH tok AS (SELECT lang, unnest($sqlTokens) AS token FROM documents),
+        cms AS (SELECT lang, r.i AS r,
+            CAST(('0x' || substring(md5(token || ':' || CAST(r.i AS VARCHAR)), 1, 8)) AS BIGINT) % 64 AS b,
+            CAST(count(*) AS BIGINT) AS cnt
+          FROM tok CROSS JOIN range(3) r(i) GROUP BY 1, 2, 3),
+        probe AS (SELECT p.item, r.i AS r,
+            CAST(('0x' || substring(md5(p.item || ':' || CAST(r.i AS VARCHAR)), 1, 8)) AS BIGINT) % 64 AS b
+          FROM (SELECT unnest(['vector', 'spark', 'customer', 'zzz_not_a_token']) AS item) p
+          CROSS JOIN range(3) r(i)),
+        langs AS (SELECT DISTINCT lang FROM cms),
+        j AS (SELECT l.lang, pr.item, pr.r, COALESCE(c.cnt, 0) AS cnt
+          FROM langs l CROSS JOIN probe pr
+          LEFT JOIN cms c ON c.lang = l.lang AND c.r = pr.r AND c.b = pr.b)
+        SELECT lang, item, CAST(min(cnt) AS BIGINT) AS est
+        FROM j GROUP BY 1, 2""")
+
+
+  /** The categorical-drift table over per-`key` count CTEs `a`/`b` (column
+    * `c`) and their totals `ta`/`tb` (column `t`): counts, ppm-quantized
+    * shares and their absolute delta, null-safe on the key.
+    */
+  private[graft] def driftSelectSql(key: String, a: String, b: String): String = s"""
+        SELECT COALESCE($a.$key, $b.$key) AS $key,
+          COALESCE($a.c, CAST(0 AS BIGINT)) AS cnt_a,
+          COALESCE($b.c, CAST(0 AS BIGINT)) AS cnt_b,
+          CAST(COALESCE($a.c, 0) * 1000000 // ta.t AS BIGINT) AS share_a_ppm,
+          CAST(COALESCE($b.c, 0) * 1000000 // tb.t AS BIGINT) AS share_b_ppm,
+          CAST(abs(COALESCE($a.c, 0) * 1000000 // ta.t
+                 - COALESCE($b.c, 0) * 1000000 // tb.t) AS BIGINT) AS diff_ppm
+        FROM $a FULL OUTER JOIN $b ON $a.$key IS NOT DISTINCT FROM $b.$key
+        CROSS JOIN ta CROSS JOIN tb"""
+
+  /** `q_drift` / `q_sql_tvf_drift`: the source mix of the doc_id % 3 = 0
+    * slice against the rest.
+    */
+  private[graft] val driftOracle = Some(s"""
+        WITH a AS (SELECT source AS category, CAST(count(*) AS BIGINT) AS c
+                   FROM documents WHERE doc_id % 3 = 0 GROUP BY 1),
+        b AS (SELECT source AS category, CAST(count(*) AS BIGINT) AS c
+              FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1),
+        ta AS (SELECT sum(c) AS t FROM a), tb AS (SELECT sum(c) AS t FROM b)${
+          driftSelectSql("category", "a", "b")}""")
+
+  /** Per-label centroid shift between the even-vec_id embeddings and the
+    * ones matching `bWhere` (exact quantized-integer centroids), with
+    * `tail` appended to the select list.
+    */
+  private def embedDriftSql(bWhere: String, tail: String): String = s"""WITH $quantizedEmbCte,
+        xa AS (SELECT label, unnest(qe) AS q,
+            unnest(range(1, len(qe) + 1)) AS pos FROM e WHERE vec_id % 2 = 0),
+        xb AS (SELECT label, unnest(qe) AS q,
+            unnest(range(1, len(qe) + 1)) AS pos FROM e WHERE $bWhere),
+        sa AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
+            CAST(count(*) AS BIGINT) AS n FROM xa GROUP BY 1, 2),
+        sb AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
+            CAST(count(*) AS BIGINT) AS n FROM xb GROUP BY 1, 2),
+        ma AS (SELECT label, pos, s // n AS m FROM sa),
+        mb AS (SELECT label, pos, s // n AS m FROM sb),
+        met AS (SELECT ma.label,
+            CAST(sum(ma.m * mb.m) AS BIGINT) AS dot,
+            CAST(sum(ma.m * ma.m) AS BIGINT) AS na2,
+            CAST(sum(mb.m * mb.m) AS BIGINT) AS nb2,
+            CAST(sum((ma.m - mb.m) * (ma.m - mb.m)) AS BIGINT) AS dist2
+          FROM ma JOIN mb ON ma.label = mb.label AND ma.pos = mb.pos
+          GROUP BY 1),
+        cta AS (SELECT label, max(n) AS n_a FROM sa GROUP BY 1),
+        ctb AS (SELECT label, max(n) AS n_b FROM sb GROUP BY 1)
+        SELECT COALESCE(cta.label, ctb.label) AS label, n_a, n_b,
+          CASE WHEN na2 = 0 OR nb2 = 0 THEN NULL
+               ELSE CAST((CAST(dot AS HUGEINT) * dot * 1000000)
+                         // (CAST(na2 AS HUGEINT) * nb2) AS BIGINT) END
+            AS cos2_ppm,
+          CAST(CASE WHEN dot > 0 THEN 1 WHEN dot < 0 THEN -1
+               WHEN dot IS NULL THEN NULL ELSE 0 END AS INT) AS cos_sign,
+          dist2$tail
+        FROM cta FULL OUTER JOIN ctb ON cta.label = ctb.label
+        LEFT JOIN met ON met.label = COALESCE(cta.label, ctb.label)"""
+
+  /** `q_drift_embed` / `q_sql_tvf_drift_embed`: even against odd halves. */
+  private[graft] val embedDriftOracle = Some(s"""
+        ${embedDriftSql("vec_id % 2 <> 0", "")}""")
+
+  /** One micro-batch of q_drift_embed_stream's oracle: the b side is the
+    * batch's slice of the odd half, plus a batch_id column.
+    */
+  private[graft] def embedDriftBatchOracle(i: Int): String = s"""
+        (${embedDriftSql(s"vec_id % 2 <> 0 AND vec_id % 3 = $i",
+          s", CAST($i AS BIGINT) AS batch_id")})"""
+
+
+  /** The near-dup clustering CTEs over the committed minhash pair
+    * fixture (restricted by `edgeWhere`): undirected edges, their
+    * recursive closure and each clustered id's min-id `component`.
+    * Needs `WITH RECURSIVE`.
+    */
+  private[graft] def componentCtes(edgeWhere: String): String = s"""
+        edges AS (SELECT id1, id2 FROM
+          read_parquet('${goldenPath("q_dedup_minhash")}/*.parquet')$edgeWhere),
+        und AS (SELECT id1 AS a, id2 AS b FROM edges
+                UNION SELECT id2, id1 FROM edges),
+        reach AS (SELECT a, b FROM und
+                  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+        comp AS (SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a)"""
+
+  // every document's component; unclustered documents are their own
+  private[graft] val componentLabelSql =
+    """SELECT d.doc_id AS id, COALESCE(c.component, d.doc_id) AS component
+          FROM documents d LEFT JOIN comp c ON d.doc_id = c.id"""
+
+
+  /** DuckDB mirror of `Multimodal.gradientPixels`: the gray level at
+    * (x.range, y.range) of the gradient image of effective id `v`.
+    */
+  private def gradientGraySql(v: String): String =
+    s"""(7*x.range*x.range + 13*y.range*y.range
+             + ($v//4%256)*31*(x.range+1)*(y.range+1)
+             + ($v//4//256%256)*53*(x.range+2)*(y.range+3)
+             + ($v//4//65536%256)*17*(x.range+3)*(y.range+5)
+             + CASE WHEN $v%4 > 0 AND x.range//4 = $v%4 AND y.range//4 = $v%4
+                    THEN 64 ELSE 0 END) % 256 AS gray"""
+
+  // a HUGEINT bit sum `s` (NULL = no bits) folded into a signed BIGINT
+  private[graft] val signedHashSql =
+    """CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
+                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
+                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh"""
+
+  /** DuckDB mirror of `Multimodal.dHash64` over gradient images: for each
+    * row of CTE `src`, keyed by `keys`, the 64-bit difference hash `sh` of
+    * the 36×32 image of effective id `v`, in CTE `out`.
+    */
+  private[graft] def dHashCtes(src: String, keys: Seq[String], v: String,
+                        out: String): String = {
+    val ks = keys.mkString(", ")
+    s"""
+        px AS (
+          SELECT $ks, x.range AS x, y.range AS y,
+            ${gradientGraySql(v)}
+          FROM $src, range(36) x, range(32) y),
+        cells AS (
+          SELECT $ks, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
+          FROM px GROUP BY ${(1 to keys.size + 2).mkString(", ")}),
+        bits AS (
+          SELECT ${keys.map("a." + _).mkString(", ")}, a.gy*8 + a.gx AS b
+          FROM cells a JOIN cells b2
+            ON ${keys.map(k => s"a.$k = b2.$k AND ").mkString}b2.gx = a.gx + 1 AND b2.gy = a.gy
+          WHERE a.gx < 8 AND b2.c > a.c),
+        hraw AS (
+          SELECT $ks, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
+          FROM bits GROUP BY $ks),
+        $out AS (
+          SELECT ${keys.map(s"$src." + _).mkString(", ")},
+            $signedHashSql
+          FROM $src LEFT JOIN hraw ON ${
+            keys.map(k => s"hraw.$k = $src.$k").mkString(" AND ")})"""
+  }
+
+  /** Every document's image hash `h(id, sh)` (q_image_neardup's
+    * arithmetic), the documents restricted by `where`.
+    */
+  private[graft] def imageHashCtes(where: String): String = s"""
+        WITH ids AS (SELECT doc_id AS id FROM documents$where),${
+          dHashCtes("ids", Seq("id"), "id", "h")}"""
+
+  /** Every clip's sampled frame hashes `h(id, f, sh)`, frame counts `nf`
+    * and aligned matching-frame counts `m(id1, id2, <matched>)`
+    * (q_video_neardup's arithmetic), the documents restricted by `where`.
+    */
+  private[graft] def videoMatchCtes(where: String, matched: String): String = s"""
+        WITH ids AS (SELECT doc_id AS id FROM documents$where),
+        fr AS (SELECT id, f.range AS f, ((id//4)*8 + f.range)*4 + id%4 AS e
+               FROM ids, range(0, 8, 2) f),${
+          dHashCtes("fr", Seq("id", "f"), "e", "h")},
+        nf AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM h GROUP BY 1),
+        m AS (
+          SELECT a.id AS id1, b.id AS id2, CAST(count(*) AS BIGINT) AS $matched
+          FROM h a JOIN h b ON a.f = b.f AND a.id < b.id
+          WHERE bit_count(xor(a.sh, b.sh)) <= 3
+          GROUP BY 1, 2)"""
+
+  /** The media ingest loops' simulation over their pair relation `pr` on
+    * `ids`: three doc_id % 3 batches, each dropping items paired with the
+    * published history, then in-batch id2 drops; the history grows by
+    * survivors only.
+    */
+  private[graft] val mediaLoopSql = """
+        und AS (SELECT id1 AS a, id2 AS b FROM pr
+                UNION ALL SELECT id2, id1 FROM pr),
+        d AS (SELECT id, id % 3 AS bt FROM ids),
+        e0 AS (SELECT id FROM d WHERE bt = 0),
+        k0 AS (SELECT id FROM e0 WHERE id NOT IN
+                (SELECT pr.id2 FROM pr JOIN e0 x ON pr.id1 = x.id
+                 JOIN e0 y ON pr.id2 = y.id)),
+        e1 AS (SELECT id FROM d WHERE bt = 1 AND id NOT IN
+                (SELECT u.a FROM und u JOIN k0 ON u.b = k0.id)),
+        k1 AS (SELECT id FROM e1 WHERE id NOT IN
+                (SELECT pr.id2 FROM pr JOIN e1 x ON pr.id1 = x.id
+                 JOIN e1 y ON pr.id2 = y.id)),
+        h2 AS (SELECT id FROM k0 UNION ALL SELECT id FROM k1),
+        e2 AS (SELECT id FROM d WHERE bt = 2 AND id NOT IN
+                (SELECT u.a FROM und u JOIN h2 ON u.b = h2.id)),
+        k2 AS (SELECT id FROM e2 WHERE id NOT IN
+                (SELECT pr.id2 FROM pr JOIN e2 x ON pr.id1 = x.id
+                 JOIN e2 y ON pr.id2 = y.id))
+        SELECT id AS doc_id, CAST(0 AS BIGINT) AS batch_id FROM k0
+        UNION ALL SELECT id, CAST(1 AS BIGINT) FROM k1
+        UNION ALL SELECT id, CAST(2 AS BIGINT) FROM k2"""
 
 
   /** The SHARED MinHash index of the documents corpus (battery params:
@@ -88,14 +584,11 @@ private[graft] object BatteryUtil {
         numHashes = 128, threshold = 0.5)))
 
 
-  /** One oracle for BOTH hybrid-RRF rows: the scan-legged exact anchor
-    * (`q_hybrid_rrf`) and the index-served production path
-    * (`q_hybrid_rrf_ann`, whose all-cluster probe makes the dense leg
-    * exactly the cosine ranking) fuse identical rank lists, so one SQL
-    * text gates both physical plans.
+  /** BM25 (k1 1.2, b 0.75) of the query vector/spark/customer per
+    * matching document in CTE `scored`, `extraCols` appended to its select
+    * list.
     */
-  private[graft] val hybridRrfOracleSql: Option[String] =
-      Some(s"""
+  private def bm25ScoredCtes(extraCols: String): String = s"""
         WITH lens AS (SELECT doc_id, CAST(len($sqlTokens) AS BIGINT) AS dl FROM documents),
         stats AS (SELECT CAST(count(*) AS DOUBLE) AS nd, CAST(sum(dl) AS DOUBLE) AS tot FROM lens),
         tok AS (SELECT doc_id, unnest($sqlTokens) AS token FROM documents),
@@ -105,9 +598,19 @@ private[graft] object BatteryUtil {
         scored AS (SELECT doc_id,
             sum(ln((nd - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0)
               * (CAST(tf AS DOUBLE) * (1.2 + 1.0))
-              / (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + 0.75 * CAST(dl AS DOUBLE) / (tot / nd)))) AS score
+              / (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + 0.75 * CAST(dl AS DOUBLE) / (tot / nd)))) AS score$extraCols
           FROM tf JOIN dfq USING (token) JOIN lens USING (doc_id) CROSS JOIN stats
-          GROUP BY doc_id),
+          GROUP BY doc_id)"""
+
+
+  /** One oracle for BOTH hybrid-RRF rows: the scan-legged exact anchor
+    * (`q_hybrid_rrf`) and the index-served production path
+    * (`q_hybrid_rrf_ann`, whose all-cluster probe makes the dense leg
+    * exactly the cosine ranking) fuse identical rank lists, so one SQL
+    * text gates both physical plans.
+    */
+  private[graft] val hybridRrfOracleSql: Option[String] =
+      Some(s"""${bm25ScoredCtes("")},
         bm AS (SELECT doc_id AS id,
             CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank
           FROM scored ORDER BY score DESC, doc_id LIMIT 20),
@@ -220,11 +723,7 @@ private[graft] object BatteryUtil {
   private[graft] def admissionCtes(where: String): String =
     s"""t0 AS (SELECT doc_id, text, $sqlTokens AS toks FROM documents$where),
         feat AS (SELECT doc_id, text, toks,
-          CASE WHEN length(text) = 0 THEN 0.0
-               ELSE CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) END AS punct_ratio,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS DOUBLE) / len(toks) END AS stopword_ratio,
-          least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_signal,
+          $sqlQualitySignals,
           len(list_filter(toks, x -> list_contains(['the','and','of','to','is','in','that','it'], x))) AS s_en,
           len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','nicht','ein','zu'], x))) AS s_de,
           len(list_filter(toks, x -> list_contains(['le','la','les','et','est','un','une','dans'], x))) AS s_fr,
@@ -233,8 +732,7 @@ private[graft] object BatteryUtil {
         kept AS (SELECT doc_id, text FROM feat
           WHERE greatest(s_en, s_de, s_fr, s_es) > 0
             AND s_en = greatest(s_en, s_de, s_fr, s_es)
-            AND greatest(least(len_signal * 0.4 + least(stopword_ratio * 4.0, 1.0) * 0.4
-                  + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2, 1.0), 0.0) >= 0.3)"""
+            AND $sqlQualityScore >= 0.3)"""
 
 
   /** The curation pipeline's oracle CTE chain (filter → exact dedup →
@@ -244,13 +742,12 @@ private[graft] object BatteryUtil {
     */
   private[graft] def curationChainCtes(decontam: Boolean, spans: Boolean,
                                 semdecon: Boolean): (String, String) = {
-    val gram = (1 to 7).foldLeft("toks[i]") { (acc, k) => s"$acc || ' ' || toks[i+$k]" }
     val decontamCtes = if (!decontam) "" else s""",
         sg AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 6),
-                 i -> $gram))) AS gr
+                 i -> $sqlGram8))) AS gr
                FROM (SELECT doc_id, $sqlTokens AS toks FROM surv) WHERE len(toks) >= 8),
         bg AS (SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(toks) - 6),
-                 i -> $gram))) AS gr
+                 i -> $sqlGram8))) AS gr
                FROM (SELECT $sqlTokens AS toks FROM documents WHERE doc_id % 10 = 0)
                WHERE len(toks) >= 8),
         contaminated AS (SELECT DISTINCT doc_id FROM sg JOIN bg USING (gr)),
@@ -278,7 +775,7 @@ private[graft] object BatteryUtil {
     val spanCtes = if (!spans) "" else s""",
         tkS AS (SELECT doc_id, text, $sqlTokens AS toks FROM $src0),
         gS0 AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(toks) - 6, 1)),
-                  i -> {'pos': i - 1, 'gr': $gram})) AS u FROM tkS),
+                  i -> {'pos': i - 1, 'gr': $sqlGram8})) AS u FROM tkS),
         gS AS (SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.gr AS gr FROM gS0),
         cntS AS (SELECT gr, count(*) AS c FROM gS GROUP BY 1),
         dupS AS (SELECT doc_id, pos FROM gS JOIN cntS USING (gr) WHERE c >= 2),
@@ -306,27 +803,20 @@ private[graft] object BatteryUtil {
     (s"""${admissionCtes("")},
         exact AS (SELECT doc_id, text FROM
           (SELECT doc_id, text, row_number() OVER (PARTITION BY text ORDER BY doc_id) rn
-           FROM kept) WHERE rn = 1),
-        edges AS (SELECT id1, id2 FROM
-          read_parquet('/root/repo/src/test/resources/golden/q_dedup_minhash/*.parquet')
-          WHERE id1 IN (SELECT doc_id FROM exact) AND id2 IN (SELECT doc_id FROM exact)),
-        und AS (SELECT id1 AS a, id2 AS b FROM edges UNION SELECT id2, id1 FROM edges),
-        reach AS (SELECT a, b FROM und
-                  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-        comp AS (SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a),
+           FROM kept) WHERE rn = 1),${componentCtes(
+          " WHERE id1 IN (SELECT doc_id FROM exact) AND id2 IN (SELECT doc_id FROM exact)")},
         surv AS (SELECT e.doc_id, e.text FROM exact e LEFT JOIN comp c ON e.doc_id = c.id
                  WHERE c.id IS NULL OR c.component = e.doc_id)$decontamCtes$semCtes$spanCtes""",
       src)
   }
 
 
-  // Shared DuckDB CTE: gap-based sessionization of the events table
-  // (mirrors EventStreams.sessionizeBatch at gapMinutes = 30).
-  private[graft] val sessionCte = """
-        WITH lagged AS (
+  // Shared DuckDB CTEs: gap-based sessionization of the events in CTE
+  // or table `src` (mirrors EventStreams.sessionizeBatch at gapMinutes = 30).
+  private def sessionCtes(src: String): String = s"""lagged AS (
           SELECT user_id, event_id, ts,
             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-          FROM events),
+          FROM $src),
         flagged AS (
           SELECT *, CASE WHEN prev_ts IS NULL
               OR epoch(ts) - epoch(prev_ts) > 1800 THEN 1 ELSE 0 END AS new_sess
@@ -335,6 +825,17 @@ private[graft] object BatteryUtil {
           SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
             ROWS UNBOUNDED PRECEDING) AS sess_id
           FROM flagged)"""
+
+  private[graft] val sessionCte = s"""
+        WITH ${sessionCtes("events")}"""
+
+  private val sessionsSelect = """
+        SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
+          count(*) AS n_events
+        FROM sess GROUP BY user_id, sess_id"""
+
+  /** `q_events_session` / `q_sql_tvf_session`. */
+  private[graft] val eventsSessionOracle = Some(sessionCte + sessionsSelect)
 
 
   /** DuckDB mirror of [[graft.operators.Graph.pageRank]]'s exact integer
@@ -430,66 +931,14 @@ private[graft] object BatteryUtil {
     * the default cap).
     */
   private[graft] lazy val bm25OracleSql: Option[String] =
-    Some(s"""
-        WITH lens AS (SELECT doc_id, CAST(len($sqlTokens) AS BIGINT) AS dl FROM documents),
-        stats AS (SELECT CAST(count(*) AS DOUBLE) AS nd, CAST(sum(dl) AS DOUBLE) AS tot FROM lens),
-        tok AS (SELECT doc_id, unnest($sqlTokens) AS token FROM documents),
-        tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
-               WHERE token IN ('vector', 'spark', 'customer') GROUP BY 1, 2),
-        dfq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        scored AS (SELECT doc_id,
-            sum(ln((nd - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0)
-              * (CAST(tf AS DOUBLE) * (1.2 + 1.0))
-              / (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + 0.75 * CAST(dl AS DOUBLE) / (tot / nd)))) AS score,
+    Some(s"""${bm25ScoredCtes(""",
             CAST(count(*) AS BIGINT) AS n_terms,
             CAST(sum(tf) AS BIGINT) AS sum_tf,
-            max(dl) AS dl
-          FROM tf JOIN dfq USING (token) JOIN lens USING (doc_id) CROSS JOIN stats
-          GROUP BY doc_id)
+            max(dl) AS dl""")}
         SELECT doc_id AS id,
           CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank,
           n_terms, sum_tf, dl
         FROM scored ORDER BY score DESC, doc_id LIMIT 10""")
-
-
-  // def, not val: referenced by battery rows constructed textually above.
-  // One micro-batch of q_drift_embed_stream's oracle — the q_drift_embed
-  // arithmetic with the batch's b-side filter and a batch_id column.
-  private[graft] def embedDriftBatchOracle(i: Int): String = s"""
-        (WITH e AS (SELECT vec_id, label,
-            list_transform(embedding,
-              x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
-          FROM embeddings),
-        xa AS (SELECT label, unnest(qe) AS q,
-            unnest(range(1, len(qe) + 1)) AS pos FROM e WHERE vec_id % 2 = 0),
-        xb AS (SELECT label, unnest(qe) AS q,
-            unnest(range(1, len(qe) + 1)) AS pos FROM e
-          WHERE vec_id % 2 <> 0 AND vec_id % 3 = $i),
-        sa AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
-            CAST(count(*) AS BIGINT) AS n FROM xa GROUP BY 1, 2),
-        sb AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
-            CAST(count(*) AS BIGINT) AS n FROM xb GROUP BY 1, 2),
-        ma AS (SELECT label, pos, s // n AS m FROM sa),
-        mb AS (SELECT label, pos, s // n AS m FROM sb),
-        met AS (SELECT ma.label,
-            CAST(sum(ma.m * mb.m) AS BIGINT) AS dot,
-            CAST(sum(ma.m * ma.m) AS BIGINT) AS na2,
-            CAST(sum(mb.m * mb.m) AS BIGINT) AS nb2,
-            CAST(sum((ma.m - mb.m) * (ma.m - mb.m)) AS BIGINT) AS dist2
-          FROM ma JOIN mb ON ma.label = mb.label AND ma.pos = mb.pos
-          GROUP BY 1),
-        cta AS (SELECT label, max(n) AS n_a FROM sa GROUP BY 1),
-        ctb AS (SELECT label, max(n) AS n_b FROM sb GROUP BY 1)
-        SELECT COALESCE(cta.label, ctb.label) AS label, n_a, n_b,
-          CASE WHEN na2 = 0 OR nb2 = 0 THEN NULL
-               ELSE CAST((CAST(dot AS HUGEINT) * dot * 1000000)
-                         // (CAST(na2 AS HUGEINT) * nb2) AS BIGINT) END
-            AS cos2_ppm,
-          CAST(CASE WHEN dot > 0 THEN 1 WHEN dot < 0 THEN -1
-               WHEN dot IS NULL THEN NULL ELSE 0 END AS INT) AS cos_sign,
-          dist2, CAST($i AS BIGINT) AS batch_id
-        FROM cta FULL OUTER JOIN ctb ON cta.label = ctb.label
-        LEFT JOIN met ON met.label = COALESCE(cta.label, ctb.label))"""
 
 
   private[graft] def cdcMergeOracleSql = """
@@ -650,25 +1099,11 @@ private[graft] object BatteryUtil {
   }
 
 
-  private[graft] val sessionStreamOracle = Some("""
+  private[graft] val sessionStreamOracle = Some(s"""
         WITH src AS (SELECT event_id, user_id,
             date_trunc('milliseconds', ts) AS ts
           FROM events WHERE event_id < 5000),
-        lagged AS (
-          SELECT user_id, event_id, ts,
-            lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-          FROM src),
-        flagged AS (
-          SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch(ts) - epoch(prev_ts) > 1800 THEN 1 ELSE 0 END AS new_sess
-          FROM lagged),
-        sess AS (
-          SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS UNBOUNDED PRECEDING) AS sess_id
-          FROM flagged)
-        SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-          count(*) AS n_events
-        FROM sess GROUP BY user_id, sess_id""")
+        ${sessionCtes("src")}$sessionsSelect""")
 
 
   private[graft] def runEventDedupStream(s: org.apache.spark.sql.SparkSession,
@@ -748,15 +1183,7 @@ private[graft] object BatteryUtil {
         (col("__pos") + 1).cast("long").as("rank"))
   }
 
-  private[graft] val heavyStreamOracle = Some(s"""
-        WITH tok AS (SELECT lang, unnest($sqlTokens) AS token
-          FROM documents WHERE doc_id < 30),
-        cnt AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS cnt
-          FROM tok GROUP BY 1, 2)
-        SELECT lang, token, cnt,
-          CAST(row_number() OVER (PARTITION BY lang
-            ORDER BY cnt DESC, token) AS BIGINT) AS rank
-        FROM cnt""")
+  private[graft] val heavyStreamOracle = heavyTokensOracle(" WHERE doc_id < 30")
 
 
   // --- STREAMING INGEST-DEDUP LOOP rows: the four modality loops driven
@@ -786,6 +1213,14 @@ private[graft] object BatteryUtil {
   }
 
 
+  // the compaction twins' step between batches 1 and 2
+  private def compactSeed(s: org.apache.spark.sql.SparkSession, idxPath: String): Unit = {
+    PathCommit.compactIntoSeed(s, idxPath,
+      uptoBatch = 1L, targetFiles = 2)(identity)
+    assertSinglePartition(idxPath, "compactIntoSeed")
+  }
+
+
   /** The q_doc_ingest_stream protocol, shared with its compaction twin:
     * FIXED 500-doc input (ids 0..499 — the whole corpus at sf0.01, so the
     * oracle is unchanged there); production ingest batches are
@@ -811,11 +1246,7 @@ private[graft] object BatteryUtil {
         "doc_id", "text", idxPath, outPath,
         shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5)
     run(1)
-    if (compactAfterBatch1) {
-      PathCommit.compactIntoSeed(s, idxPath,
-        uptoBatch = 1L, targetFiles = 2)(identity)
-      assertSinglePartition(idxPath, "compactIntoSeed")
-    }
+    if (compactAfterBatch1) compactSeed(s, idxPath)
     run(2)
     s.read.parquet(outPath)
       .select(col("doc_id"), col("__batch_id").cast("long").as("batch_id"))
@@ -895,7 +1326,6 @@ private[graft] object BatteryUtil {
     * never indexed and never suppress future docs).
     */
   private[graft] lazy val curatedIngestChain: String = {
-    val gram = (1 to 7).foldLeft("toks[i]") { (acc, k) => s"$acc || ' ' || toks[i+$k]" }
     def batch(i: Int): String = {
       val hist = (0 until i)
       val xCte =
@@ -924,7 +1354,7 @@ private[graft] object BatteryUtil {
                 (SELECT p.id2 FROM p JOIN f$i fa ON p.id1 = fa.doc_id
                  JOIN f$i fb ON p.id2 = fb.doc_id)),
         sg$i AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 6),
-                   i -> $gram))) AS gr
+                   i -> $sqlGram8))) AS gr
                  FROM (SELECT doc_id, $sqlTokens AS toks FROM n$i) WHERE len(toks) >= 8),
         c$i AS MATERIALIZED (SELECT DISTINCT doc_id FROM sg$i JOIN bg USING (gr)),
         p$i AS MATERIALIZED (SELECT doc_id, text FROM n$i
@@ -937,7 +1367,7 @@ private[graft] object BatteryUtil {
         und AS MATERIALIZED (SELECT id1 AS a, id2 AS b FROM p
                 UNION ALL SELECT id2, id1 FROM p),
         bg AS MATERIALIZED (SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(toks) - 6),
-                 i -> $gram))) AS gr
+                 i -> $sqlGram8))) AS gr
                FROM (SELECT $sqlTokens AS toks FROM documents WHERE doc_id % 10 = 0)
                WHERE len(toks) >= 8),
         ${batch(0)},
@@ -979,6 +1409,65 @@ private[graft] object BatteryUtil {
   }
 
 
+  /** The q_bm25_stream protocol, shared with its compaction twin: three
+    * doc_id % 3 batches into the streamed postings/lengths index, served as
+    * the BM25 top-10 of the q_bm25 query. `compactAfterBatch1` runs the
+    * marker-guarded compaction between batches 1 and 2 (one __batch_id dir
+    * asserted on both paths).
+    */
+  private[graft] def runBm25Stream(s: org.apache.spark.sql.SparkSession, dir: String,
+                                   compactAfterBatch1: Boolean)
+      : org.apache.spark.sql.DataFrame = {
+    val docs = table(s, dir, "documents")
+    val base = Queries.tempDir(if (compactAfterBatch1) "graft_bm25c" else "graft_bm25s")
+    val lenP = s"$base/len"; val postP = s"$base/post"
+    def run(i: Int): Unit =
+      graft.streaming.SearchStreams.processBm25Batch(
+        docs.filter(col("doc_id") % 3 === i), i.toLong,
+        "doc_id", "text", lenP, postP)
+    run(0); run(1)
+    if (compactAfterBatch1) {
+      graft.streaming.SearchStreams.compactBm25(s, lenP, postP,
+        uptoBatch = 1L, targetFiles = 2)
+      Seq(lenP, postP).foreach(assertSinglePartition(_, "compactBm25"))
+    }
+    run(2)
+    graft.streaming.SearchStreams.bm25TopKStreamed(
+        s, lenP, postP, Seq("vector", "spark", "customer"), k = 10)
+      .select("id", "rank", "n_terms", "sum_tf", "dl")
+  }
+
+
+  /** The q_embed_ingest_stream protocol, shared with its compaction twin
+    * (fixed 500-vector input — the q_doc_ingest_stream contract). The
+    * compaction goes through the embed-specific wrapper, which also AUDITS
+    * the slim-layout invariant (one non-null vector row per id) the
+    * per-batch history probe's cost model relies on.
+    */
+  private[graft] def runEmbedIngest(s: org.apache.spark.sql.SparkSession, dir: String,
+                                    compactAfterBatch1: Boolean)
+      : org.apache.spark.sql.DataFrame = {
+    val vecs = table(s, dir, "embeddings").filter(col("vec_id") < 500)
+    val base = Queries.tempDir(
+      if (compactAfterBatch1) "graft_embcompact" else "graft_embedingest")
+    val idxPath = s"$base/idx"; val outPath = s"$base/out"
+    def run(i: Int): Unit =
+      graft.streaming.EmbeddingStreams.processEmbeddingBatch(
+        vecs.filter(col("vec_id") % 3 === i), i.toLong,
+        "vec_id", "embedding", idxPath, outPath,
+        threshold = 0.45, planes = 3, tables = 8, seed = 42L)
+    run(0); run(1)
+    if (compactAfterBatch1) {
+      graft.streaming.EmbeddingStreams.compactEmbeddingIndex(s, idxPath,
+        uptoBatch = 1L, targetFiles = 2)
+      assertSinglePartition(idxPath, "compactEmbeddingIndex")
+    }
+    run(2)
+    s.read.parquet(outPath)
+      .select(col("vec_id"), col("__batch_id").cast("long").as("batch_id"))
+  }
+
+
   /** The q_chunk_ingest_stream protocol, shared with its compaction twin
     * (fixed 500-blob input — the q_doc_ingest_stream contract).
     */
@@ -997,11 +1486,7 @@ private[graft] object BatteryUtil {
         "doc_id", "payload", idxPath, statsPath,
         minSize = 64, maskBits = 6, maxSize = 512)
     run(0); run(1)
-    if (compactAfterBatch1) {
-      PathCommit.compactIntoSeed(s, idxPath,
-        uptoBatch = 1L, targetFiles = 2)(identity)
-      assertSinglePartition(idxPath, "compactIntoSeed")
-    }
+    if (compactAfterBatch1) compactSeed(s, idxPath)
     run(2)
     s.read.parquet(statsPath).select(
       col("__batch_id").cast("long").as("batch_id"),

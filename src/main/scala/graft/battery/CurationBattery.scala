@@ -85,16 +85,11 @@ private[graft] object CurationBattery {
       Some(s"""
         WITH t AS (SELECT doc_id, lang, text, $sqlTokens AS toks FROM documents),
         m AS (SELECT doc_id, lang,
-          CASE WHEN length(text) = 0 THEN 0.0
-               ELSE CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) END AS punct_ratio,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS DOUBLE) / len(toks) END AS stopword_ratio,
-          least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_signal,
+          $sqlQualitySignals,
           CAST(len(toks) AS BIGINT) AS n_tokens
         FROM t),
         q AS (SELECT doc_id, lang, n_tokens,
-          greatest(least(len_signal * 0.4 + least(stopword_ratio * 4.0, 1.0) * 0.4
-            + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2, 1.0), 0.0) AS quality
+          $sqlQualityScore AS quality
         FROM m),
         c AS (SELECT doc_id, lang, quality, n_tokens,
           CAST(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id) AS BIGINT) AS cum_tokens
@@ -325,15 +320,8 @@ private[graft] object CurationBattery {
           numHashes = 128, threshold = 0.5),
         Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
         .select("doc_id", "component", "split"),
-      Some("""
-        WITH RECURSIVE
-        edges AS (SELECT id1, id2 FROM
-          read_parquet('/root/repo/src/test/resources/golden/q_dedup_minhash/*.parquet')),
-        und AS (SELECT id1 AS a, id2 AS b FROM edges
-                UNION SELECT id2, id1 FROM edges),
-        reach AS (SELECT a, b FROM und
-                  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-        comp AS (SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a),
+      Some(s"""
+        WITH RECURSIVE${componentCtes("")},
         allc AS (SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
                  FROM documents d LEFT JOIN comp c ON d.doc_id = c.id)
         SELECT doc_id, component,
@@ -442,15 +430,10 @@ private[graft] object CurationBattery {
       Some(s"""
         WITH t AS (SELECT doc_id, source, text, $sqlTokens AS toks FROM documents),
         m AS (SELECT doc_id, source, text, toks,
-          CASE WHEN length(text) = 0 THEN 0.0
-               ELSE CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) END AS punct_ratio,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS DOUBLE) / len(toks) END AS stopword_ratio,
-          least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_signal
+          $sqlQualitySignals
         FROM t),
         qual AS (SELECT doc_id, source, text, toks,
-          greatest(least(len_signal * 0.4 + least(stopword_ratio * 4.0, 1.0) * 0.4
-            + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2, 1.0), 0.0) AS quality
+          $sqlQualityScore AS quality
         FROM m),
         wq AS (SELECT source,
                  CAST(sum(CAST(floor(quality * 65536) AS BIGINT)) // count(*) AS BIGINT) AS w
@@ -481,15 +464,10 @@ private[graft] object CurationBattery {
       Some(s"""
         WITH t AS (SELECT doc_id, lang, text, $sqlTokens AS toks FROM documents),
         m AS (SELECT doc_id, lang, toks,
-          CASE WHEN length(text) = 0 THEN 0.0
-               ELSE CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) END AS punct_ratio,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS DOUBLE) / len(toks) END AS stopword_ratio,
-          least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_signal
+          $sqlQualitySignals
         FROM t),
         n AS (SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens,
-          greatest(least(len_signal * 0.4 + least(stopword_ratio * 4.0, 1.0) * 0.4
-            + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2, 1.0), 0.0) AS quality
+          $sqlQualityScore AS quality
         FROM m),
         tt AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS c FROM n GROUP BY 1),
         qt AS (SELECT lang, CAST(floor(sqrt(CAST(c AS DOUBLE)) * 1048576) AS BIGINT) AS q

@@ -11,6 +11,14 @@ private[graft] object DedupBattery {
   import Queries.{Q, table}
   import BatteryUtil._
 
+  // every document's distinct raw-string word trigrams (q_dedup_ngram /
+  // q_containment)
+  private val trigramSetsCte = s"""
+        WITH sh AS (
+          SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
+                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
+          FROM (SELECT doc_id, $sqlTokens AS toks FROM documents)
+          WHERE len(toks) >= 3)"""
 
   val queries: Seq[(String, Q)] = Seq(
     // Exact dedup: smallest doc_id survives per distinct text.
@@ -28,12 +36,7 @@ private[graft] object DedupBattery {
         Dedup.ngramSetsFor(table(s, dir, "documents"),
           cacheKey = s"$dir/documents!ngram", "doc_id", "text"),
         threshold = 0.5),
-      Some(s"""
-        WITH sh AS (
-          SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-          FROM (SELECT doc_id, $sqlTokens AS toks FROM documents)
-          WHERE len(toks) >= 3)
+      Some(s"""$trigramSetsCte
         SELECT a.doc_id AS id1, b.doc_id AS id2,
           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
@@ -52,12 +55,7 @@ private[graft] object DedupBattery {
         Dedup.ngramSetsFor(table(s, dir, "documents"),
           cacheKey = s"$dir/documents!ngram", "doc_id", "text"),
         threshold = 0.8),
-      Some(s"""
-        WITH sh AS (
-          SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-          FROM (SELECT doc_id, $sqlTokens AS toks FROM documents)
-          WHERE len(toks) >= 3)
+      Some(s"""$trigramSetsCte
         SELECT a.doc_id AS id1, b.doc_id AS id2,
           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(a.sh) AS containment
         FROM sh a, sh b
@@ -129,14 +127,7 @@ private[graft] object DedupBattery {
           numHashes = 128, threshold = 0.5),
         col("n_chars")),
       Some(s"""
-        WITH RECURSIVE
-        edges AS (SELECT id1, id2 FROM
-          read_parquet('/root/repo/src/test/resources/golden/q_dedup_minhash/*.parquet')),
-        und AS (SELECT id1 AS a, id2 AS b FROM edges
-                UNION SELECT id2, id1 FROM edges),
-        reach AS (SELECT a, b FROM und
-                  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-        comp AS (SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a),
+        WITH RECURSIVE${componentCtes("")},
         lab AS (SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars,
                   COALESCE(c.component, d.doc_id) AS comp
                 FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
@@ -205,16 +196,8 @@ private[graft] object DedupBattery {
           Dedup.minhashPairsFromIndex(docsMinhashIdx(s, dir),
             numHashes = 128, threshold = 0.5))),
       Some(s"""
-        WITH RECURSIVE
-        edges AS (SELECT id1, id2 FROM
-          read_parquet('/root/repo/src/test/resources/golden/q_dedup_minhash/*.parquet')),
-        und AS (SELECT id1 AS a, id2 AS b FROM edges
-                UNION SELECT id2, id1 FROM edges),
-        reach AS (SELECT a, b FROM und
-                  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-        comp AS (SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a),
-        labeled AS (SELECT d.doc_id AS id, COALESCE(c.component, d.doc_id) AS component
-          FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
+        WITH RECURSIVE${componentCtes("")},
+        labeled AS ($componentLabelSql),
         sizes AS (SELECT component, CAST(count(*) AS BIGINT) AS size
           FROM labeled GROUP BY 1)
         SELECT size, CAST(count(*) AS BIGINT) AS n_clusters
@@ -225,16 +208,8 @@ private[graft] object DedupBattery {
         Dedup.minhashPairsFromIndex(docsMinhashIdx(s, dir),
           numHashes = 128, threshold = 0.5)),
       Some(s"""
-        WITH RECURSIVE
-        edges AS (SELECT id1, id2 FROM
-          read_parquet('/root/repo/src/test/resources/golden/q_dedup_minhash/*.parquet')),
-        und AS (SELECT id1 AS a, id2 AS b FROM edges
-                UNION SELECT id2, id1 FROM edges),
-        reach AS (SELECT a, b FROM und
-                  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-        comp AS (SELECT a AS id, least(a, min(b)) AS component FROM reach GROUP BY a)
-        SELECT d.doc_id AS id, COALESCE(c.component, d.doc_id) AS component
-        FROM documents d LEFT JOIN comp c ON d.doc_id = c.id""")),
+        WITH RECURSIVE${componentCtes("")}
+        $componentLabelSql""")),
 
     // LSH-blocked embedding near-dup pairs — the PRODUCTION path (bucket
     // join, no cross join). Approximate wrt TRUE near-dup recall (see the

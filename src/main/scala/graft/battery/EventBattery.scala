@@ -11,6 +11,49 @@ private[graft] object EventBattery {
   import Queries.{Q, table, events}
   import BatteryUtil._
 
+  // The parts-co-ordered-together graph of the graph rows: one edge per
+  // unordered part pair sharing an order.
+  private def partEdges(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val lp = table(s, dir, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+    lp.as("x").join(lp.as("y"),
+        col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+      .select(col("x.p").as("s"), col("y.p").as("d"))
+  }
+
+  // Each purchase's as-of click of the same user in `direction` within
+  // 30 minutes.
+  private def toleranceAsOf(s: org.apache.spark.sql.SparkSession, dir: String,
+                            direction: String) = {
+    val ev = events(s, dir)
+    graft.operators.Joins.asOf(
+      ev.filter(col("event_type") === "purchase"),
+      ev.filter(col("event_type") === "click"),
+      keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
+      direction = direction, tolerance = Some(1800.0))
+  }
+
+  // The tolerance as-of oracle: the first click by `orderBy` among the
+  // user's clicks satisfying `cond`, or NULLs.
+  private def toleranceAsOfOracle(orderBy: String, cond: String) = Some(s"""
+        WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
+        c AS (SELECT * FROM events WHERE event_type = 'click'),
+        j AS (SELECT p.event_id AS pid, c.event_id AS r_event_id, c.ts AS r_ts,
+                c.event_type AS r_event_type, c.value AS r_value, c.props AS r_props,
+                row_number() OVER (PARTITION BY p.event_id
+                  ORDER BY $orderBy) AS rn
+              FROM p JOIN c ON p.user_id = c.user_id
+               AND $cond)
+        SELECT p.user_id, p.event_id, p.ts, p.event_type, p.value, p.props,
+               j.r_event_id, j.r_ts, j.r_event_type, j.r_value, j.r_props
+        FROM p LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON p.event_id = j.pid""")
+
+  private val partEdgesCtes =
+    """lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+        e AS (SELECT DISTINCT x.p AS a, y.p AS b
+              FROM lp x JOIN lp y ON x.o = y.o AND x.p < y.p)"""
+
 
   val queries: Seq[(String, Q)] = Seq(
     // AS-OF join: each purchase gets the user's latest prior click.
@@ -22,12 +65,7 @@ private[graft] object EventBattery {
           ev.filter(col("event_type") === "click"),
           keys = Seq("user_id"), leftTs = "ts", rightTs = "ts")
       },
-      Some("""SELECT p.user_id, p.event_id, p.ts, p.event_type, p.value, p.props,
-               c.event_id AS r_event_id, c.ts AS r_ts, c.event_type AS r_event_type,
-               c.value AS r_value, c.props AS r_props
-             FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-             ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-               ON p.user_id = c.user_id AND c.ts <= p.ts""")),
+      asofOracle),
 
     // CHANGELOG → CURRENT STATE (CDC last-write-wins merge): events as a
     // per-user upsert log versioned by (ts, event_id); a user whose
@@ -135,19 +173,10 @@ private[graft] object EventBattery {
     // degree sequence, where the naive neighbor self-join dies on the
     // first hub. Oracle: the brute canonical-triple triple-join.
     "q_triangles" -> Q(
-      (s, dir) => {
-        val lp = table(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val edges = lp.as("x").join(lp.as("y"),
-            col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("s"), col("y.p").as("d"))
-        graft.operators.Graph.triangleCount(edges, "s", "d")
-      },
-      Some("""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (SELECT DISTINCT x.p AS a, y.p AS b
-              FROM lp x JOIN lp y ON x.o = y.o AND x.p < y.p)
+      (s, dir) =>
+        graft.operators.Graph.triangleCount(partEdges(s, dir), "s", "d"),
+      Some(s"""
+        WITH $partEdgesCtes
         SELECT CAST(count(*) AS BIGINT) AS n_triangles
         FROM e e1
         JOIN e e2 ON e2.a = e1.b
@@ -158,19 +187,10 @@ private[graft] object EventBattery {
     // (high degree + near-zero clustering). Triangle triples exploded ×3;
     // zero-triangle nodes keep their row.
     "q_clustering" -> Q(
-      (s, dir) => {
-        val lp = table(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val edges = lp.as("x").join(lp.as("y"),
-            col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("s"), col("y.p").as("d"))
-        graft.operators.Graph.clusteringCoefficients(edges, "s", "d")
-      },
-      Some("""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (SELECT DISTINCT x.p AS a, y.p AS b
-              FROM lp x JOIN lp y ON x.o = y.o AND x.p < y.p),
+      (s, dir) =>
+        graft.operators.Graph.clusteringCoefficients(partEdges(s, dir), "s", "d"),
+      Some(s"""
+        WITH $partEdgesCtes,
         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
           FROM e e1 JOIN e e2 ON e2.a = e1.b
           JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
@@ -189,19 +209,10 @@ private[graft] object EventBattery {
     // Degree distribution of the same graph — the first-look histogram
     // (hub detection, power-law sanity) as two bounded aggregates.
     "q_degree_dist" -> Q(
-      (s, dir) => {
-        val lp = table(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val edges = lp.as("x").join(lp.as("y"),
-            col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-          .select(col("x.p").as("s"), col("y.p").as("d"))
-        graft.operators.Graph.degreeDistribution(edges, "s", "d")
-      },
-      Some("""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (SELECT DISTINCT x.p AS a, y.p AS b
-              FROM lp x JOIN lp y ON x.o = y.o AND x.p < y.p),
+      (s, dir) =>
+        graft.operators.Graph.degreeDistribution(partEdges(s, dir), "s", "d"),
+      Some(s"""
+        WITH $partEdgesCtes,
         d AS (SELECT n, CAST(count(*) AS BIGINT) AS degree FROM (
                 SELECT a AS n FROM e UNION ALL SELECT b FROM e)
               GROUP BY 1)
@@ -213,49 +224,16 @@ private[graft] object EventBattery {
     // minutes, equal distance breaking backward. One union exchange,
     // two in-partition carries — never a join of two as-of results.
     "q_asof_nearest" -> Q(
-      (s, dir) => {
-        val ev = events(s, dir)
-        graft.operators.Joins.asOf(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-          direction = "nearest", tolerance = Some(1800.0))
-      },
-      Some("""
-        WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        c AS (SELECT * FROM events WHERE event_type = 'click'),
-        j AS (SELECT p.event_id AS pid, c.event_id AS r_event_id, c.ts AS r_ts,
-                c.event_type AS r_event_type, c.value AS r_value, c.props AS r_props,
-                row_number() OVER (PARTITION BY p.event_id
-                  ORDER BY abs(epoch(c.ts) - epoch(p.ts)),
-                    CAST(c.ts <= p.ts AS INT) DESC, c.event_id DESC) AS rn
-              FROM p JOIN c ON p.user_id = c.user_id
-               AND abs(epoch(c.ts) - epoch(p.ts)) <= 1800)
-        SELECT p.user_id, p.event_id, p.ts, p.event_type, p.value, p.props,
-               j.r_event_id, j.r_ts, j.r_event_type, j.r_value, j.r_props
-        FROM p LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON p.event_id = j.pid""")),
+      (s, dir) => toleranceAsOf(s, dir, "nearest"),
+      toleranceAsOfOracle(
+        """abs(epoch(c.ts) - epoch(p.ts)),
+                    CAST(c.ts <= p.ts AS INT) DESC, c.event_id DESC""",
+        "abs(epoch(c.ts) - epoch(p.ts)) <= 1800")),
 
     "q_asof_forward" -> Q(
-      (s, dir) => {
-        val ev = events(s, dir)
-        graft.operators.Joins.asOf(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-          direction = "forward", tolerance = Some(1800.0))
-      },
-      Some("""
-        WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        c AS (SELECT * FROM events WHERE event_type = 'click'),
-        j AS (SELECT p.event_id AS pid, c.event_id AS r_event_id, c.ts AS r_ts,
-                c.event_type AS r_event_type, c.value AS r_value, c.props AS r_props,
-                row_number() OVER (PARTITION BY p.event_id
-                  ORDER BY c.ts, c.event_id DESC) AS rn
-              FROM p JOIN c ON p.user_id = c.user_id AND c.ts >= p.ts
-               AND epoch(c.ts) - epoch(p.ts) <= 1800)
-        SELECT p.user_id, p.event_id, p.ts, p.event_type, p.value, p.props,
-               j.r_event_id, j.r_ts, j.r_event_type, j.r_value, j.r_props
-        FROM p LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON p.event_id = j.pid""")),
+      (s, dir) => toleranceAsOf(s, dir, "forward"),
+      toleranceAsOfOracle("c.ts, c.event_id DESC",
+        "c.ts >= p.ts AND epoch(c.ts) - epoch(p.ts) <= 1800")),
 
     "q_events_window" -> Q(
       (s, dir) => EventStreams.windowedStatsBatch(events(s, dir)),
@@ -369,10 +347,6 @@ private[graft] object EventBattery {
 
     "q_events_session" -> Q(
       (s, dir) => EventStreams.sessionizeBatch(events(s, dir), gapMinutes = 30),
-      Some(s"""
-        $sessionCte
-        SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-          count(*) AS n_events
-        FROM sess GROUP BY user_id, sess_id""")),
+      eventsSessionOracle),
   )
 }

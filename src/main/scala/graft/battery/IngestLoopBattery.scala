@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Multimodal, Similarity}
+import graft.operators.Multimodal
 import org.apache.spark.sql.functions._
 
 /** One family section of the LLM-data-pipeline extension
@@ -94,59 +94,11 @@ private[graft] object IngestLoopBattery {
       },
       // the q_image_neardup hash arithmetic (real codec on the engine
       // side, pure SQL on the oracle side) + the same loop simulation
-      Some("""
-        WITH ids AS (SELECT doc_id AS id FROM documents
-                     WHERE doc_id < 500),
-        px AS (
-          SELECT id, x.range AS x, y.range AS y,
-            (7*x.range*x.range + 13*y.range*y.range
-             + (id//4%256)*31*(x.range+1)*(y.range+1)
-             + (id//4//256%256)*53*(x.range+2)*(y.range+3)
-             + (id//4//65536%256)*17*(x.range+3)*(y.range+5)
-             + CASE WHEN id%4 > 0 AND x.range//4 = id%4 AND y.range//4 = id%4
-                    THEN 64 ELSE 0 END) % 256 AS gray
-          FROM ids, range(36) x, range(32) y),
-        cells AS (
-          SELECT id, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
-          FROM px GROUP BY 1, 2, 3),
-        bits AS (
-          SELECT a.id, a.gy*8 + a.gx AS b
-          FROM cells a JOIN cells b2
-            ON a.id = b2.id AND b2.gx = a.gx + 1 AND b2.gy = a.gy
-          WHERE a.gx < 8 AND b2.c > a.c),
-        hraw AS (
-          SELECT id, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
-          FROM bits GROUP BY id),
-        h AS (
-          SELECT ids.id,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
-          FROM ids LEFT JOIN hraw ON hraw.id = ids.id),
+      Some(s"""${imageHashCtes("""
+                     WHERE doc_id < 500""")},
         pr AS (SELECT a.id AS id1, b.id AS id2
                FROM h a JOIN h b ON a.id < b.id
-               WHERE bit_count(xor(a.sh, b.sh)) <= 3),
-        und AS (SELECT id1 AS a, id2 AS b FROM pr
-                UNION ALL SELECT id2, id1 FROM pr),
-        d AS (SELECT id, id % 3 AS bt FROM ids),
-        e0 AS (SELECT id FROM d WHERE bt = 0),
-        k0 AS (SELECT id FROM e0 WHERE id NOT IN
-                (SELECT pr.id2 FROM pr JOIN e0 x ON pr.id1 = x.id
-                 JOIN e0 y ON pr.id2 = y.id)),
-        e1 AS (SELECT id FROM d WHERE bt = 1 AND id NOT IN
-                (SELECT u.a FROM und u JOIN k0 ON u.b = k0.id)),
-        k1 AS (SELECT id FROM e1 WHERE id NOT IN
-                (SELECT pr.id2 FROM pr JOIN e1 x ON pr.id1 = x.id
-                 JOIN e1 y ON pr.id2 = y.id)),
-        h2 AS (SELECT id FROM k0 UNION ALL SELECT id FROM k1),
-        e2 AS (SELECT id FROM d WHERE bt = 2 AND id NOT IN
-                (SELECT u.a FROM und u JOIN h2 ON u.b = h2.id)),
-        k2 AS (SELECT id FROM e2 WHERE id NOT IN
-                (SELECT pr.id2 FROM pr JOIN e2 x ON pr.id1 = x.id
-                 JOIN e2 y ON pr.id2 = y.id))
-        SELECT id AS doc_id, CAST(0 AS BIGINT) AS batch_id FROM k0
-        UNION ALL SELECT id, CAST(1 AS BIGINT) FROM k1
-        UNION ALL SELECT id, CAST(2 AS BIGINT) FROM k2""")),
+               WHERE bit_count(xor(a.sh, b.sh)) <= 3),$mediaLoopSql""")),
 
     "q_video_ingest_stream" -> Q(
       (s, dir) => {
@@ -169,84 +121,15 @@ private[graft] object IngestLoopBattery {
       },
       // the q_video_neardup frame-hash arithmetic + the clip verdict
       // (n_matched >= frac * min(frames)) + the same loop simulation
-      Some("""
-        WITH ids AS (SELECT doc_id AS id FROM documents
-                     WHERE doc_id < 500),
-        fr AS (SELECT id, f.range AS f, ((id//4)*8 + f.range)*4 + id%4 AS e
-               FROM ids, range(0, 8, 2) f),
-        px AS (
-          SELECT id, f, x.range AS x, y.range AS y,
-            (7*x.range*x.range + 13*y.range*y.range
-             + (e//4%256)*31*(x.range+1)*(y.range+1)
-             + (e//4//256%256)*53*(x.range+2)*(y.range+3)
-             + (e//4//65536%256)*17*(x.range+3)*(y.range+5)
-             + CASE WHEN e%4 > 0 AND x.range//4 = e%4 AND y.range//4 = e%4
-                    THEN 64 ELSE 0 END) % 256 AS gray
-          FROM fr, range(36) x, range(32) y),
-        cells AS (
-          SELECT id, f, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
-          FROM px GROUP BY 1, 2, 3, 4),
-        bits AS (
-          SELECT a.id, a.f, a.gy*8 + a.gx AS b
-          FROM cells a JOIN cells b2
-            ON a.id = b2.id AND a.f = b2.f AND b2.gx = a.gx + 1 AND b2.gy = a.gy
-          WHERE a.gx < 8 AND b2.c > a.c),
-        hraw AS (
-          SELECT id, f, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
-          FROM bits GROUP BY id, f),
-        h AS (
-          SELECT fr.id, fr.f,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
-          FROM fr LEFT JOIN hraw ON hraw.id = fr.id AND hraw.f = fr.f),
-        nf AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM h GROUP BY 1),
-        m AS (
-          SELECT a.id AS id1, b.id AS id2, CAST(count(*) AS BIGINT) AS nm
-          FROM h a JOIN h b ON a.f = b.f AND a.id < b.id
-          WHERE bit_count(xor(a.sh, b.sh)) <= 3
-          GROUP BY 1, 2),
+      Some(s"""${videoMatchCtes("""
+                     WHERE doc_id < 500""", "nm")},
         pr AS (SELECT id1, id2
                FROM m JOIN nf n1 ON n1.id = m.id1 JOIN nf n2 ON n2.id = m.id2
                WHERE CAST(nm AS DOUBLE)
-                     >= 0.5 * CAST(least(n1.n, n2.n) AS DOUBLE)),
-        und AS (SELECT id1 AS a, id2 AS b FROM pr
-                UNION ALL SELECT id2, id1 FROM pr),
-        d AS (SELECT id, id % 3 AS bt FROM ids),
-        e0 AS (SELECT id FROM d WHERE bt = 0),
-        k0 AS (SELECT id FROM e0 WHERE id NOT IN
-                (SELECT pr.id2 FROM pr JOIN e0 x ON pr.id1 = x.id
-                 JOIN e0 y ON pr.id2 = y.id)),
-        e1 AS (SELECT id FROM d WHERE bt = 1 AND id NOT IN
-                (SELECT u.a FROM und u JOIN k0 ON u.b = k0.id)),
-        k1 AS (SELECT id FROM e1 WHERE id NOT IN
-                (SELECT pr.id2 FROM pr JOIN e1 x ON pr.id1 = x.id
-                 JOIN e1 y ON pr.id2 = y.id)),
-        h2 AS (SELECT id FROM k0 UNION ALL SELECT id FROM k1),
-        e2 AS (SELECT id FROM d WHERE bt = 2 AND id NOT IN
-                (SELECT u.a FROM und u JOIN h2 ON u.b = h2.id)),
-        k2 AS (SELECT id FROM e2 WHERE id NOT IN
-                (SELECT pr.id2 FROM pr JOIN e2 x ON pr.id1 = x.id
-                 JOIN e2 y ON pr.id2 = y.id))
-        SELECT id AS doc_id, CAST(0 AS BIGINT) AS batch_id FROM k0
-        UNION ALL SELECT id, CAST(1 AS BIGINT) FROM k1
-        UNION ALL SELECT id, CAST(2 AS BIGINT) FROM k2""")),
+                     >= 0.5 * CAST(least(n1.n, n2.n) AS DOUBLE)),$mediaLoopSql""")),
 
     "q_embed_ingest_stream" -> Q(
-      (s, dir) => {
-        // fixed 500-vector input — the q_doc_ingest_stream contract
-        val vecs = table(s, dir, "embeddings").filter(col("vec_id") < 500)
-        val base = Queries.tempDir("graft_embedingest")
-        val idxPath = s"$base/idx"; val outPath = s"$base/out"
-        (0 until 3).foreach { i =>
-          graft.streaming.EmbeddingStreams.processEmbeddingBatch(
-            vecs.filter(col("vec_id") % 3 === i), i.toLong,
-            "vec_id", "embedding", idxPath, outPath,
-            threshold = 0.45, planes = 3, tables = 8, seed = 42L)
-        }
-        s.read.parquet(outPath)
-          .select(col("vec_id"), col("__batch_id").cast("long").as("batch_id"))
-      },
+      (s, dir) => runEmbedIngest(s, dir, compactAfterBatch1 = false),
       // GoldenGen driver mirror: the same 3-batch simulation over
       // code-overlap + sequential-cosine pairs (planes=3/tables=8/seed=42,
       // threshold 0.45 — the q_embed_neardup_lsh convention)
@@ -293,26 +176,7 @@ private[graft] object IngestLoopBattery {
     // batch 2 probes the compacted history. Same golden as the
     // uncompacted row: identical published rows, or the gate goes red.
     "q_embed_compact_loop" -> Q(
-      (s, dir) => {
-        val vecs = table(s, dir, "embeddings").filter(col("vec_id") < 500)
-        val base = Queries.tempDir("graft_embcompact")
-        val idxPath = s"$base/idx"; val outPath = s"$base/out"
-        def run(i: Int): Unit =
-          graft.streaming.EmbeddingStreams.processEmbeddingBatch(
-            vecs.filter(col("vec_id") % 3 === i), i.toLong,
-            "vec_id", "embedding", idxPath, outPath,
-            threshold = 0.45, planes = 3, tables = 8, seed = 42L)
-        run(0); run(1)
-        // the embed-specific wrapper also AUDITS the slim-layout
-        // invariant (one non-null vector row per id) the per-batch
-        // history probe's cost model relies on
-        graft.streaming.EmbeddingStreams.compactEmbeddingIndex(s, idxPath,
-          uptoBatch = 1L, targetFiles = 2)
-        assertSinglePartition(idxPath, "compactEmbeddingIndex")
-        run(2)
-        s.read.parquet(outPath)
-          .select(col("vec_id"), col("__batch_id").cast("long").as("batch_id"))
-      },
+      (s, dir) => runEmbedIngest(s, dir, compactAfterBatch1 = true),
       golden("q_embed_ingest_stream")),
 
     // INDEX COMPACTION MUST BE INVISIBLE (VERDICT-r16 #4, BM25 family):
@@ -324,23 +188,7 @@ private[graft] object IngestLoopBattery {
     // over compacted-seed + live batch 2 must reproduce the SAME oracle
     // as the never-compacted row.
     "q_bm25_compact_loop" -> Q(
-      (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val base = Queries.tempDir("graft_bm25c")
-        val lenP = s"$base/len"; val postP = s"$base/post"
-        def run(i: Int): Unit =
-          graft.streaming.SearchStreams.processBm25Batch(
-            docs.filter(col("doc_id") % 3 === i), i.toLong,
-            "doc_id", "text", lenP, postP)
-        run(0); run(1)
-        graft.streaming.SearchStreams.compactBm25(s, lenP, postP,
-          uptoBatch = 1L, targetFiles = 2)
-        Seq(lenP, postP).foreach(assertSinglePartition(_, "compactBm25"))
-        run(2)
-        graft.streaming.SearchStreams.bm25TopKStreamed(
-            s, lenP, postP, Seq("vector", "spark", "customer"), k = 10)
-          .select("id", "rank", "n_terms", "sum_tf", "dl")
-      },
+      (s, dir) => runBm25Stream(s, dir, compactAfterBatch1 = true),
       bm25OracleSql),
 
     // STREAMING CHUNK-STORE INGEST — the storage family's loop, the last
@@ -384,24 +232,12 @@ private[graft] object IngestLoopBattery {
     // surfaces as a changed top-10.
     "q_ann_ivf_refit_loop" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val centroids =
-          if (dir.endsWith("sf0.01"))
-            Similarity.loadIvf(s,
-              "/root/repo/src/test/resources/golden/ivf_index").centroids
-          else Similarity.ivfIndexFor(corpus,
-            cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
-            nClusters = 16).centroids
+        val centroids = ivf16(s, dir, corpus).centroids
         val base = Queries.tempDir("graft_annrefit")
         val path = s"$base/assigned"
-        (0 until 2).foreach { i =>
-          graft.streaming.AnnStreams.processIvfBatch(
-            corpus.filter(col("vec_id") % 3 === i), i.toLong,
-            "vec_id", "embedding", centroids, path)
-        }
+        ivfBatches(corpus, centroids, path, 2)
         val refit = centroids.reverse
         graft.streaming.AnnStreams.refitIvf(s, path, refit,
           "vec_id", "embedding", uptoBatch = 1L)
@@ -436,17 +272,9 @@ private[graft] object IngestLoopBattery {
     // counts — surfaces as a changed top-10.
     "q_ann_ivf_refit_resume" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val centroids =
-          if (dir.endsWith("sf0.01"))
-            Similarity.loadIvf(s,
-              "/root/repo/src/test/resources/golden/ivf_index").centroids
-          else Similarity.ivfIndexFor(corpus,
-            cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
-            nClusters = 16).centroids
+        val centroids = ivf16(s, dir, corpus).centroids
         val base = Queries.tempDir("graft_annresume")
         val path = s"$base/assigned"
         val fs = new org.apache.hadoop.fs.Path(path)
@@ -479,11 +307,7 @@ private[graft] object IngestLoopBattery {
             !fs.exists(p("__refit_tmp")) && !fs.exists(p("__refit_old")),
             "refit resume left debris behind")
         }
-        (0 until 2).foreach { i =>
-          graft.streaming.AnnStreams.processIvfBatch(
-            corpus.filter(col("vec_id") % 3 === i), i.toLong,
-            "vec_id", "embedding", centroids, path)
-        }
+        ivfBatches(corpus, centroids, path, 2)
         val rev = centroids.reverse
         // state A: marker written, both renames pending
         stageAndMark(rev)

@@ -60,13 +60,8 @@ private[graft] object KnnBattery {
     // deliberately out of scope (the policy's documented approximation).
     "q_semantic_dedup" -> Q(
       (s, dir) => {
-        val idx =
-          if (dir.endsWith("sf0.01"))
-            Similarity.loadIvf(s, "/root/repo/src/test/resources/golden/ivf_index")
-          else Similarity.ivfIndexFor(
-            table(s, dir, "embeddings").filter(col("vec_id") =!= 0),
-            cacheKey = s"$dir/embeddings!vec_id!16",
-            "vec_id", "embedding", nClusters = 16)
+        val idx = ivf16(s, dir,
+          table(s, dir, "embeddings").filter(col("vec_id") =!= 0))
         Dedup.semanticDedup(idx.assigned, "vec_id", "embedding", threshold = 0.45)
           .select(col("vec_id"), col("__cluster").cast("int").as("cluster"))
       },
@@ -91,13 +86,8 @@ private[graft] object KnnBattery {
     // clustering.
     "q_cluster_sample" -> Q(
       (s, dir) => {
-        val idx =
-          if (dir.endsWith("sf0.01"))
-            Similarity.loadIvf(s, "/root/repo/src/test/resources/golden/ivf_index")
-          else Similarity.ivfIndexFor(
-            table(s, dir, "embeddings").filter(col("vec_id") =!= 0),
-            cacheKey = s"$dir/embeddings!vec_id!16",
-            "vec_id", "embedding", nClusters = 16)
+        val idx = ivf16(s, dir,
+          table(s, dir, "embeddings").filter(col("vec_id") =!= 0))
         graft.operators.Sampling.stratifiedExactN(
           idx.assigned.select(col("__cluster").cast("int").as("cluster"), col("vec_id")),
           Seq("cluster"), n = 5,

@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 private[graft] object LayoutBattery {
   import Queries.{Q, table}
 
+  // the lake layout rows' content: the plain documents projection
+  private val docsLayoutOracle = Some("SELECT doc_id, lang, n_chars FROM documents")
 
   val queries: Seq[(String, Q)] = Seq(
     // Shuffle-free co-located join over the bucketed-table layout: both
@@ -30,11 +32,7 @@ private[graft] object LayoutBattery {
             .as("sum_price"),
             count(lit(1)).as("cnt"))
       },
-      Some("""SELECT o_orderstatus,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-               count(*) AS cnt
-             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             GROUP BY 1""")),
+      BatteryUtil.orderStatusPriceOracle),
 
     // PARTITIONED LAKE WRITER with hot-partition small-files control
     // (was spec-only — LakeSpec pinned file counts vs the naive writer;
@@ -61,7 +59,7 @@ private[graft] object LayoutBattery {
           "expected at least one salt-split partition at this SF")
         s.read.parquet(out).select(col("doc_id"), col("lang"), col("n_chars"))
       },
-      Some("SELECT doc_id, lang, n_chars FROM documents")),
+      docsLayoutOracle),
 
     // PARQUET SMALL-FILE COMPACTION MUST BE INVISIBLE (VERDICT-r18 #4 —
     // the q_*_compact_loop pattern applied to the lake maintenance
@@ -94,6 +92,6 @@ private[graft] object LayoutBattery {
           s"read-back layout has ${after.getLong(0)} files, expected 1")
         s.read.parquet(out)
       },
-      Some("SELECT doc_id, lang, n_chars FROM documents")),
+      docsLayoutOracle),
   )
 }

@@ -11,6 +11,37 @@ private[graft] object MaintenanceBattery {
   import Queries.{Q, table, events}
   import BatteryUtil._
 
+  // The two overlapping corpora of the KMV set-operation rows
+  // (doc_id % 3 <> 0 vs doc_id % 2 = 0), sketched over the text at k = 256.
+  private def kmvTextSketches(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val docs = table(s, dir, "documents")
+    (graft.operators.Profile.kmvSketch(
+      docs.filter(col("doc_id") % 3 =!= 0), col("text"), k = 256),
+     graft.operators.Profile.kmvSketch(
+      docs.filter(col("doc_id") % 2 === 0), col("text"), k = 256))
+  }
+
+  // The same two corpora, weighted by n_chars, at bottom-k `k`.
+  private def kmvWeightedSketches(docs: org.apache.spark.sql.DataFrame, k: Int) =
+    (graft.operators.Profile.kmvSketchWeighted(
+      docs.filter(col("doc_id") % 3 =!= 0), col("text"), col("n_chars"), k),
+     graft.operators.Profile.kmvSketchWeighted(
+      docs.filter(col("doc_id") % 2 === 0), col("text"), col("n_chars"), k))
+
+  // The CDC rows' two orders batches: batch 1 loads every key at v 1;
+  // batch 2 upserts keys % 5 = 0 (+100 cents) at v 2 and tombstones
+  // keys % 10 = 0.
+  private def cdcOrderBatches(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val base = table(s, dir, "orders").select(
+      col("o_orderkey"), col("o_orderstatus"),
+      round(col("o_totalprice") * 100).cast("long").as("cents"))
+    val b1 = base.withColumn("v", lit(1L)).withColumn("del", lit(false))
+    val b2 = base.filter(col("o_orderkey") % 5 === 0)
+      .withColumn("cents", col("cents") + 100L)
+      .withColumn("v", lit(2L))
+      .withColumn("del", col("o_orderkey") % 10 === 0)
+    (b1, b2)
+  }
 
   // Lake/stream MAINTENANCE twins: capabilities that normally run inside
   // foreachBatch or a nightly layout job, driven here as deterministic
@@ -89,22 +120,7 @@ private[graft] object MaintenanceBattery {
           merged, Seq("vector", "spark", "customer", "zzz_not_a_token"),
           depth = 3, width = 64, sliceCols = Seq("lang"))
       },
-      Some(s"""
-        WITH tok AS (SELECT lang, unnest($sqlTokens) AS token FROM documents),
-        cms AS (SELECT lang, r.i AS r,
-            CAST(('0x' || substring(md5(token || ':' || CAST(r.i AS VARCHAR)), 1, 8)) AS BIGINT) % 64 AS b,
-            CAST(count(*) AS BIGINT) AS cnt
-          FROM tok CROSS JOIN range(3) r(i) GROUP BY 1, 2, 3),
-        probe AS (SELECT p.item, r.i AS r,
-            CAST(('0x' || substring(md5(p.item || ':' || CAST(r.i AS VARCHAR)), 1, 8)) AS BIGINT) % 64 AS b
-          FROM (SELECT unnest(['vector', 'spark', 'customer', 'zzz_not_a_token']) AS item) p
-          CROSS JOIN range(3) r(i)),
-        langs AS (SELECT DISTINCT lang FROM cms),
-        j AS (SELECT l.lang, pr.item, pr.r, COALESCE(c.cnt, 0) AS cnt
-          FROM langs l CROSS JOIN probe pr
-          LEFT JOIN cms c ON c.lang = l.lang AND c.r = pr.r AND c.b = pr.b)
-        SELECT lang, item, CAST(min(cnt) AS BIGINT) AS est
-        FROM j GROUP BY 1, 2""")),
+      cmsOracle),
 
     // QUANTILE SKETCH (dyadic CMS) — the rank/quantile member of the
     // sketch family. Per-(lang, part) sketches merged to per-lang
@@ -186,21 +202,7 @@ private[graft] object MaintenanceBattery {
           sliced, k = 64, groupCols = Seq("lang"))
         graft.operators.Profile.kmvDistinct(merged, k = 64, Seq("lang"))
       },
-      Some("""
-        WITH h AS (SELECT DISTINCT lang,
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents),
-        ranked AS (SELECT lang, h,
-            row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM h),
-        agg AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,
-            max(h) AS kth
-          FROM ranked WHERE rn <= 64 GROUP BY 1)
-        SELECT lang, n_kept,
-          CASE WHEN n_kept < 64 THEN n_kept
-               ELSE CAST(FLOOR(63.0 * 1152921504606846976.0
-                               / CAST(kth AS DOUBLE)) AS BIGINT)
-          END AS est_distinct
-        FROM agg""")),
+      kmvDistinctOracle),
 
     // KMV set-overlap estimation between two corpora ("how much does
     // crawl B overlap crawl A") from two k-row sketches: combined
@@ -211,43 +213,10 @@ private[graft] object MaintenanceBattery {
     // (doc_id%3≠0 vs doc_id%2=0 → J = 0.4 on distinct texts).
     "q_kmv_overlap" -> Q(
       (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val a = graft.operators.Profile.kmvSketch(
-          docs.filter(col("doc_id") % 3 =!= 0), col("text"), k = 256)
-        val b = graft.operators.Profile.kmvSketch(
-          docs.filter(col("doc_id") % 2 === 0), col("text"), k = 256)
+        val (a, b) = kmvTextSketches(s, dir)
         graft.operators.Profile.kmvOverlap(a, b, k = 256)
       },
-      Some("""
-        WITH ha AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 3 <> 0),
-        hb AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 2 = 0),
-        ska AS (SELECT h FROM ha ORDER BY h LIMIT 256),
-        skb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
-        u AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL
-                                      SELECT h FROM skb)
-              ORDER BY h LIMIT 256),
-        fl AS (SELECT u.h,
-            (u.h IN (SELECT h FROM ska) AND u.h IN (SELECT h FROM skb))
-              AS b2 FROM u),
-        agg AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
-            CAST(sum(CASE WHEN b2 THEN 1 ELSE 0 END) AS BIGINT) AS matches,
-            max(h) AS kth FROM fl),
-        est AS (SELECT union_k, matches,
-            CAST(matches * 1000000 // union_k AS BIGINT) AS jaccard_ppm,
-            CASE WHEN union_k < 256 THEN union_k
-                 ELSE CAST(FLOOR(255.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_union
-          FROM agg)
-        SELECT union_k, matches, jaccard_ppm, est_union,
-          CAST((est_union // union_k) * matches
-               + ((est_union % union_k) * matches) // union_k AS BIGINT)
-            AS est_intersection
-        FROM est""")),
+      kmvOverlapOracle),
 
     // KMV set DIFFERENCE — the directional complement of q_kmv_overlap
     // over the same two corpora: combined-bottom-k hashes present in
@@ -256,50 +225,10 @@ private[graft] object MaintenanceBattery {
     // intersection estimator. Sketch×sketch joins only.
     "q_kmv_diff" -> Q(
       (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val a = graft.operators.Profile.kmvSketch(
-          docs.filter(col("doc_id") % 3 =!= 0), col("text"), k = 256)
-        val b = graft.operators.Profile.kmvSketch(
-          docs.filter(col("doc_id") % 2 === 0), col("text"), k = 256)
+        val (a, b) = kmvTextSketches(s, dir)
         graft.operators.Profile.kmvDifference(a, b, k = 256)
       },
-      Some("""
-        WITH ha AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 3 <> 0),
-        hb AS (SELECT DISTINCT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents WHERE doc_id % 2 = 0),
-        ska AS (SELECT h FROM ha ORDER BY h LIMIT 256),
-        skb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
-        u AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL
-                                      SELECT h FROM skb)
-              ORDER BY h LIMIT 256),
-        fl AS (SELECT u.h,
-            u.h IN (SELECT h FROM ska) AS ia,
-            u.h IN (SELECT h FROM skb) AS ib FROM u),
-        agg AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
-            CAST(sum(CASE WHEN ia AND ib THEN 1 ELSE 0 END) AS BIGINT)
-              AS matches,
-            CAST(sum(CASE WHEN ia AND NOT ib THEN 1 ELSE 0 END) AS BIGINT)
-              AS only_a,
-            CAST(sum(CASE WHEN ib AND NOT ia THEN 1 ELSE 0 END) AS BIGINT)
-              AS only_b,
-            max(h) AS kth FROM fl),
-        est AS (SELECT union_k, matches, only_a, only_b,
-            CASE WHEN union_k < 256 THEN union_k
-                 ELSE CAST(FLOOR(255.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_union
-          FROM agg)
-        SELECT union_k, matches, only_a, only_b, est_union,
-          CAST((est_union // union_k) * only_a
-               + ((est_union % union_k) * only_a) // union_k AS BIGINT)
-            AS est_a_minus_b,
-          CAST((est_union // union_k) * only_b
-               + ((est_union % union_k) * only_b) // union_k AS BIGINT)
-            AS est_b_minus_a
-        FROM est""")),
+      kmvDiffOracle),
 
     // WEIGHTED KMV — total n_chars over the distinct-text universe per
     // lang, from one bounded-buffer scan: bottom-k hashes each carrying
@@ -315,9 +244,9 @@ private[graft] object MaintenanceBattery {
           docs, col("text"), col("n_chars"), k = 72, sliceCols = Seq("lang"))
         graft.operators.Profile.kmvWeightedSum(sk, k = 72, Seq("lang"))
       },
-      Some("""
+      Some(s"""
         WITH hw AS (SELECT lang,
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h,
+            ${kmvHashSql("text")} AS h,
             CAST(max(n_chars) AS BIGINT) AS w
           FROM documents GROUP BY 1, 2),
         ranked AS (SELECT lang, h, w,
@@ -326,10 +255,7 @@ private[graft] object MaintenanceBattery {
             CAST(sum(w) AS BIGINT) AS sum_w, max(h) AS kth
           FROM ranked WHERE rn <= 72 GROUP BY 1),
         est AS (SELECT lang, n_kept, sum_w,
-            CASE WHEN n_kept < 72 THEN n_kept
-                 ELSE CAST(FLOOR(71.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_distinct
+            ${kmvEstimateSql("n_kept", "kth", 72)} AS est_distinct
           FROM agg)
         SELECT lang, n_kept, sum_w, est_distinct,
           CAST(est_distinct * sum_w // n_kept AS BIGINT) AS est_total_w
@@ -342,32 +268,11 @@ private[graft] object MaintenanceBattery {
     // as q_kmv_diff, weight = n_chars.
     "q_kmv_wsets" -> Q(
       (s, dir) => {
-        val docs = table(s, dir, "documents")
-        val a = graft.operators.Profile.kmvSketchWeighted(
-          docs.filter(col("doc_id") % 3 =!= 0), col("text"),
-          col("n_chars"), k = 256)
-        val b = graft.operators.Profile.kmvSketchWeighted(
-          docs.filter(col("doc_id") % 2 === 0), col("text"),
-          col("n_chars"), k = 256)
+        val (a, b) = kmvWeightedSketches(table(s, dir, "documents"), 256)
         graft.operators.Profile.kmvSetWeights(a, b, k = 256)
       },
-      Some("""
-        WITH ha AS (SELECT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h,
-            CAST(max(n_chars) AS BIGINT) AS w
-          FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1),
-        hb AS (SELECT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h,
-            CAST(max(n_chars) AS BIGINT) AS w
-          FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        ska AS (SELECT h, w FROM ha ORDER BY h LIMIT 256),
-        skb AS (SELECT h, w FROM hb ORDER BY h LIMIT 256),
-        u AS (SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL
-                                      SELECT h FROM skb)
-              ORDER BY h LIMIT 256),
-        fl AS (SELECT u.h, a.w AS wa, b.w AS wb
-               FROM u LEFT JOIN ska a ON a.h = u.h
-               LEFT JOIN skb b ON b.h = u.h),
+      Some(s"""
+        WITH${kmvWeightedPairCtes(256, "")},
         agg AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
             CAST(sum(CASE WHEN wa IS NOT NULL AND wb IS NOT NULL
                      THEN 1 ELSE 0 END) AS BIGINT) AS matches,
@@ -385,10 +290,7 @@ private[graft] object MaintenanceBattery {
             max(h) AS kth FROM fl),
         est AS (SELECT union_k, matches, only_a, only_b,
             w_matched, w_only_a, w_only_b,
-            CASE WHEN union_k < 256 THEN union_k
-                 ELSE CAST(FLOOR(255.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_union
+            ${kmvEstimateSql("union_k", "kth", 256)} AS est_union
           FROM agg)
         SELECT union_k, matches, only_a, only_b,
           w_matched, w_only_a, w_only_b, est_union,
@@ -410,34 +312,15 @@ private[graft] object MaintenanceBattery {
     "q_kmv_wjaccard" -> Q(
       (s, dir) => {
         val docs = table(s, dir, "documents")
-        def wj(k: Int) = graft.operators.Profile.kmvWeightedJaccard(
-          graft.operators.Profile.kmvSketchWeighted(
-            docs.filter(col("doc_id") % 3 =!= 0), col("text"),
-            col("n_chars"), k),
-          graft.operators.Profile.kmvSketchWeighted(
-            docs.filter(col("doc_id") % 2 === 0), col("text"),
-            col("n_chars"), k), k)
+        def wj(k: Int) = {
+          val (a, b) = kmvWeightedSketches(docs, k)
+          graft.operators.Profile.kmvWeightedJaccard(a, b, k)
+        }
         wj(1024).withColumn("k", lit(1024))
           .unionByName(wj(64).withColumn("k", lit(64)))
       },
       Some {
-        def block(k: Int): String = s"""
-        ha$k AS (SELECT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h,
-            CAST(max(n_chars) AS BIGINT) AS w
-          FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1),
-        hb$k AS (SELECT
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h,
-            CAST(max(n_chars) AS BIGINT) AS w
-          FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        ska$k AS (SELECT h, w FROM ha$k ORDER BY h LIMIT $k),
-        skb$k AS (SELECT h, w FROM hb$k ORDER BY h LIMIT $k),
-        u$k AS (SELECT DISTINCT h FROM (SELECT h FROM ska$k UNION ALL
-                                        SELECT h FROM skb$k)
-                ORDER BY h LIMIT $k),
-        fl$k AS (SELECT u$k.h, a.w AS wa, b.w AS wb
-                 FROM u$k LEFT JOIN ska$k a ON a.h = u$k.h
-                 LEFT JOIN skb$k b ON b.h = u$k.h),
+        def block(k: Int): String = s"""${kmvWeightedPairCtes(k, k.toString)},
         agg$k AS (SELECT CAST(count(*) AS BIGINT) AS union_k,
             CAST(sum(CASE WHEN wa IS NOT NULL AND wb IS NOT NULL
                      THEN 1 ELSE 0 END) AS BIGINT) AS matches,
@@ -450,10 +333,7 @@ private[graft] object MaintenanceBattery {
             CASE WHEN w_max_sum = 0 THEN CAST(0 AS BIGINT)
                  ELSE CAST(CAST(w_min_sum AS HUGEINT) * 1000000
                            // w_max_sum AS BIGINT) END AS wjaccard_ppm,
-            CASE WHEN union_k < $k THEN union_k
-                 ELSE CAST(FLOOR(${k - 1}.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_union
+            ${kmvEstimateSql("union_k", "kth", k)} AS est_union
           FROM agg$k),
         out$k AS (SELECT union_k, matches, w_min_sum, w_max_sum,
             wjaccard_ppm, est_union,
@@ -484,7 +364,7 @@ private[graft] object MaintenanceBattery {
       Some(s"""
         WITH tok AS (SELECT lang, unnest($sqlTokens) AS token FROM documents),
         hh AS (SELECT DISTINCT lang,
-            CAST(('0x' || substring(md5(token), 1, 15)) AS BIGINT) AS h
+            ${kmvHashSql("token")} AS h
           FROM tok),
         sk AS (SELECT lang, h FROM (SELECT lang, h,
             row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM hh)
@@ -509,14 +389,10 @@ private[graft] object MaintenanceBattery {
           FROM fl GROUP BY 1, 2),
         est AS (SELECT slice_a, slice_b, union_k, matches,
             CAST(matches * 1000000 // union_k AS BIGINT) AS jaccard_ppm,
-            CASE WHEN union_k < 128 THEN union_k
-                 ELSE CAST(FLOOR(127.0 * 1152921504606846976.0
-                                 / CAST(kth AS DOUBLE)) AS BIGINT)
-            END AS est_union
+            ${kmvEstimateSql("union_k", "kth", 128)} AS est_union
           FROM agg)
         SELECT slice_a, slice_b, union_k, matches, jaccard_ppm, est_union,
-          CAST((est_union // union_k) * matches
-               + ((est_union % union_k) * matches) // union_k AS BIGINT)
+          ${kmvScaleSql("matches")}
             AS est_intersection
         FROM est""")),
 
@@ -540,28 +416,14 @@ private[graft] object MaintenanceBattery {
           col("batch_kept"), col("est_before"), col("est_after"),
           col("est_new"))
       },
-      Some("""
+      Some(s"""
         WITH d AS (SELECT DISTINCT doc_id % 3 AS b,
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents),
-        pre0 AS (SELECT h FROM (SELECT DISTINCT h FROM d WHERE b <= 0)
+            ${kmvHashSql("text")} AS h
+          FROM documents),${(0 until 3).map(i => s"""
+        pre$i AS (SELECT h FROM (SELECT DISTINCT h FROM d WHERE b <= $i)
                  ORDER BY h LIMIT 64),
-        e0 AS (SELECT CAST(count(*) AS BIGINT) AS c, max(h) AS m FROM pre0),
-        est0 AS (SELECT CASE WHEN c < 64 THEN c
-            ELSE CAST(FLOOR(63.0 * 1152921504606846976.0
-                            / CAST(m AS DOUBLE)) AS BIGINT) END AS e FROM e0),
-        pre1 AS (SELECT h FROM (SELECT DISTINCT h FROM d WHERE b <= 1)
-                 ORDER BY h LIMIT 64),
-        e1 AS (SELECT CAST(count(*) AS BIGINT) AS c, max(h) AS m FROM pre1),
-        est1 AS (SELECT CASE WHEN c < 64 THEN c
-            ELSE CAST(FLOOR(63.0 * 1152921504606846976.0
-                            / CAST(m AS DOUBLE)) AS BIGINT) END AS e FROM e1),
-        pre2 AS (SELECT h FROM (SELECT DISTINCT h FROM d WHERE b <= 2)
-                 ORDER BY h LIMIT 64),
-        e2 AS (SELECT CAST(count(*) AS BIGINT) AS c, max(h) AS m FROM pre2),
-        est2 AS (SELECT CASE WHEN c < 64 THEN c
-            ELSE CAST(FLOOR(63.0 * 1152921504606846976.0
-                            / CAST(m AS DOUBLE)) AS BIGINT) END AS e FROM e2)
+        e$i AS (SELECT CAST(count(*) AS BIGINT) AS c, max(h) AS m FROM pre$i),
+        est$i AS (SELECT ${kmvEstimateSql("c", "m", 64)} AS e FROM e$i)""").mkString(",")}
         SELECT CAST(0 AS BIGINT) AS batch_id,
           (SELECT CAST(LEAST(count(DISTINCT h), 64) AS BIGINT) FROM d
              WHERE b = 0) AS batch_kept,
@@ -612,22 +474,7 @@ private[graft] object MaintenanceBattery {
           depth = 3, width = 64, sliceCols = Seq("lang"))
       },
       // identical expected output to q_cms by exact merge algebra
-      Some(s"""
-        WITH tok AS (SELECT lang, unnest($sqlTokens) AS token FROM documents),
-        cms AS (SELECT lang, r.i AS r,
-            CAST(('0x' || substring(md5(token || ':' || CAST(r.i AS VARCHAR)), 1, 8)) AS BIGINT) % 64 AS b,
-            CAST(count(*) AS BIGINT) AS cnt
-          FROM tok CROSS JOIN range(3) r(i) GROUP BY 1, 2, 3),
-        probe AS (SELECT p.item, r.i AS r,
-            CAST(('0x' || substring(md5(p.item || ':' || CAST(r.i AS VARCHAR)), 1, 8)) AS BIGINT) % 64 AS b
-          FROM (SELECT unnest(['vector', 'spark', 'customer', 'zzz_not_a_token']) AS item) p
-          CROSS JOIN range(3) r(i)),
-        langs AS (SELECT DISTINCT lang FROM cms),
-        j AS (SELECT l.lang, pr.item, pr.r, COALESCE(c.cnt, 0) AS cnt
-          FROM langs l CROSS JOIN probe pr
-          LEFT JOIN cms c ON c.lang = l.lang AND c.r = pr.r AND c.b = pr.b)
-        SELECT lang, item, CAST(min(cnt) AS BIGINT) AS est
-        FROM j GROUP BY 1, 2""")),
+      cmsOracle),
 
     // The KMV loop's gate: batch deltas re-minned at serve, mid-stream
     // compaction, then the per-lang distinct estimate — must equal
@@ -647,21 +494,7 @@ private[graft] object MaintenanceBattery {
           Seq("lang"))
         graft.operators.Profile.kmvDistinct(served, k = 64, Seq("lang"))
       },
-      Some("""
-        WITH h AS (SELECT DISTINCT lang,
-            CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
-          FROM documents),
-        ranked AS (SELECT lang, h,
-            row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM h),
-        agg AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,
-            max(h) AS kth
-          FROM ranked WHERE rn <= 64 GROUP BY 1)
-        SELECT lang, n_kept,
-          CASE WHEN n_kept < 64 THEN n_kept
-               ELSE CAST(FLOOR(63.0 * 1152921504606846976.0
-                               / CAST(kth AS DOUBLE)) AS BIGINT)
-          END AS est_distinct
-        FROM agg""")),
+      kmvDistinctOracle),
 
     // CATEGORICAL DRIFT between two corpus slices (the snapshot-over-
     // snapshot monitor): per-category counts, ppm-quantized shares
@@ -678,21 +511,7 @@ private[graft] object MaintenanceBattery {
           docs.filter(col("doc_id") % 3 =!= 0),
           col("source"))
       },
-      Some("""
-        WITH a AS (SELECT source AS category, CAST(count(*) AS BIGINT) AS c
-                   FROM documents WHERE doc_id % 3 = 0 GROUP BY 1),
-        b AS (SELECT source AS category, CAST(count(*) AS BIGINT) AS c
-              FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1),
-        ta AS (SELECT sum(c) AS t FROM a), tb AS (SELECT sum(c) AS t FROM b)
-        SELECT COALESCE(a.category, b.category) AS category,
-          COALESCE(a.c, CAST(0 AS BIGINT)) AS cnt_a,
-          COALESCE(b.c, CAST(0 AS BIGINT)) AS cnt_b,
-          CAST(COALESCE(a.c, 0) * 1000000 // ta.t AS BIGINT) AS share_a_ppm,
-          CAST(COALESCE(b.c, 0) * 1000000 // tb.t AS BIGINT) AS share_b_ppm,
-          CAST(abs(COALESCE(a.c, 0) * 1000000 // ta.t
-                 - COALESCE(b.c, 0) * 1000000 // tb.t) AS BIGINT) AS diff_ppm
-        FROM a FULL OUTER JOIN b ON a.category IS NOT DISTINCT FROM b.category
-        CROSS JOIN ta CROSS JOIN tb""")),
+      driftOracle),
 
     // PER-SLICE categorical drift (groupCols): the source-mix drift
     // WITHIN each language — shares normalize per slice, slice and
@@ -743,7 +562,7 @@ private[graft] object MaintenanceBattery {
           docs.filter(col("doc_id") % 3 =!= 0),
           col("n_chars"), k = 8)
       },
-      Some("""
+      Some(s"""
         WITH cnt AS (SELECT n_chars AS v, CAST(count(*) AS BIGINT) AS c
                      FROM documents WHERE doc_id % 3 = 0 AND n_chars IS NOT NULL
                      GROUP BY 1),
@@ -764,16 +583,8 @@ private[graft] object MaintenanceBattery {
         a2 AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM ab GROUP BY 1),
         b2 AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM bb GROUP BY 1),
         ta AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM a2),
-        tb AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM b2)
-        SELECT COALESCE(a2.bucket, b2.bucket) AS bucket,
-          COALESCE(a2.c, CAST(0 AS BIGINT)) AS cnt_a,
-          COALESCE(b2.c, CAST(0 AS BIGINT)) AS cnt_b,
-          CAST(COALESCE(a2.c, 0) * 1000000 // ta.t AS BIGINT) AS share_a_ppm,
-          CAST(COALESCE(b2.c, 0) * 1000000 // tb.t AS BIGINT) AS share_b_ppm,
-          CAST(abs(COALESCE(a2.c, 0) * 1000000 // ta.t
-                 - COALESCE(b2.c, 0) * 1000000 // tb.t) AS BIGINT) AS diff_ppm
-        FROM a2 FULL OUTER JOIN b2 ON a2.bucket IS NOT DISTINCT FROM b2.bucket
-        CROSS JOIN ta CROSS JOIN tb""")),
+        tb AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM b2)${
+          driftSelectSql("bucket", "a2", "b2")}""")),
 
     // EMBEDDING-SPACE drift: per-label centroid shift between the even
     // and odd halves of the embedding corpus — the drift family's vector
@@ -788,40 +599,7 @@ private[graft] object MaintenanceBattery {
           emb.filter(col("vec_id") % 2 =!= 0),
           col("embedding"), Seq("label"))
       },
-      Some("""
-        WITH e AS (SELECT vec_id, label,
-            list_transform(embedding,
-              x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
-          FROM embeddings),
-        xa AS (SELECT label, unnest(qe) AS q,
-            unnest(range(1, len(qe) + 1)) AS pos FROM e WHERE vec_id % 2 = 0),
-        xb AS (SELECT label, unnest(qe) AS q,
-            unnest(range(1, len(qe) + 1)) AS pos FROM e WHERE vec_id % 2 <> 0),
-        sa AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
-            CAST(count(*) AS BIGINT) AS n FROM xa GROUP BY 1, 2),
-        sb AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
-            CAST(count(*) AS BIGINT) AS n FROM xb GROUP BY 1, 2),
-        ma AS (SELECT label, pos, s // n AS m FROM sa),
-        mb AS (SELECT label, pos, s // n AS m FROM sb),
-        met AS (SELECT ma.label,
-            CAST(sum(ma.m * mb.m) AS BIGINT) AS dot,
-            CAST(sum(ma.m * ma.m) AS BIGINT) AS na2,
-            CAST(sum(mb.m * mb.m) AS BIGINT) AS nb2,
-            CAST(sum((ma.m - mb.m) * (ma.m - mb.m)) AS BIGINT) AS dist2
-          FROM ma JOIN mb ON ma.label = mb.label AND ma.pos = mb.pos
-          GROUP BY 1),
-        cta AS (SELECT label, max(n) AS n_a FROM sa GROUP BY 1),
-        ctb AS (SELECT label, max(n) AS n_b FROM sb GROUP BY 1)
-        SELECT COALESCE(cta.label, ctb.label) AS label, n_a, n_b,
-          CASE WHEN na2 = 0 OR nb2 = 0 THEN NULL
-               ELSE CAST((CAST(dot AS HUGEINT) * dot * 1000000)
-                         // (CAST(na2 AS HUGEINT) * nb2) AS BIGINT) END
-            AS cos2_ppm,
-          CAST(CASE WHEN dot > 0 THEN 1 WHEN dot < 0 THEN -1
-               WHEN dot IS NULL THEN NULL ELSE 0 END AS INT) AS cos_sign,
-          dist2
-        FROM cta FULL OUTER JOIN ctb ON cta.label = ctb.label
-        LEFT JOIN met ON met.label = COALESCE(cta.label, ctb.label)""")),
+      embedDriftOracle),
 
     // Embedding drift behind SQL — shares q_drift_embed's oracle (the
     // TVF splices the same plan).
@@ -836,40 +614,7 @@ private[graft] object MaintenanceBattery {
         s.sql("SELECT * FROM graft_drift_embed('emb_drift_a_v', " +
           "'emb_drift_b_v', 'embedding', 'label')")
       },
-      Some("""
-        WITH e AS (SELECT vec_id, label,
-            list_transform(embedding,
-              x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
-          FROM embeddings),
-        xa AS (SELECT label, unnest(qe) AS q,
-            unnest(range(1, len(qe) + 1)) AS pos FROM e WHERE vec_id % 2 = 0),
-        xb AS (SELECT label, unnest(qe) AS q,
-            unnest(range(1, len(qe) + 1)) AS pos FROM e WHERE vec_id % 2 <> 0),
-        sa AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
-            CAST(count(*) AS BIGINT) AS n FROM xa GROUP BY 1, 2),
-        sb AS (SELECT label, pos, CAST(sum(q) AS BIGINT) AS s,
-            CAST(count(*) AS BIGINT) AS n FROM xb GROUP BY 1, 2),
-        ma AS (SELECT label, pos, s // n AS m FROM sa),
-        mb AS (SELECT label, pos, s // n AS m FROM sb),
-        met AS (SELECT ma.label,
-            CAST(sum(ma.m * mb.m) AS BIGINT) AS dot,
-            CAST(sum(ma.m * ma.m) AS BIGINT) AS na2,
-            CAST(sum(mb.m * mb.m) AS BIGINT) AS nb2,
-            CAST(sum((ma.m - mb.m) * (ma.m - mb.m)) AS BIGINT) AS dist2
-          FROM ma JOIN mb ON ma.label = mb.label AND ma.pos = mb.pos
-          GROUP BY 1),
-        cta AS (SELECT label, max(n) AS n_a FROM sa GROUP BY 1),
-        ctb AS (SELECT label, max(n) AS n_b FROM sb GROUP BY 1)
-        SELECT COALESCE(cta.label, ctb.label) AS label, n_a, n_b,
-          CASE WHEN na2 = 0 OR nb2 = 0 THEN NULL
-               ELSE CAST((CAST(dot AS HUGEINT) * dot * 1000000)
-                         // (CAST(na2 AS HUGEINT) * nb2) AS BIGINT) END
-            AS cos2_ppm,
-          CAST(CASE WHEN dot > 0 THEN 1 WHEN dot < 0 THEN -1
-               WHEN dot IS NULL THEN NULL ELSE 0 END AS INT) AS cos_sign,
-          dist2
-        FROM cta FULL OUTER JOIN ctb ON cta.label = ctb.label
-        LEFT JOIN met ON met.label = COALESCE(cta.label, ctb.label)""")),
+      embedDriftOracle),
 
     // STREAMING EMBEDDING-DRIFT MONITOR: the odd half of the corpus
     // arrives as three micro-batches, each landing its per-label centroid
@@ -1043,14 +788,7 @@ private[graft] object MaintenanceBattery {
     "q_cdc_merge_loop" -> Q(
       (s, dir) => {
         val path = graft.operators.IndexRoot.path(s, "cdcloop", s"$dir|orders")
-        val base = table(s, dir, "orders").select(
-          col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        val b1 = base.withColumn("v", lit(1L)).withColumn("del", lit(false))
-        val b2 = base.filter(col("o_orderkey") % 5 === 0)
-          .withColumn("cents", col("cents") + 100L)
-          .withColumn("v", lit(2L))
-          .withColumn("del", col("o_orderkey") % 10 === 0)
+        val (b1, b2) = cdcOrderBatches(s, dir)
         graft.streaming.ChangeStreams.mergeBatch(
           b1, Seq("o_orderkey"), Seq("v"), col("del"), path)
         graft.streaming.ChangeStreams.mergeBatch(
@@ -1069,14 +807,7 @@ private[graft] object MaintenanceBattery {
     "q_cdc_merge_part" -> Q(
       (s, dir) => {
         val path = graft.operators.IndexRoot.path(s, "cdcpart", s"$dir|orders")
-        val base = table(s, dir, "orders").select(
-          col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        val b1 = base.withColumn("v", lit(1L)).withColumn("del", lit(false))
-        val b2 = base.filter(col("o_orderkey") % 5 === 0)
-          .withColumn("cents", col("cents") + 100L)
-          .withColumn("v", lit(2L))
-          .withColumn("del", col("o_orderkey") % 10 === 0)
+        val (b1, b2) = cdcOrderBatches(s, dir)
         // pmod 5 on purpose: batch 2 updates keys ≡ 0 (mod 5), so the
         // second merge touches exactly ONE of the five partitions — the
         // battery row exercises the pruned-read/pruned-rewrite path, not
@@ -1108,14 +839,7 @@ private[graft] object MaintenanceBattery {
       (s, dir) => {
         val base0 = Queries.tempDir("graft_changefeed")
         val snapPath = s"$base0/snap"; val feedPath = s"$base0/feed"
-        val base = table(s, dir, "orders").select(
-          col("o_orderkey"), col("o_orderstatus"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        val b1 = base.withColumn("v", lit(1L)).withColumn("del", lit(false))
-        val b2 = base.filter(col("o_orderkey") % 5 === 0)
-          .withColumn("cents", col("cents") + 100L)
-          .withColumn("v", lit(2L))
-          .withColumn("del", col("o_orderkey") % 10 === 0)
+        val (b1, b2) = cdcOrderBatches(s, dir)
         graft.streaming.ChangeStreams.mergeBatch(
           b1, Seq("o_orderkey"), Seq("v"), col("del"), snapPath,
           changeFeedPath = Some(feedPath), batchId = 1L)

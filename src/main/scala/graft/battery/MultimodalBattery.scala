@@ -11,6 +11,28 @@ private[graft] object MultimodalBattery {
   import Queries.{Q, table}
   import BatteryUtil._
 
+  // The gradient-image corpus of the image rows, through a REAL codec
+  // decode into its dHash table — persisted: the hash table feeds BOTH
+  // join sides, and without the barrier every side re-encodes and
+  // re-decodes the corpus.
+  private def imageHashes(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Multimodal.dHash64(
+      Multimodal.withGradientImagePayload(
+        // repartition BEFORE the codec stage: the sf tables are one
+        // parquet file → one partition → single-threaded encode/decode;
+        // an id-only shuffle is free next to per-item codec work
+        table(s, dir, "documents").select("doc_id").repartition(32),
+        "doc_id"),
+      "doc_id")
+      .filter(col("sh").isNotNull)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  // The gradient-image payloads of the chunk-store rows.
+  private def imageBlobs(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Multimodal.withGradientImagePayload(
+      table(s, dir, "documents").select("doc_id").repartition(32),
+      "doc_id")
+
 
   val queries: Seq[(String, Q)] = Seq(
     // Binary payload column + typed metadata plumbing.
@@ -81,49 +103,10 @@ private[graft] object MultimodalBattery {
     // all gated cross-engine. Same-family variants (doc_id div 4) differ
     // in one 4×4 cell → ≤ 2 bits; cross-family hashes differ by ~24-32.
     "q_image_neardup" -> Q(
-      (s, dir) => Dedup.simhashPairsFromTable(
-        // persisted: the hash table feeds BOTH self-join sides — without
-        // the barrier every side re-encodes and re-decodes the corpus
-        Multimodal.dHash64(
-          Multimodal.withGradientImagePayload(
-            // repartition BEFORE the codec stage: the sf tables are one
-            // parquet file → one partition → single-threaded encode/decode;
-            // an id-only shuffle is free next to per-item codec work
-            table(s, dir, "documents").select("doc_id").repartition(32),
-            "doc_id"),
-          "doc_id")
-          .filter(col("sh").isNotNull)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      (s, dir) => Dedup.simhashPairsFromTable(imageHashes(s, dir),
         maxDistance = 3)
         .select(col("id1"), col("id2"), col("hamming").cast("int").as("hamming")),
-      Some("""
-        WITH ids AS (SELECT doc_id AS id FROM documents),
-        px AS (
-          SELECT id, x.range AS x, y.range AS y,
-            (7*x.range*x.range + 13*y.range*y.range
-             + (id//4%256)*31*(x.range+1)*(y.range+1)
-             + (id//4//256%256)*53*(x.range+2)*(y.range+3)
-             + (id//4//65536%256)*17*(x.range+3)*(y.range+5)
-             + CASE WHEN id%4 > 0 AND x.range//4 = id%4 AND y.range//4 = id%4
-                    THEN 64 ELSE 0 END) % 256 AS gray
-          FROM ids, range(36) x, range(32) y),
-        cells AS (
-          SELECT id, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
-          FROM px GROUP BY 1, 2, 3),
-        bits AS (
-          SELECT a.id, a.gy*8 + a.gx AS b
-          FROM cells a JOIN cells b2
-            ON a.id = b2.id AND b2.gx = a.gx + 1 AND b2.gy = a.gy
-          WHERE a.gx < 8 AND b2.c > a.c),
-        hraw AS (
-          SELECT id, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
-          FROM bits GROUP BY id),
-        h AS (
-          SELECT ids.id,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
-          FROM ids LEFT JOIN hraw ON hraw.id = ids.id)
+      Some(s"""${imageHashCtes("")}
         SELECT a.id AS id1, b.id AS id2,
           CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
         FROM h a JOIN h b ON a.id < b.id
@@ -144,10 +127,7 @@ private[graft] object MultimodalBattery {
     // table + FNV only). NULL-safe: blobs are non-null here; the spec
     // pins null/empty/short-blob behavior.
     "q_cdc_chunks" -> Q(
-      (s, dir) => Dedup.cdcChunkTable(
-        Multimodal.withGradientImagePayload(
-          table(s, dir, "documents").select("doc_id").repartition(32),
-          "doc_id"),
+      (s, dir) => Dedup.cdcChunkTable(imageBlobs(s, dir),
         "doc_id", "payload", minSize = 64, maskBits = 6, maxSize = 512),
       golden("q_cdc_chunks")),
 
@@ -158,10 +138,7 @@ private[graft] object MultimodalBattery {
     // them, so a chunking bug fails q_cdc_chunks and a stats bug fails
     // here.
     "q_storage_dedup" -> Q(
-      (s, dir) => Dedup.cdcDedupStats(Dedup.cdcChunkTable(
-        Multimodal.withGradientImagePayload(
-          table(s, dir, "documents").select("doc_id").repartition(32),
-          "doc_id"),
+      (s, dir) => Dedup.cdcDedupStats(Dedup.cdcChunkTable(imageBlobs(s, dir),
         "doc_id", "payload", minSize = 64, maskBits = 6, maxSize = 512)),
       Some("""
         WITH g AS (SELECT hash, length, CAST(count(*) AS BIGINT) AS n
@@ -192,9 +169,7 @@ private[graft] object MultimodalBattery {
     // re-labels.
     "q_cdc_incremental" -> Q(
       (s, dir) => {
-        val blobs = Multimodal.withGradientImagePayload(
-          table(s, dir, "documents").select("doc_id").repartition(32),
-          "doc_id")
+        val blobs = imageBlobs(s, dir)
         val history = Dedup.cdcChunkTable(
           blobs.filter(col("doc_id") < 250 || col("doc_id") >= 500),
           "doc_id", "payload", minSize = 64, maskBits = 6, maxSize = 512)
@@ -219,47 +194,14 @@ private[graft] object MultimodalBattery {
 
     "q_image_incremental" -> Q(
       (s, dir) => {
-        val hashed = Multimodal.dHash64(
-          Multimodal.withGradientImagePayload(
-            table(s, dir, "documents").select("doc_id").repartition(32),
-            "doc_id"),
-          "doc_id")
-          .filter(col("sh").isNotNull)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val hashed = imageHashes(s, dir)
         Dedup.incrementalHammingPairs(
           hashed.filter(col("id") >= 250), hashed.filter(col("id") < 250),
           maxDistance = 3)
           .select(col("new_id"), col("old_id"),
             col("hamming").cast("int").as("hamming"))
       },
-      Some("""
-        WITH ids AS (SELECT doc_id AS id FROM documents),
-        px AS (
-          SELECT id, x.range AS x, y.range AS y,
-            (7*x.range*x.range + 13*y.range*y.range
-             + (id//4%256)*31*(x.range+1)*(y.range+1)
-             + (id//4//256%256)*53*(x.range+2)*(y.range+3)
-             + (id//4//65536%256)*17*(x.range+3)*(y.range+5)
-             + CASE WHEN id%4 > 0 AND x.range//4 = id%4 AND y.range//4 = id%4
-                    THEN 64 ELSE 0 END) % 256 AS gray
-          FROM ids, range(36) x, range(32) y),
-        cells AS (
-          SELECT id, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
-          FROM px GROUP BY 1, 2, 3),
-        bits AS (
-          SELECT a.id, a.gy*8 + a.gx AS b
-          FROM cells a JOIN cells b2
-            ON a.id = b2.id AND b2.gx = a.gx + 1 AND b2.gy = a.gy
-          WHERE a.gx < 8 AND b2.c > a.c),
-        hraw AS (
-          SELECT id, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
-          FROM bits GROUP BY id),
-        h AS (
-          SELECT ids.id,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
-          FROM ids LEFT JOIN hraw ON hraw.id = ids.id)
+      Some(s"""${imageHashCtes("")}
         SELECT a.id AS new_id, b.id AS old_id,
           CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
         FROM h a JOIN h b ON a.id >= 250 AND b.id < 250
@@ -275,44 +217,10 @@ private[graft] object MultimodalBattery {
     // group-cap filter. Gates cross-engine that guarded mode is a
     // faithful connectivity certificate, not just a spec claim.
     "q_image_neardup_guarded" -> Q(
-      (s, dir) => Dedup.simhashPairsFromTable(
-        Multimodal.dHash64(
-          Multimodal.withGradientImagePayload(
-            table(s, dir, "documents").select("doc_id").repartition(32),
-            "doc_id"),
-          "doc_id")
-          .filter(col("sh").isNotNull)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      (s, dir) => Dedup.simhashPairsFromTable(imageHashes(s, dir),
         maxDistance = 3, maxBucket = 1000)
         .select(col("id1"), col("id2"), col("hamming").cast("int").as("hamming")),
-      Some("""
-        WITH ids AS (SELECT doc_id AS id FROM documents),
-        px AS (
-          SELECT id, x.range AS x, y.range AS y,
-            (7*x.range*x.range + 13*y.range*y.range
-             + (id//4%256)*31*(x.range+1)*(y.range+1)
-             + (id//4//256%256)*53*(x.range+2)*(y.range+3)
-             + (id//4//65536%256)*17*(x.range+3)*(y.range+5)
-             + CASE WHEN id%4 > 0 AND x.range//4 = id%4 AND y.range//4 = id%4
-                    THEN 64 ELSE 0 END) % 256 AS gray
-          FROM ids, range(36) x, range(32) y),
-        cells AS (
-          SELECT id, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
-          FROM px GROUP BY 1, 2, 3),
-        bits AS (
-          SELECT a.id, a.gy*8 + a.gx AS b
-          FROM cells a JOIN cells b2
-            ON a.id = b2.id AND b2.gx = a.gx + 1 AND b2.gy = a.gy
-          WHERE a.gx < 8 AND b2.c > a.c),
-        hraw AS (
-          SELECT id, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
-          FROM bits GROUP BY id),
-        h AS (
-          SELECT ids.id,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
-          FROM ids LEFT JOIN hraw ON hraw.id = ids.id),
+      Some(s"""${imageHashCtes("")},
         reps AS (SELECT sh, min(id) AS rid FROM h GROUP BY 1),
         stars AS (
           SELECT r.rid AS id1, h.id AS id2, 0 AS hamming
@@ -366,7 +274,7 @@ private[graft] object MultimodalBattery {
         Multimodal.videoContainmentPairs(base.unionByName(trimmed), "doc_id",
           everyNth = 2, maxDistance = 3, minContainFrac = 0.75)
       },
-      Some("""
+      Some(s"""
         WITH fr AS (
           SELECT doc_id AS id, ((doc_id//4)*8 + f.range)*4 + doc_id%4 AS e
           FROM documents, range(0, 8, 2) f
@@ -375,33 +283,7 @@ private[graft] object MultimodalBattery {
                  ((doc_id//4)*8 + j.range + 2)*4 + doc_id%4 AS e
           FROM documents, range(0, 4, 2) j
           WHERE doc_id % 4 = 0),
-        es AS (SELECT DISTINCT e FROM fr),
-        px AS (
-          SELECT e, x.range AS x, y.range AS y,
-            (7*x.range*x.range + 13*y.range*y.range
-             + (e//4%256)*31*(x.range+1)*(y.range+1)
-             + (e//4//256%256)*53*(x.range+2)*(y.range+3)
-             + (e//4//65536%256)*17*(x.range+3)*(y.range+5)
-             + CASE WHEN e%4 > 0 AND x.range//4 = e%4 AND y.range//4 = e%4
-                    THEN 64 ELSE 0 END) % 256 AS gray
-          FROM es, range(36) x, range(32) y),
-        cells AS (
-          SELECT e, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
-          FROM px GROUP BY 1, 2, 3),
-        bits AS (
-          SELECT a.e, a.gy*8 + a.gx AS b
-          FROM cells a JOIN cells b2
-            ON a.e = b2.e AND b2.gx = a.gx + 1 AND b2.gy = a.gy
-          WHERE a.gx < 8 AND b2.c > a.c),
-        hraw AS (
-          SELECT e, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
-          FROM bits GROUP BY e),
-        h0 AS (
-          SELECT es.e,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
-          FROM es LEFT JOIN hraw ON hraw.e = es.e),
+        es AS (SELECT DISTINCT e FROM fr),${dHashCtes("es", Seq("e"), "e", "h0")},
         h AS (SELECT fr.id, fr.e, h0.sh FROM fr JOIN h0 ON h0.e = fr.e),
         nf AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM h GROUP BY 1),
         m AS (
@@ -421,42 +303,7 @@ private[graft] object MultimodalBattery {
           table(s, dir, "documents").select("doc_id").repartition(32),
           "doc_id", nFrames = 8),
         "doc_id", everyNth = 2, maxDistance = 3, minMatchFrac = 0.5),
-      Some("""
-        WITH ids AS (SELECT doc_id AS id FROM documents),
-        fr AS (SELECT id, f.range AS f, ((id//4)*8 + f.range)*4 + id%4 AS e
-               FROM ids, range(0, 8, 2) f),
-        px AS (
-          SELECT id, f, x.range AS x, y.range AS y,
-            (7*x.range*x.range + 13*y.range*y.range
-             + (e//4%256)*31*(x.range+1)*(y.range+1)
-             + (e//4//256%256)*53*(x.range+2)*(y.range+3)
-             + (e//4//65536%256)*17*(x.range+3)*(y.range+5)
-             + CASE WHEN e%4 > 0 AND x.range//4 = e%4 AND y.range//4 = e%4
-                    THEN 64 ELSE 0 END) % 256 AS gray
-          FROM fr, range(36) x, range(32) y),
-        cells AS (
-          SELECT id, f, x//4 AS gx, y//4 AS gy, SUM(gray)//16 AS c
-          FROM px GROUP BY 1, 2, 3, 4),
-        bits AS (
-          SELECT a.id, a.f, a.gy*8 + a.gx AS b
-          FROM cells a JOIN cells b2
-            ON a.id = b2.id AND a.f = b2.f AND b2.gx = a.gx + 1 AND b2.gy = a.gy
-          WHERE a.gx < 8 AND b2.c > a.c),
-        hraw AS (
-          SELECT id, f, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
-          FROM bits GROUP BY id, f),
-        h AS (
-          SELECT fr.id, fr.f,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
-          FROM fr LEFT JOIN hraw ON hraw.id = fr.id AND hraw.f = fr.f),
-        nf AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM h GROUP BY 1),
-        m AS (
-          SELECT a.id AS id1, b.id AS id2, CAST(count(*) AS BIGINT) AS n_matched
-          FROM h a JOIN h b ON a.f = b.f AND a.id < b.id
-          WHERE bit_count(xor(a.sh, b.sh)) <= 3
-          GROUP BY 1, 2)
+      Some(s"""${videoMatchCtes("", "n_matched")}
         SELECT id1, id2, n_matched, least(n1.n, n2.n) AS n_frames
         FROM m JOIN nf n1 ON n1.id = m.id1 JOIN nf n2 ON n2.id = m.id2
         WHERE CAST(n_matched AS DOUBLE) >= 0.5 * CAST(least(n1.n, n2.n) AS DOUBLE)""")),
@@ -486,7 +333,7 @@ private[graft] object MultimodalBattery {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
         maxDistance = 3)
         .select(col("id1"), col("id2"), col("hamming").cast("int").as("hamming")),
-      Some("""
+      Some(s"""
         WITH ids AS (SELECT doc_id AS id FROM documents),
         samp AS (
           SELECT id, t.range AS t,
@@ -505,9 +352,7 @@ private[graft] object MultimodalBattery {
           SELECT id, SUM(CAST(1 AS HUGEINT) << CAST(b AS INT)) AS s
           FROM bits GROUP BY id),
         h AS (SELECT ids.id,
-            CAST(CASE WHEN COALESCE(s, 0) >= CAST(1 AS HUGEINT) << 63
-                  THEN COALESCE(s, 0) - (CAST(1 AS HUGEINT) << 64)
-                  ELSE COALESCE(s, 0) END AS BIGINT) AS sh
+            $signedHashSql
           FROM ids LEFT JOIN hraw ON hraw.id = ids.id)
         SELECT a.id AS id1, b.id AS id2,
           CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming

@@ -11,6 +11,29 @@ private[graft] object PqBattery {
   import Queries.{Q, table}
   import BatteryUtil._
 
+  // "fix" for the committed sf0.01 artifacts, "built" for memoized builds
+  private def fixtureTag(dir: String) =
+    if (dir.endsWith("sf0.01")) "fix" else "built"
+
+  // The PQ codebook of the vec_id <> 0 corpus: committed at sf0.01 (the
+  // per-subspace k-means fits are non-replayable), else built once per JVM.
+  private def pqCodebook(s: org.apache.spark.sql.SparkSession, dir: String,
+                         corpus: => org.apache.spark.sql.DataFrame) =
+    if (dir.endsWith("sf0.01"))
+      Similarity.loadPqCodebook(s, goldenPath("pq_codebook"))
+    else Similarity.pqCodebookFor(corpus,
+      cacheKey = s"$dir/embeddings!pq!8!16", "embedding")
+
+  // The composed IVF-PQ tier's index, codebook and cluster-partitioned
+  // code table, memoized per (dir, artifact source).
+  private def ivfPqCodes(s: org.apache.spark.sql.SparkSession, dir: String,
+                         corpus: org.apache.spark.sql.DataFrame) = {
+    val idx = ivf16(s, dir, corpus)
+    val cb = pqCodebook(s, dir, corpus)
+    (idx, cb, Similarity.ivfPqEncodedFor(idx, cb,
+      cacheKey = s"$dir/embeddings!ivfpq!${fixtureTag(dir)}", "vec_id", "embedding"))
+  }
+
 
   val queries: Seq[(String, Q)] = Seq(
     // PRODUCT-QUANTIZATION ADC top-k: 64-dim floats → 8 byte-codes
@@ -21,18 +44,12 @@ private[graft] object PqBattery {
     // builds once per JVM via the memoized offline path.
     "q_ann_pq" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
-        val (cb, cbTag) =
-          if (dir.endsWith("sf0.01"))
-            (Similarity.loadPqCodebook(s,
-              "/root/repo/src/test/resources/golden/pq_codebook"), "fix")
-          else (Similarity.pqCodebookFor(emb.filter(col("vec_id") =!= 0),
-            cacheKey = s"$dir/embeddings!pq!8!16", "embedding"), "built")
+        val (emb, q) = embeddingsAndQuery(s, dir)
+        val cb = pqCodebook(s, dir, emb.filter(col("vec_id") =!= 0))
         Similarity.pqTopK(
           Similarity.pqEncodedFor(emb.filter(col("vec_id") =!= 0),
-            cacheKey = s"$dir/embeddings!pqenc!$cbTag", "vec_id", "embedding", cb),
+            cacheKey = s"$dir/embeddings!pqenc!${fixtureTag(dir)}", "vec_id",
+            "embedding", cb),
           q, cb, k = 10)
       },
       golden("q_ann_pq")),
@@ -45,9 +62,7 @@ private[graft] object PqBattery {
     // rebuilds everything from the same fixed-order double arithmetic.
     "q_ann_int8" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         Similarity.int8TopK(
           Similarity.int8TableFor(emb.filter(col("vec_id") =!= 0),
             cacheKey = s"$dir/embeddings!int8", "vec_id", "embedding"),
@@ -63,9 +78,7 @@ private[graft] object PqBattery {
     // CTEs into the exact q_sim_topk cosine formulation.
     "q_ann_int8_rerank" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
         Similarity.int8TopKRerank(
           Similarity.int8TableFor(corpus,
@@ -91,23 +104,9 @@ private[graft] object PqBattery {
     // once per JVM via the memoized offline paths.
     "q_ann_ivfpq" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val (idx, cb, tag) =
-          if (dir.endsWith("sf0.01"))
-            (Similarity.loadIvf(s, "/root/repo/src/test/resources/golden/ivf_index"),
-             Similarity.loadPqCodebook(s,
-               "/root/repo/src/test/resources/golden/pq_codebook"), "fix")
-          else
-            (Similarity.ivfIndexFor(corpus,
-               cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
-               nClusters = 16),
-             Similarity.pqCodebookFor(corpus,
-               cacheKey = s"$dir/embeddings!pq!8!16", "embedding"), "built")
-        val codes = Similarity.ivfPqEncodedFor(idx, cb,
-          cacheKey = s"$dir/embeddings!ivfpq!$tag", "vec_id", "embedding")
+        val (idx, cb, codes) = ivfPqCodes(s, dir, corpus)
         Similarity.ivfPqTopK(idx.centroids, codes, q, cb, k = 10, nprobe = 4)
       },
       golden("q_ann_ivfpq")),
@@ -119,23 +118,9 @@ private[graft] object PqBattery {
     // golden recomputation reranks the same driver-derived shortlist.
     "q_ann_ivfpq_rerank" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val (idx, cb, tag) =
-          if (dir.endsWith("sf0.01"))
-            (Similarity.loadIvf(s, "/root/repo/src/test/resources/golden/ivf_index"),
-             Similarity.loadPqCodebook(s,
-               "/root/repo/src/test/resources/golden/pq_codebook"), "fix")
-          else
-            (Similarity.ivfIndexFor(corpus,
-               cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
-               nClusters = 16),
-             Similarity.pqCodebookFor(corpus,
-               cacheKey = s"$dir/embeddings!pq!8!16", "embedding"), "built")
-        val codes = Similarity.ivfPqEncodedFor(idx, cb,
-          cacheKey = s"$dir/embeddings!ivfpq!$tag", "vec_id", "embedding")
+        val (idx, cb, codes) = ivfPqCodes(s, dir, corpus)
         Similarity.ivfPqTopKRerank(idx.centroids, codes, corpus,
           "vec_id", "embedding", q, cb, k = 10, nprobe = 4, shortlist = 50)
       },
@@ -151,22 +136,10 @@ private[graft] object PqBattery {
     // offline table, so the delta-served top-10 must be bit-equal.
     "q_ann_ivfpq_stream" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val (centroids, cb) =
-          if (dir.endsWith("sf0.01"))
-            (Similarity.loadIvf(s,
-               "/root/repo/src/test/resources/golden/ivf_index").centroids,
-             Similarity.loadPqCodebook(s,
-               "/root/repo/src/test/resources/golden/pq_codebook"))
-          else
-            (Similarity.ivfIndexFor(corpus,
-               cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
-               nClusters = 16).centroids,
-             Similarity.pqCodebookFor(corpus,
-               cacheKey = s"$dir/embeddings!pq!8!16", "embedding"))
+        val centroids = ivf16(s, dir, corpus).centroids
+        val cb = pqCodebook(s, dir, corpus)
         val base = Queries.tempDir("graft_annpqs")
         val path = s"$base/codes"
         (0 until 3).foreach { i =>
@@ -188,25 +161,14 @@ private[graft] object PqBattery {
     // the committed assigned table split by the same batch rule.
     "q_ann_refit" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val corpus = emb.filter(col("vec_id") =!= 0)
-        val centroids =
-          if (dir.endsWith("sf0.01"))
-            Similarity.loadIvf(s,
-              "/root/repo/src/test/resources/golden/ivf_index").centroids
-          else Similarity.ivfIndexFor(corpus,
-            cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
-            nClusters = 16).centroids
+        val corpus = table(s, dir, "embeddings").filter(col("vec_id") =!= 0)
+        val centroids = ivf16(s, dir, corpus).centroids
         val base = Queries.tempDir("graft_refit")
         val path = s"$base/assigned"
-        (0 until 3).foreach { i =>
-          graft.streaming.AnnStreams.processIvfBatch(
-            corpus.filter(col("vec_id") % 3 === i), i.toLong,
-            "vec_id", "embedding", centroids, path)
-        }
+        ivfBatches(corpus, centroids, path, 3)
         graft.streaming.AnnStreams.refitSignal(s, path, recentBatches = 1)
       },
-      Some("""
+      Some(s"""
         WITH asg AS (SELECT vec_id, CAST(__cluster AS INT) AS cluster
                      FROM read_parquet(
                        '/root/repo/src/test/resources/golden/ivf_index/assigned/*/*.parquet',
@@ -216,15 +178,7 @@ private[graft] object PqBattery {
         b AS (SELECT cluster, CAST(count(*) AS BIGINT) AS c FROM asg
               WHERE vec_id % 3 = 2 GROUP BY 1),
         ta AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM a),
-        tb AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM b)
-        SELECT COALESCE(a.cluster, b.cluster) AS cluster,
-          COALESCE(a.c, CAST(0 AS BIGINT)) AS cnt_a,
-          COALESCE(b.c, CAST(0 AS BIGINT)) AS cnt_b,
-          CAST(COALESCE(a.c, 0) * 1000000 // ta.t AS BIGINT) AS share_a_ppm,
-          CAST(COALESCE(b.c, 0) * 1000000 // tb.t AS BIGINT) AS share_b_ppm,
-          CAST(abs(COALESCE(a.c, 0) * 1000000 // ta.t
-                 - COALESCE(b.c, 0) * 1000000 // tb.t) AS BIGINT) AS diff_ppm
-        FROM a FULL OUTER JOIN b ON a.cluster IS NOT DISTINCT FROM b.cluster
-        CROSS JOIN ta CROSS JOIN tb""")),
+        tb AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM b)${
+          driftSelectSql("cluster", "a", "b")}""")),
   )
 }

@@ -29,10 +29,6 @@ private[graft] object QuantileBattery {
       (s, dir) => graft.operators.Profile.groupQuantiles(
         table(s, dir, "documents"), Seq("lang"), "n_chars",
         probs = Seq(0.25, 0.5, 0.75), exact = true),
-      Some("""SELECT lang,
-               quantile_cont(n_chars, 0.25) AS p25,
-               quantile_cont(n_chars, 0.50) AS p50,
-               quantile_cont(n_chars, 0.75) AS p75
-             FROM documents GROUP BY lang""")),
+      BatteryUtil.groupQuantilesOracle),
   )
 }

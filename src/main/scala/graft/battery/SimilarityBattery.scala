@@ -11,22 +11,37 @@ private[graft] object SimilarityBattery {
   import Queries.{Q, table}
   import BatteryUtil._
 
+  // The hybrid rows' BM25 leg served from the persisted postings index.
+  private def indexedBm25Leg(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val bmIdx = graft.operators.Search.bm25IndexFor(
+      table(s, dir, "documents"), cacheKey = s"$dir/documents!bm25",
+      "doc_id", "text")
+    graft.operators.Search.bm25TopKIndexed(
+      bmIdx, Seq("vector", "spark", "customer"), k = 20).select("id", "rank")
+  }
+
+  // RRF of the hybrid rows' BM25 leg with the dense top-k `dense`
+  // (vec_id, cos), ranked by cosine.
+  private def fuseWithDense(bm: org.apache.spark.sql.DataFrame,
+                            dense: org.apache.spark.sql.DataFrame) = {
+    val ann = dense
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
+          .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
+      .select(col("vec_id").as("id"), col("rank"))
+    graft.operators.Search.rrfFuse(Seq(bm, ann), "id", "rank", k = 10)
+  }
+
 
   val queries: Seq[(String, Q)] = Seq(
     // Exact cosine top-10 for the vec_id=0 query vector.
     "q_sim_topk" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         Similarity.bruteForceTopK(emb.filter(col("vec_id") =!= 0),
           "vec_id", "embedding", q, k = 10)
       },
-      Some("""SELECT vec_id,
-               list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) AS cos
-             FROM embeddings WHERE vec_id <> 0
-             ORDER BY cos DESC, vec_id LIMIT 10""")),
+      cosineTopKOracle),
 
     // HYBRID retrieval: reciprocal-rank fusion of the BM25 keyword
     // ranking and the embedding-cosine ranking for the same information
@@ -39,16 +54,9 @@ private[graft] object SimilarityBattery {
         val bm = graft.operators.Search.bm25TopK(
           table(s, dir, "documents"), "doc_id", "text",
           Seq("vector", "spark", "customer"), k = 20).select("id", "rank")
-        val emb = table(s, dir, "embeddings")
-        val qv = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
-        val ann = Similarity.bruteForceTopK(emb.filter(col("vec_id") =!= 0),
-            "vec_id", "embedding", qv, k = 20)
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
-              .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-          .select(col("vec_id").as("id"), col("rank"))
-        graft.operators.Search.rrfFuse(Seq(bm, ann), "id", "rank", k = 10)
+        val (emb, qv) = embeddingsAndQuery(s, dir)
+        fuseWithDense(bm, Similarity.bruteForceTopK(emb.filter(col("vec_id") =!= 0),
+          "vec_id", "embedding", qv, k = 20))
       },
       hybridRrfOracleSql),
 
@@ -64,24 +72,13 @@ private[graft] object SimilarityBattery {
     // pruned-nprobe hybrid recall is quantified in ANN_SWEEP.md).
     "q_hybrid_rrf_ann" -> Q(
       (s, dir) => {
-        val bmIdx = graft.operators.Search.bm25IndexFor(
-          table(s, dir, "documents"), cacheKey = s"$dir/documents!bm25",
-          "doc_id", "text")
-        val bm = graft.operators.Search.bm25TopKIndexed(
-          bmIdx, Seq("vector", "spark", "customer"), k = 20).select("id", "rank")
-        val emb = table(s, dir, "embeddings")
-        val qv = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val bm = indexedBm25Leg(s, dir)
+        val (emb, qv) = embeddingsAndQuery(s, dir)
         val ivf = Similarity.ivfIndexFor(emb.filter(col("vec_id") =!= 0),
           cacheKey = s"$dir/embeddings!vec_id!tuned",
           "vec_id", "embedding", nClusters = 0)
-        val ann = Similarity.ivfTopK(ivf, "vec_id", "embedding", qv, k = 20,
-            nprobe = ivf.centroids.length)
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
-              .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-          .select(col("vec_id").as("id"), col("rank"))
-        graft.operators.Search.rrfFuse(Seq(bm, ann), "id", "rank", k = 10)
+        fuseWithDense(bm, Similarity.ivfTopK(ivf, "vec_id", "embedding", qv,
+          k = 20, nprobe = ivf.centroids.length))
       },
       hybridRrfOracleSql),
 
@@ -95,14 +92,8 @@ private[graft] object SimilarityBattery {
     // arithmetic. Pruned-probe recall is quantified in ANN_SWEEP.md.
     "q_hybrid_rrf_ann_pruned" -> Q(
       (s, dir) => {
-        val bmIdx = graft.operators.Search.bm25IndexFor(
-          table(s, dir, "documents"), cacheKey = s"$dir/documents!bm25",
-          "doc_id", "text")
-        val bm = graft.operators.Search.bm25TopKIndexed(
-          bmIdx, Seq("vector", "spark", "customer"), k = 20).select("id", "rank")
-        val emb = table(s, dir, "embeddings")
-        val qv = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val bm = indexedBm25Leg(s, dir)
+        val (emb, qv) = embeddingsAndQuery(s, dir)
         val (ivf, np) =
           if (dir.endsWith("sf0.01"))
             (Similarity.loadIvf(s, "/root/repo/src/test/resources/golden/ivf_index"), 4)
@@ -112,13 +103,8 @@ private[graft] object SimilarityBattery {
               "vec_id", "embedding", nClusters = 0)
             (i, math.max(1, i.centroids.length / 4))
           }
-        val ann = Similarity.ivfTopK(ivf, "vec_id", "embedding", qv, k = 20,
-            nprobe = np)
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
-              .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-          .select(col("vec_id").as("id"), col("rank"))
-        graft.operators.Search.rrfFuse(Seq(bm, ann), "id", "rank", k = 10)
+        fuseWithDense(bm, Similarity.ivfTopK(ivf, "vec_id", "embedding", qv,
+          k = 20, nprobe = np))
       },
       golden("q_hybrid_rrf_ann_pruned")),
 
@@ -128,9 +114,7 @@ private[graft] object SimilarityBattery {
     // arrays_overlap candidate filter + TakeOrdered path.
     "q_ann_lsh" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         Similarity.lshTopK(emb.filter(col("vec_id") =!= 0),
           "vec_id", "embedding", q, k = 10, planes = 4, tables = 8)
       },
@@ -146,15 +130,8 @@ private[graft] object SimilarityBattery {
     // SFs the index builds once per JVM via the memoized production path.
     "q_ann_ivf" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
-        val idx =
-          if (dir.endsWith("sf0.01"))
-            Similarity.loadIvf(s, "/root/repo/src/test/resources/golden/ivf_index")
-          else Similarity.ivfIndexFor(emb.filter(col("vec_id") =!= 0),
-            cacheKey = s"$dir/embeddings!vec_id!16",
-            "vec_id", "embedding", nClusters = 16)
+        val (emb, q) = embeddingsAndQuery(s, dir)
+        val idx = ivf16(s, dir, emb.filter(col("vec_id") =!= 0))
         Similarity.ivfTopK(idx, "vec_id", "embedding", q, k = 10, nprobe = 4)
       },
       golden("q_ann_ivf")),
@@ -170,20 +147,14 @@ private[graft] object SimilarityBattery {
     // territory; recall at the derived k is in ANN_SWEEP.md).
     "q_ann_ivf_tuned" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val idx = Similarity.ivfIndexFor(emb.filter(col("vec_id") =!= 0),
           cacheKey = s"$dir/embeddings!vec_id!tuned",
           "vec_id", "embedding", nClusters = 0)
         Similarity.ivfTopK(idx, "vec_id", "embedding", q, k = 10,
           nprobe = idx.centroids.length)
       },
-      Some("""SELECT vec_id,
-               list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) AS cos
-             FROM embeddings WHERE vec_id <> 0
-             ORDER BY cos DESC, vec_id LIMIT 10""")),
+      cosineTopKOracle),
 
     // The same probe served from the STREAMING-MAINTAINED IVF index
     // (AnnStreams — the ANN twin of q_bm25_stream): the corpus arrives as
@@ -197,24 +168,12 @@ private[graft] object SimilarityBattery {
     // must be bit-equal to the offline probe.
     "q_ann_ivf_stream" -> Q(
       (s, dir) => {
-        val emb = table(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") === 0)
-          .head().getSeq[Float](emb.columns.indexOf("embedding"))
+        val (emb, q) = embeddingsAndQuery(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val centroids =
-          if (dir.endsWith("sf0.01"))
-            Similarity.loadIvf(s,
-              "/root/repo/src/test/resources/golden/ivf_index").centroids
-          else Similarity.ivfIndexFor(corpus,
-            cacheKey = s"$dir/embeddings!vec_id!16", "vec_id", "embedding",
-            nClusters = 16).centroids
+        val centroids = ivf16(s, dir, corpus).centroids
         val base = Queries.tempDir("graft_anns")
         val path = s"$base/assigned"
-        (0 until 3).foreach { i =>
-          graft.streaming.AnnStreams.processIvfBatch(
-            corpus.filter(col("vec_id") % 3 === i), i.toLong,
-            "vec_id", "embedding", centroids, path)
-        }
+        ivfBatches(corpus, centroids, path, 3)
         graft.streaming.AnnStreams.ivfTopKStreamed(s, path, centroids,
           "vec_id", "embedding", q, k = 10, nprobe = 4)
       },

@@ -78,11 +78,7 @@ private[graft] object StreamTwinBattery {
           .agg((sum(round(col("l_extendedprice") * 100).cast("long")) / 100.0)
             .as("sum_price"), count(lit(1)).as("cnt"))
       },
-      Some("""SELECT o_orderstatus,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-               count(*) AS cnt
-             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             GROUP BY 1""")),
+      orderStatusPriceOracle),
 
     // STREAMING MISRA–GRIES HEAVY HITTERS in the exact regime: the
     // per-group k-counter state carries across three micro-batches
@@ -157,24 +153,6 @@ private[graft] object StreamTwinBattery {
           emb.filter(col("vec_id") % 10 =!= 0),
           idCol = "vec_id", vecCol = "embedding", labelCol = "label", k = 5)
       },
-      Some("""
-        WITH e AS (SELECT vec_id, label,
-            list_transform(embedding,
-              x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS qe
-          FROM embeddings),
-        q AS (SELECT vec_id, qe FROM e WHERE vec_id % 10 = 0),
-        sd AS (SELECT vec_id, label, qe FROM e WHERE vec_id % 10 <> 0),
-        p AS (SELECT q.vec_id AS query_id, sd.vec_id AS sid, sd.label,
-            list_sum(list_transform(range(1, len(q.qe) + 1),
-              i -> q.qe[i] * sd.qe[i])) AS dot
-          FROM q CROSS JOIN sd),
-        r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY dot DESC, sid) AS rn FROM p),
-        v AS (SELECT query_id, label, count(*) AS n_votes
-          FROM r WHERE rn <= 5 GROUP BY 1, 2),
-        w AS (SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY n_votes DESC, label) AS rn2 FROM v)
-        SELECT query_id, label AS pred_label, n_votes
-        FROM w WHERE rn2 = 1""")),
+      knnLabelOracle),
   )
 }

@@ -28,15 +28,10 @@ private[graft] object TextBattery {
       Some(s"""
         WITH t AS (SELECT doc_id, text, $sqlTokens AS toks FROM documents),
         m AS (SELECT doc_id,
-          CASE WHEN length(text) = 0 THEN 0.0
-               ELSE CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / length(text) END AS punct_ratio,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS DOUBLE) / len(toks) END AS stopword_ratio,
-          least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_signal
+          $sqlQualitySignals
         FROM t)
         SELECT doc_id, punct_ratio, stopword_ratio,
-          greatest(least(len_signal * 0.4 + least(stopword_ratio * 4.0, 1.0) * 0.4
-            + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2, 1.0), 0.0) AS quality
+          $sqlQualityScore AS quality
         FROM m""")),
 
     // CHARACTER-CLASS counts: the encoding-health signal (mojibake /
@@ -144,28 +139,7 @@ private[graft] object TextBattery {
           minMeanWordLen = 3.0, maxMeanWordLen = 10.0,
           maxSymbolRatio = 0.1, maxBulletFrac = 0.9,
           minAlphaFrac = 0.8, minStopwordHits = 2)),
-      Some(raw"""
-        WITH t AS (SELECT doc_id, text, $sqlTokens AS toks,
-                     string_split(text, chr(10)) AS ls FROM documents),
-        m AS (SELECT doc_id,
-          CAST(len(toks) AS BIGINT) AS n_tokens,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum') AS DOUBLE) / len(toks) END AS mean_word_len,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(regexp_extract_all(text, '#')) + len(regexp_extract_all(text, '\.\.\.')) AS DOUBLE) / len(toks) END AS symbol_ratio,
-          CAST(len(list_filter(ls, l -> regexp_matches(l, '^\s*[-*•]'))) AS DOUBLE) / len(ls) AS bullet_frac,
-          CASE WHEN len(toks) = 0 THEN 0.0
-               ELSE CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE) / len(toks) END AS alpha_frac,
-          CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','of','to','in','is','it','that'], x))) AS BIGINT) AS stopword_hits
-        FROM t)
-        SELECT doc_id, n_tokens, mean_word_len, symbol_ratio, bullet_frac,
-          alpha_frac, stopword_hits,
-          CAST(CASE WHEN n_tokens BETWEEN 20 AND 80
-                AND mean_word_len BETWEEN 3.0 AND 10.0
-                AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9
-                AND alpha_frac >= 0.8 AND stopword_hits >= 2
-                THEN 1 ELSE 0 END AS INT) AS keep
-        FROM m""")),
+      qualityRulesOracle(minTokens = 20, maxTokens = 80)),
 
     // Canonical normalization (lower → NFC → whitespace collapse → trim)
     // + the near-exact dedup fingerprint over it. The corpus is already
@@ -312,7 +286,7 @@ private[graft] object TextBattery {
     // aborting or silently dropping; the clean split must agree with
     // DuckDB's ignore_errors read of the committed fixture.
     "q_csv_source" -> Q(
-      (s, _) => graft.sources.CsvDocs.clean(
+      (s, _) => graft.sources.JsonlDocs.clean(
         graft.sources.CsvDocs.read(s,
           "/root/repo/src/test/resources/csv/docs.csv",
           org.apache.spark.sql.types.StructType.fromDDL(
@@ -519,14 +493,7 @@ private[graft] object TextBattery {
         .select(col("lang"), col("e.item").as("token"),
           col("e.count_lb").as("cnt"),
           (col("__pos") + 1).cast("long").as("rank")),
-      Some(s"""
-        WITH tok AS (SELECT lang, unnest($sqlTokens) AS token FROM documents),
-        cnt AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS cnt
-                FROM tok GROUP BY 1, 2)
-        SELECT lang, token, cnt,
-          CAST(row_number() OVER (PARTITION BY lang
-            ORDER BY cnt DESC, token) AS BIGINT) AS rank
-        FROM cnt""")),
+      heavyTokensOracle("")),
 
     // FREQUENCY-RANKED VOCABULARY: dense ids 0..n-1 by (count desc, token
     // asc) under a bounded-heap cap — the "train the tokenizer vocab"
@@ -631,19 +598,16 @@ private[graft] object TextBattery {
           docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
           ngramSize = 8)
       },
-      Some {
-        val gram = (1 to 7).foldLeft("toks[i]") { (acc, k) => s"$acc || ' ' || toks[i+$k]" }
-        s"""
+      Some(s"""
         WITH tk AS (SELECT doc_id, $sqlTokens AS toks FROM documents),
         g AS (SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 6),
-                i -> $gram)) AS gs
+                i -> $sqlGram8)) AS gs
               FROM tk WHERE len(toks) >= 8),
         bench AS (SELECT doc_id AS bench_id, unnest(gs) AS gr FROM g WHERE doc_id % 10 = 0),
         dg AS (SELECT doc_id, unnest(gs) AS gr FROM g WHERE doc_id % 10 <> 0)
         SELECT dg.doc_id AS id, bench.bench_id,
           CAST(count(*) AS BIGINT) AS n_shared_grams
-        FROM dg JOIN bench ON dg.gr = bench.gr GROUP BY 1, 2"""
-      }),
+        FROM dg JOIN bench ON dg.gr = bench.gr GROUP BY 1, 2""")),
 
     // EXACT REPEATED-SPAN detection (Lee et al. 2021 ExactSubstr family):
     // maximal token spans covered by 8-grams occurring >= 2 times in the
@@ -654,12 +618,10 @@ private[graft] object TextBattery {
       (s, dir) => graft.operators.Dedup.repeatedSpans(
         table(s, dir, "documents"), "doc_id", "text",
         gramSize = 8, minCount = 2, minSpanTokens = 8),
-      Some {
-        val gram = (1 to 7).foldLeft("toks[i]") { (acc, k) => s"$acc || ' ' || toks[i+$k]" }
-        s"""
+      Some(s"""
         WITH tk AS (SELECT doc_id, $sqlTokens AS toks FROM documents),
         g0 AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(toks) - 6, 1)),
-                 i -> {'pos': i - 1, 'gr': $gram})) AS u FROM tk),
+                 i -> {'pos': i - 1, 'gr': $sqlGram8})) AS u FROM tk),
         g AS (SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.gr AS gr FROM g0),
         cnt AS (SELECT gr, count(*) AS c FROM g GROUP BY 1),
         dup AS (SELECT doc_id, pos FROM g JOIN cnt USING (gr) WHERE c >= 2),
@@ -673,8 +635,7 @@ private[graft] object TextBattery {
                   FROM isl GROUP BY doc_id, island)
         SELECT doc_id AS id, span_start, span_end,
           span_end - span_start + 1 AS span_tokens
-        FROM spans WHERE span_end - span_start + 1 >= 8"""
-      }),
+        FROM spans WHERE span_end - span_start + 1 >= 8""")),
 
     // The same contamination scan through the Bloom-filter semi-join
     // pushdown (the very-large-benchmark-suite regime: sketch pre-filter

@@ -633,63 +633,9 @@ object Multimodal {
     def dibU32(d: Array[Byte], o: Int): Int =
       (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8) |
         ((d(o + 2) & 0xff) << 16) | ((d(o + 3) & 0xff) << 24)
-    val w = dibU32(dibs.head, 4); val h = dibU32(dibs.head, 8)
-    val maxFrame = dibs.map(_.length).max
-    val n = dibs.length
-
-    val avih = new java.io.ByteArrayOutputStream()
-    le32(avih, 1000000 / fps); le32(avih, 0); le32(avih, 0)
-    le32(avih, 0x10) // AVIF_HASINDEX
-    le32(avih, n); le32(avih, 0); le32(avih, 1); le32(avih, maxFrame)
-    le32(avih, w); le32(avih, h)
-    (0 until 4).foreach(_ => le32(avih, 0))
-
-    val strh = new java.io.ByteArrayOutputStream()
-    fcc(strh, "vids"); fcc(strh, "DIB ")
-    le32(strh, 0); le32(strh, 0); le32(strh, 0)
-    le32(strh, 1); le32(strh, fps) // dwScale / dwRate
-    le32(strh, 0); le32(strh, n); le32(strh, maxFrame)
-    le32(strh, -1); le32(strh, 0) // quality / sampleSize
-    // rcFrame: four 16-bit fields (0, 0, w, h)
-    strh.write(0); strh.write(0); strh.write(0); strh.write(0)
-    strh.write(w & 0xff); strh.write((w >>> 8) & 0xff)
-    strh.write(h & 0xff); strh.write((h >>> 8) & 0xff)
-
-    val strf = java.util.Arrays.copyOfRange(dibs.head, 0, 40)
-
-    val strl = new java.io.ByteArrayOutputStream()
-    fcc(strl, "strl")
-    chunk(strl, "strh", strh.toByteArray)
-    chunk(strl, "strf", strf)
-
-    val hdrl = new java.io.ByteArrayOutputStream()
-    fcc(hdrl, "hdrl")
-    chunk(hdrl, "avih", avih.toByteArray)
-    chunk(hdrl, "LIST", strl.toByteArray)
-
-    val movi = new java.io.ByteArrayOutputStream()
-    fcc(movi, "movi")
-    // idx1 offsets are relative to the 'movi' fourcc position
-    val offsets = new Array[Int](n)
-    dibs.zipWithIndex.foreach { case (d, i) =>
-      offsets(i) = movi.size() // stream starts AT the 'movi' fourcc
-      chunk(movi, "00db", d)
-    }
-    val idx1 = new java.io.ByteArrayOutputStream()
-    dibs.zipWithIndex.foreach { case (d, i) =>
-      fcc(idx1, "00db"); le32(idx1, 0x10) // AVIIF_KEYFRAME
-      le32(idx1, offsets(i)); le32(idx1, d.length)
-    }
-
-    val body = new java.io.ByteArrayOutputStream()
-    fcc(body, "AVI ")
-    chunk(body, "LIST", hdrl.toByteArray)
-    chunk(body, "LIST", movi.toByteArray)
-    chunk(body, "idx1", idx1.toByteArray)
-
-    val out = new java.io.ByteArrayOutputStream()
-    chunk(out, "RIFF", body.toByteArray)
-    out.toByteArray
+    writeAvi(dibs, dibU32(dibs.head, 4), dibU32(dibs.head, 8), fps,
+      handler = "DIB ", strf = java.util.Arrays.copyOfRange(dibs.head, 0, 40),
+      frameId = "00db")
   }
 
   /** Pack JPEG-encoded frames into an MJPEG AVI: the lossy sibling of
@@ -714,7 +660,30 @@ object Multimodal {
         "encodeAviMjpeg: frames must be JPEG files (SOI marker)")
     }
     val maxFrame = frames.map(_.length).max
-    val n = frames.length
+    // BITMAPINFOHEADER with biCompression = 'MJPG' (no DIB to copy from)
+    val strf = new java.io.ByteArrayOutputStream()
+    le32(strf, 40); le32(strf, width); le32(strf, height)
+    strf.write(1); strf.write(0)  // biPlanes = 1
+    strf.write(24); strf.write(0) // biBitCount
+    fcc(strf, "MJPG")             // biCompression
+    le32(strf, maxFrame)          // biSizeImage (upper bound)
+    (0 until 4).foreach(_ => le32(strf, 0))
+    // MJPEG frames are keyframes too
+    writeAvi(frames, width, height, fps,
+      handler = "MJPG", strf = strf.toByteArray, frameId = "00dc")
+  }
+
+  /** The AVI layout both encoders write: RIFF('AVI ') holding
+    * LIST('hdrl') — a standard 56-byte `avih` and one 'vids' stream
+    * (`handler` fourcc, `strf` format bytes) — then the `payloads` as
+    * `frameId` chunks in LIST('movi'), then an `idx1` index (offsets
+    * relative to the 'movi' fourcc, AVIIF_KEYFRAME on every frame).
+    */
+  private def writeAvi(payloads: Seq[Array[Byte]], width: Int, height: Int,
+                       fps: Int, handler: String, strf: Array[Byte],
+                       frameId: String): Array[Byte] = {
+    val maxFrame = payloads.map(_.length).max
+    val n = payloads.length
 
     val avih = new java.io.ByteArrayOutputStream()
     le32(avih, 1000000 / fps); le32(avih, 0); le32(avih, 0)
@@ -724,28 +693,20 @@ object Multimodal {
     (0 until 4).foreach(_ => le32(avih, 0))
 
     val strh = new java.io.ByteArrayOutputStream()
-    fcc(strh, "vids"); fcc(strh, "MJPG")
+    fcc(strh, "vids"); fcc(strh, handler)
     le32(strh, 0); le32(strh, 0); le32(strh, 0)
     le32(strh, 1); le32(strh, fps) // dwScale / dwRate
     le32(strh, 0); le32(strh, n); le32(strh, maxFrame)
     le32(strh, -1); le32(strh, 0) // quality / sampleSize
+    // rcFrame: four 16-bit fields (0, 0, width, height)
     strh.write(0); strh.write(0); strh.write(0); strh.write(0)
     strh.write(width & 0xff); strh.write((width >>> 8) & 0xff)
     strh.write(height & 0xff); strh.write((height >>> 8) & 0xff)
 
-    // BITMAPINFOHEADER with biCompression = 'MJPG' (no DIB to copy from)
-    val strf = new java.io.ByteArrayOutputStream()
-    le32(strf, 40); le32(strf, width); le32(strf, height)
-    strf.write(1); strf.write(0)  // biPlanes = 1
-    strf.write(24); strf.write(0) // biBitCount
-    fcc(strf, "MJPG")             // biCompression
-    le32(strf, maxFrame)          // biSizeImage (upper bound)
-    (0 until 4).foreach(_ => le32(strf, 0))
-
     val strl = new java.io.ByteArrayOutputStream()
     fcc(strl, "strl")
     chunk(strl, "strh", strh.toByteArray)
-    chunk(strl, "strf", strf.toByteArray)
+    chunk(strl, "strf", strf)
 
     val hdrl = new java.io.ByteArrayOutputStream()
     fcc(hdrl, "hdrl")
@@ -754,15 +715,16 @@ object Multimodal {
 
     val movi = new java.io.ByteArrayOutputStream()
     fcc(movi, "movi")
+    // idx1 offsets are relative to the 'movi' fourcc position
     val offsets = new Array[Int](n)
-    frames.zipWithIndex.foreach { case (j, i) =>
-      offsets(i) = movi.size()
-      chunk(movi, "00dc", j)
+    payloads.zipWithIndex.foreach { case (d, i) =>
+      offsets(i) = movi.size() // stream starts AT the 'movi' fourcc
+      chunk(movi, frameId, d)
     }
     val idx1 = new java.io.ByteArrayOutputStream()
-    frames.zipWithIndex.foreach { case (j, i) =>
-      fcc(idx1, "00dc"); le32(idx1, 0x10) // MJPEG frames are keyframes
-      le32(idx1, offsets(i)); le32(idx1, j.length)
+    payloads.zipWithIndex.foreach { case (d, i) =>
+      fcc(idx1, frameId); le32(idx1, 0x10) // AVIIF_KEYFRAME
+      le32(idx1, offsets(i)); le32(idx1, d.length)
     }
 
     val body = new java.io.ByteArrayOutputStream()

@@ -11,9 +11,11 @@ import org.apache.spark.sql.types.StructType
   * the type contract is part of ingestion, not a downstream surprise.
   */
 object CsvDocs {
+  import JsonlDocs.CorruptCol
 
-  val CorruptCol: String = JsonlDocs.CorruptCol
-
+  /** The clean and quarantine splits are [[JsonlDocs.clean]] and
+    * [[JsonlDocs.quarantine]].
+    */
   def read(spark: SparkSession, path: String, schema: StructType,
            header: Boolean = false): DataFrame = {
     require(!schema.fieldNames.contains(CorruptCol),
@@ -26,6 +28,4 @@ object CsvDocs {
       .csv(path)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
-
-  def clean(df: DataFrame): DataFrame = JsonlDocs.clean(df)
 }

@@ -723,6 +723,20 @@ class OperatorsSpec extends SparkSpec {
       .filter(col("id1") === 999L || col("id2") === 999L).count() == 0)
   }
 
+  test("encodeAvi/encodeAviMjpeg: container bytes of the fixtures are pinned") {
+    // SHA-256 of both encoders' output for the round-trip fixtures below,
+    // taken before the two encoders shared one container writer
+    def sha(b: Array[Byte]) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(b).map(x => f"${x & 0xff}%02x").mkString
+    val dib = Multimodal.withVideoPayload(Seq(7L).toDF("doc_id"),
+        "doc_id", nFrames = 8)
+      .select("payload").as[Array[Byte]].head()
+    val mjpeg = Multimodal.encodeAviMjpeg((0 until 5).map(jpegOf),
+      width = 20, height = 16)
+    assert(sha(dib) == "0973b674bcce5de897b318098adc7c3c1da7f333b979e0799986c404d3e2249d")
+    assert(sha(mjpeg) == "bf8bdd733c079c5d74f4ca7233ae7bc5704cdb444dca97196c1656199020126e")
+  }
+
   test("encodeAvi/demuxAviFrames: real RIFF/AVI round-trip; corrupt and truncated payloads demux empty") {
     val payload = Multimodal.withVideoPayload(Seq(7L).toDF("doc_id"),
         "doc_id", nFrames = 8)
@@ -774,16 +788,17 @@ class OperatorsSpec extends SparkSpec {
     assert(back != null && back.getWidth == 12 && back.getHeight == 10)
   }
 
+  private def jpegOf(seed: Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(20, 16,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 16; x <- 0 until 20)
+      img.setRGB(x, y, (seed * 2654435761L.toInt + x * 31 + y * 7) & 0xffffff)
+    val out = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpg", out)
+    out.toByteArray
+  }
+
   test("encodeAviMjpeg: writer-produced MJPEG demuxes to the exact JPEG frames written") {
-    def jpegOf(seed: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(20, 16,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 16; x <- 0 until 20)
-        img.setRGB(x, y, (seed * 2654435761L.toInt + x * 31 + y * 7) & 0xffffff)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", out)
-      out.toByteArray
-    }
     val jpegs = (0 until 5).map(jpegOf)
     val avi = Multimodal.encodeAviMjpeg(jpegs, width = 20, height = 16)
     assert(new String(avi, 0, 4, "ISO-8859-1") == "RIFF")

@@ -36,7 +36,7 @@ class JsonlDocsSpec extends SparkSpec {
   test("CSV twin: type-violating rows quarantine, quoted commas parse") {
     val raw = CsvDocs.read(spark,
       "/root/repo/src/test/resources/csv/docs.csv", schema)
-    val clean = CsvDocs.clean(raw)
+    val clean = JsonlDocs.clean(raw)
     assert(clean.count() == 8)
     assert(clean.select("doc_id").as[Long].collect().sorted.toSeq == (1L to 8L))
     // the quoted-comma row survives as one field
